@@ -928,36 +928,6 @@ def _sorted_bucket_layout(
     return offsets, seg_of, bkt, order
 
 
-def build_segments_fused(
-    df: DataFrame,
-    key_col: str,
-    analyzer: Analyzer,
-    text_col: str = "text",
-    with_positions: bool = True,
-    seg_target_docs: int = 2048,
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Doc-id assignment FUSED with the local segment build: one slim
-    counting pass + ONE shuffle carrying only (key, text) — the html
-    and metadata columns never cross the wire, and the separate
-    window-function shuffle of `assign_doc_ids` disappears (it was the
-    scaling bottleneck: a second full-corpus shuffle that topped out at
-    1.5x from 8->32 cores while the segment build itself scaled 4.0x).
-
-    Doc ids are bucket-contiguous (offset[bucket] + rank-by-key within
-    bucket — identical values to `assign_doc_ids`), segments are groups
-    of adjacent buckets, so after `repartition("_seg")` each partition
-    holds complete segments in doc-id order and ids are assigned by
-    vectorized run-ranking inside the same mapInPandas pass that
-    tokenizes and encodes posting blocks.
-    """
-    offsets, seg_of = _bucket_layout(df, key_col, n_buckets, seg_target_docs)
-    return _fused_blocks(
-        df, key_col, analyzer, text_col, with_positions, offsets, seg_of,
-        n_buckets,
-    )
-
-
 def _fused_blocks(
     df: DataFrame,
     key_col: str,

@@ -131,19 +131,6 @@ def unpack_docs_freqs(buf: bytes, n_docs: int, base: int = 0) -> tuple[np.ndarra
     return doc_ids, freqs
 
 
-def encode_positions(positions: np.ndarray) -> bytes:
-    """Per-occurrence position deltas (within one doc), varint-packed.
-
-    `positions` is the sorted absolute token positions of a term in a doc
-    (`formats_10.cpp:893-932` stores the same delta stream).
-    """
-    return varint_encode(delta_encode(np.asarray(positions, dtype=np.uint64), 0))
-
-
-def decode_positions(buf: bytes) -> np.ndarray:
-    return delta_decode(varint_decode(buf), 0)
-
-
 def encode_position_lists(pos_concat: np.ndarray, freqs: np.ndarray) -> bytes:
     """Encode concatenated per-doc position lists as segment-local deltas.
 

@@ -131,6 +131,33 @@ class FieldStats:
         return self.total_term_freq / self.n_docs if self.n_docs else 0.0
 
 
+# the config every segment of a merged multi-segment view must share,
+# with the value a manifest that omits the key stands for
+SEGMENT_CONFIG_DEFAULTS = {
+    "with_positions": False,
+    "with_offsets": False,
+    "with_payloads": False,
+    "analyzer": None,
+    "norm": "norm2",
+}
+
+
+def check_segments_agree(manifests: list[dict], action: str) -> None:
+    """Raise unless every segment manifest carries the same feature /
+    analyzer / norm config (the contract merge_indexes enforces): a
+    silent mismatch would drop positions/offsets or mix incompatible
+    token streams in one postings union. A missing key counts as its
+    default, so an older manifest that omits `norm` agrees with an
+    explicit "norm2"."""
+    for key, default in SEGMENT_CONFIG_DEFAULTS.items():
+        vals = {m.get(key, default) for m in manifests}
+        if len(vals) > 1:
+            raise ValueError(
+                f"segments disagree on {key!r}: {sorted(map(str, vals))}; "
+                f"consolidate or rebuild before {action} a merged view"
+            )
+
+
 @dataclass
 class InvertedIndex:
     postings: DataFrame

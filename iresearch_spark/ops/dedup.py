@@ -318,10 +318,6 @@ def skew_guard_report(
     }
 
 
-def _verify_jaccard(df, cand, text_col, id_col, n) -> DataFrame:
-    return _verify_jaccard_from_shingles(_shingles(df, text_col, id_col, n), cand)
-
-
 def _verify_jaccard_from_shingles(sh, cand) -> DataFrame:
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle").alias("sh_a"))

@@ -46,14 +46,6 @@ def _tokens(col) -> "F.Column":
     return F.filter(toks, lambda t: t != "")
 
 
-def tokens_sql(expr: str) -> str:
-    """DuckDB rendering of the same tokenizer."""
-    return (
-        "list_filter(regexp_split_to_array(lower({e}), "
-        "'[^\\p{{L}}\\p{{N}}]+'), t -> t <> '')".format(e=expr)
-    )
-
-
 def train_bigram_lm(
     ref: DataFrame, text_col: str = "text"
 ) -> tuple[DataFrame, DataFrame, int]:

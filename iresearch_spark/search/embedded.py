@@ -16,11 +16,11 @@ driver-resident replica, so a serving host needs only Python + pyarrow
 spark-submit at all.
 
 Identity: the replica is built from the SAME parquet bytes the Spark
-collect would read, and every scoring/expansion/WAND helper the hot
-path uses (`_c0`, `_scorer_params`, `_wand_terms`, vocabulary
-expansion, the score kernel) is pure Python over the manifest's field
-stats — so results are identical to the Spark-built HotEngine, which
-is differential-tested against the cluster engine
+collect would read, and it is a `LocalSource` — the LocalIndex plus a
+`Semantics` object (search/semantics.py: scoring, expansion, WAND and
+merge rules) bound to the manifest's field stats, the same rules the
+cluster engine holds — so results are identical to the Spark-built
+HotEngine, which is differential-tested against the cluster engine
 (tests/test_round5_embedded.py pins from_dir == Spark-built hot ==
 cluster for every query shape, both score dtypes, WAND included).
 
@@ -36,9 +36,9 @@ Boundaries (all raise with a clear message, nothing silently degrades):
   config-homogeneity contract the cluster merge enforces;
   `HotEngine.refresh()` gives reopen semantics over them;
 - the few shapes the hot path itself does not serve (GranularRange on
-  a dictionary-only column) have no cluster to fall back to here;
-- `EmbeddedEngine` exposes ONLY the scoring-math surface of
-  SearchEngine — its cluster entry points raise RuntimeError.
+  a dictionary-only column) have no cluster to fall back to here: a
+  LocalSource has no cluster entry points, so HotEngine raises the
+  "no cluster path" RuntimeError.
 """
 
 from __future__ import annotations
@@ -46,11 +46,15 @@ from __future__ import annotations
 import glob
 import json
 import os
+from dataclasses import dataclass
 from types import SimpleNamespace
 
-from iresearch_spark.index.model import FieldStats, InvertedIndex
-from iresearch_spark.search.executor import SearchEngine
-from iresearch_spark.search.scorers import get_scorer
+from iresearch_spark.index.model import (
+    FieldStats,
+    InvertedIndex,
+    check_segments_agree,
+)
+from iresearch_spark.search.semantics import Semantics
 
 _BLOB_COLS = ("docs", "dls")
 
@@ -346,14 +350,7 @@ class LocalMergedIndex(LocalIndex):
         version: int | None = None,
     ):
         first = sub_manifests[0]
-        for key in ("with_positions", "with_offsets", "with_payloads",
-                    "analyzer", "norm"):
-            vals = {str(m.get(key, False)) for m in sub_manifests}
-            if len(vals) > 1:
-                raise ValueError(
-                    f"segments disagree on {key!r}: {sorted(vals)}; "
-                    "consolidate or rebuild before serving a merged view"
-                )
+        check_segments_agree(sub_manifests, "serving")
         max_dls = [m.get("max_dl") for m in sub_manifests]
         metas = [m.get("numeric_meta") for m in sub_manifests]
         steps = {m.get("precision_step", 64) for m in sub_manifests}
@@ -528,77 +525,41 @@ def load_local_index(path: str, encryption=None) -> LocalIndex:
     return LocalIndex(path, manifest, dec)
 
 
-class EmbeddedEngine(SearchEngine):
-    """The scoring-math surface of SearchEngine over a LocalIndex:
-    everything the hot path calls (`_c0`, `_const_score`,
-    `_scorer_params`, `_wand_terms`, `_prefix_successor`, the
-    expansion cache HotEngine seeds) is inherited pure Python; every
-    cluster entry point raises. `is_embedded` steers HotEngine's
-    constructor to the pyarrow postings read."""
+@dataclass(frozen=True)
+class LocalSource:
+    """What a Spark-free replica is pinned from: a LocalIndex plus the
+    query semantics bound to its field stats. It has no cluster entry
+    points — HotEngine raises the "no cluster path" error for the
+    shapes it cannot serve in memory."""
 
-    is_embedded = True
+    index: LocalIndex
+    sem: Semantics
 
-    def __init__(
-        self,
+    @classmethod
+    def open(
+        cls,
         index: LocalIndex,
         scorer: str | object = "bm25",
-        scored_terms_limit: int = 1024,
         score_dtype: str = "float64",
-    ):
-        self.index = index
-        self.scorer = get_scorer(scorer) if isinstance(scorer, str) else scorer
-        # norm-variant scorer adjustment, same as SearchEngine.__init__
-        # (the reference picks the scorer path from the segment's norm
-        # feature, bm25.cpp:445-489)
-        if getattr(index, "norm", "norm2") == "legacy":
-            import dataclasses
-
-            if hasattr(self.scorer, "norm") and self.scorer.norm != "legacy":
-                self.scorer = dataclasses.replace(self.scorer, norm="legacy")
-            elif hasattr(self.scorer, "with_norms"):
-                self.scorer = dataclasses.replace(
-                    self.scorer, with_norms=True
-                )
-        if score_dtype not in ("float64", "float32"):
-            raise ValueError(
-                f"score_dtype must be float64/float32, got {score_dtype!r}"
-            )
-        self.score_dtype = score_dtype
-        self.scored_terms_limit = scored_terms_limit
-        self.collect_wand_stats = False
-        self.last_wand_stats = None
-        self.wand_min_postings = 0
-        self.wand_driver_meta_cap = 0
-        self._df_cache = {}
-        self._proxy_cache = {}
-        self._expansion_cache = {}
-        self._stats_preloaded = False
-
-    def _max_dl(self) -> int:
-        fs = self.index.field_stats
-        if fs.max_dl is None:  # pre-max_dl manifest: one projected scan
+        scored_terms_limit: int = 1024,
+    ) -> "LocalSource":
+        def max_dl() -> int:  # pre-max_dl manifest: one projected scan
             import pyarrow.compute as pc
 
-            t = self.index.docs.select("dl").toArrow()
-            fs.max_dl = int(pc.max(t.column("dl")).as_py() or 0)
-        return fs.max_dl
+            t = index.docs.select("dl").toArrow()
+            return int(pc.max(t.column("dl")).as_py() or 0)
 
-    def _no_cluster(self, *a, **kw):
-        raise RuntimeError(
-            "embedded index has no cluster path: this query shape is "
-            "not hot-servable and there is no SparkSession to fall "
-            "back to — load the index with InvertedIndex.load(spark, "
-            "path) for cluster execution"
+        return cls(
+            index,
+            Semantics(
+                index.field_stats,
+                index.norm,
+                scorer,
+                score_dtype,
+                scored_terms_limit,
+                max_dl=max_dl,
+            ),
         )
-
-    search = matches = top_docs = search_many = preload_stats = _no_cluster
-    explain = _no_cluster
-
-    def _leaf_expansion(self, node):
-        hit = self._expansion_cache.get(node)
-        if hit is not None:
-            return hit
-        self._no_cluster()
 
 
 def load_local_multifield(path: str):
@@ -610,7 +571,7 @@ def load_local_multifield(path: str):
         with open(os.path.join(path, "multifield.json")) as fh:
             manifest = json.load(fh)
         engines = {
-            f: EmbeddedEngine(
+            f: LocalSource.open(
                 load_local_index(os.path.join(path, f"field={f}")),
                 scorer=scorer,
                 score_dtype=score_dtype,

@@ -1,4 +1,11 @@
-"""Query execution: AST -> DataFrame plan.
+"""Query execution on the cluster: AST -> DataFrame plan.
+
+This module holds only the Spark DRIVERS — term-dictionary scans,
+Column expressions, the fused mapInArrow decode+score scans and the
+distributed WAND path. What a query means (scores, expansion caps and
+order, WAND eligibility and bounds, the boolean merge order, the
+top-k tie-break) comes from the Spark-free search/semantics.py core
+that the hot and embedded tiers share, so all tiers answer alike.
 
 Lifecycle parity with the reference (SURVEY §3.2):
 
@@ -9,10 +16,10 @@ Lifecycle parity with the reference (SURVEY §3.2):
              (the stats blob, bm25.cpp:366-410).
   execute  = ONE declarative DataFrame job:
              postings scan (term predicate pushed into parquet)
-               -> mapInArrow block decode (numpy cumsum)
-               -> broadcast-join tiny (term, c0) weights
-               -> JVM score expression  c0 * g(tf, dl)
-               -> boolean merge: union + groupBy(doc_id) count/sum
+               -> mapInArrow block decode + score c0 * g(tf, dl)
+                  (the shared numpy kernel)
+               -> boolean merge: union + groupBy(doc_id) count and a
+                  left fold of the child scores in leaf order
                   (the reference's conjunction/disjunction leapfrog,
                   conjunction.hpp:82-87 / disjunction.hpp:1412-1470 —
                   one shuffle regardless of operator arity)
@@ -23,11 +30,11 @@ Lifecycle parity with the reference (SURVEY §3.2):
   WAND     = two-pass block-max pruning (mode="wand"): pass 1 scores the
              highest-upper-bound blocks exhaustively to seed a threshold
              theta (any achieved score is a sound lower bound); pass 2
-             drops every block whose upper bound (plus the other terms'
-             global max contributions) cannot reach theta, then runs the
-             exhaustive pipeline on the survivors. Equivalent results to
-             exhaustive by construction (differential-tested, mirroring
-             tests/search/wand_test.cpp:234-240).
+             drops every block whose upper bound (plus what the other
+             terms can add in its doc range) cannot reach theta, then
+             runs the exhaustive pipeline on the survivors. Equivalent
+             results to exhaustive by construction (differential-tested,
+             mirroring tests/search/wand_test.cpp:234-240).
 
 At 100 TB the only shuffles are the groupBy(doc_id) for multi-term
 queries (bounded by candidate postings, not corpus size) and the final
@@ -38,7 +45,7 @@ top-k rows.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
@@ -49,7 +56,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from iresearch_spark.index.model import InvertedIndex
 from iresearch_spark.search import ast, planner
-from iresearch_spark.search.scorers import get_scorer
+from iresearch_spark.search import semantics as sem_
+from iresearch_spark.search.semantics import Semantics
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -87,26 +95,16 @@ class SearchEngine:
         score_dtype: str = "float64",
     ):
         self.index = index
-        self.scorer = get_scorer(scorer) if isinstance(scorer, str) else scorer
-        # the index's norm variant drives the scoring formula (the
-        # reference picks the scorer path from which norm feature the
-        # segment carries, bm25.cpp:445-489)
-        if getattr(index, "norm", "norm2") == "legacy":
-            import dataclasses
-
-            if hasattr(self.scorer, "norm") and self.scorer.norm != "legacy":
-                self.scorer = dataclasses.replace(self.scorer, norm="legacy")
-            elif hasattr(self.scorer, "with_norms"):
-                self.scorer = dataclasses.replace(self.scorer, with_norms=True)
-        # "float64" (default — matches the engine's DuckDB replay
-        # oracle) or "float32" (reference parity: score_t = float,
-        # core/search/scorer.hpp — every per-posting score and every
-        # sum-merge accumulates in float32 with a fixed child order;
-        # golden-tested bit-equal to ref_bm25_f32)
-        if score_dtype not in ("float64", "float32"):
-            raise ValueError(f"score_dtype must be float64/float32, got {score_dtype!r}")
-        self.score_dtype = score_dtype
-        self.scored_terms_limit = scored_terms_limit
+        # every scoring/expansion/WAND rule — shared with the hot and
+        # embedded tiers (search/semantics.py)
+        self.sem = Semantics(
+            index.field_stats,
+            getattr(index, "norm", "norm2"),
+            scorer,
+            score_dtype,
+            scored_terms_limit,
+            max_dl=self._max_dl,
+        )
         # opt-in WAND pruning observability (costs two tiny jobs over
         # the checkpointed bound table): after a mode="wand" search,
         # last_wand_stats = {blocks_total, blocks_kept, theta}
@@ -244,7 +242,7 @@ class SearchEngine:
         phrased: dict[str, tuple] = {}
         rest: dict[str, ast.Node] = {}
         for name, node in queries.items():
-            if self._f32:
+            if self.sem.f32:
                 # parity mode: the shared-scan fan-out multiplies c0
                 # JVM-side in float64 — route through per-query plans
                 # (which carry the exact float32 op chain) instead
@@ -275,9 +273,7 @@ class SearchEngine:
             out = out.unionByName(p)
         return out.orderBy("query", F.desc("score"), F.asc("doc_id"))
 
-    _BATCH_LEAVES = (
-        ast.Term, ast.Terms, ast.Prefix, ast.Wildcard, ast.Range, ast.Fuzzy
-    )
+    _BATCH_LEAVES = (ast.Term, ast.Terms) + sem_.EXPANSION_LEAVES
 
     def _batchable(self, norm: ast.Node):
         """(positives, negatives, required, boost) when the normalized
@@ -288,21 +284,11 @@ class SearchEngine:
         if isinstance(norm, self._BATCH_LEAVES):
             return ([norm], [], 1, 1.0)
         if isinstance(norm, (ast.And, ast.Or)) and norm.merge_type == "sum":
-            pos, neg = [], []
-            for c in norm.children:
-                if isinstance(c, self._BATCH_LEAVES):
-                    pos.append(c)
-                elif isinstance(c, ast.Not) and isinstance(
-                    c.child, self._BATCH_LEAVES
-                ):
-                    neg.append(c.child)
-                else:
-                    return None
-            if not pos:
+            pos, optional, neg, req = sem_.bool_parts(norm)
+            if optional or not pos or not all(
+                isinstance(c, self._BATCH_LEAVES) for c in pos + neg
+            ):
                 return None
-            # exclusions never count toward min_match (_eval_bool,
-            # boolean_filter.cpp:221-312)
-            req = len(pos) if isinstance(norm, ast.And) else norm.min_match
             return (pos, neg, req, norm.boost)
         return None
 
@@ -331,14 +317,10 @@ class SearchEngine:
     def _batchable_phrase(self, norm: ast.Node):
         """(terms, offsets, boost) for plain-string Phrase/SamePosition
         (variadic slots keep their per-query subplan)."""
-        if isinstance(norm, ast.Phrase) and all(
+        if isinstance(norm, (ast.Phrase, ast.SamePosition)) and all(
             isinstance(p, str) for p in norm.terms
         ):
-            return (list(norm.terms), list(range(len(norm.terms))), norm.boost)
-        if isinstance(norm, ast.SamePosition) and all(
-            isinstance(p, str) for p in norm.terms
-        ):
-            return (list(norm.terms), [0] * len(norm.terms), norm.boost)
+            return (list(norm.terms), sem_.slot_offsets(norm), norm.boost)
         return None
 
     def _topk_per_query(self, scored: DataFrame, k: int) -> DataFrame:
@@ -358,18 +340,20 @@ class SearchEngine:
         )
 
     def _search_many_shared(self, batched: dict[str, tuple], k: int) -> DataFrame:
-        # membership rows: (term, query, child idx, c0, required count,
-        # exclusion flag). A positive child with an empty expansion
-        # contributes no rows — an And then fails the
-        # countDistinct(_child) >= req filter naturally. Exclusion terms
-        # ride the SAME scan: their rows score nothing and any hit
-        # drops the (query, doc) via the max(_neg) == 0 filter.
+        # membership rows: (term, query, child idx, term rank within the
+        # child, c0, required count, exclusion flag). A positive child
+        # with an empty expansion contributes no rows — an And then
+        # fails the countDistinct(_child) >= req filter naturally.
+        # Exclusion terms ride the SAME scan: their rows score nothing
+        # and any hit drops the (query, doc) via the max(_neg) == 0
+        # filter.
         rows = []
         for name, (req, kids) in batched.items():
             for ci, weights, is_neg in kids:
-                for t, w in weights.items():
+                for lc, t in enumerate(sorted(weights)):
                     rows.append(
-                        (t, name, int(ci), float(w), int(req), int(is_neg))
+                        (t, name, int(ci), lc, float(weights[t]), int(req),
+                         int(is_neg))
                     )
         if not rows:
             return self._spark.createDataFrame(
@@ -385,24 +369,54 @@ class SearchEngine:
             self._spark.sparkContext.defaultParallelism
         )
         fused = _make_fused_scorer(
-            weights, self._scorer_params(), None, leaf_of=leaf_of
+            weights, self.sem.scorer_params(), None, leaf_of=leaf_of
         )
         factors = slim.mapInArrow(fused, LEAF_RESULT_SCHEMA)
         memb = self._spark.createDataFrame(
-            [
-                (leaf_of[t], q, ci, c0, rq, ng)
-                for t, q, ci, c0, rq, ng in rows
-            ],
-            "_leaf int, query string, _child int, _c0 double, _req int, "
-            "_neg int",
+            [(leaf_of[r[0]],) + r[1:] for r in rows],
+            "_leaf int, query string, _child int, _lc int, _c0 double, "
+            "_req int, _neg int",
         )
         pos = F.col("_neg") == 0
+        # the score folds exactly as search() nests it: each child's
+        # terms left-folded in term order, then the children in child
+        # order (semantics.fold_sum) — one pass over the sorted
+        # (child, term) contributions with a (child, child sum, total)
+        # accumulator
+        contrib = F.array_sort(
+            F.collect_list(
+                F.struct(
+                    "_child",
+                    "_lc",
+                    F.when(pos, F.col("_c0") * F.col("score"))
+                    .otherwise(0.0)
+                    .alias("score"),
+                )
+            )
+        )
+
+        def step(acc, x):
+            same = F.struct(
+                acc["c"].alias("c"),
+                (acc["a"] + x["score"]).alias("a"),
+                acc["t"].alias("t"),
+            )
+            nxt = F.struct(
+                x["_child"].alias("c"),
+                x["score"].alias("a"),
+                (acc["t"] + acc["a"]).alias("t"),
+            )
+            return F.when(x["_child"] == acc["c"], same).otherwise(nxt)
+
+        zero = F.struct(
+            F.lit(-2).alias("c"), F.lit(0.0).alias("a"), F.lit(0.0).alias("t")
+        )
         merged = (
             factors.join(F.broadcast(memb), "_leaf")
             .groupBy("query", "doc_id")
             .agg(
-                F.sum(
-                    F.when(pos, F.col("_c0") * F.col("score")).otherwise(0.0)
+                F.aggregate(
+                    contrib, zero, step, lambda acc: acc["t"] + acc["a"]
                 ).alias("score"),
                 F.countDistinct(F.when(pos, F.col("_child"))).alias("_cnt"),
                 F.max("_neg").alias("_ex"),
@@ -422,10 +436,10 @@ class SearchEngine:
         c0_rows = []
         for name, (terms, offsets, boost) in phrased.items():
             dfs = self._term_dfs(list(dict.fromkeys(terms)))
-            if any(dfs[t] <= 0 for t in terms):
+            weight = self.sem.phrase_weight([[(t, dfs[t])] for t in terms], boost)
+            if weight is None:
                 continue  # a dead slot -> the phrase matches nothing
-            c0_sum = sum(self._c0(dfs[t], 1.0) for t in terms) * boost
-            c0_rows.append((name, float(c0_sum)))
+            c0_rows.append((name, float(weight[1])))
             for i, (t, off) in enumerate(zip(terms, offsets)):
                 memb_rows.append((t, name, int(i), int(off), len(terms)))
         if not memb_rows:
@@ -471,12 +485,8 @@ class SearchEngine:
             "query", "doc_id", F.size(inter).alias("freq"), "dl"
         ).filter(F.col("freq") > 0)
         c0df = self._spark.createDataFrame(c0_rows, "query string, _c0 double")
-        scored = freq_df.join(F.broadcast(c0df), "query").select(
-            "query",
-            "doc_id",
-            (F.col("_c0") * self._score_g(F.col("freq"), F.col("dl"))).alias(
-                "score"
-            ),
+        scored = self._positional_scores(
+            freq_df.join(F.broadcast(c0df), "query"), ["query", "doc_id"]
         )
         return self._topk_per_query(scored, k)
 
@@ -494,14 +504,7 @@ class SearchEngine:
         e.g. a top-k result) restricts the decode to those docs."""
         if not self.index.with_offsets:
             raise ValueError("index was built without offsets")
-        dec = self.index.decoded_postings(
-            terms=list(terms), with_offsets=True
-        )
-        if doc_ids is not None:
-            dec = dec.join(
-                F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
-            )
-        dec = self._apply_delete_mask(dec)
+        dec = self._occurrences(terms, doc_ids, with_offsets=True)
         return dec.select(
             "doc_id",
             "term",
@@ -531,14 +534,7 @@ class SearchEngine:
         highlight()."""
         if not self.index.with_payloads:
             raise ValueError("index was built without payloads")
-        dec = self.index.decoded_postings(
-            terms=list(terms), with_payloads=True
-        )
-        if doc_ids is not None:
-            dec = dec.join(
-                F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
-            )
-        dec = self._apply_delete_mask(dec)
+        dec = self._occurrences(terms, doc_ids, with_payloads=True)
         return dec.select(
             "doc_id",
             "term",
@@ -549,6 +545,16 @@ class SearchEngine:
             (F.col("_i") + 1).cast("int").alias("occurrence"),
             "payload",
         )
+
+    def _occurrences(self, terms, doc_ids, **feature) -> DataFrame:
+        """Live decoded postings of `terms` with an occurrence feature,
+        restricted to `doc_ids` when given."""
+        dec = self.index.decoded_postings(terms=list(terms), **feature)
+        if doc_ids is not None:
+            dec = dec.join(
+                F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
+            )
+        return self._apply_delete_mask(dec)
 
     # ------------------------------------------------------ prepare helpers
 
@@ -572,102 +578,6 @@ class SearchEngine:
                 self._df_cache[t] = found.get(t, 0)
         return {t: self._df_cache[t] for t in terms}
 
-    @staticmethod
-    def _prefix_successor(p: str) -> str | None:
-        """Smallest string ordering after every p-prefixed string (the
-        exclusive upper bound of the prefix's term interval); None when
-        unbounded (prefix of all-max code points)."""
-        for i in range(len(p) - 1, -1, -1):
-            c = ord(p[i])
-            if c < 0x10FFFF:
-                return p[:i] + chr(c + 1)
-        return None
-
-    @staticmethod
-    def _wildcard_literal_prefix(pattern: str) -> str:
-        """Leading literal run of a LIKE pattern (up to the first
-        unescaped % or _) — the seekable prefix of a wildcard query
-        (the reference walks its wildcard automaton's literal prefix
-        through the FST the same way, wildcard_utils.cpp)."""
-        out = []
-        i, n = 0, len(pattern)
-        while i < n:
-            ch = pattern[i]
-            if ch == "\\" and i + 1 < n:
-                out.append(pattern[i + 1])
-                i += 2
-                continue
-            if ch in ("%", "_"):
-                break
-            out.append(ch)
-            i += 1
-        return "".join(out)
-
-    @staticmethod
-    def _wildcard_literal_suffix(pattern: str) -> str:
-        """Trailing literal run of a LIKE pattern (after the last
-        unescaped % or _) — the seekable REVERSED prefix of a
-        leading-wildcard query via the reversed-term dictionary (the
-        classic reversed-field trick)."""
-        toks: list[tuple[bool, str]] = []  # (is_literal, char)
-        i, n = 0, len(pattern)
-        while i < n:
-            ch = pattern[i]
-            if ch == "\\" and i + 1 < n:
-                toks.append((True, pattern[i + 1]))
-                i += 2
-                continue
-            toks.append((ch not in ("%", "_"), ch))
-            i += 1
-        out = []
-        for is_lit, ch in reversed(toks):
-            if not is_lit:
-                break
-            out.append(ch)
-        return "".join(reversed(out))
-
-    @staticmethod
-    def _wildcard_required_grams(pattern: str) -> list[str]:
-        """Distinct padded 3-grams every matching term MUST contain:
-        each literal run of the pattern appears verbatim in a matching
-        term (anchored runs appear at the term's start/end, so they
-        pick up the \\x02/\\x03 pad grams). Feeds the k-gram index
-        (IIR §3.2.2) — the automaton-∩-FST analogue for infix-only
-        wildcards. Empty when no run yields a 3-gram (all runs
-        unanchored and < 3 chars)."""
-        toks: list[tuple[bool, str]] = []
-        i, n = 0, len(pattern)
-        while i < n:
-            ch = pattern[i]
-            if ch == "\\" and i + 1 < n:
-                toks.append((True, pattern[i + 1]))
-                i += 2
-                continue
-            toks.append((ch not in ("%", "_"), ch))
-            i += 1
-        runs: list[tuple[str, bool, bool]] = []  # (text, at_start, at_end)
-        cur, cur_start_idx = "", -1
-        for idx, (is_lit, ch) in enumerate(toks):
-            if is_lit:
-                if not cur:
-                    cur_start_idx = idx
-                cur += ch
-            else:
-                if cur:
-                    runs.append((cur, cur_start_idx == 0, False))
-                    cur = ""
-        if cur:
-            runs.append((cur, cur_start_idx == 0, True))
-        grams: set[str] = set()
-        for text, at_start, at_end in runs:
-            if at_start:
-                text = "\x02" + text
-            if at_end:
-                text = text + "\x03"
-            for j in range(len(text) - 2):
-                grams.add(text[j : j + 3])
-        return sorted(grams)
-
     def _wildcard_expand_plan(self, pattern: str):
         """(source_df_or_None, bounds_kwargs) for a wildcard's
         dictionary expansion, most-selective seek first: a literal
@@ -679,126 +589,78 @@ class SearchEngine:
         prefixes/suffixes remain the interval fallback, and only a
         pattern with no usable literal material on an index with no
         gram layout scans the full vocabulary."""
-        litp = self._wildcard_literal_prefix(pattern)
-        if len(litp) >= 3:
-            return None, dict(
-                lo=litp,
-                hi=self._prefix_successor(litp),
-                hi_inclusive=False,
-            )
-        suf = self._wildcard_literal_suffix(pattern)
-        if len(suf) >= 3:
+        litp = sem_.wildcard_literal_prefix(pattern)
+        suf = sem_.wildcard_literal_suffix(pattern)
+
+        def by_prefix():
+            hi = sem_.prefix_successor(litp)
+            return None, dict(lo=litp, hi=hi, hi_inclusive=False)
+
+        def by_suffix():
             rsuf = suf[::-1]
             src, _, _ = self.index.pruned_rev_term_stats(
-                rsuf, self._prefix_successor(rsuf)
+                rsuf, sem_.prefix_successor(rsuf)
             )
             return src, {}
-        grams = self._wildcard_required_grams(pattern)
+
+        if len(litp) >= 3:
+            return by_prefix()
+        if len(suf) >= 3:
+            return by_suffix()
+        grams = sem_.wildcard_required_grams(pattern)
         if grams:
             cand = self.index.gram_candidate_terms(grams, len(grams))
             if cand is not None:
                 return cand, {}
         if litp:
-            return None, dict(
-                lo=litp,
-                hi=self._prefix_successor(litp),
-                hi_inclusive=False,
-            )
+            return by_prefix()
         if suf:
-            rsuf = suf[::-1]
-            src, _, _ = self.index.pruned_rev_term_stats(
-                rsuf, self._prefix_successor(rsuf)
-            )
-            return src, {}
+            return by_suffix()
         return None, {}
 
     def _expand(
         self,
         predicate,
-        order_extra=None,
-        limit: int | None = None,
+        limit: int,
         lo: str | None = None,
         hi: str | None = None,
         hi_inclusive: bool = True,
         source=None,
-    ) -> list[tuple[str, int]]:
-        """Expand a multi-term leaf against term_stats: top terms by
-        (df desc, term asc) up to `limit` (the reference's
-        limited_sample_collector, scored_terms_limit). On a saved index
-        the [lo, hi] term interval prunes whole dictionary files via
-        the manifest's per-file min/max map (the FST seek analogue) —
-        the predicate still applies exactly, so pruning never changes
-        the expansion. Leading-wildcard and unprefixed-fuzzy leaves
-        have no interval and scan the full dictionary (the documented
-        trade vs the reference's automaton-intersected FST walk)."""
+    ) -> tuple[list[tuple[str, int]], bool]:
+        """Expand a multi-term leaf against term_stats: its capped
+        (df desc, term asc) head and completeness (semantics.capped —
+        the reference's limited_sample_collector, scored_terms_limit).
+        On a saved index the [lo, hi] term interval prunes whole
+        dictionary files via the manifest's per-file min/max map (the
+        FST seek analogue) — the predicate still applies exactly, so
+        pruning never changes the expansion. Leading-wildcard and
+        unprefixed-fuzzy leaves have no interval and scan the full
+        dictionary (the documented trade vs the reference's
+        automaton-intersected FST walk)."""
         if source is not None:
             src = source  # caller-pruned (e.g. the reversed dictionary)
         else:
             src, _, _ = self.index.pruned_term_stats(lo, hi, hi_inclusive)
-        q = src.filter(predicate)
-        order = order_extra or [F.desc("df"), F.asc("term")]
-        if limit is not None:
-            q = q.orderBy(*order).limit(limit)
-        return [(r["term"], r["df"]) for r in q.select("term", "df").collect()]
-
-    @property
-    def _f32(self) -> bool:
-        return self.score_dtype == "float32"
-
-    @property
-    def _norm_mode(self) -> str:
-        return getattr(self.index, "norm", "norm2")
+        rows = (
+            src.filter(predicate)
+            .orderBy(*_order_cols(sem_.TERM_ORDER))
+            .limit(limit)
+            .select("term", "df")
+            .collect()
+        )
+        return sem_.capped([(r["term"], r["df"]) for r in rows], limit)
 
     def _max_dl(self) -> int:
-        """Max doc length — drives the reference's Norm2 one-byte
-        encoding choice and with it the kNorm2Tiny scorer path
-        (norm.hpp Norm2Header, bm25.cpp:464-476). Stored by
-        build_index/manifest; computed lazily (one tiny agg) for
-        indexes predating the field."""
-        fs = self.index.field_stats
-        if fs.max_dl is None:
-            row = self.index.docs.agg(F.max("dl").alias("m")).collect()[0]
-            fs.max_dl = int(row["m"] or 0)
-        return fs.max_dl
-
-    def _const_score(self, x: float) -> float:
-        """Constant scores (AllDocs/Exists/NumericRange boosts) round
-        through float32 in parity mode (score_t = float)."""
-        return float(np.float32(x)) if self._f32 else float(x)
-
-    def _c0(self, df_: int, boost: float) -> float:
-        if df_ <= 0:
-            return 0.0
-        # c0 folds boost*(k+1)*idf for BM25; boost*idf for TFIDF — both
-        # scorers have the shape score = c0 * g(tf, dl); g is _score_g.
-        from iresearch_spark.search.scorers import BM25
-
-        n_docs = self.index.field_stats.n_docs
-        if self._f32:
-            # reference rounding: double log1p -> float32 idf
-            # (bm25.cpp:380-384), float32 products (BM1Context :201)
-            f32 = np.float32
-            if isinstance(self.scorer, BM25):
-                idf = f32(math.log1p((n_docs - df_ + 0.5) / (df_ + 0.5)))
-                return float(
-                    f32(f32(f32(boost) * f32(f32(self.scorer.k) + f32(1.0))) * idf)
-                )
-            idf = f32(math.log1p((n_docs + 1.0) / (df_ + 1.0)))
-            return float(f32(f32(boost) * idf))
-        idf = self.scorer.idf(df_, n_docs)
-        if isinstance(self.scorer, BM25):
-            return boost * (self.scorer.k + 1.0) * idf
-        return boost * idf
+        """Max doc length of an index predating the manifest field —
+        one tiny agg (see Semantics.max_dl)."""
+        row = self.index.docs.agg(F.max("dl").alias("m")).collect()[0]
+        return int(row["m"] or 0)
 
     def _block_g_ub(self):
-        """Per-block upper bound on g(tf, dl) — from the block's
-        impact pairs (Lucene-style block-max impacts: one (max tf,
-        min dl) pair per power-of-two dl class, builder
-        _block_impacts_arrays) when present, else the loose
-        g(block_max_freq, block_min_dl). The impact bound matters when
-        a block mixes short docs with high-tf long docs: pairing the
-        global max tf with the global min dl then wildly overestimates
-        what any single posting can score."""
+        """Per-block upper bound on g(tf, dl) as a Column — the Spark
+        form of Semantics.block_g_ub (the max over the block's impact
+        pairs when present, else the loose g(block_max_freq,
+        block_min_dl))."""
         loose = self._score_g(F.col("block_max_freq"), F.col("block_min_dl"))
         tight = F.array_max(
             F.transform(
@@ -811,155 +673,102 @@ class SearchEngine:
         )
 
     def _score_g(self, freq, dl):
-        """The per-posting factor g(tf, dl) with c0 factored out
-        (float64 — the WAND bound path and the default-mode positional
-        path; float32 parity scoring goes through _score_full_expr /
-        the fused numpy kernel instead)."""
+        """The per-posting factor g(tf, dl) with c0 factored out as a
+        Column, in float64 — the Spark form of Semantics.g for the WAND
+        bound and float64 positional scores (the same IEEE ops as the
+        numpy kernel)."""
         from iresearch_spark.search.scorers import BM25
 
-        if isinstance(self.scorer, BM25):
+        scorer = self.sem.scorer
+        if isinstance(scorer, BM25):
             avg_dl = self.index.field_stats.avg_dl
             tf = freq.cast("double")
             dlf = dl.cast("double")
-            if self._norm_mode == "legacy":
+            if self.sem.norm_mode == "legacy":
                 # old-style Norm (bm25.hpp:29-46): tf = sqrt(freq),
                 # |doc| = sqrt(dl) (the stored 1/sqrt(dl) inverted)
                 tf, dlf = F.sqrt(tf), F.sqrt(dlf)
-            c1 = F.lit(self.scorer.k * (1.0 - self.scorer.b)) + F.lit(
-                (self.scorer.k * self.scorer.b) / avg_dl if avg_dl else 0.0
+            c1 = F.lit(scorer.k * (1.0 - scorer.b)) + F.lit(
+                (scorer.k * scorer.b) / avg_dl if avg_dl else 0.0
             ) * dlf
             return tf / (c1 + tf)
         s = F.sqrt(freq.cast("double"))
-        if getattr(self.scorer, "with_norms", False):
+        if getattr(scorer, "with_norms", False):
             s = s / F.sqrt(dl.cast("double"))
         return s
 
-    def _score_full_expr(self, c0: float, freq, dl):
-        """Full score Column for (c0, freq, dl) — used by the
-        positional paths. float64: c0 * g. float32 parity: the exact
-        reference op chain in JVM FloatType arithmetic (every
-        intermediate a float32, bm25.cpp:319-365)."""
-        if not self._f32:
-            return F.lit(c0) * self._score_g(freq, dl)
-        from iresearch_spark.search.scorers import BM25, f32_stats
+    def _positional_scores(self, rows: DataFrame, keys: list[str]) -> DataFrame:
+        """(*keys, _c0, freq, dl) rows -> (*keys, score). float64: c0 * g
+        in JVM doubles — the numpy kernel's exact IEEE ops, without a
+        Python stage; float32: the shared score kernel
+        (semantics.make_score_kernel), the fused scans' op chain."""
+        if not self.sem.f32:
+            g = self._score_g(F.col("freq"), F.col("dl"))
+            return rows.select(*keys, (F.col("_c0") * g).alias("score"))
+        params = self.sem.scorer_params()
+        schema = T.StructType(
+            [rows.schema[c] for c in keys]
+            + [T.StructField("score", T.DoubleType(), False)]
+        )
 
-        fl = lambda x: F.lit(float(x)).cast("float")  # noqa: E731
-        if not isinstance(self.scorer, BM25):
-            s = F.sqrt(freq.cast("float").cast("double")).cast("float")
-            s = (fl(c0) * s).cast("float")
-            if getattr(self.scorer, "with_norms", False):
-                stored = (
-                    F.lit(1.0).cast("float")
-                    / F.sqrt(dl.cast("double")).cast("float")
-                ).cast("float")
-                s = (s * stored).cast("float")
-            return s.cast("double")
-        k, b = self.scorer.k, self.scorer.b
-        fs = self.index.field_stats
-        c0c = fl(np.float32(c0))
-        if k == 0.0:  # BM1: constant
-            return c0c.cast("double")
-        if b == 0.0:  # BM15 (bm25.cpp:287-317): no norm feature
-            tf = freq.cast("float")
-            c1 = fl(np.float32(k))
-            return (
-                c0c - (c0c / (F.lit(1.0).cast("float") + (tf / c1).cast("float")).cast("float")).cast("float")
-            ).cast("float").cast("double")
-        if self._norm_mode == "legacy":
-            tf = F.sqrt(freq.cast("float").cast("double")).cast("float")
-            stored = (
-                F.lit(1.0).cast("float")
-                / F.sqrt(dl.cast("double")).cast("float")
-            ).cast("float")
-            nrm = (F.lit(1.0).cast("float") / stored).cast("float")
-        else:
-            tf = freq.cast("float")
-            nrm = dl.cast("float")
-        nc, nl = f32_stats(k, b, fs.n_docs, fs.total_term_freq)
-        c1 = (fl(nc) + (fl(nl) * nrm).cast("float")).cast("float")
-        if self._norm_mode != "legacy" and self._max_dl() <= 255:
-            # kNorm2Tiny: inverse-norm cache path (bm25.cpp:348-352)
-            inv_c1 = (F.lit(1.0).cast("float") / c1).cast("float")
-            return (
-                c0c - (c0c / (F.lit(1.0).cast("float") + (tf * inv_c1).cast("float")).cast("float")).cast("float")
-            ).cast("float").cast("double")
-        return (
-            c0c - ((c0c * c1).cast("float") / (c1 + tf).cast("float")).cast("float")
-        ).cast("float").cast("double")
+        def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            kernel = sem_.make_score_kernel(params)
+            for b in batches:
+                col = lambda c: b.column(c).to_numpy(zero_copy_only=False)  # noqa: E731
+                score = kernel(col("_c0"), col("freq"), col("dl"))
+                yield pa.RecordBatch.from_arrays(
+                    [b.column(c) for c in keys] + [pa.array(score)],
+                    names=keys + ["score"],
+                )
 
-    def _g_py(self, tf: float, dl: float) -> float:
-        from iresearch_spark.search.scorers import BM25
-
-        if isinstance(self.scorer, BM25):
-            avg_dl = self.index.field_stats.avg_dl
-            if self._norm_mode == "legacy":
-                tf, dl = math.sqrt(tf), math.sqrt(dl)
-            c1 = self.scorer.k * (1.0 - self.scorer.b) + (
-                (self.scorer.k * self.scorer.b) / avg_dl if avg_dl else 0.0
-            ) * dl
-            return tf / (c1 + tf)
-        s = math.sqrt(tf)
-        if getattr(self.scorer, "with_norms", False):
-            s = s / math.sqrt(dl)
-        return s
+        return rows.select(*keys, "_c0", "freq", "dl").mapInArrow(run, schema)
 
     def _prepare_leaf(self, node: ast.Node, boost: float) -> PreparedLeaf:
         boost = boost * node.boost  # boost multiplies down the tree
         col = F.col("term")
+        c0 = self.sem.c0
         if isinstance(node, ast.Term):
             dfs = self._term_dfs([node.term])
             return PreparedLeaf(
                 predicate=col == node.term,
-                weights={node.term: self._c0(dfs[node.term], boost)},
+                weights={node.term: c0(dfs[node.term], boost)},
                 single_term=True,
                 exact_terms=[node.term],
             )
         if isinstance(node, ast.Terms):
             terms = list(dict.fromkeys(node.terms))
-            dfs = self._term_dfs(terms)
-            scored = sorted(terms, key=lambda t: (-dfs[t], t))[
-                : self.scored_terms_limit
-            ]
-            w = {t: 0.0 for t in terms}
-            for t in scored:
-                # per-term boost (terms_filter.hpp search-term pairs)
-                w[t] = self._c0(dfs[t], boost * node.term_boost(t))
             return PreparedLeaf(
-                predicate=col.isin(terms), weights=w, exact_terms=terms
+                predicate=col.isin(terms),
+                weights=self.sem.terms_weights(
+                    node, self._term_dfs(terms), boost
+                ),
+                exact_terms=terms,
             )
         if isinstance(node, ast.Prefix):
-            expanded, complete = self._leaf_expansion(node)
-            return PreparedLeaf(
-                predicate=col.startswith(node.prefix),
-                weights={t: self._c0(d, boost) for t, d in expanded},
-                # expansion below the cap is COMPLETE: the leaf matches
-                # exactly these terms, unlocking bucket pruning + the
-                # decode-spread shuffle of the exact-term path
-                exact_terms=[t for t, _ in expanded] if complete else None,
-            )
-        if isinstance(node, ast.Wildcard):
-            expanded, complete = self._leaf_expansion(node)
-            return PreparedLeaf(
-                predicate=col.rlike(_like_to_regex(node.pattern)),
-                weights={t: self._c0(d, boost) for t, d in expanded},
-                exact_terms=[t for t, _ in expanded] if complete else None,
-            )
-        if isinstance(node, ast.Range):
-            expanded, complete = self._leaf_expansion(node)
-            return PreparedLeaf(
-                predicate=self._range_pred(node, col),
-                weights={t: self._c0(d, boost) for t, d in expanded},
-                exact_terms=[t for t, _ in expanded] if complete else None,
-            )
-        if isinstance(node, ast.Fuzzy):
-            cand, _ = self._leaf_expansion(node)
-            terms = [t for t, _ in cand]
-            return PreparedLeaf(
-                predicate=col.isin(terms) if terms else F.lit(False),
-                weights={t: self._c0(d, boost) for t, d in cand},
-                exact_terms=terms or None,
-            )
-        raise TypeError(f"not a leaf: {node}")
+            pred = col.startswith(node.prefix)
+        elif isinstance(node, ast.Wildcard):
+            pred = col.rlike(sem_.like_to_regex(node.pattern))
+        elif isinstance(node, ast.Range):
+            pred = self._range_pred(node, col)
+        elif isinstance(node, ast.Fuzzy):
+            pred = None
+        else:
+            raise TypeError(f"not a leaf: {node}")
+        expanded, complete = self._leaf_expansion(node)
+        terms = [t for t, _ in expanded]
+        if pred is None:
+            pred = col.isin(terms) if terms else F.lit(False)
+        return PreparedLeaf(
+            predicate=pred,
+            weights={t: c0(d, boost) for t, d in expanded},
+            # expansion below the cap is COMPLETE: the leaf matches
+            # exactly these terms, unlocking bucket pruning + the
+            # decode-spread shuffle of the exact-term path
+            exact_terms=(
+                (terms or None) if isinstance(node, ast.Fuzzy)
+                else terms if complete else None
+            ),
+        )
 
     @staticmethod
     def _range_pred(node: ast.Range, col):
@@ -998,33 +807,29 @@ class SearchEngine:
         if hit is not None:
             return hit
         if isinstance(node, ast.Prefix):
-            limit = min(node.scored_terms_limit, self.scored_terms_limit)
-            expanded = self._expand(
+            out = self._expand(
                 F.col("term").startswith(node.prefix),
-                limit=limit,
+                self.sem.expansion_limit(node),
                 lo=node.prefix,
-                hi=self._prefix_successor(node.prefix),
+                hi=sem_.prefix_successor(node.prefix),
                 hi_inclusive=False,
             )
-            out = (expanded, len(expanded) < limit)
         elif isinstance(node, ast.Wildcard):
-            regex = _like_to_regex(node.pattern)
-            limit = min(node.scored_terms_limit, self.scored_terms_limit)
             wsrc, wkw = self._wildcard_expand_plan(node.pattern)
-            expanded = self._expand(
-                F.col("term").rlike(regex), limit=limit, source=wsrc, **wkw
+            out = self._expand(
+                F.col("term").rlike(sem_.like_to_regex(node.pattern)),
+                self.sem.expansion_limit(node),
+                source=wsrc,
+                **wkw,
             )
-            out = (expanded, len(expanded) < limit)
         elif isinstance(node, ast.Range):
-            limit = min(node.scored_terms_limit, self.scored_terms_limit)
-            expanded = self._expand(
+            out = self._expand(
                 self._range_pred(node, F.col("term")),
-                limit=limit,
+                self.sem.expansion_limit(node),
                 lo=node.min_term,
                 hi=node.max_term,
                 hi_inclusive=node.include_max,
             )
-            out = (expanded, len(expanded) < limit)
         elif isinstance(node, ast.Fuzzy):
             out = (self._fuzzy_candidates(node), True)
         else:
@@ -1034,17 +839,15 @@ class SearchEngine:
 
     def _fuzzy_candidates(self, node: ast.Fuzzy) -> list[tuple[str, int]]:
         """Edit-distance term expansion over the distinct-term table,
-        behind a cheap length-band prefilter (|len(a)-len(b)| <= d is
-        necessary for distance <= d) so the O(len^2) DP runs only on
-        plausible terms — at 10^8-term vocabularies the band cuts the
-        scan by ~the length distribution's spread. Cap to max_terms by
-        (distance asc, df desc, term asc) — reference:
-        levenshtein_filter.cpp:251-263 + sample collector. Plain
-        Levenshtein runs JVM-side with the threshold short-circuit;
-        transpositions (Damerau/OSA — the reference's parametric DFA
-        with with_transpositions) run as an Arrow-batched pandas pass
-        over the banded vocabulary slice."""
-        tlen = len(node.term)
+        behind a cheap length-band prefilter (semantics.fuzzy_band) so
+        the O(len^2) DP runs only on plausible terms — at 10^8-term
+        vocabularies the band cuts the scan by ~the length
+        distribution's spread. Cap to max_terms by semantics.FUZZY_ORDER
+        (distance asc, df desc, term asc). Plain Levenshtein runs
+        JVM-side with the threshold short-circuit; transpositions
+        (Damerau/OSA — the reference's parametric DFA with
+        with_transpositions) run as an Arrow-batched pandas pass over
+        the banded vocabulary slice."""
         plen = len(node.prefix)
         # exact-prefix option (levenshtein_filter.hpp:49): candidates
         # start with the prefix verbatim, distance applies to the rest
@@ -1059,7 +862,7 @@ class SearchEngine:
             # file pruning on a saved index
             ts_src, _, _ = self.index.pruned_term_stats(
                 node.prefix,
-                self._prefix_successor(node.prefix),
+                sem_.prefix_successor(node.prefix),
                 hi_inclusive=False,
             )
         else:
@@ -1084,26 +887,17 @@ class SearchEngine:
                 cand = self.index.gram_candidate_terms(qgrams, thresh)
                 if cand is not None:
                     ts_src = cand
-        banded = ts_src.filter(
-            F.length("term").between(
-                plen + tlen - node.distance, plen + tlen + node.distance
-            )
-        )
+        banded = ts_src.filter(F.length("term").between(*sem_.fuzzy_band(node)))
         if plen:
             banded = banded.filter(F.col("term").startswith(node.prefix))
         if node.transpositions:
-            q, dmax = node.term, node.distance
+            dmax = node.distance
 
             def osa(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 for pdf in batches:
-                    suffixes = (
-                        pdf["term"].str[plen:].to_numpy()
-                        if plen
-                        else pdf["term"].to_numpy()
-                    )
-                    d = _osa_distances_batch(q, suffixes, dmax)
-                    out = pdf.assign(_d=d)
-                    yield out[out["_d"] <= dmax][["term", "df", "_d"]]
+                    d = sem_.fuzzy_distances(node, pdf["term"].to_numpy())
+                    out = pdf.assign(distance=d)
+                    yield out[out["distance"] <= dmax][["term", "df", "distance"]]
 
             # JVM prefilter before the Python DP: every transposition
             # costs <= 2 plain edits, so OSA <= d implies
@@ -1111,23 +905,23 @@ class SearchEngine:
             # away almost the whole vocabulary slice before anything
             # crosses the Arrow boundary (at 10^8 terms the Python
             # stage sees only the 2d-neighborhood)
-            lev_band = F.levenshtein(fuzzed, F.lit(q), 2 * dmax)
+            lev_band = F.levenshtein(fuzzed, F.lit(node.term), 2 * dmax)
             scored = (
                 banded.filter(
                     (lev_band >= 0) & (lev_band <= 2 * dmax)
                 )
                 .select("term", F.col("df").cast("long").alias("df"))
-                .mapInPandas(osa, "term string, df long, _d int")
+                .mapInPandas(osa, "term string, df long, distance int")
             )
         else:
             dist = F.levenshtein(
                 fuzzed, F.lit(node.term), node.distance
             )  # threshold arg short-circuits the DP (returns -1 above it)
-            scored = banded.withColumn("_d", dist).filter(
-                (F.col("_d") >= 0) & (F.col("_d") <= node.distance)
+            scored = banded.withColumn("distance", dist).filter(
+                (F.col("distance") >= 0) & (F.col("distance") <= node.distance)
             )
         rows = (
-            scored.orderBy(F.asc("_d"), F.desc("df"), F.asc("term"))
+            scored.orderBy(*_order_cols(sem_.FUZZY_ORDER))
             .limit(node.max_terms)
             .select("term", "df")
             .collect()
@@ -1142,24 +936,6 @@ class SearchEngine:
     def _weights_df(self, weights: dict[str, float]) -> DataFrame:
         rows = [(t, float(w)) for t, w in weights.items()]
         return self._spark.createDataFrame(rows, "term string, w double")
-
-    def _scorer_params(self) -> tuple:
-        from iresearch_spark.search.scorers import BM25
-
-        fs = self.index.field_stats
-        tiny = (
-            self._norm_mode == "norm2" and self._max_dl() <= 255
-            if self._f32
-            else False
-        )
-        if isinstance(self.scorer, BM25):
-            return ("bm25", self.scorer.k, self.scorer.b, fs.avg_dl, False,
-                    self._norm_mode, self.score_dtype, fs.n_docs,
-                    fs.total_term_freq, tiny)
-        return ("tfidf", 0.0, 0.0, 0.0,
-                bool(getattr(self.scorer, "with_norms", False)),
-                self._norm_mode, self.score_dtype, fs.n_docs,
-                fs.total_term_freq, tiny)
 
     def _eval_leaf_df(
         self,
@@ -1193,15 +969,24 @@ class SearchEngine:
             slim = slim.repartition(
                 self._spark.sparkContext.defaultParallelism
             )
+        if leaf.single_term:
+            fused = _make_fused_scorer(
+                dict(leaf.weights), self.sem.scorer_params(), local_topk
+            )
+            return slim.mapInArrow(fused, RESULT_SCHEMA)
+        # a doc's per-term scores fold in term order (every tier sums a
+        # multi-term leaf this way; unscored terms add 0.0 anywhere)
         fused = _make_fused_scorer(
             dict(leaf.weights),
-            self._scorer_params(),
-            local_topk if leaf.single_term else None,
+            self.sem.scorer_params(),
+            None,
+            leaf_of={t: i for i, t in enumerate(sorted(leaf.weights))},
         )
-        scored = slim.mapInArrow(fused, RESULT_SCHEMA)
-        if leaf.single_term:
-            return scored
-        return scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
+        return (
+            slim.mapInArrow(fused, LEAF_RESULT_SCHEMA)
+            .groupBy("doc_id")
+            .agg(_fold_scores(False, sum(1 for w in leaf.weights.values() if w)))
+        )
 
     def _eval(self, node: ast.Node, boost: float, postings=None) -> DataFrame:
         """node -> (doc_id, score) DataFrame, unique per doc."""
@@ -1210,49 +995,28 @@ class SearchEngine:
         if isinstance(node, ast.AllDocs):
             return self.index.docs.select(
                 "doc_id",
-                F.lit(self._const_score(node.boost * boost)).alias("score"),
+                F.lit(self.sem.const_score(node.boost * boost)).alias("score"),
             )
-        if isinstance(node, ast.Phrase):
+        if isinstance(node, (ast.Phrase, ast.SamePosition)):
+            expand = lambda p: self._leaf_expansion(p)[0]  # noqa: E731
             return self._eval_positional(
-                [self._slot_candidates(p) for p in node.terms],
-                list(range(len(node.terms))),
-                node.boost * boost,
-            )
-        if isinstance(node, ast.SamePosition):
-            return self._eval_positional(
-                [self._slot_candidates(t) for t in node.terms],
-                [0] * len(node.terms),
+                [sem_.slot_candidates(p, self._term_dfs, expand) for p in node.terms],
+                sem_.slot_offsets(node),
                 node.boost * boost,
             )
         if isinstance(node, ast.Exists):
-            if node.prefix_match:
-                # ColumnAcceptor prefix mode: any stored column whose
-                # NAME starts with the prefix (column names are schema
-                # metadata — the enumeration is free at plan time)
-                cols = [
-                    c
-                    for c in self.index.docs.columns
-                    if c.startswith(node.column) and c not in ("doc_id", "dl")
-                ]
-                if not cols:
-                    raise ValueError(
-                        f"docs table has no column with prefix "
-                        f"{node.column!r}; build the index with "
-                        "extra_doc_cols=[...] to store them"
-                    )
-                pred = F.col(cols[0]).isNotNull()
-                for c in cols[1:]:
-                    pred = pred | F.col(c).isNotNull()
-            else:
-                if node.column not in self.index.docs.columns:
-                    raise ValueError(
-                        f"docs table has no column {node.column!r}; build "
-                        "the index with extra_doc_cols=[...] to store it"
-                    )
-                pred = F.col(node.column).isNotNull()
+            cols = sem_.exists_columns(node, self.index.docs.columns)
+            if cols[0] not in self.index.docs.columns:
+                raise ValueError(
+                    f"docs table has no column {node.column!r}; build "
+                    "the index with extra_doc_cols=[...] to store it"
+                )
+            pred = F.col(cols[0]).isNotNull()
+            for c in cols[1:]:
+                pred = pred | F.col(c).isNotNull()
             return self.index.docs.filter(pred).select(
                 "doc_id",
-                F.lit(self._const_score(node.boost * boost)).alias("score"),
+                F.lit(self.sem.const_score(node.boost * boost)).alias("score"),
             )
         if isinstance(node, ast.NumericRange):
             if node.column not in self.index.docs.columns:
@@ -1272,7 +1036,7 @@ class SearchEngine:
                 )
             return self.index.docs.filter(pred).select(
                 "doc_id",
-                F.lit(self._const_score(node.boost * boost)).alias("score"),
+                F.lit(self.sem.const_score(node.boost * boost)).alias("score"),
             )
         if isinstance(node, ast.GranularRange):
             return self._eval_granular(node, boost)
@@ -1322,35 +1086,11 @@ class SearchEngine:
         return self._eval_leaf_df(leaf, postings)
 
     def _eval_bool(self, node, boost: float, postings=None) -> DataFrame:
-        children = list(node.children)
         boost = boost * node.boost
-        # Should children (Lucene optional/score-only clauses) unwrap
-        # here: they evaluate and score like any positive but never
-        # count toward `required` — implemented with a per-row _req
-        # flag so the fused-scan fold still applies to them
-        positives: list[ast.Node] = []
-        optional_idx: set[int] = set()
-        for c in children:
-            if isinstance(c, ast.Not):
-                continue
-            if isinstance(c, ast.Should):
-                optional_idx.add(len(positives))
-                positives.append(
-                    c.child
-                    if c.boost == 1.0
-                    else _replace_boost(c.child, c.boost)
-                )
-            else:
-                positives.append(c)
-        negatives = [c.child for c in children if isinstance(c, ast.Not)]
-        n_pos = len(positives)
-        if isinstance(node, ast.And):
-            required = n_pos - len(optional_idx)
-        else:
-            # exclusions don't count toward min_match — the reference
-            # splits incl/excl and passes excl into the disjunction
-            # (boolean_filter.cpp:221-312)
-            required = node.min_match
+        # Should children score like any positive but never count toward
+        # `required` — a per-row _leaf flag keeps the fused-scan fold
+        # applicable to them
+        positives, optional_idx, negatives, required = sem_.bool_parts(node)
         # fold all plain-Term children into ONE fused scan: a single
         # postings read + decode+score pass emits (doc_id, score, _leaf)
         # for every folded term — n-term booleans cost one Python stage
@@ -1370,7 +1110,7 @@ class SearchEngine:
             # which alone made forced WAND slower than exhaustive
             dfs = self._term_dfs([c.term for _, c in fold])
             weights = {
-                c.term: self._c0(dfs[c.term], boost * c.boost) for _, c in fold
+                c.term: self.sem.c0(dfs[c.term], boost * c.boost) for _, c in fold
             }
             leaf_of = {c.term: i for i, c in fold}
             if postings is None:
@@ -1381,7 +1121,7 @@ class SearchEngine:
                 self._spark.sparkContext.defaultParallelism
             )
             fused = _make_fused_scorer(
-                weights, self._scorer_params(), None, leaf_of=leaf_of
+                weights, self.sem.scorer_params(), None, leaf_of=leaf_of
             )
             parts.append(slim.mapInArrow(fused, LEAF_RESULT_SCHEMA))
         for i, c in enumerate(positives):
@@ -1400,29 +1140,15 @@ class SearchEngine:
         # every leaf emits each doc at most once, so count == distinct
         # leaf count (countDistinct would force a dedup expansion).
         # Child scores merge per ScoreMergeType (scorer.hpp:224-235):
-        # sum (default), max (dismax/best-field), min, or noop (score
-        # untouched -> constant 0).
+        # sum (default — the fixed leaf-order fold, float32 in parity
+        # mode: the reference sums in child iterator order), max
+        # (dismax/best-field), min, or noop (score untouched ->
+        # constant 0).
         merge = node.merge_type
-        if self._f32 and merge == "sum":
-            # parity mode: child scores accumulate in float32 in a
-            # FIXED order (leaf index — the reference sums in child
-            # iterator order, score_t = float); array_sort on the
-            # (_leaf, score) structs pins the order under the shuffle
-            score_agg = (
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("_leaf", "score"))),
-                    F.lit(0.0).cast("float"),
-                    lambda acc, x: (acc + x["score"].cast("float")).cast(
-                        "float"
-                    ),
-                )
-                .cast("double")
-                .alias("score")
-            )
+        if merge in ("max", "min"):
+            score_agg = getattr(F, merge)("score").alias("score")
         else:
-            score_agg = {"sum": F.sum, "max": F.max, "min": F.min}.get(
-                merge, F.sum
-            )("score").alias("score")
+            score_agg = _fold_scores(self.sem.f32, len(positives))
         if optional_idx:
             # optional (Should) leaves score but don't count toward
             # `required`: a 0/1 flag per row, summed instead of count
@@ -1450,66 +1176,6 @@ class SearchEngine:
             merged = merged.join(excl.distinct(), "doc_id", "left_anti")
         return merged
 
-    def _slot_candidates(self, part) -> list[tuple[str, int]]:
-        """One phrase slot -> [(term, df)] candidates. A plain string is
-        a single fixed term; a leaf node (Prefix/Wildcard/Fuzzy/Terms/
-        Range) expands against term_stats — the reference's variadic
-        phrase visitor over by_prefix/by_wildcard/by_edit_distance
-        options (phrase_filter.cpp:75-121). Expansion obeys the leaf's
-        scored_terms_limit/max_terms cap, mirroring the standalone leaf
-        behavior."""
-        if isinstance(part, str):
-            dfs = self._term_dfs([part])
-            return [(part, dfs[part])]
-        if isinstance(part, ast.Terms):
-            uniq = list(dict.fromkeys(part.terms))
-            dfs = self._term_dfs(uniq)
-            return [(t, dfs[t]) for t in uniq]
-        if isinstance(part, ast.Prefix):
-            return self._expand(
-                F.col("term").startswith(part.prefix),
-                limit=min(part.scored_terms_limit, self.scored_terms_limit),
-                lo=part.prefix,
-                hi=self._prefix_successor(part.prefix),
-                hi_inclusive=False,
-            )
-        if isinstance(part, ast.Wildcard):
-            regex = _like_to_regex(part.pattern)
-            wsrc, wkw = self._wildcard_expand_plan(part.pattern)
-            return self._expand(
-                F.col("term").rlike(regex),
-                limit=min(part.scored_terms_limit, self.scored_terms_limit),
-                source=wsrc,
-                **wkw,
-            )
-        if isinstance(part, ast.Range):
-            conds = []
-            if part.min_term is not None:
-                conds.append(
-                    F.col("term") >= part.min_term
-                    if part.include_min
-                    else F.col("term") > part.min_term
-                )
-            if part.max_term is not None:
-                conds.append(
-                    F.col("term") <= part.max_term
-                    if part.include_max
-                    else F.col("term") < part.max_term
-                )
-            pred = conds[0] if conds else F.lit(True)
-            for c in conds[1:]:
-                pred = pred & c
-            return self._expand(
-                pred,
-                limit=min(part.scored_terms_limit, self.scored_terms_limit),
-                lo=part.min_term,
-                hi=part.max_term,
-                hi_inclusive=part.include_max,
-            )
-        if isinstance(part, ast.Fuzzy):
-            return self._leaf_expansion(part)[0]  # cached
-        raise TypeError(f"unsupported phrase slot: {part!r}")
-
     def _eval_positional(
         self,
         slots: list[list[tuple[str, int]]],
@@ -1528,16 +1194,11 @@ class SearchEngine:
         shared phrase frequency)."""
         if not self.index.with_positions:
             raise ValueError("index was built without positions")
-        clean: list[list[tuple[str, int]]] = []
-        for s in slots:
-            s2 = [(t, d) for t, d in dict(s).items() if d > 0]
-            if not s2:
-                return self._empty()  # a slot with no live terms
-            clean.append(s2)
-        c0_sum = sum(
-            self._c0(sum(d for _, d in s), 1.0) for s in clean
-        ) * boost
-        all_terms = list(dict.fromkeys(t for s in clean for t, _ in s))
+        weight = self.sem.phrase_weight(slots, boost)
+        if weight is None:
+            return self._empty()  # a slot with no live terms
+        clean, c0_sum = weight
+        all_terms = list(dict.fromkeys(t for s in clean for t in s))
         decoded = self.index.decoded_postings(
             terms=all_terms, with_positions=True
         )
@@ -1554,7 +1215,7 @@ class SearchEngine:
         m = len(clean)
         slot_of: dict[str, list[int]] = {}
         for i, s in enumerate(clean):
-            for t, _ in s:
+            for t in s:
                 slot_of.setdefault(t, []).append(i)
         slot_map = F.map_from_arrays(
             F.array(*[F.lit(t) for t in slot_of]),
@@ -1597,14 +1258,9 @@ class SearchEngine:
         for i in range(1, m):
             inter = F.array_intersect(inter, F.col(f"_p{i}"))
         freq_df = grouped.select(
-            "doc_id", F.size(inter).alias("freq"), "dl"
+            "doc_id", F.size(inter).alias("freq"), "dl", F.lit(c0_sum).alias("_c0")
         ).filter(F.col("freq") > 0)
-        return freq_df.select(
-            "doc_id",
-            self._score_full_expr(
-                c0_sum, F.col("freq"), F.col("dl")
-            ).alias("score"),
-        )
+        return self._positional_scores(freq_df, ["doc_id"])
 
     def _eval_granular(
         self, node: "ast.GranularRange", boost: float
@@ -1643,27 +1299,21 @@ class SearchEngine:
                 "numeric_fields=[...] (or extra_doc_cols)"
             )
         dtype = meta[node.column]
-
-        def _empty() -> DataFrame:
-            return self._spark.createDataFrame(
-                [], "doc_id long, score double"
-            )
-
         lo = hi = None
         if node.min_val is not None:
             lo = _num.sortable_py(node.min_val, dtype)
             if not node.include_min:
                 if lo == _num.LONG_MAX:
-                    return _empty()
+                    return self._empty()
                 lo += 1
         if node.max_val is not None:
             hi = _num.sortable_py(node.max_val, dtype)
             if not node.include_max:
                 if hi == _num.LONG_MIN:
-                    return _empty()
+                    return self._empty()
                 hi -= 1
         if lo is not None and hi is not None and lo > hi:
-            return _empty()
+            return self._empty()
         pred = _num.range_predicate(
             node.column, lo, hi, idx.precision_step
         )
@@ -1672,7 +1322,7 @@ class SearchEngine:
         # doc appears exactly once — no distinct needed
         return idx.num_terms.filter(pred).select(
             "doc_id",
-            F.lit(self._const_score(node.boost * boost)).alias("score"),
+            F.lit(self.sem.const_score(node.boost * boost)).alias("score"),
         )
 
     def _eval_nested(self, node: ast.Nested, boost: float) -> DataFrame:
@@ -1731,20 +1381,18 @@ class SearchEngine:
         if not self.index.with_positions:
             raise ValueError("index was built without positions")
         boost = boost * node.boost
-        q_seq = list(node.terms)
-        m = len(q_seq)
+        m = len(node.terms)
         if m == 0:
             return self._empty()
-        min_match = max(1, math.ceil(node.threshold * m))
-        uniq = list(dict.fromkeys(q_seq))
-        dfs = self._term_dfs(uniq)
-        present = [t for t in uniq if dfs[t] > 0]
+        q_codes, tcode, min_match = sem_.ngram_codes(node)
+        dfs = self._term_dfs(list(tcode))
+        present = [t for t in tcode if dfs[t] > 0]
         if not present:
             return self._empty()
         decoded = self.index.decoded_postings(terms=present, with_positions=True)
-        # sound prefilter: LCS >= min_match needs at least min_match doc
-        # occurrences of query ngrams (occurrence count, not distinct
-        # terms — the query sequence may repeat an ngram)
+        # sound prefilter (semantics.ngram_codes): the candidate needs
+        # min_match doc occurrences of query ngrams (occurrence count,
+        # not distinct terms — the query sequence may repeat an ngram)
         cand = (
             decoded.groupBy("doc_id")
             .agg(
@@ -1756,23 +1404,6 @@ class SearchEngine:
         threshold = node.threshold
 
         def lcs_ratio(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # LCS row recurrence vectorized over the stream axis AND the
-            # doc axis: docs are packed into a (rows x max_len) padded
-            # code matrix (pad code -1 never equals a query code, and
-            # the running max is flat over padding, so column -1 holds
-            # every row's answer regardless of its true length):
-            #   cur[:, j] = max(prev[:, j], prev[:, j-1] + eq[:, j],
-            #               cur[:, j-1])
-            # => cur = running_max(max(prev[:,1:], prev[:,:-1] + eq),
-            #          axis=1)
-            # Only the m query slots loop in Python. Rows are processed
-            # in length-sorted chunks with a bounded cell budget so one
-            # long doc neither inflates padding for short docs nor blows
-            # batch memory.
-            uniq_q = list(dict.fromkeys(q_seq))
-            tcode = {t: k for k, t in enumerate(uniq_q)}
-            q_codes = [tcode[t] for t in q_seq]
-            max_cells = 1 << 23
             for pdf in batches:
                 n = len(pdf)
                 if n == 0:
@@ -1791,45 +1422,13 @@ class SearchEngine:
                         )
                 ridx = np.concatenate(ridx_p)
                 order = np.lexsort((np.concatenate(pos_p), ridx))
-                ridx = ridx[order]
                 codes = np.concatenate(code_p)[order]
-                lens = np.bincount(ridx, minlength=n)
+                lens = np.bincount(ridx[order], minlength=n)
                 starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                doc_ids = pdf["doc_id"].to_numpy()
-                sims = np.empty(n, dtype=np.float64)
-                by_len = np.argsort(lens, kind="stable")
-                i = 0
-                while i < n:
-                    # greedy chunk: rows i..j-1 (ascending length) while
-                    # rows * max_len stays under the cell budget
-                    j = i + 1
-                    while (
-                        j < n
-                        and (j + 1 - i) * int(lens[by_len[j]]) <= max_cells
-                    ):
-                        j += 1
-                    rows = by_len[i:j]
-                    L = int(lens[rows].max())
-                    mat = np.full((rows.size, L), -1, np.int32)
-                    for k, r in enumerate(rows):
-                        s = starts[r]
-                        mat[k, : lens[r]] = codes[s : s + lens[r]]
-                    prev = np.zeros((rows.size, L + 1), dtype=np.int32)
-                    cur = np.empty_like(prev)
-                    for qc in q_codes:
-                        eq = (mat == qc).astype(np.int32)
-                        cur[:, 0] = 0
-                        np.maximum.accumulate(
-                            np.maximum(prev[:, 1:], prev[:, :-1] + eq),
-                            axis=1,
-                            out=cur[:, 1:],
-                        )
-                        prev, cur = cur, prev
-                    sims[rows] = prev[:, -1].astype(np.float64) / m
-                    i = j
+                sims = sem_.lcs_lengths(codes, starts, lens, q_codes) / m
                 keep = sims >= threshold
                 yield pd.DataFrame(
-                    {"doc_id": doc_ids[keep], "_sim": sims[keep]}
+                    {"doc_id": pdf["doc_id"].to_numpy()[keep], "_sim": sims[keep]}
                 )
 
         sim_df = cand.mapInPandas(lcs_ratio, "doc_id long, _sim double")
@@ -1838,66 +1437,6 @@ class SearchEngine:
         )
 
     # --------------------------------------------------------------- WAND
-
-    def _wand_leaf_boosts(self, leaf: ast.Node) -> list[tuple[str, float]] | None:
-        """(term, boost-multiplier) pairs of a WAND-eligible scored
-        leaf: a (possibly boosted) Term, a sum-merge Terms set with
-        its per-term boosts (terms_filter.hpp {term, boost} pairs), or
-        a COMPLETELY-expanded multiterm leaf (Prefix/Wildcard/Range/
-        Fuzzy — the reference serves every scored multiterm through
-        the same wanderator, multiterm_query.cpp:36-100; the expansion
-        is cached, so the WAND passes reuse it). An expansion that hit
-        its scored_terms_limit cap is NOT eligible: the leaf then
-        matches unscored terms beyond the sample, and restricting the
-        pruned scan to the sampled terms would drop those matches from
-        group (And/min_match) membership. Terms with min_match > 1 /
-        non-sum merge never reach here (the planner rewrites them onto
-        Or)."""
-        if isinstance(leaf, ast.Term):
-            return [(leaf.term, leaf.boost)]
-        if (
-            isinstance(leaf, ast.Terms)
-            and leaf.min_match <= 1
-            and leaf.merge_type == "sum"
-        ):
-            return [
-                (t, leaf.boost * leaf.term_boost(t))
-                for t in dict.fromkeys(leaf.terms)
-            ]
-        if isinstance(leaf, (ast.Prefix, ast.Wildcard, ast.Range, ast.Fuzzy)):
-            expanded, complete = self._leaf_expansion(leaf)
-            if complete and expanded:
-                return [(t, leaf.boost) for t, _ in expanded]
-        return None
-
-    def _wand_terms(self, node: ast.Node) -> dict[str, float] | None:
-        """term -> boost multiplier (root boost excluded) for query
-        shapes eligible for block-max pruning: a Term/Terms leaf, or a
-        sum-merge And/Or of such leaves (any child boosts — they fold
-        into the per-term upper bounds). Pruning soundness for leaves
-        holding 0-weight terms (beyond scored_terms_limit) follows from
-        the bound itself: a doc matching only through a pruned 0-weight
-        block scores <= rest < theta, so it cannot enter the top-k."""
-        pairs = self._wand_leaf_boosts(node)
-        if pairs is None and (
-            isinstance(node, (ast.And, ast.Or))
-            and node.merge_type == "sum"  # block-max bounds assume sum
-        ):
-            pairs = []
-            for c in node.children:
-                p = self._wand_leaf_boosts(c)
-                if p is None:
-                    return None
-                pairs.extend(p)
-        if pairs is None:
-            return None
-        terms = [t for t, _ in pairs]
-        # duplicated terms would collapse in the per-term weight map
-        # (an And of twins would then demand 2 distinct matches of 1
-        # term -> empty); exhaustive eval handles them correctly
-        if len(set(terms)) != len(terms):
-            return None
-        return dict(pairs)
 
     def _plain_terms(self, node: ast.Node, acc: list[str]) -> None:
         if isinstance(node, ast.Term):
@@ -1926,7 +1465,7 @@ class SearchEngine:
         if acc:
             self._term_dfs(list(dict.fromkeys(acc)))
         if mode == "wand" and k is not None:
-            terms = self._wand_terms(query)
+            terms = self.sem.wand_terms(query, self._leaf_expansion)
             if terms is not None:
                 return self._apply_delete_mask(self._execute_wand(query, terms, k))
         if (
@@ -1947,67 +1486,19 @@ class SearchEngine:
             return df
         return df.join(self.index.deleted.select("doc_id"), "doc_id", "left_anti")
 
-    def _wand_driver_path(self, query, weights, ub, k: int):
-        """Driver-side WAND bound walk over collected per-block meta
-        (see _execute_wand; chosen when the estimated block count fits
-        self.wand_driver_meta_cap). Three Spark jobs total: meta
-        collect, theta seed scan, pruned final scan. Returns None when
-        theta cannot prune (falls through to the exhaustive plan)."""
-        G, SPAN_CAP = 13, 64
-        rows = ub.select(
-            "term", "block_id", "_ub", "first_doc", "last_doc"
-        ).collect()
-        if not rows:
-            return self._empty()
-        blocks = [
-            (
-                r["term"], r["block_id"], float(r["_ub"]),
-                int(r["first_doc"]) >> G, int(r["last_doc"]) >> G,
-            )
-            for r in rows
-        ]
-        mx: dict[str, float] = {}
-        wide_of: dict[str, float] = {t: 0.0 for t in weights}
-        by_ts: dict[tuple[str, int], float] = {}
-        for t, bid, u, s0, s1 in blocks:
-            mx[t] = max(mx.get(t, 0.0), u)
-            if s1 - s0 >= SPAN_CAP:
-                wide_of[t] = max(wide_of[t], u)
-            else:
-                for s in range(s0, s1 + 1):
-                    key = (t, s)
-                    if u > by_ts.get(key, 0.0):
-                        by_ts[key] = u
-        total_ub = sum(mx.values())
-        base = sum(wide_of.values())
-        # per-range sums of effective bounds (absent terms contribute
-        # their wide-block global, usually 0)
-        sums: dict[int, float] = {}
-        for (t, s), v in by_ts.items():
-            sums[s] = sums.get(s, base) + max(v - wide_of[t], 0.0)
-        # seed: best-sum ranges (stacked multi-term candidates) plus
-        # the global top blocks as a disjoint-terms safety
-        n_seed_ranges = max(1, (k + 63) // 64)
-        top_ranges = set(
-            s for s, _ in sorted(
-                sums.items(), key=lambda kv: kv[1], reverse=True
-            )[:n_seed_ranges]
-        )
-        by_ub = sorted(blocks, key=lambda b: b[2], reverse=True)
-        seed_ids = {(b[0], b[1]) for b in by_ub[: max(2, (4 * k) // 128 + 1)]}
-        for t, bid, u, s0, s1 in blocks:
-            if s1 - s0 < SPAN_CAP and any(
-                s0 <= s <= s1 for s in top_ranges
-            ):
-                seed_ids.add((t, bid))
-        spark = self._spark
-        seed_df = spark.createDataFrame(
-            [(t, int(b)) for t, b in seed_ids], "term string, block_id long"
-        )
+    def _seed_theta(self, query, weights, seed: DataFrame, k: int) -> float:
+        """theta = k-th best ACHIEVED (live) score over the seed blocks
+        (term, block_id), 0.0 when they cannot fill k — a scalar, so
+        collecting it is O(1) at any corpus size. The seed evaluation
+        must see the delete mask: a deleted doc's achieved score would
+        inflate theta above the true live k-th score and prune blocks
+        holding live top-k docs (the reference applies the deleted-docs
+        bitset inside every doc_iterator, so its WAND threshold only
+        ever rises on live docs)."""
         seed_postings = self.index.postings_for_terms(list(weights)).join(
-            F.broadcast(seed_df), ["term", "block_id"], "left_semi"
+            F.broadcast(seed), ["term", "block_id"], "left_semi"
         )
-        theta = float(
+        return float(
             self._apply_delete_mask(
                 self._eval(query, 1.0, postings=seed_postings)
             )
@@ -2020,29 +1511,49 @@ class SearchEngine:
             )
             .collect()[0]["_theta"]
         )
+
+    def _wand_driver_path(self, query, weights, ub, k: int):
+        """Driver-side WAND over collected per-block meta (see
+        _execute_wand; chosen when the estimated block count fits
+        self.wand_driver_meta_cap): the shared semantics.BoundWalk picks
+        the seed and survivor blocks. Three Spark jobs total: meta
+        collect, theta seed scan, pruned final scan."""
+        rows = ub.select(
+            "term", "block_id", "_ub", "first_doc", "last_doc"
+        ).collect()
+        if not rows:
+            return self._empty()
+        cols: dict[str, tuple[list, ...]] = {}
+        for r in rows:
+            c = cols.setdefault(r["term"], ([], [], [], []))
+            c[0].append(int(r["block_id"]))
+            c[1].append(float(r["_ub"]))
+            c[2].append(int(r["first_doc"]) >> sem_.ALIGN_BITS)
+            c[3].append(int(r["last_doc"]) >> sem_.ALIGN_BITS)
+        walk = sem_.BoundWalk(
+            {t: tuple(np.asarray(a) for a in c[1:]) for t, c in cols.items()}
+        )
+
+        def block_ids(sel: dict) -> list[tuple[str, int]]:
+            return [(t, cols[t][0][i]) for t, idx in sel.items() for i in idx]
+
+        spark = self._spark
+        seed_df = spark.createDataFrame(
+            block_ids(walk.seed(k)), "term string, block_id long"
+        )
+        theta = self._seed_theta(query, weights, seed_df, k)
         if theta <= 0.0:
             return self._eval(query, 1.0)
-        theta_eff = theta * (1.0 - 1e-5) if self._f32 else theta
-        keep = []
-        for t, bid, u, s0, s1 in blocks:
-            if s1 - s0 >= SPAN_CAP:
-                rest = total_ub - mx[t]
-            else:
-                rest = 0.0
-                for s in range(s0, s1 + 1):
-                    eff = max(by_ts.get((t, s), 0.0), wide_of[t])
-                    rest = max(rest, sums.get(s, base) - eff)
-            if u + rest >= theta_eff:
-                keep.append((t, int(bid)))
+        keep = block_ids(walk.keep(self.sem.theta_eff(theta)))
         if self.collect_wand_stats:
             self.last_wand_stats = {
-                "blocks_total": len(blocks),
+                "blocks_total": walk.n_blocks,
                 "blocks_kept": len(keep),
                 "theta": theta,
             }
         if not keep:
             return self._empty()
-        if len(keep) * 2 >= len(blocks):
+        if len(keep) * 2 >= walk.n_blocks:
             # pruning didn't engage: the exhaustive single-job plan is
             # strictly better than scanning through a keep join
             return self._eval(query, 1.0)
@@ -2088,10 +1599,7 @@ class SearchEngine:
             # adaptive: the candidate set is small enough that a full
             # scan beats pruning overhead (AQE-style runtime choice)
             return self._eval(query, 1.0)
-        boost = query.boost if isinstance(query, (ast.And, ast.Or)) else 1.0
-        weights = {
-            t: self._c0(dfs[t], boost * terms[t]) for t in dfs
-        }
+        weights = self.sem.wand_weights(query, terms, dfs)
         meta = self.index.postings_for_terms(list(weights)).select(
             "term", "block_id", "n_docs", "first_doc", "last_doc",
             "block_max_freq", "block_min_dl", "block_impacts",
@@ -2134,8 +1642,7 @@ class SearchEngine:
         # overlapping the best few ranges — the aligned analogue of
         # WAND's document-at-a-time pivot; per-term global best blocks
         # are added as a safety for disjoint-term queries.
-        G = 13            # 8192-doc alignment ranges
-        SPAN_CAP = 64     # a block overlapping more ranges goes global
+        G, SPAN_CAP = sem_.ALIGN_BITS, sem_.SPAN_CAP
         rng = ub.select(
             "term", "block_id", "_ub",
             F.shiftright("first_doc", G).alias("_s0"),
@@ -2174,29 +1681,7 @@ class SearchEngine:
         for p in seed_parts[1:]:
             seed = seed.unionByName(p)
         seed = seed.distinct()
-        seed_postings = self.index.postings_for_terms(list(weights)).join(
-            F.broadcast(seed), ["term", "block_id"], "left_semi"
-        )
-        # the seed evaluation must see the delete mask: a deleted doc's
-        # achieved score would inflate theta above the true live k-th
-        # score and prune blocks holding live top-k docs (the reference
-        # applies the deleted-docs bitset inside every doc_iterator, so
-        # its WAND threshold only ever rises on live docs)
-        # theta = k-th best ACHIEVED (live) score on the seed blocks —
-        # a scalar, so collecting it is O(1) at any corpus size
-        theta = float(
-            self._apply_delete_mask(
-                self._eval(query, 1.0, postings=seed_postings)
-            )
-            .orderBy(F.desc("score"))
-            .limit(k)
-            .agg(
-                F.when(F.count("*") < k, F.lit(0.0))
-                .otherwise(F.min("score"))
-                .alias("_theta")
-            )
-            .collect()[0]["_theta"]
-        )
+        theta = self._seed_theta(query, weights, seed, k)
         if theta <= 0.0:
             # seed couldn't fill k: no bound can prune anything
             return self._eval(query, 1.0)
@@ -2229,10 +1714,7 @@ class SearchEngine:
             if r["_wmx"] is not None
         }
         total_ub = sum(mx.values())
-        # float32 parity mode: achieved scores round through float32
-        # and can exceed the f64 bounds by ~1 ulp — relax theta by a
-        # 1e-5 relative margin (scores are non-negative)
-        theta_eff = theta * (1.0 - 1e-5) if self._f32 else theta
+        theta_eff = self.sem.theta_eff(theta)
         rest_map = F.map_from_arrays(
             F.array(*[F.lit(t) for t in mx]),
             F.array(*[F.lit(float(total_ub - v)) for v in mx.values()]),
@@ -2332,81 +1814,30 @@ class SearchEngine:
         return self._eval(query, 1.0, postings=survivors)
 
 
-def _replace_boost(node: ast.Node, mult: float) -> ast.Node:
-    """Copy `node` with boost multiplied by `mult` (Should unwrapping)."""
-    import dataclasses
-
-    return dataclasses.replace(node, boost=node.boost * mult)
+def _order_cols(order) -> list:
+    """A semantics expansion order as orderBy columns."""
+    return [getattr(F, d)(c) for c, d in order]
 
 
-def _make_score_kernel(params: tuple):
-    """(c0_row, freqs, dls) -> float64 score array for the fused pass.
-
-    float64 (default): score = c0 * g(tf, dl) — algebraically the
-    reference formula, evaluated in doubles for the DuckDB oracle.
-    float32 (parity mode): the exact reference op chain in np.float32 —
-    bit-equal to scorers.ref_bm25_f32 (itself a transcription of
-    bm25.cpp:198-365); see the scorers module docstring for the map.
-    """
-    (kind, k, b, avg_dl, with_norms, norm_mode, dtype, n_docs, ttf,
-     tiny) = params
-    legacy = norm_mode == "legacy"
-
-    if dtype == "float32":
-        from iresearch_spark.search.scorers import f32_stats
-
-        f32 = np.float32
-        one = f32(1.0)
-
-        def score32(c0_64, freqs, dls):
-            c0 = c0_64.astype(np.float32)
-            if kind == "tfidf":
-                s = f32(np.sqrt(freqs.astype(np.float32), dtype=np.float32))
-                s = (c0 * s).astype(np.float32)
-                if with_norms:
-                    stored = (
-                        one / np.sqrt(dls.astype(np.float64)).astype(np.float32)
-                    ).astype(np.float32)
-                    s = (s * stored).astype(np.float32)
-                return s.astype(np.float64)
-            if k == 0.0:  # BM1: constant per term
-                return c0.astype(np.float64)
-            if b == 0.0:  # BM15: no norm feature at all (tf = freq)
-                tf = freqs.astype(np.float32)
-                c1 = f32(k)
-                return (c0 - c0 / (one + tf / c1)).astype(np.float64)
-            if legacy:
-                tf = np.sqrt(freqs.astype(np.float32), dtype=np.float32)
-                stored = (
-                    one / np.sqrt(dls.astype(np.float64)).astype(np.float32)
-                ).astype(np.float32)
-                nrm = (one / stored).astype(np.float32)
-            else:
-                tf = freqs.astype(np.float32)
-                nrm = dls.astype(np.float32)
-            nc, nl = f32_stats(k, b, n_docs, ttf)
-            c1 = (nc + nl * nrm).astype(np.float32)
-            if tiny and not legacy:
-                inv_c1 = (one / c1).astype(np.float32)
-                return (c0 - c0 / (one + tf * inv_c1)).astype(np.float64)
-            return (c0 - (c0 * c1) / (c1 + tf)).astype(np.float64)
-
-        return score32
-
-    def score64(c0, freqs, dls):
-        freq = freqs.astype(np.float64)
-        dl = dls.astype(np.float64)
-        if kind == "bm25":
-            if legacy:
-                freq, dl = np.sqrt(freq), np.sqrt(dl)
-            c1 = k * (1.0 - b) + (k * b / avg_dl if avg_dl else 0.0) * dl
-            return c0 * (freq / (c1 + freq))
-        s = np.sqrt(freq)
-        if with_norms:
-            s = s / np.sqrt(dl)
-        return c0 * s
-
-    return score64
+def _fold_scores(f32: bool, n_scored: int):
+    """The Spark form of semantics.fold_sum: a doc group's scores
+    folded left in `_leaf` order (array_sort on the (_leaf, score)
+    structs pins the order under the shuffle), accumulating in float32
+    in parity mode. With at most `n_scored` non-zero scores per group,
+    n_scored <= 2 lets a float64 F.sum stand in: a sum of two has one
+    order."""
+    if not f32 and n_scored <= 2:
+        return F.sum("score").alias("score")
+    t = "float" if f32 else "double"
+    return (
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct("_leaf", "score"))),
+            F.lit(0.0).cast(t),
+            lambda acc, x: (acc + x["score"].cast(t)).cast(t),
+        )
+        .cast("double")
+        .alias("score")
+    )
 
 
 def _make_fused_scorer(
@@ -2417,7 +1848,7 @@ def _make_fused_scorer(
     _leaf column so one scan serves every plain-Term child of a
     boolean node."""
 
-    kernel = _make_score_kernel(params)
+    kernel = sem_.make_score_kernel(params)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from iresearch_spark.index.model import decode_batch_arrays
@@ -2463,123 +1894,10 @@ def _make_fused_scorer(
             if docs.size > topk:
                 # ties broken by doc_id asc to keep the global
                 # (score desc, doc_id asc) order exact under pruning
-                order = np.lexsort((docs, -scores))[:topk]
+                order = sem_.topk_order(docs, scores, topk)
                 docs, scores = docs[order], scores[order]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(docs), pa.array(scores)], names=["doc_id", "score"]
             )
 
     return run
-
-
-def _decode_blocks(blocks: DataFrame) -> DataFrame:
-    from iresearch_spark.index.model import DECODED_SCHEMA, _make_block_decoder
-
-    # spread before decode (a hot term's blocks sit in one bucket file)
-    # and ship only the columns the decoder reads — the JVM->Python
-    # transfer dominates the query path (see decoded_postings)
-    spread = blocks.select("term", "n_docs", "docs", "dls").repartition(
-        blocks.sparkSession.sparkContext.defaultParallelism
-    )
-    return spread.mapInArrow(_make_block_decoder(False), DECODED_SCHEMA)
-
-
-def _osa_distances_batch(q: str, terms, cap: int):
-    """OSA (Damerau without overlapping edits) distance of `q` against a
-    whole numpy/pandas batch of terms at once: the DP runs as O(m*L)
-    numpy ops over N-wide vectors instead of a per-term Python char loop
-    (the round-2 weak spot at large vocabularies). Terms longer than
-    len(q)+cap are assumed pre-filtered by the length band; returns an
-    int32 array (values may exceed cap — caller filters).
-
-    Matches `_osa_distance` exactly (differential-tested)."""
-    import numpy as np
-
-    N = len(terms)
-    if N == 0:
-        return np.zeros(0, dtype=np.int32)
-    lens = np.fromiter((len(t) for t in terms), dtype=np.int64, count=N)
-    L = int(lens.max())
-    m = len(q)
-    T = np.zeros((N, max(L, 1)), dtype=np.uint32)
-    for r, t in enumerate(terms):  # one encode per term, no DP here
-        if t:
-            T[r, : len(t)] = np.frombuffer(
-                t.encode("utf-32-le"), dtype=np.uint32
-            )
-    qc = (
-        np.frombuffer(q.encode("utf-32-le"), dtype=np.uint32)
-        if m
-        else np.zeros(0, dtype=np.uint32)
-    )
-    prev = np.broadcast_to(np.arange(L + 1, dtype=np.int32), (N, L + 1)).copy()
-    prev2 = None
-    for i in range(1, m + 1):
-        cur = np.empty((N, L + 1), dtype=np.int32)
-        cur[:, 0] = i
-        for j in range(1, L + 1):
-            cost = (T[:, j - 1] != qc[i - 1]).astype(np.int32)
-            v = np.minimum(prev[:, j] + 1, prev[:, j - 1] + cost)
-            np.minimum(v, cur[:, j - 1] + 1, out=v)
-            if prev2 is not None and j > 1 and i > 1:
-                trans = (T[:, j - 1] == qc[i - 2]) & (T[:, j - 2] == qc[i - 1])
-                v = np.where(trans, np.minimum(v, prev2[:, j - 2] + 1), v)
-            cur[:, j] = v
-        prev2, prev = prev, cur
-    return prev[np.arange(N), lens].astype(np.int32)
-
-
-def _osa_distance(a: str, b: str, cap: int) -> int:
-    """Optimal-string-alignment (Damerau without overlapping edits)
-    distance, capped: returns cap+1 as soon as the row minimum exceeds
-    cap. Matches the reference's with_transpositions distance
-    (levenshtein_utils.cpp builds the same OSA-parameterized automaton)."""
-    la, lb = len(a), len(b)
-    if abs(la - lb) > cap:
-        return cap + 1
-    prev2: list[int] | None = None
-    prev = list(range(lb + 1))
-    for i in range(1, la + 1):
-        cur = [i] + [0] * lb
-        ai = a[i - 1]
-        for j in range(1, lb + 1):
-            cost = 0 if ai == b[j - 1] else 1
-            v = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
-            if (
-                prev2 is not None
-                and j > 1
-                and ai == b[j - 2]
-                and a[i - 2] == b[j - 1]
-            ):
-                v = min(v, prev2[j - 2] + 1)
-            cur[j] = v
-        if min(cur) > cap:
-            return cap + 1
-        prev2, prev = prev, cur
-    return prev[lb]
-
-
-def _like_to_regex(pattern: str) -> str:
-    """SQL-LIKE pattern -> anchored regex. Backslash escapes the next
-    char (reference wildcard_utils.hpp:43 kEscape='\\\\'), so '\\%' and
-    '\\_' match literal '%'/'_' and '\\\\' a literal backslash; a
-    trailing bare backslash is literal."""
-    import re as _re
-
-    out = []
-    i = 0
-    n = len(pattern)
-    while i < n:
-        ch = pattern[i]
-        if ch == "\\" and i + 1 < n:
-            out.append(_re.escape(pattern[i + 1]))
-            i += 2
-            continue
-        if ch == "%":
-            out.append(".*")
-        elif ch == "_":
-            out.append(".")
-        else:
-            out.append(_re.escape(ch))
-        i += 1
-    return "^" + "".join(out) + "$"

@@ -8,10 +8,11 @@ pins an index's posting blocks in DRIVER memory (compact codec blobs,
 decoded lazily per term and cached as numpy arrays) and answers
 Term / Terms / And / Or(min_match) / Not / Should and plain-string
 Phrase / SamePosition queries without
-launching a single Spark job — scoring runs through the SAME
-`_make_score_kernel` the cluster's fused scan uses, so scores are
-bit-identical (float64 and float32 parity modes alike) and top-k order
-matches the cluster path exactly (differential-tested).
+launching a single Spark job — scoring, expansion, boolean merge and
+top-k follow the SAME rules the cluster uses (search/semantics.py: one
+score kernel, one leaf-order sum fold), so scores are bit-identical
+(float64 and float32 parity modes alike) and top-k order matches the
+cluster path exactly (differential-tested).
 
 mode="wand" here is a REAL block-max WAND: per-block upper bounds from
 the stored (tf, dl) impact pairs, theta seeded from the doc-range with
@@ -23,13 +24,13 @@ save below ~10M postings/query; this path has no such overhead).
 Multi-term leaves (Prefix / Wildcard / Range / Fuzzy) are served too:
 the hot segment holds the FULL term dictionary in memory, so expansion
 is a sorted-vocabulary slice / regex walk / banded DP instead of a
-Spark job — `_hot_expansion` mirrors the executor's `_leaf_expansion`
-exactly (same candidate sets, same (df desc, term asc) order, same
-scored_terms_limit / max_terms caps, same matched-but-unscored
-semantics for capped expansions) and SEEDS the cluster engine's
-expansion cache, so a later cluster-path or WAND execution of the same
-node reuses the expansion without a job (the reference's prepared-
-query seek cookies, multiterm_query.cpp:36-100).
+Spark job. `_hot_expansion` applies the semantics core's expansion
+rules to the in-memory vocabulary — the same candidate sets, (df desc,
+term asc) order, scored_terms_limit / max_terms caps and
+matched-but-unscored semantics for capped expansions as the cluster's
+`_leaf_expansion` — and caches them per node in this replica only (the
+reference's prepared-query seek cookies, multiterm_query.cpp:36-100);
+WAND eligibility reads the same cache through an expansion callback.
 
 Columnar leaves are served in-memory too: stored doc columns pin
 LAZILY on first use (one Arrow collect per column, sorted by doc_id),
@@ -49,8 +50,8 @@ APIs, ms-latency snippet/payload serving next to the top-k itself.
 Scale story: a hot segment is bounded by `max_bytes` (default 1 GiB of
 blobs) — the serving tier for a 10^12-doc corpus is many such replicas
 over index shards (or time-sliced heads), with the cluster path as the
-long-tail fallback; `HotEngine.search` itself falls back to the
-cluster engine for the query shapes it does not serve (GranularRange
+long-tail fallback; a Spark-built `HotEngine.search` itself falls
+back to the cluster engine for the query shapes it does not serve (GranularRange
 when the range column exists only in the numeric dictionary; every
 other shape — NgramSimilarity's per-candidate LCS, and Field-scoped
 subtrees through `HotMultiFieldEngine`'s per-field replicas —
@@ -59,20 +60,13 @@ answers in-memory).
 
 from __future__ import annotations
 
-import heapq
 from collections import defaultdict
 
 import numpy as np
 
-from pyspark.sql import functions as F
-
 from iresearch_spark.index import codec
 from iresearch_spark.search import ast, planner
-from iresearch_spark.search.executor import SearchEngine, _make_score_kernel
-
-_G = 13       # doc-range granularity for bound alignment (2^13 docs)
-_SPAN_CAP = 64
-_EXPANSION_LEAVES = (ast.Prefix, ast.Wildcard, ast.Range, ast.Fuzzy)
+from iresearch_spark.search import semantics as sem_
 
 
 def _dir_fingerprint(path: str):
@@ -124,15 +118,19 @@ def _multifield_fingerprint(path: str):
 
 class HotEngine:
     """In-driver replica of an index's postings for low-latency
-    serving. Construct from a SearchEngine (one collect); query with
-    `search(node, k, mode)` -> list of (doc_id, score), score desc,
-    doc_id asc — the cluster path's exact output order."""
+    serving. Construct from a SearchEngine (one collect), or Spark-free
+    with `from_dir`; query with `search(node, k, mode)` -> list of
+    (doc_id, score), score desc, doc_id asc — the cluster path's exact
+    output order. `engine` is what the replica was pinned from: the
+    SearchEngine, or for `from_dir` an embedded.LocalSource (a
+    LocalIndex plus its Semantics, with no cluster behind it)."""
 
-    def __init__(self, engine: SearchEngine, max_bytes: int = 1 << 30):
+    def __init__(self, engine, max_bytes: int = 1 << 30):
         self.engine = engine
-        self._kernel = _make_score_kernel(engine._scorer_params())
+        self.index = index = engine.index
+        self.sem = engine.sem
+        self._kernel = self.sem.kernel
         self._max_bytes = max_bytes
-        index = engine.index
         cols = [
             "term", "n_docs", "first_doc", "last_doc",
             "docs", "dls", "block_impacts", "block_max_freq",
@@ -157,7 +155,7 @@ class HotEngine:
                 "the cluster path"
             )
 
-        if getattr(engine, "is_embedded", False):
+        if hasattr(index, "postings_arrow"):
             # Spark-free path (search/embedded.py): the blobs come off
             # the saved parquet layout via pyarrow. The footer-stats
             # estimate guards the read (refuse before materializing an
@@ -170,6 +168,8 @@ class HotEngine:
             if size > max_bytes:
                 _over_budget(size)
         else:
+            from pyspark.sql import functions as F
+
             size = index.postings.select(
                 (
                     F.sum(F.length("docs") + F.length("dls"))
@@ -204,7 +204,7 @@ class HotEngine:
         `encryption=` carries the master keys (EmbeddedDecryption —
         pyarrow modular decryption, still no JVM)."""
         from iresearch_spark.search.embedded import (
-            EmbeddedEngine,
+            LocalSource,
             load_local_index,
         )
 
@@ -213,7 +213,7 @@ class HotEngine:
         # as already-seen
         fp = _dir_fingerprint(path)
         eng = cls(
-            EmbeddedEngine(
+            LocalSource.open(
                 load_local_index(path, encryption=encryption),
                 scorer=scorer,
                 score_dtype=score_dtype,
@@ -603,51 +603,29 @@ class HotEngine:
         return out
 
     def _term_bound_arrays(self, term: str):
-        """Query-independent per-block bound data for WAND, cached:
-        (g_ub float64[B], s0 int64[B], s1 int64[B]) — ub = c0 * g_ub."""
+        """Query-independent per-block WAND data, cached: (g_ub
+        float64[B], s0 int64[B], s1 int64[B]) — a block's score bound
+        is c0 * g_ub over alignment ranges s0..s1 (BoundWalk)."""
         hit = self._bounds.get(term)
         if hit is not None:
             return hit
-        bl = self._bl(term)
-        g = np.empty(len(bl), np.float64)
-        s0 = np.empty(len(bl), np.int64)
-        s1 = np.empty(len(bl), np.int64)
-        for i, entry in enumerate(bl):
-            g[i] = self._block_ub(entry, 1.0)
-            s0[i] = entry[0] >> _G
-            s1[i] = entry[1] >> _G
+        span = self._spans.get(term)
+        if span is None:
+            e = np.empty(0, np.int64)
+            return np.empty(0, np.float64), e, e
+        s, e = span
+        if self._imp_a is None:
+            tf = dl = offs = ok = None
+        else:
+            tf, dl, offs_all, ok_all = self._imp_a
+            offs, ok = offs_all[s:e + 1], ok_all[s:e]
+        g = self.sem.block_g_ub(
+            tf, dl, offs, ok, self._mf_a[s:e], self._md_a[s:e]
+        )
+        s0, s1 = (a[s:e] >> sem_.ALIGN_BITS for a in (self._fd_a, self._ld_a))
         out = (g, s0, s1)
         self._bounds[term] = out
         return out
-
-    def _g_scalar(self, tf: float, dl: float) -> float:
-        """g(tf, dl) for bounds — same algebra as executor._score_g
-        (float64; bound math never needs the f32 parity chain)."""
-        from iresearch_spark.search.scorers import BM25
-
-        sc = self.engine.scorer
-        if isinstance(sc, BM25):
-            avg = self.engine.index.field_stats.avg_dl
-            if self.engine._norm_mode == "legacy":
-                tf, dl = tf ** 0.5, dl ** 0.5
-            c1 = sc.k * (1.0 - sc.b) + (
-                (sc.k * sc.b) / avg if avg else 0.0
-            ) * dl
-            return tf / (c1 + tf)
-        s = tf ** 0.5
-        if getattr(sc, "with_norms", False):
-            s = s / dl ** 0.5
-        return s
-
-    def _block_ub(self, entry, c0: float) -> float:
-        first, last, n, _docs, _dls, impacts, max_f, min_dl, _pb = entry
-        if impacts is not None and len(impacts[0]):
-            return c0 * max(
-                self._g_scalar(tf, dl)
-                for tf, dl in zip(impacts[0].tolist(), impacts[1].tolist())
-            )
-        # pre-impacts index: the loose (max_freq, min_dl) bound
-        return c0 * self._g_scalar(float(max_f), float(min_dl))
 
     # --------------------------------------------------------- expansion
 
@@ -682,110 +660,85 @@ class HotEngine:
         )
         return terms[i:j], dfs[i:j]
 
-    @staticmethod
-    def _top_by_df(cands, limit: int):
-        """(df desc, term asc) head — executor._expand's orderBy."""
-        return sorted(cands, key=lambda td: (-td[1], td[0]))[:limit]
-
     def _hot_expansion(self, node):
         """([(term, df)] expansion, [matched terms], complete) for a
-        multiterm leaf, computed against the in-memory vocabulary —
-        output-identical to executor._leaf_expansion by construction
-        (pinned by parity tests) and seeded into the cluster engine's
-        expansion cache so WAND bound math and any cluster fallback of
-        the same node reuse it without an expansion job."""
+        multiterm leaf, computed against the in-memory vocabulary under
+        the semantics core's caps and order — output-identical to the
+        cluster's _leaf_expansion (pinned by parity tests) — and cached
+        per node in this replica."""
         hit = self._expansion.get(node)
         if hit is not None:
             return hit
-        eng = self.engine
         if isinstance(node, ast.Prefix):
-            limit = min(node.scored_terms_limit, eng.scored_terms_limit)
             t, d = self._vocab_slice(
-                node.prefix,
-                eng._prefix_successor(node.prefix),
-                True,
-                False,
+                node.prefix, sem_.prefix_successor(node.prefix), True, False
             )
-            matched = t.tolist()
-            expanded = self._top_by_df(zip(matched, d.tolist()), limit)
-            complete = len(expanded) < limit
+            matched, mdf = t.tolist(), d.tolist()
         elif isinstance(node, ast.Wildcard):
             import re
 
-            from iresearch_spark.search.executor import _like_to_regex
-
-            limit = min(node.scored_terms_limit, eng.scored_terms_limit)
-            rx = re.compile(_like_to_regex(node.pattern))
+            rx = re.compile(sem_.like_to_regex(node.pattern))
             terms, dfs = self._vocab_arrays()
             matched, mdf = [], []
             for t, d in zip(terms.tolist(), dfs.tolist()):
                 if rx.match(t):
                     matched.append(t)
                     mdf.append(d)
-            expanded = self._top_by_df(zip(matched, mdf), limit)
-            complete = len(expanded) < limit
         elif isinstance(node, ast.Range):
-            limit = min(node.scored_terms_limit, eng.scored_terms_limit)
             t, d = self._vocab_slice(
                 node.min_term,
                 node.max_term,
                 node.include_min,
                 node.include_max,
             )
-            matched = t.tolist()
-            expanded = self._top_by_df(zip(matched, d.tolist()), limit)
-            complete = len(expanded) < limit
+            matched, mdf = t.tolist(), d.tolist()
         elif isinstance(node, ast.Fuzzy):
             expanded = self._fuzzy_expansion(node)
-            matched = [t for t, _ in expanded]
-            complete = True
+            out = (expanded, [t for t, _ in expanded], True)
+            self._expansion[node] = out
+            return out
         else:  # pragma: no cover
             raise TypeError(f"not an expansion leaf: {node}")
+        expanded, complete = sem_.capped(
+            list(zip(matched, mdf)), self.sem.expansion_limit(node)
+        )
         out = (expanded, matched, complete)
         self._expansion[node] = out
-        eng._expansion_cache.setdefault(node, (expanded, complete))
         return out
 
-    def _fuzzy_expansion(self, node: ast.Fuzzy):
-        """executor._fuzzy_candidates against the in-memory vocabulary:
-        same exact-prefix pinning, length band, distance (plain
-        Levenshtein / OSA via the same _osa_distances_batch), and
-        (distance asc, df desc, term asc) max_terms cap."""
-        from iresearch_spark.search.executor import _osa_distances_batch
+    def _expand_complete(self, node):
+        """(expansion, complete) — the callback semantics.wand_terms
+        reads."""
+        expanded, _matched, complete = self._hot_expansion(node)
+        return expanded, complete
 
-        q, dmax, plen = node.term, node.distance, len(node.prefix)
-        tlen = len(q)
-        if plen:
+    def _fuzzy_expansion(self, node: ast.Fuzzy):
+        """The cluster's _fuzzy_candidates against the in-memory
+        vocabulary: exact-prefix pinning, the length band, the distance
+        kernels and the FUZZY_ORDER max_terms cap, all from the
+        semantics core."""
+        if node.prefix:
             t, d = self._vocab_slice(
-                node.prefix,
-                self.engine._prefix_successor(node.prefix),
-                True,
-                False,
+                node.prefix, sem_.prefix_successor(node.prefix), True, False
             )
         else:
             t, d = self._vocab_arrays()
         if t.size == 0:
             return []
         lens = np.fromiter((len(x) for x in t), np.int64, count=t.size)
-        band = (lens >= plen + tlen - dmax) & (lens <= plen + tlen + dmax)
+        lo, hi = sem_.fuzzy_band(node)
+        band = (lens >= lo) & (lens <= hi)
         t, d = t[band], d[band]
         if t.size == 0:
             return []
-        suffixes = (
-            np.asarray([x[plen:] for x in t.tolist()], dtype=object)
-            if plen
-            else t
+        dist = sem_.fuzzy_distances(node, t)
+        m = dist <= node.distance
+        cand = sem_.rank(
+            list(zip(t[m].tolist(), d[m].tolist(), dist[m].tolist())),
+            sem_.FUZZY_ORDER,
+            node.max_terms,
         )
-        if node.transpositions:
-            dist = _osa_distances_batch(q, suffixes, dmax)
-        else:
-            dist = _lev_distances_batch(q, suffixes)
-        m = dist <= dmax
-        cand = sorted(
-            zip(dist[m].tolist(), t[m].tolist(), d[m].tolist()),
-            key=lambda x: (x[0], -x[2], x[1]),
-        )[: node.max_terms]
-        return [(term, df) for _, term, df in cand]
+        return [(term, df) for term, df, _ in cand]
 
     def _expansion_postings(self, node, boost, keep=None):
         """Scored multiterm leaf -> (doc_ids, scores): the cluster's
@@ -795,45 +748,36 @@ class HotEngine:
         terms carry c0(df, eff_boost)."""
         expanded, matched, _complete = self._hot_expansion(node)
         eff = boost * node.boost
-        w = {t: self.engine._c0(df, eff) for t, df in expanded}
+        w = {t: self.sem.c0(df, eff) for t, df in expanded}
+        return self._score_terms(w, matched, keep)
+
+    def _score_terms(self, weights: dict, terms, keep):
+        """(doc_ids, scores) of a leaf over `terms`: each term's postings
+        scored with its c0 (absent = 0.0, matched but unscored), a doc's
+        per-term scores summed in term order (the leaf-sum rule every
+        tier shares). keep: optional per-term block indices to decode
+        (WAND survivors)."""
         parts = []
-        for term in matched:
+        for term in sorted(terms):
+            if self._df.get(term, 0) == 0:
+                continue
             sel = keep.get(term) if keep is not None else None
             if keep is not None and sel is None:
                 continue  # WAND kept no blocks of this term
-            dd, f, l = self._decode_blocks(term, sel)
-            if dd.size == 0:
+            d, f, l = self._decode_blocks(term, sel)
+            if d.size == 0:
                 continue
-            s = self._kernel(np.float64(w.get(term, 0.0)), f, l)
-            parts.append((dd, np.asarray(s, dtype=np.float64)))
+            # np.float64 scalar: the f32 kernel calls .astype on c0
+            s = self._kernel(np.float64(weights.get(term, 0.0)), f, l)
+            parts.append((d, np.asarray(s, dtype=np.float64)))
         if not parts:
             e = np.empty(0, np.int64)
             return e, np.empty(0, np.float64)
         if len(parts) == 1:
             return parts[0]
-        dd = np.concatenate([p[0] for p in parts])
-        ss = np.concatenate([p[1] for p in parts])
-        return _sum_by_doc(dd, ss)
-
-    def _seed_expansions(self, node) -> None:
-        """Pre-compute every expansion leaf of a servable tree so the
-        engine-side _wand_terms / _wand_leaf_boosts calls below hit the
-        seeded cache instead of launching expansion jobs."""
-        if isinstance(node, _EXPANSION_LEAVES):
-            self._hot_expansion(node)
-        elif isinstance(node, (ast.Phrase, ast.SamePosition)):
-            for p in node.terms:
-                if isinstance(p, _EXPANSION_LEAVES):
-                    self._hot_expansion(p)
-        elif isinstance(node, (ast.And, ast.Or)):
-            for c in node.children:
-                self._seed_expansions(c)
-        elif isinstance(node, (ast.Not, ast.Should, ast.Cached, ast.Nested)):
-            self._seed_expansions(node.child)
-        elif isinstance(node, ast.Field):
-            hot = (self._field_hots or {}).get(node.field)
-            if hot is not None:
-                hot._seed_expansions(node.child)
+        d = np.concatenate([p[0] for p in parts])
+        s = np.concatenate([p[1] for p in parts])
+        return sem_.sum_by_doc(d, s)
 
     # ----------------------------------------------------- doc columns
 
@@ -841,7 +785,7 @@ class HotEngine:
         """Sorted int64 doc_id array of the docs table, pinned once
         (AllDocs / Nested parent-membership)."""
         if self._spine is None:
-            tbl = self.engine.index.docs.select("doc_id").toArrow()
+            tbl = self.index.docs.select("doc_id").toArrow()
             ids = tbl.column("doc_id").to_numpy(
                 zero_copy_only=False
             ).astype(np.int64)
@@ -858,7 +802,7 @@ class HotEngine:
         hit = self._cols.get(name)
         if hit is not None:
             return hit
-        docs = self.engine.index.docs
+        docs = self.index.docs
         if name not in docs.columns:
             raise ValueError(
                 f"docs table has no column {name!r}; build the index "
@@ -909,7 +853,7 @@ class HotEngine:
                 else (v < node.max_val)
             )
         if v.size and np.issubdtype(np.asarray(v).dtype, np.floating):
-            idx = self.engine.index
+            idx = self.index
             dict_tier = isinstance(node, ast.GranularRange) and (
                 idx.num_terms is not None
                 and node.column in (idx.numeric_meta or {})
@@ -984,24 +928,15 @@ class HotEngine:
         position-ordered ngram stream); similarity = LCS/m, match iff
         >= threshold, score = boost * similarity (plain f64 multiply,
         exactly the cluster's lit(boost) * _sim — never rounded
-        through _const_score)."""
-        import math
-
+        through Semantics.const_score)."""
         if not self._with_positions:
             raise ValueError("index was built without positions")
         empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-        b = float(boost * node.boost)
-        q_seq = list(node.terms)
-        m = len(q_seq)
+        m = len(node.terms)
         if m == 0:
             return empty
-        min_match = max(1, math.ceil(node.threshold * m))
-        uniq = list(dict.fromkeys(q_seq))
-        present = [t for t in uniq if self._df.get(t, 0) > 0]
-        if not present:
-            return empty
-        tcode = {t: k for k, t in enumerate(uniq)}
-        q_codes = [tcode[t] for t in q_seq]
+        q_codes, tcode, min_match = sem_.ngram_codes(node)
+        present = [t for t in tcode if self._df.get(t, 0) > 0]
         d_parts, p_parts, c_parts = [], [], []
         for t in present:
             doc_ids, _dls, pos, offs = self._decode_positions(t)
@@ -1017,24 +952,14 @@ class HotEngine:
         C = np.concatenate(c_parts)
         order = np.lexsort((P, D))
         D, C = D[order], C[order]
-        udocs, starts_idx = np.unique(D, return_index=True)
-        counts = np.diff(np.append(starts_idx, D.size))
-        out_d, out_s = [], []
-        for ui in np.flatnonzero(counts >= min_match).tolist():
-            codes = C[starts_idx[ui] : starts_idx[ui] + counts[ui]]
-            prev = np.zeros(codes.size + 1, np.int32)
-            for qc in q_codes:
-                cur = np.maximum(prev[1:], prev[:-1] + (codes == qc))
-                np.maximum.accumulate(cur, out=cur)
-                prev[1:] = cur
-            sim = float(prev[-1]) / m
-            if sim >= node.threshold:
-                out_d.append(int(udocs[ui]))
-                out_s.append(b * sim)
-        if not out_d:
-            return empty
+        udocs, starts = np.unique(D, return_index=True)
+        counts = np.diff(np.append(starts, D.size))
+        cand = np.flatnonzero(counts >= min_match)
+        sim = sem_.lcs_lengths(C, starts[cand], counts[cand], q_codes) / m
+        hit = sim >= node.threshold
         return self._apply_deletes(
-            np.asarray(out_d, np.int64), np.asarray(out_s, np.float64)
+            udocs[cand][hit].astype(np.int64),
+            float(boost * node.boost) * sim[hit],
         )
 
     # -------------------------------------------------------------- eval
@@ -1042,12 +967,12 @@ class HotEngine:
     def _servable(self, node: ast.Node) -> bool:
         if isinstance(node, (ast.Term, ast.Terms)):
             return True
-        if isinstance(node, _EXPANSION_LEAVES):
+        if isinstance(node, sem_.EXPANSION_LEAVES):
             return True
         if isinstance(node, (ast.Phrase, ast.SamePosition)):
             # variadic slots expand against the in-memory vocabulary
             return self._with_positions and all(
-                isinstance(t, (str, ast.Terms) + _EXPANSION_LEAVES)
+                isinstance(t, (str, ast.Terms) + sem_.EXPANSION_LEAVES)
                 for t in node.terms
             )
         if isinstance(node, (ast.Not, ast.Should, ast.Cached)):
@@ -1061,9 +986,9 @@ class HotEngine:
         if isinstance(node, ast.GranularRange):
             # stored-column tier only; dictionary-only columns fall
             # back to the cluster's pruned num_terms scan
-            return node.column in self.engine.index.docs.columns
+            return node.column in self.index.docs.columns
         if isinstance(node, ast.Nested):
-            return node.parent_col in self.engine.index.docs.columns and (
+            return node.parent_col in self.index.docs.columns and (
                 self._servable(node.child)
             )
         if isinstance(node, ast.NgramSimilarity):
@@ -1085,17 +1010,23 @@ class HotEngine:
         if not self._servable(norm):
             return [
                 (r["doc_id"], r["score"])
-                for r in self.engine.search(query, k=k, mode=mode).collect()
+                for r in self._cluster().search(query, k=k, mode=mode).collect()
             ]
-        self._seed_expansions(norm)
         if mode == "wand":
-            terms = self.engine._wand_terms(norm)
+            terms = self.sem.wand_terms(norm, self._expand_complete)
             if terms is not None:
                 out = self._wand(norm, terms, k)
                 if out is not None:
                     return out
         doc_ids, scores = self._eval(norm, 1.0, None)
-        return self._topk(doc_ids, scores, k)
+        return sem_.topk(doc_ids, scores, k)
+
+    def _cluster(self):
+        """The cluster engine a Spark-built replica falls back to; a
+        from_dir replica has none."""
+        if not hasattr(self.engine, "search"):
+            raise RuntimeError(sem_.NO_CLUSTER)
+        return self.engine
 
     def search_many(
         self, queries: dict, k: int = 10, mode: str = "exhaustive"
@@ -1118,9 +1049,8 @@ class HotEngine:
         if not self._servable(norm):
             return [
                 (r["doc_id"], r["score"])
-                for r in self.engine.matches(query).collect()
+                for r in self._cluster().matches(query).collect()
             ]
-        self._seed_expansions(norm)
         doc_ids, scores = self._eval(norm, 1.0, None)
         return list(zip(doc_ids.tolist(), scores.tolist()))
 
@@ -1138,14 +1068,13 @@ class HotEngine:
             norm = planner.normalize(query)
             if not self._servable(norm):
                 out_cols = cols if columns else None
-                rows = self.engine.top_docs(
+                rows = self._cluster().top_docs(
                     k, query=query, columns=out_cols
                 ).collect()
                 return [
                     {c: r[c] for c in cols} if columns else r.asDict()
                     for r in rows
                 ]
-            self._seed_expansions(norm)
             ids, _ = self._eval(norm, 1.0, None)
             ids = np.unique(ids)
         else:
@@ -1175,21 +1104,28 @@ class HotEngine:
             out.append(row)
         return out
 
-    def _live_occurrences(self, term: str, block: int, keep):
-        """Per-occurrence (owner_doc int64[], occ_sel bool[]) of one
-        posting block after the keep-set and delete-mask filters —
-        shared by highlight()/payloads(). occ_sel indexes the block's
+    def _live_occurrences(self, terms, doc_ids):
+        """(term, aux blobs, owner_doc int64[], occ_sel bool[], freqs)
+        per posting block of `terms` (term order) that keeps a live
+        occurrence after the doc_ids and delete-mask filters — shared
+        by highlight()/payloads(). occ_sel indexes the block's
         occurrence streams (freq-expanded posting order)."""
-        d, f, _dl = self._decode_blocks(term, [block])
-        owner = np.repeat(d, f)
-        sel = np.ones(owner.size, bool)
-        if keep is not None:
-            sel &= np.isin(owner, keep)
-        if self._deleted is not None and self._deleted.size:
-            pos = np.searchsorted(self._deleted, owner)
-            pos = np.minimum(pos, self._deleted.size - 1)
-            sel &= self._deleted[pos] != owner
-        return owner, sel, f
+        keep = None
+        if doc_ids is not None:
+            keep = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
+        for term in sorted(set(terms)):
+            for i, (_fd, ax) in enumerate(self._auxl(term)):
+                d, f, _dl = self._decode_blocks(term, [i])
+                owner = np.repeat(d, f)
+                sel = np.ones(owner.size, bool)
+                if keep is not None:
+                    sel &= np.isin(owner, keep)
+                if self._deleted is not None and self._deleted.size:
+                    pos = np.searchsorted(self._deleted, owner)
+                    pos = np.minimum(pos, self._deleted.size - 1)
+                    sel &= self._deleted[pos] != owner
+                if sel.any():
+                    yield term, ax, owner, sel, f
 
     def highlight(self, terms, doc_ids=None):
         """In-memory SearchEngine.highlight(): character spans of the
@@ -1201,26 +1137,16 @@ class HotEngine:
         the decode like the cluster API."""
         if not self._with_offsets:
             raise ValueError("index was built without offsets")
-        keep = None
-        if doc_ids is not None:
-            keep = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
         out = []
-        for term in sorted(set(terms)):
-            al = self._auxl(term)
-            for i, (_fd, ax) in enumerate(al):
-                owner, sel, f = self._live_occurrences(term, i, keep)
-                if not sel.any():
-                    continue
-                starts = codec.decode_position_lists(
-                    ax[0], f
-                ).astype(np.int64)
-                lens = codec.varint_decode(ax[1]).astype(np.int64)
-                for doc, s, ln in zip(
-                    owner[sel].tolist(),
-                    starts[sel].tolist(),
-                    lens[sel].tolist(),
-                ):
-                    out.append((doc, term, s, ln))
+        for term, ax, owner, sel, f in self._live_occurrences(terms, doc_ids):
+            starts = codec.decode_position_lists(ax[0], f).astype(np.int64)
+            lens = codec.varint_decode(ax[1]).astype(np.int64)
+            for doc, s, ln in zip(
+                owner[sel].tolist(),
+                starts[sel].tolist(),
+                lens[sel].tolist(),
+            ):
+                out.append((doc, term, s, ln))
         out.sort()
         return out
 
@@ -1232,51 +1158,30 @@ class HotEngine:
         build time; `doc_ids` restricts like highlight()."""
         if not self._with_payloads:
             raise ValueError("index was built without payloads")
-        keep = None
-        if doc_ids is not None:
-            keep = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
         pay_at = 2 if self._with_offsets else 0
         out = []
-        for term in sorted(set(terms)):
-            al = self._auxl(term)
-            for i, (_fd, ax) in enumerate(al):
-                owner, sel, f = self._live_occurrences(term, i, keep)
-                if not sel.any():
-                    continue
-                lens = codec.varint_decode(ax[pay_at]).astype(np.int64)
-                offs = np.concatenate(
-                    ([0], np.cumsum(lens))
-                ).astype(np.int64)
-                slab = ax[pay_at + 1]
-                # occurrence index within its doc, 1-based
-                row_start = np.concatenate(
-                    ([0], np.cumsum(f))
-                ).astype(np.int64)
-                occ = (
-                    np.arange(owner.size, dtype=np.int64)
-                    - np.repeat(row_start[:-1], f)
-                    + 1
-                )
-                for j in np.flatnonzero(sel).tolist():
-                    out.append(
-                        (
-                            int(owner[j]),
-                            term,
-                            int(occ[j]),
-                            bytes(slab[offs[j]:offs[j + 1]]),
-                        )
+        for term, ax, owner, sel, f in self._live_occurrences(terms, doc_ids):
+            lens = codec.varint_decode(ax[pay_at]).astype(np.int64)
+            offs = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
+            slab = ax[pay_at + 1]
+            # occurrence index within its doc, 1-based
+            row_start = np.concatenate(([0], np.cumsum(f))).astype(np.int64)
+            occ = (
+                np.arange(owner.size, dtype=np.int64)
+                - np.repeat(row_start[:-1], f)
+                + 1
+            )
+            for j in np.flatnonzero(sel).tolist():
+                out.append(
+                    (
+                        int(owner[j]),
+                        term,
+                        int(occ[j]),
+                        bytes(slab[offs[j]:offs[j + 1]]),
                     )
+                )
         out.sort()
         return out
-
-    def _topk(self, doc_ids, scores, k):
-        if doc_ids.size == 0:
-            return []
-        order = np.lexsort((doc_ids, -scores))
-        top = order[:k]
-        return [
-            (int(doc_ids[i]), float(scores[i])) for i in top
-        ]
 
     def _apply_deletes(self, doc_ids, scores):
         if (
@@ -1291,39 +1196,20 @@ class HotEngine:
         return doc_ids[live], scores[live]
 
     def _leaf_postings(self, node, boost, keep=None):
-        """One scored leaf -> (doc_ids, scores). keep: optional
-        per-term set of block indices to decode (WAND survivors)."""
+        """One scored Term/Terms leaf -> (doc_ids, scores)."""
         if isinstance(node, ast.Term):
-            pairs = [(node.term, node.boost * boost)]
+            weights = {
+                node.term: self.sem.c0(
+                    self._df.get(node.term, 0), node.boost * boost
+                )
+            }
         else:  # Terms, sum-merge min_match<=1 (planner guarantees)
-            pairs = [
-                (t, boost * node.boost * node.term_boost(t))
-                for t in dict.fromkeys(node.terms)
-            ]
-        parts = []
-        for term, eff_boost in pairs:
-            df_ = self._df.get(term, 0)
-            if df_ == 0:
-                continue
-            c0 = self.engine._c0(df_, eff_boost)
-            sel = keep.get(term) if keep is not None else None
-            if keep is not None and sel is None:
-                continue  # WAND kept no blocks of this term
-            d, f, l = self._decode_blocks(term, sel)
-            if d.size == 0:
-                continue
-            # np.float64 scalar: the f32 kernel calls .astype on c0
-            s = self._kernel(np.float64(c0), f, l)
-            parts.append((d, np.asarray(s, dtype=np.float64)))
-        if not parts:
-            e = np.empty(0, np.int64)
-            return e, np.empty(0, np.float64)
-        if len(parts) == 1:
-            return parts[0]
-        # sum-merge duplicate docs across the term set
-        d = np.concatenate([p[0] for p in parts])
-        s = np.concatenate([p[1] for p in parts])
-        return _sum_by_doc(d, s)
+            weights = self.sem.terms_weights(
+                node,
+                {t: self._df.get(t, 0) for t in node.terms},
+                boost * node.boost,
+            )
+        return self._score_terms(weights, weights, keep)
 
     def _eval(self, node, boost, keep):
         """(doc_ids, scores) for a normalized servable node — the
@@ -1331,7 +1217,7 @@ class HotEngine:
         if isinstance(node, (ast.Term, ast.Terms)):
             d, s = self._leaf_postings(node, boost, keep)
             return self._apply_deletes(d, s)
-        if isinstance(node, _EXPANSION_LEAVES):
+        if isinstance(node, sem_.EXPANSION_LEAVES):
             d, s = self._expansion_postings(node, boost, keep)
             return self._apply_deletes(d, s)
         if isinstance(node, (ast.Phrase, ast.SamePosition)):
@@ -1342,39 +1228,23 @@ class HotEngine:
         if isinstance(node, ast.AllDocs):
             d = self._doc_spine()
             s = np.full(
-                d.size, self.engine._const_score(node.boost * boost)
+                d.size, self.sem.const_score(node.boost * boost)
             )
             return self._apply_deletes(d, s)
         if isinstance(node, ast.Exists):
-            if node.prefix_match:
-                cols = [
-                    c
-                    for c in self.engine.index.docs.columns
-                    if c.startswith(node.column)
-                    and c not in ("doc_id", "dl")
-                ]
-                if not cols:
-                    raise ValueError(
-                        f"docs table has no column with prefix "
-                        f"{node.column!r}; build the index with "
-                        "extra_doc_cols=[...] to store them"
-                    )
-                ids, mask, _ = self._doc_col(cols[0])
-                if len(cols) > 1:
-                    mask = mask.copy()
-                    for c in cols[1:]:
-                        mask |= self._doc_col(c)[1]
-            else:
-                ids, mask, _ = self._doc_col(node.column)
+            cols = sem_.exists_columns(node, self.index.docs.columns)
+            ids, mask, _ = self._doc_col(cols[0])
+            for c in cols[1:]:
+                mask = mask | self._doc_col(c)[1]
             d = ids[mask]
             s = np.full(
-                d.size, self.engine._const_score(node.boost * boost)
+                d.size, self.sem.const_score(node.boost * boost)
             )
             return self._apply_deletes(d, s)
         if isinstance(node, (ast.NumericRange, ast.GranularRange)):
             d = self._numeric_range_docs(node)
             s = np.full(
-                d.size, self.engine._const_score(node.boost * boost)
+                d.size, self.sem.const_score(node.boost * boost)
             )
             return self._apply_deletes(d, s)
         if isinstance(node, ast.Cached):
@@ -1404,31 +1274,8 @@ class HotEngine:
             return hot._eval(node.child, boost * node.boost, None)
         if isinstance(node, (ast.And, ast.Or)):
             b = boost * node.boost
-            positives, optional_idx = [], set()
-            for c in node.children:
-                if isinstance(c, ast.Not):
-                    continue
-                if isinstance(c, ast.Should):
-                    optional_idx.add(len(positives))
-                    if c.boost == 1.0:
-                        positives.append(c.child)
-                    else:
-                        import dataclasses
-
-                        positives.append(
-                            dataclasses.replace(
-                                c.child, boost=c.child.boost * c.boost
-                            )
-                        )
-                else:
-                    positives.append(c)
-            negatives = [
-                c.child for c in node.children if isinstance(c, ast.Not)
-            ]
-            required = (
-                len(positives) - len(optional_idx)
-                if isinstance(node, ast.And)
-                else node.min_match
+            positives, optional_idx, negatives, required = sem_.bool_parts(
+                node
             )
             docs_l, score_l, req_l = [], [], []
             for i, c in enumerate(positives):
@@ -1445,9 +1292,7 @@ class HotEngine:
             s = np.concatenate(score_l)
             r = np.concatenate(req_l)
             merge = node.merge_type
-            ud, us, ur = _merge_by_doc(
-                d, s, r, merge, f32=self.engine._f32
-            )
+            ud, us, ur = sem_.merge_by_doc(d, s, r, merge, f32=self.sem.f32)
             m = ur >= required
             ud, us = ud[m], us[m]
             if merge == "noop":
@@ -1460,21 +1305,6 @@ class HotEngine:
             return ud, us
         raise TypeError(f"unservable node {node!r}")  # pragma: no cover
 
-    def _slot_candidates(self, part):
-        """[(term, df)] per phrase slot — the cluster _slot_candidates
-        against the in-memory vocabulary (expansion leaves share
-        _hot_expansion's caps/order, which equal the cluster _expand
-        calls argument-for-argument)."""
-        if isinstance(part, str):
-            return [(part, self._df.get(part, 0))]
-        if isinstance(part, ast.Terms):
-            return [
-                (t, self._df.get(t, 0)) for t in dict.fromkeys(part.terms)
-            ]
-        if isinstance(part, _EXPANSION_LEAVES):
-            return self._hot_expansion(part)[0]
-        raise TypeError(f"unsupported phrase slot: {part!r}")
-
     def _eval_positional(self, node, boost):
         """Phrase / SamePosition incl. VARIADIC slots — the cluster
         _eval_positional semantics in numpy: per doc, phrase freq =
@@ -1483,23 +1313,20 @@ class HotEngine:
         each slot's df being the SUM over its matched variants
         (phrase_query.cpp composes per-part scorers over the shared
         phrase frequency)."""
-        slots = [self._slot_candidates(p) for p in node.terms]
-        offsets = (
-            list(range(len(slots)))
-            if isinstance(node, ast.Phrase)
-            else [0] * len(slots)
-        )
-        eff = boost * node.boost
+        slots = [
+            sem_.slot_candidates(
+                p,
+                lambda ts: {t: self._df.get(t, 0) for t in ts},
+                lambda q: self._hot_expansion(q)[0],
+            )
+            for p in node.terms
+        ]
+        offsets = sem_.slot_offsets(node)
         empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-        clean: list[list[str]] = []
-        c0_sum = 0.0
-        for s in slots:
-            s2 = [(t, d) for t, d in dict(s).items() if d > 0]
-            if not s2:
-                return empty  # a slot with no live terms
-            c0_sum += self.engine._c0(sum(d for _, d in s2), 1.0)
-            clean.append([t for t, _ in s2])
-        c0_sum *= eff
+        weight = self.sem.phrase_weight(slots, boost * node.boost)
+        if weight is None:
+            return empty  # a slot with no live terms
+        clean, c0_sum = weight
         # per-slot decoded postings + per-slot doc universe (union over
         # the slot's candidate terms)
         per_slot: list[list[tuple]] = []
@@ -1551,155 +1378,37 @@ class HotEngine:
     # -------------------------------------------------------------- WAND
 
     def _wand(self, query, terms: dict[str, float], k: int):
-        """In-memory block-max WAND (impact bounds + range-aligned rest
-        mass — the executor's round-5 math without any Spark job).
-        Returns None when pruning cannot engage (caller falls through
-        to the exhaustive in-memory path)."""
-        boost = query.boost if isinstance(query, (ast.And, ast.Or)) else 1.0
-        weights = {
-            t: self.engine._c0(self._df.get(t, 0), boost * m)
-            for t, m in terms.items()
-            if self._df.get(t, 0) > 0
-        }
+        """In-memory block-max WAND: the semantics core's range-aligned
+        BoundWalk over the cached per-block bounds, without any Spark
+        job. Returns None when the seed cannot fill k (caller falls
+        through to the exhaustive in-memory path)."""
+        weights = self.sem.wand_weights(query, terms, self._df)
         if not weights:
             return []
-        # per-term numpy bound arrays (query-independent g_ub cached;
-        # scaled here by the query's c0). Most blocks of a url-sorted
-        # index lie inside one alignment range (span 0) — that common
-        # case stays fully vectorized; multi-span blocks take a short
-        # python loop.
-        per_term: dict[str, tuple] = {}
-        mx: dict[str, float] = {}
-        wide_of = {t: 0.0 for t in weights}
-        by_ts: dict[tuple[str, int], float] = {}
-        n_blocks = 0
+        per_term = {}
         for t, c0 in weights.items():
-            g, s0a, s1a = self._term_bound_arrays(t)
-            ub = c0 * g
-            per_term[t] = (ub, s0a, s1a)
-            n_blocks += ub.size
-            mx[t] = float(ub.max()) if ub.size else 0.0
-            span = s1a - s0a
-            widem = span >= _SPAN_CAP
-            if widem.any():
-                wide_of[t] = float(ub[widem].max())
-            narrow = np.flatnonzero(~widem)
-            single = narrow[span[narrow] == 0]
-            if single.size:
-                # vectorized per-range max for single-range blocks
-                ss = s0a[single]
-                order = np.argsort(ss, kind="stable")
-                ss_s = ss[order]
-                uu_s = ub[single][order]
-                bnd = np.empty(ss_s.size, bool)
-                bnd[0] = True
-                bnd[1:] = ss_s[1:] != ss_s[:-1]
-                starts = np.flatnonzero(bnd)
-                gmax = np.maximum.reduceat(uu_s, starts)
-                for s, v in zip(ss_s[starts].tolist(), gmax.tolist()):
-                    key = (t, int(s))
-                    if v > by_ts.get(key, 0.0):
-                        by_ts[key] = v
-            multi = narrow[span[narrow] > 0]
-            for i in multi.tolist():
-                u = float(ub[i])
-                for s in range(int(s0a[i]), int(s1a[i]) + 1):
-                    if u > by_ts.get((t, s), 0.0):
-                        by_ts[(t, s)] = u
-        total_ub = sum(mx.values())
-        base = sum(wide_of.values())
-        sums: dict[int, float] = {}
-        for (t, s), v in by_ts.items():
-            sums[s] = sums.get(s, base) + max(v - wide_of[t], 0.0)
-        if not sums:
-            return None
-        n_seed = max(1, (k + 63) // 64)
-        top_ranges = sorted(
-            s
-            for s, _ in heapq.nlargest(n_seed, sums.items(), key=lambda kv: kv[1])
-        )
-        tr = np.asarray(top_ranges, dtype=np.int64)
-        seed: dict[str, set] = {}
-        best_global: list[tuple[float, str, int]] = []
-        for t, (ub, s0a, s1a) in per_term.items():
-            span = s1a - s0a
-            # block overlaps some top range: exists r with s0<=r<=s1
-            pos = np.searchsorted(tr, s0a, side="left")
-            hit = (pos < tr.size) & (tr[np.minimum(pos, tr.size - 1)] <= s1a)
-            hit &= span < _SPAN_CAP
-            if hit.any():
-                seed.setdefault(t, set()).update(
-                    np.flatnonzero(hit).tolist()
-                )
-            if ub.size:
-                for i in np.argsort(ub)[::-1][:2].tolist():
-                    best_global.append((float(ub[i]), t, i))
-        for _, t, i in heapq.nlargest(
-            max(2, (4 * k) // 128 + 1), best_global
-        ):
-            seed.setdefault(t, set()).add(i)
-        d, s = self._eval(query, 1.0, seed)
+            g, s0, s1 = self._term_bound_arrays(t)
+            per_term[t] = (c0 * g, s0, s1)
+        walk = sem_.BoundWalk(per_term)
+        d, s = self._eval(query, 1.0, walk.seed(k))
         if d.size < k:
             return None  # seed can't fill k -> no theta -> no pruning
         theta = float(np.partition(s, s.size - k)[s.size - k])
         if theta <= 0.0:
             return None
-        theta_eff = (
-            theta * (1.0 - 1e-5) if self.engine._f32 else theta
-        )
-        # dict -> sorted-array lookups so the dominant span-0 case is
-        # one vectorized pass per term
-        sum_keys = np.asarray(sorted(sums), dtype=np.int64)
-        sum_vals = np.asarray([sums[s] for s in sum_keys.tolist()])
-
-        def _lookup(keys, vals, q, default):
-            if keys.size == 0:
-                return np.full(q.size, default)
-            pos = np.searchsorted(keys, q)
-            pos_c = np.minimum(pos, keys.size - 1)
-            out = np.where(keys[pos_c] == q, vals[pos_c], default)
-            return out
-
-        keep: dict[str, set] = {}
-        kept = 0
-        for t, (ub, s0a, s1a) in per_term.items():
-            span = s1a - s0a
-            rest = np.empty(ub.size, np.float64)
-            widem = span >= _SPAN_CAP
-            rest[widem] = total_ub - mx[t]
-            singles = np.flatnonzero(~widem & (span == 0))
-            if singles.size:
-                ts_items = sorted(
-                    (s, v) for (tt, s), v in by_ts.items() if tt == t
-                )
-                tk = np.asarray([s for s, _ in ts_items], dtype=np.int64)
-                tv = np.asarray([v for _, v in ts_items])
-                q = s0a[singles]
-                sv = _lookup(sum_keys, sum_vals, q, base)
-                ev = np.maximum(_lookup(tk, tv, q, 0.0), wide_of[t])
-                rest[singles] = sv - ev
-            for i in np.flatnonzero(~widem & (span > 0)).tolist():
-                r = 0.0
-                for rs in range(int(s0a[i]), int(s1a[i]) + 1):
-                    eff = max(by_ts.get((t, rs), 0.0), wide_of[t])
-                    r = max(r, sums.get(rs, base) - eff)
-                rest[i] = r
-            sel = np.flatnonzero(ub + rest >= theta_eff)
-            if sel.size:
-                keep[t] = set(sel.tolist())
-                kept += int(sel.size)
+        keep = walk.keep(self.sem.theta_eff(theta))
         self.last_wand_stats = {
-            "blocks_total": n_blocks,
-            "blocks_kept": kept,
+            "blocks_total": walk.n_blocks,
+            "blocks_kept": sum(int(v.size) for v in keep.values()),
             "theta": theta,
         }
         d, s = self._eval(query, 1.0, keep)
-        return self._topk(d, s, k)
+        return sem_.topk(d, s, k)
 
 
 class HotMultiFieldEngine:
     """Driver-resident MultiFieldEngine: one HotEngine replica per
-    field (each pinning its field's postings and pre-seeding its own
+    field (each pinning its field's postings and keeping its own
     expansion cache), Field subtrees route to that field's replica,
     and cross-field booleans compose in numpy over the shared
     deterministic doc-id space — exactly the cluster
@@ -1774,22 +1483,7 @@ class HotMultiFieldEngine:
         return True
 
     def _route(self, query: ast.Node):
-        if isinstance(query, ast.Field):
-            hot = self.hots.get(query.field)
-            if hot is None:
-                raise ValueError(
-                    f"no indexed field {query.field!r}; have "
-                    f"{sorted(self.hots)}"
-                )
-            child = query.child
-            if query.boost != 1.0:
-                import dataclasses
-
-                child = dataclasses.replace(
-                    child, boost=child.boost * query.boost
-                )
-            return hot, child
-        return self.default, query
+        return sem_.route_field(query, self.hots, self.default)
 
     def search(self, query: ast.Node, k: int = 10, mode: str = "exhaustive"):
         hot, q = self._route(query)
@@ -1799,15 +1493,9 @@ class HotMultiFieldEngine:
         hot, q = self._route(query)
         return hot.matches(q)
 
-    def search_many(
-        self, queries: dict, k: int = 10, mode: str = "exhaustive"
-    ) -> dict:
-        """Batched top-k over routed fields (see HotEngine.search_many:
-        the warmth of the shared per-field caches is the batching)."""
-        return {
-            name: self.search(q, k=k, mode=mode)
-            for name, q in queries.items()
-        }
+    # batched top-k over routed fields: the warmth of the shared
+    # per-field caches is the batching
+    search_many = HotEngine.search_many
 
     def memory_stats(self) -> dict:
         """Per-field residency plus fleet totals (see
@@ -1824,80 +1512,3 @@ class HotMultiFieldEngine:
         )["budget_bytes"]
         total["fields"] = per_field
         return total
-
-
-def _lev_distances_batch(q: str, terms) -> np.ndarray:
-    """Plain Levenshtein distance of `q` against a numpy batch of
-    terms — the same vectorized row-DP shape as _osa_distances_batch
-    without the transposition branch; matches Spark's
-    levenshtein(term, q) exactly (code-point edits)."""
-    N = len(terms)
-    if N == 0:
-        return np.zeros(0, dtype=np.int32)
-    lens = np.fromiter((len(t) for t in terms), dtype=np.int64, count=N)
-    L = int(lens.max())
-    m = len(q)
-    T = np.zeros((N, max(L, 1)), dtype=np.uint32)
-    for r, t in enumerate(terms):
-        if t:
-            T[r, : len(t)] = np.frombuffer(
-                t.encode("utf-32-le"), dtype=np.uint32
-            )
-    qc = (
-        np.frombuffer(q.encode("utf-32-le"), dtype=np.uint32)
-        if m
-        else np.zeros(0, dtype=np.uint32)
-    )
-    prev = np.broadcast_to(
-        np.arange(L + 1, dtype=np.int32), (N, L + 1)
-    ).copy()
-    for i in range(1, m + 1):
-        cur = np.empty((N, L + 1), dtype=np.int32)
-        cur[:, 0] = i
-        for j in range(1, L + 1):
-            cost = (T[:, j - 1] != qc[i - 1]).astype(np.int32)
-            v = np.minimum(prev[:, j] + 1, prev[:, j - 1] + cost)
-            np.minimum(v, cur[:, j - 1] + 1, out=v)
-            cur[:, j] = v
-        prev = cur
-    return prev[np.arange(N), lens].astype(np.int32)
-
-
-def _sum_by_doc(d: np.ndarray, s: np.ndarray):
-    if d.size == 0:
-        return d, s
-    order = np.argsort(d, kind="stable")
-    d, s = d[order], s[order]
-    bound = np.empty(d.size, bool)
-    bound[0] = True
-    bound[1:] = d[1:] != d[:-1]
-    starts = np.flatnonzero(bound)
-    return d[starts], np.add.reduceat(s, starts)
-
-
-def _merge_by_doc(d, s, r, merge: str, f32: bool = False):
-    if d.size == 0:
-        return d, s, r
-    order = np.argsort(d, kind="stable")
-    d, s, r = d[order], s[order], r[order]
-    bound = np.empty(d.size, bool)
-    bound[0] = True
-    bound[1:] = d[1:] != d[:-1]
-    starts = np.flatnonzero(bound)
-    ud = d[starts]
-    ur = np.add.reduceat(r, starts)
-    if merge == "max":
-        us = np.maximum.reduceat(s, starts)
-    elif merge == "min":
-        us = np.minimum.reduceat(s, starts)
-    elif f32:
-        # float32 parity: child scores accumulate in float32 in leaf
-        # order (the cluster's array_sort + f32 fold, _eval_bool);
-        # stable doc-sort preserves leaf order within each doc and
-        # reduceat folds sequentially left-to-right
-        us = np.add.reduceat(s.astype(np.float32), starts).astype(
-            np.float64
-        )
-    else:  # sum / noop (noop zeroed by caller)
-        us = np.add.reduceat(s, starts)
-    return ud, us, ur

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from iresearch_spark.index.multifield import MultiFieldIndex
 from iresearch_spark.search import ast
 from iresearch_spark.search.executor import SearchEngine
+from iresearch_spark.search.semantics import route_field
 
 
 class MultiFieldEngine:
@@ -41,22 +42,7 @@ class MultiFieldEngine:
     def _route(self, query: ast.Node) -> tuple[SearchEngine, ast.Node]:
         """A single-Field root runs NATIVELY on that field's engine —
         keeps WAND / fused-scan / batch fast paths per field."""
-        if isinstance(query, ast.Field):
-            eng = self.engines.get(query.field)
-            if eng is None:
-                raise ValueError(
-                    f"no indexed field {query.field!r}; have "
-                    f"{sorted(self.engines)}"
-                )
-            child = query.child
-            if query.boost != 1.0:
-                import dataclasses
-
-                child = dataclasses.replace(
-                    child, boost=child.boost * query.boost
-                )
-            return eng, child
-        return self.default, query
+        return route_field(query, self.engines, self.default)
 
     def search(
         self, query: ast.Node, k: int = 10, mode: str = "exhaustive"

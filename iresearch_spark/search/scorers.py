@@ -20,11 +20,13 @@ TF-IDF (`core/search/tfidf.cpp:185-186,274-277`):
     idf   = ln(1 + (N + 1) / (df + 1))
     score = sqrt(tf) * idf [* 1/sqrt(dl) if norms enabled]
 
-Scores are computed as Spark Column expressions (JVM whole-stage
-codegen) over the decoded posting rows (freq, dl) — the idf and avg_dl
-constants are driver-side floats (the reference's prepare-time stats
-blob, bm25.cpp:366-410), so no join against stats tables ever appears in
-the scoring plan.
+The scorer objects carry only the formula's parameters; the index's
+norm mode (not an option here) picks the norm variant, and
+search/semantics.py turns both into the idf/c0 constants, the score
+kernel and the WAND bound that every serving tier shares — the idf and
+avg_dl constants are driver-side floats (the reference's prepare-time
+stats blob, bm25.cpp:366-410), so no join against stats tables ever
+appears in a scoring plan.
 
 float32 parity (SURVEY §7.0): the reference computes every score in
 float32 (`core/search/scorer.hpp` score_t = float). The engine's
@@ -52,8 +54,6 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-
-from pyspark.sql import Column, functions as F
 
 _F32 = np.float32
 _ONE = np.float32(1.0)
@@ -141,60 +141,11 @@ def ref_tfidf_f32(
 class BM25:
     k: float = 1.2
     b: float = 0.75
-    # "norm2" (tf = freq, |doc| = dl) or "legacy" (tf = sqrt(freq),
-    # |doc| = sqrt(dl) via the stored 1/sqrt(dl) norm) — usually set
-    # from the index's norm mode by SearchEngine, not by callers
-    norm: str = "norm2"
 
     name: str = "bm25"
 
     def idf(self, df: int, n_docs: int) -> float:
         return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-
-    def _tf_dlf(self, tf: float, dl: float) -> tuple[float, float]:
-        if self.norm == "legacy":
-            return math.sqrt(tf), math.sqrt(dl)
-        return tf, dl
-
-    def score_expr(
-        self,
-        freq: Column,
-        dl: Column,
-        idf: float,
-        avg_dl: float,
-        boost: float = 1.0,
-    ) -> Column:
-        c0 = boost * (self.k + 1.0) * idf
-        tf = freq.cast("double")
-        dlf = dl.cast("double")
-        if self.norm == "legacy":
-            tf, dlf = F.sqrt(tf), F.sqrt(dlf)
-        c1 = F.lit(self.k * (1.0 - self.b)) + F.lit(
-            (self.k * self.b) / avg_dl if avg_dl else 0.0
-        ) * dlf
-        return F.lit(c0) * tf / (c1 + tf)
-
-    def score_py(self, tf: float, dl: float, idf: float, avg_dl: float,
-                 boost: float = 1.0) -> float:
-        c0 = boost * (self.k + 1.0) * idf
-        tf, dlf = self._tf_dlf(tf, dl)
-        c1 = self.k * (1.0 - self.b) + (
-            (self.k * self.b) / avg_dl if avg_dl else 0.0
-        ) * dlf
-        return c0 * tf / (c1 + tf)
-
-    def upper_bound_expr(
-        self, max_freq: Column, min_dl: Column, idf: float, avg_dl: float,
-        boost: float = 1.0,
-    ) -> Column:
-        """Block-max upper bound: score is increasing in tf and decreasing
-        in dl, so (block_max_freq, block_min_dl) bounds every posting in
-        the block (the reference's WAND entry, wand_writer.hpp:137-300)."""
-        return self.score_expr(max_freq, min_dl, idf, avg_dl, boost)
-
-    def upper_bound_py(self, max_freq: int, min_dl: int, idf: float,
-                       avg_dl: float, boost: float = 1.0) -> float:
-        return self.score_py(float(max_freq), float(min_dl), idf, avg_dl, boost)
 
 
 @dataclass(frozen=True)
@@ -205,31 +156,6 @@ class TFIDF:
 
     def idf(self, df: int, n_docs: int) -> float:
         return math.log(1.0 + (n_docs + 1.0) / (df + 1.0))
-
-    def score_expr(
-        self,
-        freq: Column,
-        dl: Column,
-        idf: float,
-        avg_dl: float,
-        boost: float = 1.0,
-    ) -> Column:
-        s = F.lit(boost * idf) * F.sqrt(freq.cast("double"))
-        if self.with_norms:
-            s = s / F.sqrt(dl.cast("double"))
-        return s
-
-    def score_py(self, tf, dl, idf, avg_dl, boost=1.0):
-        s = boost * idf * math.sqrt(tf)
-        if self.with_norms:
-            s = s / math.sqrt(dl)
-        return s
-
-    def upper_bound_expr(self, max_freq, min_dl, idf, avg_dl, boost=1.0):
-        return self.score_expr(max_freq, min_dl, idf, avg_dl, boost)
-
-    def upper_bound_py(self, max_freq, min_dl, idf, avg_dl, boost=1.0):
-        return self.score_py(float(max_freq), float(min_dl), idf, avg_dl, boost)
 
 
 def get_scorer(name: str, **opts):

@@ -30,7 +30,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from iresearch_spark.analysis.analyzers import Analyzer, get_analyzer
 from iresearch_spark.index.builder import build_index
 from iresearch_spark.index.merge import build_metrics
-from iresearch_spark.index.model import FieldStats, InvertedIndex
+from iresearch_spark.index.model import (
+    FieldStats,
+    InvertedIndex,
+    check_segments_agree,
+)
 
 
 def _concat_ranges(paths, sub_manifests, key):
@@ -328,20 +332,7 @@ class IncrementalIndexer:
                 )
         if self.encryption is not None:
             self.encryption.apply(spark)
-        # the merged view assumes homogeneous feature/analyzer config
-        # across segments (same contract merge_indexes enforces) —
-        # a silent mismatch would drop positions/offsets or mix
-        # incompatible token streams in one postings union
-        for key in (
-            "with_positions", "with_offsets", "with_payloads", "analyzer",
-            "norm",
-        ):
-            vals = {m.get(key, False) for m in sub_manifests}
-            if len(vals) > 1:
-                raise ValueError(
-                    f"segments disagree on {key!r}: {sorted(map(str, vals))}; "
-                    "consolidate or rebuild before reading a merged view"
-                )
+        check_segments_agree(sub_manifests, "reading")
         if any(m.get("has_deleted") for m in sub_manifests):
             # deletes are per-segment parquet dirs; only some exist, so
             # they can't ride one multi-path read
@@ -413,7 +404,7 @@ class IncrementalIndexer:
             with_offsets=sub_manifests[0].get("with_offsets", False),
             with_payloads=sub_manifests[0].get("with_payloads", False),
             norm=sub_manifests[0].get("norm", "norm2"),
-            analyzer_name=sub_manifests[0]["analyzer"],
+            analyzer_name=sub_manifests[0].get("analyzer"),
             deleted=deleted,
             term_buckets=term_buckets,
             # ALL dictionary layouts survive the merged view: lookups

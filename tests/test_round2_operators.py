@@ -219,13 +219,13 @@ def test_nested(spark):
 
 
 def test_osa_distance_golden():
-    from iresearch_spark.search.executor import _osa_distance
+    from iresearch_spark.search.semantics import osa_distance
 
-    assert _osa_distance("abcd", "abdc", 2) == 1   # one transposition
-    assert _osa_distance("abcd", "abdc", 0) == 1   # capped: returns cap+1
-    assert _osa_distance("ca", "abc", 3) == 3      # OSA (not full Damerau =2)
-    assert _osa_distance("kitten", "sitting", 3) == 3
-    assert _osa_distance("same", "same", 1) == 0
+    assert osa_distance("abcd", "abdc", 2) == 1   # one transposition
+    assert osa_distance("abcd", "abdc", 0) == 1   # capped: returns cap+1
+    assert osa_distance("ca", "abc", 3) == 3      # OSA (not full Damerau =2)
+    assert osa_distance("kitten", "sitting", 3) == 3
+    assert osa_distance("same", "same", 1) == 0
 
 
 def test_fuzzy_transpositions(spark):

@@ -9,7 +9,7 @@ import string
 
 import numpy as np
 
-from iresearch_spark.search.executor import _osa_distance, _osa_distances_batch
+from iresearch_spark.search.semantics import osa_distance, osa_distances_batch
 
 
 def test_osa_batch_matches_scalar_fuzz():
@@ -22,9 +22,9 @@ def test_osa_batch_matches_scalar_fuzz():
     for q in ["", "a", "abca", "fedcba", "éabé", "abcdef"]:
         for cap in (1, 2, 3):
             band = [t for t in corpus if abs(len(t) - len(q)) <= cap]
-            got = _osa_distances_batch(q, np.array(band, dtype=object), cap)
+            got = osa_distances_batch(q, np.array(band, dtype=object), cap)
             for t, g in zip(band, got):
-                want = _osa_distance(q, t, cap)
+                want = osa_distance(q, t, cap)
                 # scalar caps at cap+1; batch reports true distance —
                 # they must agree on everything <= cap and on the cut
                 assert (g <= cap) == (want <= cap), (q, t, g, want)
@@ -45,7 +45,7 @@ def test_osa_batch_transposition_cases():
     for q in qs:
         terms = np.array([t for qq, t, _ in cases if qq == q], dtype=object)
         want = [d for qq, _, d in cases if qq == q]
-        got = _osa_distances_batch(q, terms, 10)
+        got = osa_distances_batch(q, terms, 10)
         assert list(got) == want, (q, list(got), want)
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import SparkSession
 from iresearch_spark.index.builder import build_index
 from iresearch_spark.index.model import InvertedIndex
 from iresearch_spark.search import Fuzzy, SearchEngine, Wildcard
+from iresearch_spark.search.semantics import wildcard_required_grams
 from iresearch_spark.streaming.incremental import IncrementalIndexer
 
 WORDS = [
@@ -121,7 +122,7 @@ def test_gram_lookup_prunes_files(saved):
 
 def test_gram_candidates_cover_exact_matches(saved):
     _, idx, _ = saved
-    grams = SearchEngine._wildcard_required_grams("%form%")
+    grams = wildcard_required_grams("%form%")
     assert "for" in grams and "orm" in grams
     cand = {
         r["term"]
@@ -188,7 +189,7 @@ def test_fuzzy_gram_bound_never_drops_neighbors(saved):
 
 
 def test_wildcard_required_grams_shapes():
-    g = SearchEngine._wildcard_required_grams
+    g = wildcard_required_grams
     assert g("%form%") == sorted({"for", "orm"})
     assert g("ab%ng") == sorted({"\x02ab", "ng\x03"})
     assert g("%pp%") == []

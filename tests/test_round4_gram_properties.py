@@ -4,7 +4,7 @@ The gram index is sound only if candidate selection can NEVER drop a
 true match; these pin the two lemmas with hypothesis:
 
 1. wildcard: every term matching a LIKE pattern contains ALL of
-   `_wildcard_required_grams(pattern)` among its padded 3-grams.
+   `wildcard_required_grams(pattern)` among its padded 3-grams.
 2. fuzzy (q-gram count filtering, Gravano et al. VLDB'01): if
    edit_distance(s, t) <= d then t's padded 3-gram set contains at
    least |G(s)| - q*d of s's distinct padded grams (q+1 per edit with
@@ -15,7 +15,8 @@ import re
 
 from hypothesis import given, settings, strategies as st
 
-from iresearch_spark.search.executor import SearchEngine, _like_to_regex
+from iresearch_spark.search.semantics import like_to_regex
+from iresearch_spark.search.semantics import wildcard_required_grams
 
 ALPHA = "abcdef"
 
@@ -52,8 +53,8 @@ def _pattern_and_term(draw):
 def test_required_grams_never_drop_a_match(pt):
     pattern, term = pt
     # sanity: the constructed term really matches
-    assert re.match(_like_to_regex(pattern), term)
-    req = SearchEngine._wildcard_required_grams(pattern)
+    assert re.match(like_to_regex(pattern), term)
+    req = wildcard_required_grams(pattern)
     assert set(req) <= _padded_grams(term)
 
 

@@ -24,7 +24,7 @@ from iresearch_spark.search import (
     Term,
     Wildcard,
 )
-from iresearch_spark.search.executor import SearchEngine as _SE
+from iresearch_spark.search import semantics as _sem
 
 
 @pytest.fixture(scope="module")
@@ -151,7 +151,7 @@ def test_reversed_dict_prunes_leading_wildcard(saved):
 
 
 def test_wildcard_literal_suffix():
-    f = _SE._wildcard_literal_suffix
+    f = _sem.wildcard_literal_suffix
     assert f("%tion") == "tion"
     assert f("s%k") == "k"
     assert f("pre%") == ""
@@ -161,7 +161,7 @@ def test_wildcard_literal_suffix():
 
 
 def test_wildcard_literal_prefix():
-    f = _SE._wildcard_literal_prefix
+    f = _sem.wildcard_literal_prefix
     assert f("sta%") == "sta"
     assert f("s_k") == "s"
     assert f("%tail") == ""
@@ -170,7 +170,7 @@ def test_wildcard_literal_prefix():
 
 
 def test_prefix_successor():
-    f = _SE._prefix_successor
+    f = _sem.prefix_successor
     assert f("abc") == "abd"
     assert f("a\U0010ffff") == "b"
     assert f("\U0010ffff") is None

@@ -91,7 +91,7 @@ def test_capped_expansion_not_wand_eligible(idx):
     still correct via the exhaustive fallback."""
     eng = SearchEngine(idx, scored_terms_limit=2, wand_min_postings=0)
     node = Prefix("s", scored_terms_limit=2)
-    assert eng._wand_terms(node) is None
+    assert eng.sem.wand_terms(node, eng._leaf_expansion) is None
     exh = [
         (r["doc_id"], round(r["score"], 9))
         for r in eng.search(node, k=10).collect()
@@ -124,7 +124,7 @@ def test_duplicate_terms_across_leaves_fall_back(idx):
     # only a real overlap makes this test meaningful
     expanded, complete = eng._leaf_expansion(Prefix("sca"))
     assert complete and "scan" in {t for t, _ in expanded}
-    assert eng._wand_terms(node) is None
+    assert eng.sem.wand_terms(node, eng._leaf_expansion) is None
     exh = [
         (r["doc_id"], round(r["score"], 9))
         for r in eng.search(node, k=10).collect()

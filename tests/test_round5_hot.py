@@ -160,7 +160,11 @@ def test_hot_float32_parity(spark):
     idx = build_index(df, id_col="doc_id", text_col="text")
     eng32 = SearchEngine(idx, score_dtype="float32")
     hot32 = HotEngine(eng32)
-    for q in (Term("alpha"), Or([Term("alpha"), Term("beta")])):
+    for q in (
+        Term("alpha"),
+        Or([Term("alpha"), Term("beta")]),
+        Or([Term("alpha"), Term("beta"), Term("gamm")]),
+    ):
         want = [
             (r["doc_id"], r["score"])
             for r in eng32.search(q, k=15).collect()
