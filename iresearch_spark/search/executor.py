@@ -661,67 +661,27 @@ class SearchEngine:
         form of Semantics.block_g_ub (the max over the block's impact
         pairs when present, else the loose g(block_max_freq,
         block_min_dl))."""
-        loose = self._score_g(F.col("block_max_freq"), F.col("block_min_dl"))
+        g = lambda tf, dl: self.sem.g(tf, dl, ColumnOps)  # noqa: E731
+        loose = g(F.col("block_max_freq"), F.col("block_min_dl"))
         tight = F.array_max(
-            F.transform(
-                F.col("block_impacts"),
-                lambda x: self._score_g(x["tf"], x["dl"]),
-            )
+            F.transform(F.col("block_impacts"), lambda x: g(x["tf"], x["dl"]))
         )
         return F.when(F.col("block_impacts").isNotNull(), tight).otherwise(
             loose
         )
 
-    def _score_g(self, freq, dl):
-        """The per-posting factor g(tf, dl) with c0 factored out as a
-        Column, in float64 — the Spark form of Semantics.g for the WAND
-        bound and float64 positional scores (the same IEEE ops as the
-        numpy kernel)."""
-        from iresearch_spark.search.scorers import BM25
-
-        scorer = self.sem.scorer
-        if isinstance(scorer, BM25):
-            avg_dl = self.index.field_stats.avg_dl
-            tf = freq.cast("double")
-            dlf = dl.cast("double")
-            if self.sem.norm_mode == "legacy":
-                # old-style Norm (bm25.hpp:29-46): tf = sqrt(freq),
-                # |doc| = sqrt(dl) (the stored 1/sqrt(dl) inverted)
-                tf, dlf = F.sqrt(tf), F.sqrt(dlf)
-            c1 = F.lit(scorer.k * (1.0 - scorer.b)) + F.lit(
-                (scorer.k * scorer.b) / avg_dl if avg_dl else 0.0
-            ) * dlf
-            return tf / (c1 + tf)
-        s = F.sqrt(freq.cast("double"))
-        if getattr(scorer, "with_norms", False):
-            s = s / F.sqrt(dl.cast("double"))
-        return s
-
     def _positional_scores(self, rows: DataFrame, keys: list[str]) -> DataFrame:
-        """(*keys, _c0, freq, dl) rows -> (*keys, score). float64: c0 * g
-        in JVM doubles — the numpy kernel's exact IEEE ops, without a
-        Python stage; float32: the shared score kernel
-        (semantics.make_score_kernel), the fused scans' op chain."""
-        if not self.sem.f32:
-            g = self._score_g(F.col("freq"), F.col("dl"))
-            return rows.select(*keys, (F.col("_c0") * g).alias("score"))
-        params = self.sem.scorer_params()
-        schema = T.StructType(
-            [rows.schema[c] for c in keys]
-            + [T.StructField("score", T.DoubleType(), False)]
+        """(*keys, _c0, freq, dl) rows -> (*keys, score): the shared
+        score chain (semantics.score_expr) as a JVM expression, in
+        either dtype."""
+        score = sem_.score_expr(
+            self.sem.scorer_params(),
+            F.col("_c0"),
+            F.col("freq"),
+            F.col("dl"),
+            ColumnOps,
         )
-
-        def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            kernel = sem_.make_score_kernel(params)
-            for b in batches:
-                col = lambda c: b.column(c).to_numpy(zero_copy_only=False)  # noqa: E731
-                score = kernel(col("_c0"), col("freq"), col("dl"))
-                yield pa.RecordBatch.from_arrays(
-                    [b.column(c) for c in keys] + [pa.array(score)],
-                    names=keys + ["score"],
-                )
-
-        return rows.select(*keys, "_c0", "freq", "dl").mapInArrow(run, schema)
+        return rows.select(*keys, score.alias("score"))
 
     def _prepare_leaf(self, node: ast.Node, boost: float) -> PreparedLeaf:
         boost = boost * node.boost  # boost multiplies down the tree
@@ -946,8 +906,8 @@ class SearchEngine:
         """leaf -> (doc_id, score), one row per matching doc.
 
         Decode + score run FUSED in one mapInArrow pass (the c0 weights
-        are a tiny closure dict; g(tf,dl) is the same formula as
-        _score_g, evaluated in numpy float64) so only (doc_id, score)
+        are a tiny closure dict; the score is semantics.score_expr over
+        numpy arrays) so only (doc_id, score)
         ever crosses back to the JVM — the decoded-rows transfer was
         the dominant query cost. For a root-level single-term query
         `local_topk` additionally reduces each partition's output to
@@ -985,7 +945,7 @@ class SearchEngine:
         return (
             slim.mapInArrow(fused, LEAF_RESULT_SCHEMA)
             .groupBy("doc_id")
-            .agg(_fold_scores(False, sum(1 for w in leaf.weights.values() if w)))
+            .agg(_fold_scores(False))
         )
 
     def _eval(self, node: ast.Node, boost: float, postings=None) -> DataFrame:
@@ -1148,7 +1108,7 @@ class SearchEngine:
         if merge in ("max", "min"):
             score_agg = getattr(F, merge)("score").alias("score")
         else:
-            score_agg = _fold_scores(self.sem.f32, len(positives))
+            score_agg = _fold_scores(self.sem.f32)
         if optional_idx:
             # optional (Should) leaves score but don't count toward
             # `required`: a 0/1 flag per row, summed instead of count
@@ -1819,15 +1779,22 @@ def _order_cols(order) -> list:
     return [getattr(F, d)(c) for c, d in order]
 
 
-def _fold_scores(f32: bool, n_scored: int):
+class ColumnOps:
+    """semantics.NumpyOps over Spark Columns, so the score chains run as
+    JVM expressions: a float op float Column is a Java float op, and
+    `/` (which Spark takes in doubles) is rounded back by f32."""
+
+    f64 = staticmethod(lambda c: c.cast("double"))
+    f32 = staticmethod(lambda c: c.cast("float"))
+    lit32 = staticmethod(lambda x: F.lit(float(np.float32(x))).cast("float"))
+    sqrt = staticmethod(F.sqrt)
+
+
+def _fold_scores(f32: bool):
     """The Spark form of semantics.fold_sum: a doc group's scores
     folded left in `_leaf` order (array_sort on the (_leaf, score)
     structs pins the order under the shuffle), accumulating in float32
-    in parity mode. With at most `n_scored` non-zero scores per group,
-    n_scored <= 2 lets a float64 F.sum stand in: a sum of two has one
-    order."""
-    if not f32 and n_scored <= 2:
-        return F.sum("score").alias("score")
+    in parity mode."""
     t = "float" if f32 else "double"
     return (
         F.aggregate(

@@ -17,6 +17,7 @@ the leaf-order sum fold, the (score desc, doc_id asc) top-k).
 from __future__ import annotations
 
 import dataclasses
+import functools
 import heapq
 import math
 import re
@@ -36,6 +37,26 @@ NO_CLUSTER = (
 EXPANSION_LEAVES = (ast.Prefix, ast.Wildcard, ast.Range, ast.Fuzzy)
 
 # ------------------------------------------------------------- scoring
+
+
+class NumpyOps:
+    """The four numeric ops the score chains below are written in, over
+    numpy arrays. A tier with another numeric type supplies the same
+    four (the cluster: Spark Columns, evaluated in the JVM), so the
+    chains are the one definition of the score in every tier."""
+
+    @staticmethod
+    def f64(x):
+        """x as float64."""
+        return np.asarray(x, np.float64)
+
+    @staticmethod
+    def f32(x):
+        """x rounded to float32."""
+        return np.asarray(x, np.float32)
+
+    lit32 = staticmethod(np.float32)  # a float32 constant
+    sqrt = staticmethod(np.sqrt)  # square root of a float64
 
 
 class Semantics:
@@ -116,35 +137,34 @@ class Semantics:
         return float(np.float32(x)) if self.f32 else float(x)
 
     def scorer_params(self) -> tuple:
-        """The score kernel's parameters — a plain tuple, so the
+        """The score chain's parameters — a plain tuple, so the
         cluster ships it to its Arrow workers."""
         fs = self.field_stats
-        tiny = (
-            self.norm_mode == "norm2" and self.max_dl() <= 255
-            if self.f32
-            else False
+        tiny = self.f32 and self.norm_mode == "norm2" and self.max_dl() <= 255
+        return self._g_params() + (
+            self.score_dtype, fs.n_docs, fs.total_term_freq, tiny
         )
+
+    def _g_params(self) -> tuple:
         if isinstance(self.scorer, BM25):
-            return ("bm25", self.scorer.k, self.scorer.b, fs.avg_dl, False,
-                    self.norm_mode, self.score_dtype, fs.n_docs,
-                    fs.total_term_freq, tiny)
+            return ("bm25", self.scorer.k, self.scorer.b,
+                    self.field_stats.avg_dl, False, self.norm_mode)
         return ("tfidf", 0.0, 0.0, 0.0,
                 bool(getattr(self.scorer, "with_norms", False)),
-                self.norm_mode, self.score_dtype, fs.n_docs,
-                fs.total_term_freq, tiny)
+                self.norm_mode)
 
     @property
     def kernel(self):
-        """(c0, freqs, dls) -> float64 scores (see make_score_kernel)."""
+        """(c0, freqs, dls) -> float64 scores over numpy arrays (see
+        score_expr)."""
         if self._kernel is None:
             self._kernel = make_score_kernel(self.scorer_params())
         return self._kernel
 
-    def g(self, freqs, dls) -> np.ndarray:
-        """The per-posting factor g(tf, dl) with c0 factored out, in
-        float64 — the WAND bound (float32 scores can exceed it by an
-        ulp; theta_eff absorbs that)."""
-        return _make_g64(self.scorer_params())(freqs, dls)
+    def g(self, freqs, dls, o=NumpyOps):
+        """g(tf, dl) in float64 (see g_expr) — the WAND bound (float32
+        scores can exceed it by an ulp; theta_eff absorbs that)."""
+        return g_expr(self._g_params(), freqs, dls, o)
 
     def block_g_ub(self, tf, dl, offsets, valid, max_freq, min_dl):
         """Per-block upper bound on g(tf, dl) — the max over the block's
@@ -289,87 +309,73 @@ class Semantics:
         }
 
 
-def _make_g64(params):
-    """(freqs, dls) -> float64 g(tf, dl)."""
+def g_expr(params: tuple, freq, dl, o=NumpyOps):
+    """The per-posting factor g(tf, dl) with c0 factored out, in float64
+    — the float64 score is c0 * g, and g bounds WAND blocks in both
+    dtypes. `params` is Semantics.scorer_params() (its first six
+    entries suffice)."""
     kind, k, b, avg_dl, with_norms, norm_mode = params[:6]
-    legacy = norm_mode == "legacy"
-
-    def g(freqs, dls):
-        freq = freqs.astype(np.float64)
-        dl = dls.astype(np.float64)
-        if kind == "bm25":
-            if legacy:
-                # old-style Norm (bm25.hpp:29-46): tf = sqrt(freq),
-                # |doc| = sqrt(dl) (the stored 1/sqrt(dl) inverted)
-                freq, dl = np.sqrt(freq), np.sqrt(dl)
-            c1 = k * (1.0 - b) + (k * b / avg_dl if avg_dl else 0.0) * dl
-            return freq / (c1 + freq)
-        s = np.sqrt(freq)
-        if with_norms:
-            s = s / np.sqrt(dl)
-        return s
-
-    return g
+    freq, dl = o.f64(freq), o.f64(dl)
+    if kind == "bm25":
+        if norm_mode == "legacy":
+            # old-style Norm (bm25.hpp:29-46): tf = sqrt(freq),
+            # |doc| = sqrt(dl) (the stored 1/sqrt(dl) inverted)
+            freq, dl = o.sqrt(freq), o.sqrt(dl)
+        c1 = k * (1.0 - b) + (k * b / avg_dl if avg_dl else 0.0) * dl
+        return freq / (c1 + freq)
+    s = o.sqrt(freq)
+    if with_norms:
+        s = s / o.sqrt(dl)
+    return s
 
 
-def make_score_kernel(params: tuple):
-    """(c0_row, freqs, dls) -> float64 score array.
+def score_expr(params: tuple, c0, freq, dl, o=NumpyOps):
+    """score(c0, tf, dl) as float64.
 
-    float64 (default): score = c0 * g(tf, dl) — algebraically the
-    reference formula, evaluated in doubles for the DuckDB oracle.
-    float32 (parity mode): the exact reference op chain in np.float32 —
-    bit-equal to scorers.ref_bm25_f32 (itself a transcription of
-    bm25.cpp:198-365); see the scorers module docstring for the map.
+    float64 (default): c0 * g(tf, dl) — algebraically the reference
+    formula, evaluated in doubles for the DuckDB oracle.
+    float32 (parity mode): the exact reference op chain with every
+    intermediate rounded to float32 — bit-equal to scorers.ref_bm25_f32
+    (itself a transcription of bm25.cpp:198-365); see the scorers
+    module docstring for the map. A square root or quotient taken in
+    float64 and rounded once to float32 equals the float32 operation
+    (a double carries more than twice a float's precision), so `o` may
+    compute those in doubles.
     """
     (kind, k, b, avg_dl, with_norms, norm_mode, dtype, n_docs, ttf,
      tiny) = params
-    legacy = norm_mode == "legacy"
+    if dtype != "float32":
+        return c0 * g_expr(params, freq, dl, o)
+    f, one = o.f32, o.lit32(1.0)
+    c0 = f(c0)
+    if kind == "tfidf":
+        s = f(c0 * f(o.sqrt(o.f64(f(freq)))))
+        if with_norms:
+            s = f(s * f(one / f(o.sqrt(o.f64(dl)))))
+        return o.f64(s)
+    if k == 0.0:  # BM1: constant per term
+        return o.f64(c0)
+    if b == 0.0:  # BM15: no norm feature at all (tf = freq)
+        tf = f(freq)
+        return o.f64(f(c0 - f(c0 / f(one + f(tf / o.lit32(k))))))
+    if norm_mode == "legacy":
+        tf = f(o.sqrt(o.f64(f(freq))))
+        stored = f(one / f(o.sqrt(o.f64(dl))))
+        nrm = f(one / stored)
+    else:
+        tf, nrm = f(freq), f(dl)
+    nc, nl = f32_stats(k, b, n_docs, ttf)
+    c1 = f(o.lit32(nc) + f(o.lit32(nl) * nrm))
+    if tiny and norm_mode != "legacy":
+        # kNorm2Tiny: inverse-norm cache path (bm25.cpp:348-352)
+        inv_c1 = f(one / c1)
+        return o.f64(f(c0 - f(c0 / f(one + f(tf * inv_c1)))))
+    return o.f64(f(c0 - f(f(c0 * c1) / f(c1 + tf))))
 
-    if dtype == "float32":
-        f32 = np.float32
-        one = f32(1.0)
 
-        def score32(c0_64, freqs, dls):
-            c0 = c0_64.astype(np.float32)
-            if kind == "tfidf":
-                s = f32(np.sqrt(freqs.astype(np.float32), dtype=np.float32))
-                s = (c0 * s).astype(np.float32)
-                if with_norms:
-                    stored = (
-                        one / np.sqrt(dls.astype(np.float64)).astype(np.float32)
-                    ).astype(np.float32)
-                    s = (s * stored).astype(np.float32)
-                return s.astype(np.float64)
-            if k == 0.0:  # BM1: constant per term
-                return c0.astype(np.float64)
-            if b == 0.0:  # BM15: no norm feature at all (tf = freq)
-                tf = freqs.astype(np.float32)
-                c1 = f32(k)
-                return (c0 - c0 / (one + tf / c1)).astype(np.float64)
-            if legacy:
-                tf = np.sqrt(freqs.astype(np.float32), dtype=np.float32)
-                stored = (
-                    one / np.sqrt(dls.astype(np.float64)).astype(np.float32)
-                ).astype(np.float32)
-                nrm = (one / stored).astype(np.float32)
-            else:
-                tf = freqs.astype(np.float32)
-                nrm = dls.astype(np.float32)
-            nc, nl = f32_stats(k, b, n_docs, ttf)
-            c1 = (nc + nl * nrm).astype(np.float32)
-            if tiny and not legacy:
-                inv_c1 = (one / c1).astype(np.float32)
-                return (c0 - c0 / (one + tf * inv_c1)).astype(np.float64)
-            return (c0 - (c0 * c1) / (c1 + tf)).astype(np.float64)
-
-        return score32
-
-    g = _make_g64(params)
-
-    def score64(c0, freqs, dls):
-        return c0 * g(freqs, dls)
-
-    return score64
+def make_score_kernel(params: tuple):
+    """(c0_row, freqs, dls) -> float64 scores over numpy arrays."""
+    return functools.partial(score_expr, params)
 
 
 # ----------------------------------------------------------- expansion
@@ -813,8 +819,6 @@ def fold_sum(s: np.ndarray, starts: np.ndarray, f32: bool = False):
     lens = np.empty(starts.size, np.int64)
     lens[:-1] = starts[1:] - starts[:-1]
     lens[-1] = s.size - starts[-1]
-    if lens.max() <= 2:  # a sum of two has one order
-        return np.asarray(np.add.reduceat(v, starts), np.float64)
     # longest segments first, so the ones still folding at step j are
     # a prefix
     order = np.argsort(-lens, kind="stable")

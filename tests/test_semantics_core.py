@@ -13,7 +13,7 @@ import pytest
 
 from iresearch_spark.index.builder import build_index
 from iresearch_spark.index.model import check_segments_agree
-from iresearch_spark.search import Or, SearchEngine, Term
+from iresearch_spark.search import Or, SearchEngine, Term, Terms
 from iresearch_spark.search import semantics
 from iresearch_spark.search.hot import HotEngine
 from iresearch_spark.streaming.incremental import IncrementalIndexer
@@ -86,6 +86,23 @@ def test_three_term_or_is_one_left_fold_in_every_tier(idx, dtype):
     assert got == want
     cluster = {r["doc_id"]: r["score"] for r in eng.matches(q).collect()}
     assert cluster == got
+    top = [(r["doc_id"], r["score"]) for r in eng.search(q, k=25).collect()]
+    assert hot.search(q, k=25) == top
+
+
+@pytest.mark.parametrize("dtype", ["float64", "float32"])
+def test_terms_leaf_scored_cap_is_shared(idx, dtype):
+    # a Terms leaf scores only its top scored_terms_limit terms by
+    # (df desc, term asc); the rest match at weight 0 in every tier
+    eng = SearchEngine(idx, score_dtype=dtype, scored_terms_limit=2)
+    hot = HotEngine(eng)
+    q = Terms(["alpha", "beta", "gamma", "delta", "eps"])
+    cluster = {r["doc_id"]: r["score"] for r in eng.matches(q).collect()}
+    got = dict(hot.matches(q))
+    assert len(got) > 500
+    assert got == cluster
+    full = dict(HotEngine(SearchEngine(idx, score_dtype=dtype)).matches(q))
+    assert any(full[d] > got[d] for d in got)  # the cap bites
     top = [(r["doc_id"], r["score"]) for r in eng.search(q, k=25).collect()]
     assert hot.search(q, k=25) == top
 
