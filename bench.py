@@ -114,12 +114,9 @@ def main():
     from iresearch_spark.index.model import InvertedIndex
 
     idx = InvertedIndex.load(spark, ix_dir)
-    # production setting: WAND prunes only when the candidate set is
-    # big enough to pay for it (sandbox corpora fall back to the
-    # exhaustive plan; differential tests force WAND with the default)
     # preload_stats: term dictionary memory-resident, like the reference's
     # FST — removes the per-query stats-lookup job (documented opt-in)
-    engine = SearchEngine(idx, wand_min_postings=1 << 16, preload_stats=True)
+    engine = SearchEngine(idx, preload_stats=True)
     # warmup: spin up Python workers / JIT before timed runs
     engine.search(Term("batch"), k=1).collect()
     search_tasks = {

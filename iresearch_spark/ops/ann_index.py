@@ -270,7 +270,13 @@ class EmbeddedIvfIndex:
     arithmetic step (integer quantization, centroid ranking with
     ties to the lower cell id, per-cell cosine top-k with
     (cosine desc, neighbor asc) order) replays `IvfIndex.search`
-    exactly, so results are identical row-for-row."""
+    exactly, so results are identical row-for-row.
+
+    A saved IVF directory is IMMUTABLE while a reader holds it: the
+    manifest and centroids are read once here and decoded cells are
+    cached with no invalidation, so rewriting the directory in place
+    serves stale or mixed cells. Save a new index to a new directory
+    and open a new reader on it."""
 
     def __init__(self, path: str, max_cache_bytes: int = 1 << 30):
         import glob as _glob

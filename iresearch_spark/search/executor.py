@@ -1,50 +1,60 @@
 """Query execution on the cluster: AST -> DataFrame plan.
 
-This module holds only the Spark DRIVERS — term-dictionary scans,
-Column expressions, the fused mapInArrow decode+score scans and the
-distributed WAND path. What a query means (scores, expansion caps and
-order, WAND eligibility and bounds, the boolean merge order, the
-top-k tie-break) comes from the Spark-free search/semantics.py core
-that the hot and embedded tiers share, so all tiers answer alike.
+This module holds only the Spark DRIVERS — term-dictionary scans, the
+shard plan, and the DataFrame plan of trees that read the docs table.
+What a query means (scores, expansion caps and order, WAND eligibility
+and bounds, the boolean merge order, the top-k tie-break) comes from
+the Spark-free search/semantics.py core that the hot and embedded tiers
+share, so all tiers answer alike.
 
-Lifecycle parity with the reference (SURVEY §3.2):
+Lifecycle of a postings-only query (every leaf a Term, Terms, Prefix,
+Wildcard, Range, Fuzzy, Phrase or SamePosition, under And / Or / Not /
+Should) — the reference's per-segment pass (SURVEY §3.2):
 
-  prepare  = driver-side: planner rewrites + leaf expansion against the
-             term_stats table (collect df for the handful of query
-             terms; the reference seeks the term dictionary and caches
-             cookies, term_filter.cpp:92-128) + per-term score constants
-             (the stats blob, bm25.cpp:366-410).
-  execute  = ONE declarative DataFrame job:
-             postings scan (term predicate pushed into parquet)
-               -> mapInArrow block decode + score c0 * g(tf, dl)
-                  (the shared numpy kernel)
-               -> boolean merge: union + groupBy(doc_id) count and a
-                  left fold of the child scores in leaf order
-                  (the reference's conjunction/disjunction leapfrog,
-                  conjunction.hpp:82-87 / disjunction.hpp:1412-1470 —
-                  one shuffle regardless of operator arity)
-               -> orderBy(score desc, doc_id asc) LIMIT k
-                  (tie-break parity: the reference's heap keeps the
-                  earliest doc on ties, utils/index-search.cpp:759)
+  compile  = driver-side: planner rewrites + multiterm expansion
+             against the term dictionary + the GLOBAL df of every term
+             the query touches (one term_stats lookup, none on a
+             preload_stats engine — the reference seeks the term
+             dictionary and caches cookies, term_filter.cpp:92-128) +
+             the scorer parameters + the delete mask, into one
+             picklable hot.ShardPlan.
+  execute  = ONE mapInArrow over the query's posting blocks. The
+             blocks split into ceil(postings / POSTINGS_PER_SHARD)
+             equal ranges of the index's doc-id span (one shard is a
+             coalesce(1) scan with no shuffle; more shards than cores
+             run in waves, so a task holds about POSTINGS_PER_SHARD
+             postings when the query's doc ids spread evenly; a
+             block straddling a shard boundary goes to every shard it
+             overlaps and is clipped after decode). Each shard builds
+             the hot tier's HotState from its Arrow block table and the
+             plan — decode, score_expr, the leaf-order fold, required
+             and exclusions, phrases from positions and, for
+             mode="wand", the range-aligned block-max WAND walk — and
+             returns its exact top k (the reference's per-segment
+             wanderator + heap, formats_10.cpp:2426-2642).
+  merge    = orderBy(score desc, doc_id asc) LIMIT k over the shards'
+             top-k lists (tie-break parity: the reference's heap keeps
+             the earliest doc on ties, utils/index-search.cpp:759) — a
+             driver-side takeOrdered, so a one-shard query is ONE Spark
+             job and a multi-shard one adds only its shard shuffle.
 
-  WAND     = two-pass block-max pruning (mode="wand"): pass 1 scores the
-             highest-upper-bound blocks exhaustively to seed a threshold
-             theta (any achieved score is a sound lower bound); pass 2
-             drops every block whose upper bound (plus what the other
-             terms can add in its doc range) cannot reach theta, then
-             runs the exhaustive pipeline on the survivors. Equivalent
-             results to exhaustive by construction (differential-tested,
-             mirroring tests/search/wand_test.cpp:234-240).
+Scale limits of the shard plan: the delete mask travels as sorted doc
+ids (8 bytes per deleted doc) inside every task's pickled plan, so a
+mask of tens of millions of docs wants a consolidation first; and the
+shard count counts a capped multiterm expansion's scored head only, not
+the unscored tail its pattern still matches.
 
-At 100 TB the only shuffles are the groupBy(doc_id) for multi-term
-queries (bounded by candidate postings, not corpus size) and the final
-top-k reduce; single-term queries shuffle nothing but the per-partition
-top-k rows.
+search_many() answers every postings-only query of a batch in the same
+single pass (each shard evaluates the whole batch). Trees that mix in
+docs-table leaves (AllDocs, Exists, NumericRange, GranularRange,
+Nested, NgramSimilarity, Cached, Field) keep the DataFrame plan below:
+a fused decode+score mapInArrow per leaf group, a union +
+groupBy(doc_id) boolean merge with the same leaf-order fold, and an
+anti-join against the delete mask.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -56,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from iresearch_spark.index.model import InvertedIndex
 from iresearch_spark.search import ast, planner
+from iresearch_spark.search import hot as _hot
 from iresearch_spark.search import semantics as sem_
 from iresearch_spark.search.semantics import Semantics
 
@@ -69,6 +80,30 @@ RESULT_SCHEMA = T.StructType(
 LEAF_RESULT_SCHEMA = T.StructType(
     RESULT_SCHEMA.fields + [T.StructField("_leaf", T.IntegerType(), False)]
 )
+
+SHARD_SCHEMA = T.StructType(
+    [T.StructField("query", T.StringType(), False)] + RESULT_SCHEMA.fields
+)
+
+# leaves the shard plan evaluates (besides positional ones)
+_SHARD_LEAVES = (ast.Empty, ast.Term, ast.Terms) + sem_.EXPANSION_LEAVES
+
+# Query postings per doc-range shard. It trades latency and per-task
+# memory against CPU: a second shard never removes kernel CPU, it adds a
+# Python-task floor (~0.25 CPU-s: pyspark.worker.setup_spark_files calls
+# importlib.invalidate_caches(), and Python 3.11 then re-reads the zip
+# directories of the 16 zipimporters on the worker path;
+# BENCH/BASELINE.md), a shuffle of the blocks and a second decode of
+# the straddling ones. Measured on a 600k-doc synthetic index (4-vCPU
+# VM, local[4], Term/Or queries of 0.15-3.0 M postings at 1, 2 and 4
+# shards, alternated, median of 5; BENCH/BASELINE.md "Shard-count
+# crossover"): 1 shard has the least CPU at every size (+0.5 CPU-s for
+# 2 shards, +1.0 for 4); 2 and 4 shards are slower in wall time up to
+# 0.6 M postings, break even at ~1 M, and are faster from 1.8 M on
+# (0.89 -> 0.78 / 0.69 s at 1.8 M; 1.12 -> 0.88 / 0.69 s at 3.0 M). The
+# kernel peaks at ~140 B per posting, so this also bounds a task to
+# ~140 MB.
+POSTINGS_PER_SHARD = 1_000_000
 
 
 @dataclass
@@ -90,7 +125,6 @@ class SearchEngine:
         index: InvertedIndex,
         scorer: str | object = "bm25",
         scored_terms_limit: int = 1024,
-        wand_min_postings: int = 0,
         preload_stats: bool = False,
         score_dtype: str = "float64",
     ):
@@ -105,19 +139,11 @@ class SearchEngine:
             scored_terms_limit,
             max_dl=self._max_dl,
         )
-        # opt-in WAND pruning observability (costs two tiny jobs over
-        # the checkpointed bound table): after a mode="wand" search,
-        # last_wand_stats = {blocks_total, blocks_kept, theta}
+        # opt-in WAND pruning observability (an accumulator the shards
+        # add to): after a mode="wand" search has run, last_wand_stats
+        # = {blocks_total, blocks_kept, theta} summed over shards
         self.collect_wand_stats = False
-        self.last_wand_stats: dict | None = None
-        # mode="wand" falls back to the exhaustive plan when the query
-        # terms' total df is below this (pruning overhead beats payoff
-        # on tiny candidate sets); 0 = always use WAND when requested
-        self.wand_min_postings = wand_min_postings
-        # when the estimated per-block meta row count fits this cap,
-        # the WAND bound walk runs driver-side (3 Spark jobs instead of
-        # ~8 — see _wand_driver_path); above it, fully distributed
-        self.wand_driver_meta_cap = 100_000
+        self._wand_acc = None
         self._spark: SparkSession = index.postings.sparkSession
         self._df_cache: dict[str, int] = {}
         self._proxy_cache: dict = {}  # Cached-node materialized results
@@ -125,10 +151,12 @@ class SearchEngine:
         # leaf node — the reference's per-segment seek-cookie cache
         # (term_filter.cpp:92-128 caches prepared term states the same
         # way). Sound because the index view is immutable per engine;
-        # lets WAND's seed/survivor passes and repeated executions
-        # reuse ONE expansion job.
+        # repeated executions reuse ONE expansion job.
         self._expansion_cache: dict = {}
+        self._deleted: np.ndarray | None = None  # the collected mask
+        self._span: tuple[int, int] | None = None  # (min, max) doc id
         self._stats_preloaded = False
+        self._vocab: sem_.Vocabulary | None = None
         if preload_stats:
             self.preload_stats()
 
@@ -145,13 +173,31 @@ class SearchEngine:
         """Materialize the whole term_stats table into the driver-side
         df cache — the analogue of the reference holding its FST term
         dictionary in memory. Removes the per-query stats-lookup Spark
-        job (one scheduling floor per query) for exact-term queries.
-        Driver memory is vocabulary-sized, so this is OPT-IN: right for
-        repeated-query serving where the vocab fits (10^7 terms ~ a few
-        hundred MB); leave off for one-shot queries on huge vocabs."""
-        for r in self.index.term_stats.select("term", "df").collect():
-            self._df_cache[r["term"]] = r["df"]
+        job (one scheduling floor per query) for exact-term queries, and
+        the expansion job of multiterm leaves (they expand against the
+        in-memory dictionary, semantics.Vocabulary). Driver memory is
+        vocabulary-sized, so this is OPT-IN: right for repeated-query
+        serving where the vocab fits (10^7 terms ~ a few hundred MB);
+        leave off for one-shot queries on huge vocabs."""
+        dfs = {
+            r["term"]: r["df"]
+            for r in self.index.term_stats.select("term", "df").collect()
+        }
+        self._df_cache.update(dfs)
         self._stats_preloaded = True
+        self._vocab = sem_.Vocabulary.of(dfs)
+
+    @property
+    def last_wand_stats(self) -> dict | None:
+        """{blocks_total, blocks_kept, theta} of the last mode="wand"
+        search run with collect_wand_stats on: blocks summed over its
+        shards, theta the largest shard threshold (0.0 when no shard
+        could seed one). None before such a search has run."""
+        acc = self._wand_acc
+        if acc is None or not acc.value[0]:
+            return None
+        total, kept, theta = acc.value
+        return {"blocks_total": total, "blocks_kept": kept, "theta": theta}
 
     # ------------------------------------------------------------------ API
 
@@ -159,12 +205,22 @@ class SearchEngine:
         self, query: ast.Node, k: int = 10, mode: str = "exhaustive"
     ) -> DataFrame:
         """Top-k (doc_id, score), score desc, doc_id asc."""
-        df = self._execute(query, k=k, mode=mode)
+        norm = planner.normalize(query)
+        if self._shard_servable(norm):
+            df = self._shard_scan({"": norm}, k, mode)[0]
+            df = df.select("doc_id", "score")
+        else:
+            df = self._execute(norm)
         return df.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def matches(self, query: ast.Node) -> DataFrame:
         """All matching docs with scores (unordered)."""
-        return self._execute(query, k=None, mode="exhaustive")
+        norm = planner.normalize(query)
+        if self._shard_servable(norm):
+            return self._shard_scan({"": norm}, None)[0].select(
+                "doc_id", "score"
+            )
+        return self._execute(norm)
 
     def top_docs(
         self,
@@ -204,7 +260,7 @@ class SearchEngine:
                     break
             docs = self._spark.read.parquet(*sel)
         elif query is not None:
-            m = self._execute(query, k=None, mode="exhaustive")
+            m = self.matches(query)
             docs = docs.join(m.select("doc_id"), "doc_id", "semi")
         out = docs.orderBy(F.asc("doc_id")).limit(k)
         return out.select(*columns) if columns else out
@@ -215,280 +271,50 @@ class SearchEngine:
         k: int = 10,
         mode: str = "exhaustive",
     ) -> DataFrame:
-        """Batched top-k for MANY queries as ONE DataFrame job:
-        (query, doc_id, score), rows ordered (query, score desc,
-        doc_id asc). Results per query are identical to `search()`.
+        """Batched top-k for MANY queries: (query, doc_id, score), rows
+        ordered (query, score desc, doc_id asc). Results per query are
+        identical to `search()`.
 
         Query THROUGHPUT (the reference benchmark's q/s metric,
         scripts/search-benchmark.sh) on Spark is bounded by the
         ~0.3s/job scheduling floor when queries run one at a time.
-        Shapes whose leaves expand to known term sets (Term / Terms /
-        Prefix / Wildcard / Range / Fuzzy, alone or under a sum-merge
-        And/Or without exclusions) share ONE fused postings scan over
-        the union of all their terms: the scan emits raw per-(term,
-        doc) factors once, a broadcast (term, query, child, c0) fan-out
-        assigns them, and one groupBy + one window produce every
-        query's top-k. Plain-string Phrase / SamePosition queries share
-        ONE positions decode the same way. Other shapes fall back to
-        unioned per-query subplans (still one job). In WAND mode the
-        shared scans are used unchanged — WAND's top-k is
-        result-identical to exhaustive, and the batch amortizes the
-        scan instead of pruning it."""
+        Every postings-only query of the batch is answered in ONE shard
+        scan over the union of their posting blocks, each shard
+        evaluating the whole batch; other shapes union their own
+        search() plans into the same result."""
         if not queries:
             return self._spark.createDataFrame(
                 [], "query string, doc_id long, score double"
             )
-        batched: dict[str, tuple] = {}
-        phrased: dict[str, tuple] = {}
-        rest: dict[str, ast.Node] = {}
-        for name, node in queries.items():
-            if self.sem.f32:
-                # parity mode: the shared-scan fan-out multiplies c0
-                # JVM-side in float64 — route through per-query plans
-                # (which carry the exact float32 op chain) instead
-                rest[name] = node
-                continue
-            norm = planner.normalize(node)
-            shape = self._batchable(norm)
-            if shape is not None:
-                prep = self._prepare_batch_leaves(shape)
-                if prep is not None:
-                    batched[name] = prep
-                    continue
-            pshape = self._batchable_phrase(norm)
-            if pshape is not None:
-                phrased[name] = pshape
-                continue
-            rest[name] = node
+        shared: dict[str, ast.Node] = {}
         parts = []
-        if batched:
-            parts.append(self._search_many_shared(batched, k))
-        if phrased:
-            parts.append(self._search_many_phrases(phrased, k))
-        for name, node in rest.items():
-            topk = self.search(node, k=k, mode=mode)
-            parts.append(topk.select(F.lit(name).alias("query"), "doc_id", "score"))
+        for name, node in queries.items():
+            norm = planner.normalize(node)
+            if self._shard_servable(norm):
+                shared[name] = norm
+            else:
+                topk = self.search(node, k=k, mode=mode)
+                parts.append(
+                    topk.select(F.lit(name).alias("query"), "doc_id", "score")
+                )
+        if shared:
+            df, n_shards = self._shard_scan(shared, k, mode)
+            if n_shards > 1:
+                from pyspark.sql import Window
+
+                w = Window.partitionBy("query").orderBy(
+                    F.desc("score"), F.asc("doc_id")
+                )
+                df = (
+                    df.withColumn("_rk", F.row_number().over(w))
+                    .filter(F.col("_rk") <= k)
+                    .drop("_rk")
+                )
+            parts.append(df)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out.orderBy("query", F.desc("score"), F.asc("doc_id"))
-
-    _BATCH_LEAVES = (ast.Term, ast.Terms) + sem_.EXPANSION_LEAVES
-
-    def _batchable(self, norm: ast.Node):
-        """(positives, negatives, required, boost) when the normalized
-        node fits the shared-scan batch shape, else None: an expandable
-        leaf, or a sum-merge And/Or whose children are expandable leaves
-        or Not-wrapped expandable leaves (exclusions ride the same scan:
-        their terms' factor rows flag the doc instead of scoring it)."""
-        if isinstance(norm, self._BATCH_LEAVES):
-            return ([norm], [], 1, 1.0)
-        if isinstance(norm, (ast.And, ast.Or)) and norm.merge_type == "sum":
-            pos, optional, neg, req = sem_.bool_parts(norm)
-            if optional or not pos or not all(
-                isinstance(c, self._BATCH_LEAVES) for c in pos + neg
-            ):
-                return None
-            return (pos, neg, req, norm.boost)
-        return None
-
-    def _prepare_batch_leaves(self, shape):
-        """Expand every child leaf to its (term -> c0) weights. Returns
-        (req, [(child_idx, weights, is_exclusion)]) or None when some
-        child's expansion hit the scored_terms_limit cap INCOMPLETE (a
-        Prefix/Wildcard/Range matching more terms than expanded must
-        fall back to its predicate-scan subplan to stay identical to
-        search() — for an exclusion an incomplete expansion would fail
-        to exclude, so it falls back too)."""
-        positives, negatives, req, boost = shape
-        out = []
-        for ci, c in enumerate(positives):
-            leaf = self._prepare_leaf(c, boost)
-            if leaf.weights and leaf.exact_terms is None:
-                return None
-            out.append((ci, leaf.weights, False))
-        for c in negatives:
-            leaf = self._prepare_leaf(c, 1.0)
-            if leaf.weights and leaf.exact_terms is None:
-                return None
-            out.append((-1, leaf.weights, True))
-        return (int(req), out)
-
-    def _batchable_phrase(self, norm: ast.Node):
-        """(terms, offsets, boost) for plain-string Phrase/SamePosition
-        (variadic slots keep their per-query subplan)."""
-        if isinstance(norm, (ast.Phrase, ast.SamePosition)) and all(
-            isinstance(p, str) for p in norm.terms
-        ):
-            return (list(norm.terms), sem_.slot_offsets(norm), norm.boost)
-        return None
-
-    def _topk_per_query(self, scored: DataFrame, k: int) -> DataFrame:
-        if self.index.deleted is not None:
-            scored = scored.join(
-                self.index.deleted.select("doc_id"), "doc_id", "left_anti"
-            )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("query").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        return (
-            scored.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= k)
-            .select("query", "doc_id", "score")
-        )
-
-    def _search_many_shared(self, batched: dict[str, tuple], k: int) -> DataFrame:
-        # membership rows: (term, query, child idx, term rank within the
-        # child, c0, required count, exclusion flag). A positive child
-        # with an empty expansion contributes no rows — an And then
-        # fails the countDistinct(_child) >= req filter naturally.
-        # Exclusion terms ride the SAME scan: their rows score nothing
-        # and any hit drops the (query, doc) via the max(_neg) == 0
-        # filter.
-        rows = []
-        for name, (req, kids) in batched.items():
-            for ci, weights, is_neg in kids:
-                for lc, t in enumerate(sorted(weights)):
-                    rows.append(
-                        (t, name, int(ci), lc, float(weights[t]), int(req),
-                         int(is_neg))
-                    )
-        if not rows:
-            return self._spark.createDataFrame(
-                [], "query string, doc_id long, score double"
-            )
-        uniq = list(dict.fromkeys(r[0] for r in rows))
-        leaf_of = {t: i for i, t in enumerate(uniq)}
-        # ONE fused scan over the union of terms, emitting the RAW
-        # per-(term, doc) factor g(tf, dl) tagged with the term index
-        weights = {t: 1.0 for t in uniq}
-        blocks = self.index.postings_for_terms(uniq)
-        slim = blocks.select("term", "n_docs", "docs", "dls").repartition(
-            self._spark.sparkContext.defaultParallelism
-        )
-        fused = _make_fused_scorer(
-            weights, self.sem.scorer_params(), None, leaf_of=leaf_of
-        )
-        factors = slim.mapInArrow(fused, LEAF_RESULT_SCHEMA)
-        memb = self._spark.createDataFrame(
-            [(leaf_of[r[0]],) + r[1:] for r in rows],
-            "_leaf int, query string, _child int, _lc int, _c0 double, "
-            "_req int, _neg int",
-        )
-        pos = F.col("_neg") == 0
-        # the score folds exactly as search() nests it: each child's
-        # terms left-folded in term order, then the children in child
-        # order (semantics.fold_sum) — one pass over the sorted
-        # (child, term) contributions with a (child, child sum, total)
-        # accumulator
-        contrib = F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "_child",
-                    "_lc",
-                    F.when(pos, F.col("_c0") * F.col("score"))
-                    .otherwise(0.0)
-                    .alias("score"),
-                )
-            )
-        )
-
-        def step(acc, x):
-            same = F.struct(
-                acc["c"].alias("c"),
-                (acc["a"] + x["score"]).alias("a"),
-                acc["t"].alias("t"),
-            )
-            nxt = F.struct(
-                x["_child"].alias("c"),
-                x["score"].alias("a"),
-                (acc["t"] + acc["a"]).alias("t"),
-            )
-            return F.when(x["_child"] == acc["c"], same).otherwise(nxt)
-
-        zero = F.struct(
-            F.lit(-2).alias("c"), F.lit(0.0).alias("a"), F.lit(0.0).alias("t")
-        )
-        merged = (
-            factors.join(F.broadcast(memb), "_leaf")
-            .groupBy("query", "doc_id")
-            .agg(
-                F.aggregate(
-                    contrib, zero, step, lambda acc: acc["t"] + acc["a"]
-                ).alias("score"),
-                F.countDistinct(F.when(pos, F.col("_child"))).alias("_cnt"),
-                F.max("_neg").alias("_ex"),
-                F.first("_req").alias("_req"),
-            )
-            .filter((F.col("_cnt") >= F.col("_req")) & (F.col("_ex") == 0))
-        )
-        return self._topk_per_query(merged, k)
-
-    def _search_many_phrases(self, phrased: dict[str, tuple], k: int) -> DataFrame:
-        """All plain phrases in ONE positions decode over the union of
-        their terms + two bounded groupBys: decoded rows fan out to
-        (query, slot) via a broadcast membership join, per-slot distinct
-        shifted-position sets aggregate per (query, doc), and phrase
-        freq = |∩ slots| exactly as _eval_positional computes it."""
-        memb_rows = []
-        c0_rows = []
-        for name, (terms, offsets, boost) in phrased.items():
-            dfs = self._term_dfs(list(dict.fromkeys(terms)))
-            weight = self.sem.phrase_weight([[(t, dfs[t])] for t in terms], boost)
-            if weight is None:
-                continue  # a dead slot -> the phrase matches nothing
-            c0_rows.append((name, float(weight[1])))
-            for i, (t, off) in enumerate(zip(terms, offsets)):
-                memb_rows.append((t, name, int(i), int(off), len(terms)))
-        if not memb_rows:
-            return self._spark.createDataFrame(
-                [], "query string, doc_id long, score double"
-            )
-        uniq = list(dict.fromkeys(r[0] for r in memb_rows))
-        decoded = self.index.decoded_postings(terms=uniq, with_positions=True)
-        memb = self._spark.createDataFrame(
-            memb_rows, "term string, query string, _slot int, _off int, _m int"
-        )
-        joined = decoded.join(F.broadcast(memb), "term").select(
-            "query",
-            "doc_id",
-            "dl",
-            "_slot",
-            "_m",
-            F.transform(
-                F.col("positions"), lambda x: x - F.col("_off")
-            ).alias("_sp"),
-        )
-        per_slot = joined.groupBy("query", "doc_id", "_slot").agg(
-            F.array_distinct(F.flatten(F.collect_list("_sp"))).alias("_p"),
-            F.min("dl").alias("dl"),
-            F.first("_m").alias("_m"),
-        )
-        agged = (
-            per_slot.groupBy("query", "doc_id")
-            .agg(
-                F.collect_list("_p").alias("_ps"),
-                F.min("dl").alias("dl"),
-                F.first("_m").alias("_m"),
-                F.count(F.lit(1)).alias("_ns"),
-            )
-            .filter(F.col("_ns") == F.col("_m"))  # every slot present
-        )
-        inter = F.aggregate(
-            F.slice(F.col("_ps"), 2, F.size("_ps")),
-            F.element_at(F.col("_ps"), 1),
-            lambda acc, a: F.array_intersect(acc, a),
-        )
-        freq_df = agged.select(
-            "query", "doc_id", F.size(inter).alias("freq"), "dl"
-        ).filter(F.col("freq") > 0)
-        c0df = self._spark.createDataFrame(c0_rows, "query string, _c0 double")
-        scored = self._positional_scores(
-            freq_df.join(F.broadcast(c0df), "query"), ["query", "doc_id"]
-        )
-        return self._topk_per_query(scored, k)
 
     def explain(self, query: ast.Node, k: int = 10, mode: str = "exhaustive"):
         self.search(query, k, mode).explain("formatted")
@@ -656,20 +482,6 @@ class SearchEngine:
         row = self.index.docs.agg(F.max("dl").alias("m")).collect()[0]
         return int(row["m"] or 0)
 
-    def _block_g_ub(self):
-        """Per-block upper bound on g(tf, dl) as a Column — the Spark
-        form of Semantics.block_g_ub (the max over the block's impact
-        pairs when present, else the loose g(block_max_freq,
-        block_min_dl))."""
-        g = lambda tf, dl: self.sem.g(tf, dl, ColumnOps)  # noqa: E731
-        loose = g(F.col("block_max_freq"), F.col("block_min_dl"))
-        tight = F.array_max(
-            F.transform(F.col("block_impacts"), lambda x: g(x["tf"], x["dl"]))
-        )
-        return F.when(F.col("block_impacts").isNotNull(), tight).otherwise(
-            loose
-        )
-
     def _positional_scores(self, rows: DataFrame, keys: list[str]) -> DataFrame:
         """(*keys, _c0, freq, dl) rows -> (*keys, score): the shared
         score chain (semantics.score_expr) as a JVM expression, in
@@ -704,16 +516,9 @@ class SearchEngine:
                 ),
                 exact_terms=terms,
             )
-        if isinstance(node, ast.Prefix):
-            pred = col.startswith(node.prefix)
-        elif isinstance(node, ast.Wildcard):
-            pred = col.rlike(sem_.like_to_regex(node.pattern))
-        elif isinstance(node, ast.Range):
-            pred = self._range_pred(node, col)
-        elif isinstance(node, ast.Fuzzy):
-            pred = None
-        else:
+        if not isinstance(node, sem_.EXPANSION_LEAVES):
             raise TypeError(f"not a leaf: {node}")
+        pred = self._leaf_predicate(node)
         expanded, complete = self._leaf_expansion(node)
         terms = [t for t, _ in expanded]
         if pred is None:
@@ -729,6 +534,18 @@ class SearchEngine:
                 else terms if complete else None
             ),
         )
+
+    def _leaf_predicate(self, node: ast.Node):
+        """The term-column predicate a Prefix/Wildcard/Range leaf
+        matches by (None for Fuzzy: its expansion is its match set)."""
+        col = F.col("term")
+        if isinstance(node, ast.Prefix):
+            return col.startswith(node.prefix)
+        if isinstance(node, ast.Wildcard):
+            return col.rlike(sem_.like_to_regex(node.pattern))
+        if isinstance(node, ast.Range):
+            return self._range_pred(node, col)
+        return None
 
     @staticmethod
     def _range_pred(node: ast.Range, col):
@@ -760,13 +577,16 @@ class SearchEngine:
         semantics); an incomplete expansion leaves the pattern
         predicate authoritative and only the sampled terms scored.
         Results are cached per (frozen, hashable) node — the
-        reference's prepared-query seek-cookie cache — so WAND's
-        seed/survivor re-evaluations and repeated executions pay for
-        ONE expansion job."""
+        reference's prepared-query seek-cookie cache — so repeated
+        executions pay for ONE expansion job (none on a preload_stats
+        engine: it expands against its in-memory dictionary)."""
         hit = self._expansion_cache.get(node)
         if hit is not None:
             return hit
-        if isinstance(node, ast.Prefix):
+        if self._vocab is not None:
+            expanded, _matched, complete = self._vocab.expand(node, self.sem)
+            out = (expanded, complete)
+        elif isinstance(node, ast.Prefix):
             out = self._expand(
                 F.col("term").startswith(node.prefix),
                 self.sem.expansion_limit(node),
@@ -893,29 +713,15 @@ class SearchEngine:
     def _empty(self) -> DataFrame:
         return self._spark.createDataFrame([], RESULT_SCHEMA)
 
-    def _weights_df(self, weights: dict[str, float]) -> DataFrame:
-        rows = [(t, float(w)) for t, w in weights.items()]
-        return self._spark.createDataFrame(rows, "term string, w double")
-
-    def _eval_leaf_df(
-        self,
-        leaf: PreparedLeaf,
-        postings: DataFrame | None = None,
-        local_topk: int | None = None,
-    ) -> DataFrame:
+    def _eval_leaf_df(self, leaf: PreparedLeaf) -> DataFrame:
         """leaf -> (doc_id, score), one row per matching doc.
 
         Decode + score run FUSED in one mapInArrow pass (the c0 weights
         are a tiny closure dict; the score is semantics.score_expr over
         numpy arrays) so only (doc_id, score)
         ever crosses back to the JVM — the decoded-rows transfer was
-        the dominant query cost. For a root-level single-term query
-        `local_topk` additionally reduces each partition's output to
-        its k best candidates (a doc appears in exactly one block of a
-        term, so per-partition top-k is sound pre-aggregation)."""
-        if postings is not None:
-            blocks = postings.filter(leaf.predicate)
-        elif leaf.exact_terms is not None:
+        the dominant query cost."""
+        if leaf.exact_terms is not None:
             blocks = self.index.postings_for_terms(leaf.exact_terms)
         else:
             blocks = self.index.postings.filter(leaf.predicate)
@@ -931,7 +737,7 @@ class SearchEngine:
             )
         if leaf.single_term:
             fused = _make_fused_scorer(
-                dict(leaf.weights), self.sem.scorer_params(), local_topk
+                dict(leaf.weights), self.sem.scorer_params()
             )
             return slim.mapInArrow(fused, RESULT_SCHEMA)
         # a doc's per-term scores fold in term order (every tier sums a
@@ -939,7 +745,6 @@ class SearchEngine:
         fused = _make_fused_scorer(
             dict(leaf.weights),
             self.sem.scorer_params(),
-            None,
             leaf_of={t: i for i, t in enumerate(sorted(leaf.weights))},
         )
         return (
@@ -948,7 +753,7 @@ class SearchEngine:
             .agg(_fold_scores(False))
         )
 
-    def _eval(self, node: ast.Node, boost: float, postings=None) -> DataFrame:
+    def _eval(self, node: ast.Node, boost: float) -> DataFrame:
         """node -> (doc_id, score) DataFrame, unique per doc."""
         if isinstance(node, ast.Empty):
             return self._empty()
@@ -1037,15 +842,15 @@ class SearchEngine:
         if isinstance(node, ast.NgramSimilarity):
             return self._eval_ngram_similarity(node, boost)
         if isinstance(node, (ast.And, ast.Or)):
-            return self._eval_bool(node, boost, postings)
+            return self._eval_bool(node, boost)
         if isinstance(node, ast.Not):
             raise ValueError("Not is only valid inside And/Or")
         if isinstance(node, ast.Should):
             raise ValueError("Should is only valid as a child of And")
         leaf = self._prepare_leaf(node, boost)
-        return self._eval_leaf_df(leaf, postings)
+        return self._eval_leaf_df(leaf)
 
-    def _eval_bool(self, node, boost: float, postings=None) -> DataFrame:
+    def _eval_bool(self, node, boost: float) -> DataFrame:
         boost = boost * node.boost
         # Should children score like any positive but never count toward
         # `required` — a per-row _leaf flag keeps the fused-scan fold
@@ -1064,31 +869,24 @@ class SearchEngine:
         folded_idx = {i for i, _ in fold}
         parts = []
         if fold:
-            # one fused scan for ALL plain-Term children — also under a
-            # restricted postings set (the WAND survivor scan): without
-            # this the pruned re-evaluation ran one scan PER child,
-            # which alone made forced WAND slower than exhaustive
             dfs = self._term_dfs([c.term for _, c in fold])
             weights = {
                 c.term: self.sem.c0(dfs[c.term], boost * c.boost) for _, c in fold
             }
             leaf_of = {c.term: i for i, c in fold}
-            if postings is None:
-                blocks = self.index.postings_for_terms(list(weights))
-            else:
-                blocks = postings.filter(F.col("term").isin(list(weights)))
+            blocks = self.index.postings_for_terms(list(weights))
             slim = blocks.select("term", "n_docs", "docs", "dls").repartition(
                 self._spark.sparkContext.defaultParallelism
             )
             fused = _make_fused_scorer(
-                weights, self.sem.scorer_params(), None, leaf_of=leaf_of
+                weights, self.sem.scorer_params(), leaf_of=leaf_of
             )
             parts.append(slim.mapInArrow(fused, LEAF_RESULT_SCHEMA))
         for i, c in enumerate(positives):
             if i in folded_idx and fold:
                 continue
             parts.append(
-                self._eval(c, boost, postings).withColumn(
+                self._eval(c, boost).withColumn(
                     "_leaf", F.lit(i).cast("int")
                 )
             )
@@ -1306,13 +1104,16 @@ class SearchEngine:
         pmap = self.index.docs.filter(
             F.col(node.parent_col).isNotNull()
         ).select("doc_id", F.col(node.parent_col).alias("_parent"))
+        # a parent's sum is the left fold over its children in doc-id
+        # order (semantics.fold_sum), as in the hot tier
+        merge = node.merge_type
         merged = (
             child.join(pmap, "doc_id")
             .groupBy("_parent")
             .agg(
-                {"sum": F.sum, "max": F.max, "min": F.min}.get(
-                    node.merge_type, F.sum
-                )("score").alias("score"),
+                getattr(F, merge)("score").alias("score")
+                if merge in ("max", "min")
+                else _fold_scores(False, "doc_id"),
                 F.count(F.lit(1)).alias("_nc"),
             )
         )
@@ -1396,7 +1197,151 @@ class SearchEngine:
             "doc_id", (F.lit(boost) * F.col("_sim")).alias("score")
         )
 
-    # --------------------------------------------------------------- WAND
+    # ---------------------------------------------------- the shard plan
+
+    def _shard_servable(self, node: ast.Node) -> bool:
+        """A postings-only tree the shard plan evaluates; a root Not or
+        Should, and positional leaves on an index without positions,
+        keep the DataFrame plan (which raises for them)."""
+        if isinstance(node, (ast.Not, ast.Should)):
+            return False
+        return self._postings_only(node)
+
+    def _postings_only(self, node: ast.Node) -> bool:
+        if isinstance(node, _SHARD_LEAVES):
+            return True
+        if isinstance(node, (ast.Phrase, ast.SamePosition)):
+            return bool(self.index.with_positions) and all(
+                isinstance(p, (str, ast.Terms) + sem_.EXPANSION_LEAVES)
+                for p in node.terms
+            )
+        if isinstance(node, (ast.Not, ast.Should)):
+            return self._postings_only(node.child)
+        if isinstance(node, (ast.And, ast.Or)):
+            return all(self._postings_only(c) for c in node.children)
+        return False
+
+    def _gather(self, node, plain: set, given: dict, preds: list, slot=False):
+        """Walk a postings-only tree: its plain terms, the driver-side
+        expansion of each multiterm leaf and, for a capped one, the
+        pattern predicate whose unscored terms the leaf still matches
+        (a phrase slot uses only the expansion). True when it reads
+        positions."""
+        if isinstance(node, str):
+            plain.add(node)
+        elif isinstance(node, ast.Term):
+            plain.add(node.term)
+        elif isinstance(node, ast.Terms):
+            plain.update(node.terms)
+        elif isinstance(node, sem_.EXPANSION_LEAVES):
+            given[node] = self._leaf_expansion(node)
+            if not slot and not given[node][1]:
+                preds.append(self._leaf_predicate(node))
+        elif isinstance(node, (ast.Phrase, ast.SamePosition)):
+            for p in node.terms:
+                self._gather(p, plain, given, preds, slot=True)
+            return True
+        elif isinstance(node, (ast.Not, ast.Should)):
+            return self._gather(node.child, plain, given, preds)
+        elif isinstance(node, (ast.And, ast.Or)):
+            return any(
+                [self._gather(c, plain, given, preds) for c in node.children]
+            )
+        return False
+
+    def _shard_scan(
+        self, queries: dict, k: int | None, mode: str = "exhaustive"
+    ) -> tuple[DataFrame, int]:
+        """(query, doc_id, score) rows of every shard's answer to each
+        normalized postings-only query — its top k, or every match when
+        k is None — and the shard count: one mapInArrow over the
+        queries' posting blocks (see the module docstring)."""
+        plain: set = set()
+        given: dict = {}
+        preds: list = []
+        positional = any(
+            [self._gather(q, plain, given, preds) for q in queries.values()]
+        )
+        dfs = self._term_dfs(sorted(plain))
+        for expanded, _complete in given.values():
+            dfs.update(expanded)
+        if preds:
+            # a capped expansion matches beyond its scored head: scan
+            # by its pattern, as the DataFrame plan does
+            pred = F.col("term").isin(sorted(dfs)) if dfs else F.lit(False)
+            for p in preds:
+                pred = pred | p
+            blocks = self.index.postings.filter(pred)
+        else:
+            blocks = self.index.postings_for_terms(sorted(dfs))
+        cols = list(_hot.BLOCK_COLS) + (["positions"] if positional else [])
+        n = max(1, -(-sum(dfs.values()) // POSTINGS_PER_SHARD))
+        blocks, base, width = self._shard_blocks(blocks.select(*cols), n)
+        stats = None
+        if self.collect_wand_stats and mode == "wand" and k is not None:
+            stats = self._spark.sparkContext.accumulator(
+                (0, 0, 0.0), _hot.WandStats()
+            )
+            self._wand_acc = stats
+        plan = _hot.ShardPlan(
+            self.sem.portable(),
+            dict(queries),
+            k,
+            mode,
+            dfs,
+            given,
+            self._deleted_ids(),
+            n,
+            base,
+            width,
+            stats,
+        )
+        return blocks.mapInArrow(_hot.shard_kernel(plan), SHARD_SCHEMA), n
+
+    def _shard_blocks(
+        self, blocks: DataFrame, n: int
+    ) -> tuple[DataFrame, int, int]:
+        """(blocks, base, width): one shard is a coalesce(1) scan; n
+        shards split the index's doc-id span [base, base + n * width)
+        into equal ranges and hand each its own partition, a `_shard`
+        column naming it — a block straddling a boundary goes to every
+        shard it overlaps."""
+        if n == 1:
+            return blocks.coalesce(1), 0, 0
+        base, last = self._doc_span()
+        width = max(1, -(-(last - base + 1) // n))
+
+        def shard_of(c: str):
+            s = F.expr(f"({c} - {base}) div {width}")
+            return F.least(F.greatest(s, F.lit(0)), F.lit(n - 1)).cast("int")
+
+        blocks = blocks.select(
+            "*",
+            F.explode(
+                F.sequence(shard_of("first_doc"), shard_of("last_doc"))
+            ).alias("_shard"),
+        ).repartitionById(n, "_shard")
+        return blocks, base, width
+
+    def _doc_span(self) -> tuple[int, int]:
+        """The index's (min, max) doc id — doc ids may be sparse or
+        offset (build_index takes them from id_col) — read once per
+        engine (the index view is immutable)."""
+        if self._span is None:
+            row = self.index.docs.agg(
+                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+            ).first()
+            self._span = (int(row["lo"] or 0), int(row["hi"] or 0))
+        return self._span
+
+    def _deleted_ids(self) -> np.ndarray | None:
+        """The delete mask's sorted doc ids, collected once per engine
+        (the index view is immutable)."""
+        if self.index.deleted is not None and self._deleted is None:
+            self._deleted = _hot.deleted_ids(self.index)
+        return self._deleted
+
+    # ------------------------------------------------- the DataFrame plan
 
     def _plain_terms(self, node: ast.Node, acc: list[str]) -> None:
         if isinstance(node, ast.Term):
@@ -1415,29 +1360,17 @@ class SearchEngine:
         elif isinstance(node, (ast.Not, ast.Nested, ast.Should)):
             self._plain_terms(node.child, acc)
 
-    def _execute(self, query: ast.Node, k: int | None, mode: str) -> DataFrame:
-        query = planner.normalize(query)
+    def _execute(self, norm: ast.Node) -> DataFrame:
+        """All live matches (doc_id, score) of a normalized tree that
+        the shard plan does not serve."""
         # prefetch stats for every plain term in ONE driver round-trip
         # (the reference's prepare pass seeks all terms up front,
         # term_filter.cpp:92-128); per-leaf lookups then hit _df_cache
         acc: list[str] = []
-        self._plain_terms(query, acc)
+        self._plain_terms(norm, acc)
         if acc:
             self._term_dfs(list(dict.fromkeys(acc)))
-        if mode == "wand" and k is not None:
-            terms = self.sem.wand_terms(query, self._leaf_expansion)
-            if terms is not None:
-                return self._apply_delete_mask(self._execute_wand(query, terms, k))
-        if (
-            k is not None
-            and isinstance(query, ast.Term)
-            and self.index.deleted is None
-        ):
-            # root single-term: per-partition top-k inside the fused
-            # decode+score pass — k rows per partition reach the JVM
-            leaf = self._prepare_leaf(query, 1.0)
-            return self._eval_leaf_df(leaf, local_topk=k)
-        return self._apply_delete_mask(self._eval(query, 1.0))
+        return self._apply_delete_mask(self._eval(norm, 1.0))
 
     def _apply_delete_mask(self, df: DataFrame) -> DataFrame:
         """Exclude deleted docs at read time (the reference applies the
@@ -1445,333 +1378,6 @@ class SearchEngine:
         if self.index.deleted is None:
             return df
         return df.join(self.index.deleted.select("doc_id"), "doc_id", "left_anti")
-
-    def _seed_theta(self, query, weights, seed: DataFrame, k: int) -> float:
-        """theta = k-th best ACHIEVED (live) score over the seed blocks
-        (term, block_id), 0.0 when they cannot fill k — a scalar, so
-        collecting it is O(1) at any corpus size. The seed evaluation
-        must see the delete mask: a deleted doc's achieved score would
-        inflate theta above the true live k-th score and prune blocks
-        holding live top-k docs (the reference applies the deleted-docs
-        bitset inside every doc_iterator, so its WAND threshold only
-        ever rises on live docs)."""
-        seed_postings = self.index.postings_for_terms(list(weights)).join(
-            F.broadcast(seed), ["term", "block_id"], "left_semi"
-        )
-        return float(
-            self._apply_delete_mask(
-                self._eval(query, 1.0, postings=seed_postings)
-            )
-            .orderBy(F.desc("score"))
-            .limit(k)
-            .agg(
-                F.when(F.count("*") < k, F.lit(0.0))
-                .otherwise(F.min("score"))
-                .alias("_theta")
-            )
-            .collect()[0]["_theta"]
-        )
-
-    def _wand_driver_path(self, query, weights, ub, k: int):
-        """Driver-side WAND over collected per-block meta (see
-        _execute_wand; chosen when the estimated block count fits
-        self.wand_driver_meta_cap): the shared semantics.BoundWalk picks
-        the seed and survivor blocks. Three Spark jobs total: meta
-        collect, theta seed scan, pruned final scan."""
-        rows = ub.select(
-            "term", "block_id", "_ub", "first_doc", "last_doc"
-        ).collect()
-        if not rows:
-            return self._empty()
-        cols: dict[str, tuple[list, ...]] = {}
-        for r in rows:
-            c = cols.setdefault(r["term"], ([], [], [], []))
-            c[0].append(int(r["block_id"]))
-            c[1].append(float(r["_ub"]))
-            c[2].append(int(r["first_doc"]) >> sem_.ALIGN_BITS)
-            c[3].append(int(r["last_doc"]) >> sem_.ALIGN_BITS)
-        walk = sem_.BoundWalk(
-            {t: tuple(np.asarray(a) for a in c[1:]) for t, c in cols.items()}
-        )
-
-        def block_ids(sel: dict) -> list[tuple[str, int]]:
-            return [(t, cols[t][0][i]) for t, idx in sel.items() for i in idx]
-
-        spark = self._spark
-        seed_df = spark.createDataFrame(
-            block_ids(walk.seed(k)), "term string, block_id long"
-        )
-        theta = self._seed_theta(query, weights, seed_df, k)
-        if theta <= 0.0:
-            return self._eval(query, 1.0)
-        keep = block_ids(walk.keep(self.sem.theta_eff(theta)))
-        if self.collect_wand_stats:
-            self.last_wand_stats = {
-                "blocks_total": walk.n_blocks,
-                "blocks_kept": len(keep),
-                "theta": theta,
-            }
-        if not keep:
-            return self._empty()
-        if len(keep) * 2 >= walk.n_blocks:
-            # pruning didn't engage: the exhaustive single-job plan is
-            # strictly better than scanning through a keep join
-            return self._eval(query, 1.0)
-        keep_df = spark.createDataFrame(keep, "term string, block_id long")
-        survivors = self.index.postings_for_terms(list(weights)).join(
-            F.broadcast(keep_df), ["term", "block_id"], "left_semi"
-        )
-        return self._eval(query, 1.0, postings=survivors)
-
-    def _execute_wand(
-        self, query: ast.Node, terms: dict[str, float], k: int
-    ) -> DataFrame:
-        """Block-max WAND: a few SMALL driver-synchronized steps, then
-        one pruned scan.
-
-        Shape (round-4): (1) one meta-only job materializes the
-        per-block bound table (localCheckpoint — stays distributed;
-        bound rows are per (term, block) and far too many to collect
-        at 10^12 docs); (2) theta and the per-term rest mass collect
-        driver-side — a SCALAR and n_query_terms rows, O(1) at any
-        corpus size; (3) the survivor filter is a row-local predicate
-        over each block's own (block_max_freq, block_min_dl) columns,
-        so the pruned scan needs NO join against the posting blobs.
-        Round 3's all-in-one-plan shape re-evaluated the bound subplan
-        per reference and semi-joined the keep list against the blob
-        rows (a full blob shuffle) — measured 3-10x slower than
-        exhaustive at 100k docs; this shape prices WAND at the pruned
-        scan plus two small jobs.
-
-        Soundness: a doc appears in exactly one block per term (blocks
-        partition doc-id ranges), so pass-1 scores over complete seed
-        blocks are achieved (lower-bound) scores; theta = k-th best
-        achieved score; a block is pruned only if its own upper bound
-        plus every other term's global max upper bound cannot reach
-        theta. Differential-tested vs exhaustive (wand_test.cpp:234-240
-        recipe)."""
-        uniq = list(terms)  # term -> boost multiplier (leaf boosts folded)
-        dfs = self._term_dfs(uniq)
-        if (
-            self.wand_min_postings
-            and sum(dfs.values()) <= self.wand_min_postings
-        ):
-            # adaptive: the candidate set is small enough that a full
-            # scan beats pruning overhead (AQE-style runtime choice)
-            return self._eval(query, 1.0)
-        weights = self.sem.wand_weights(query, terms, dfs)
-        meta = self.index.postings_for_terms(list(weights)).select(
-            "term", "block_id", "n_docs", "first_doc", "last_doc",
-            "block_max_freq", "block_min_dl", "block_impacts",
-        )
-        w = F.broadcast(self._weights_df(weights))
-        ub = meta.join(w, "term").withColumn(
-            "_ub", F.col("w") * self._block_g_ub()
-        )
-        # adaptive meta placement (round 5): the whole WAND bound walk
-        # needs only the per-block META rows (term, block_id, bound,
-        # doc range) — ceil(df/128)-ish rows per term. When that is
-        # small enough to collect (the common case far beyond sandbox
-        # scale: 100k blocks covers df ~ 1.3e7 per term), do the seed
-        # ranking, rest-mass and keep computation IN THE DRIVER — the
-        # reference walks exactly this metadata in memory
-        # (formats_10.cpp wanderator skip data). Spark jobs drop from
-        # ~8 to 3 (collect meta, theta, pruned scan), which is the
-        # difference between WAND losing and winning against a 1-job
-        # exhaustive scan. Above the cap, the distributed plan below
-        # runs instead — same math, meta never leaves the executors.
-        n_blocks_est = sum((d + 127) // 128 for d in dfs.values())
-        if n_blocks_est <= self.wand_driver_meta_cap:
-            out = self._wand_driver_path(query, weights, ub, k)
-            if out is not None:
-                return out
-        # materialize the per-block bound table ONCE (meta columns only
-        # — no posting blobs): the plan below references it from the
-        # seed selection, the per-term max aggregate AND the keep
-        # filter, and without truncation each reference re-runs the
-        # meta scan+join (measured 3-10x slower than exhaustive at
-        # 100k docs). localCheckpoint keeps it distributed — bound
-        # rows are per (term, block), which at 10^12 docs is far too
-        # big to collect but trivial to hold across executors.
-        ub = ub.localCheckpoint(eager=True)
-        # seed (round 5): theta must reflect multi-term STACKED scores,
-        # or it never beats any rest mass on a query whose terms
-        # co-occur. Rank coarse doc-id ranges by the SUM over terms of
-        # their best in-range block bound (the same alignment table the
-        # keep filter uses below) and seed every query-term block
-        # overlapping the best few ranges — the aligned analogue of
-        # WAND's document-at-a-time pivot; per-term global best blocks
-        # are added as a safety for disjoint-term queries.
-        G, SPAN_CAP = sem_.ALIGN_BITS, sem_.SPAN_CAP
-        rng = ub.select(
-            "term", "block_id", "_ub",
-            F.shiftright("first_doc", G).alias("_s0"),
-            F.shiftright("last_doc", G).alias("_s1"),
-        )
-        narrow = rng.filter(F.col("_s1") - F.col("_s0") < SPAN_CAP)
-        wide = rng.filter(F.col("_s1") - F.col("_s0") >= SPAN_CAP)
-        mx_rs = (
-            narrow.withColumn("_s", F.explode(F.sequence("_s0", "_s1")))
-            .groupBy("term", "_s")
-            .agg(F.max("_ub").alias("_mx"))
-        ).localCheckpoint(eager=True)
-        n_seed_ranges = max(1, (k + 63) // 64)
-        top_ranges = [
-            r["_s"]
-            for r in (
-                mx_rs.groupBy("_s")
-                .agg(F.sum("_mx").alias("_sum"))
-                .orderBy(F.desc("_sum"))
-                .limit(n_seed_ranges)
-                .collect()
-            )
-        ]
-        in_top = None
-        for s in top_ranges:
-            c = (F.col("_s0") <= F.lit(s)) & (F.col("_s1") >= F.lit(s))
-            in_top = c if in_top is None else (in_top | c)
-        seed_parts = [
-            ub.orderBy(F.desc("_ub"))
-            .limit(max(2, (4 * k) // 128 + 1))
-            .select("term", "block_id")
-        ]
-        if in_top is not None:
-            seed_parts.append(narrow.filter(in_top).select("term", "block_id"))
-        seed = seed_parts[0]
-        for p in seed_parts[1:]:
-            seed = seed.unionByName(p)
-        seed = seed.distinct()
-        theta = self._seed_theta(query, weights, seed, k)
-        if theta <= 0.0:
-            # seed couldn't fill k: no bound can prune anything
-            return self._eval(query, 1.0)
-        # per-term rest mass (sum of the OTHER terms' global max block
-        # bounds) — n_query_terms rows, collected driver-side and folded
-        # into the scan predicate as a literal map. The survivor filter
-        # is then ROW-LOCAL on the block's own (max_freq, min_dl)
-        # columns: no join against the posting blobs (the previous
-        # keep-list semi-join shuffled every blob through a sort-merge
-        # join — measured 3-10x slower than exhaustive at 100k docs).
-        # ONE collect: per-term global max bound + max bound over the
-        # term's WIDE blocks (blocks whose 128 postings stretch over
-        # many alignment ranges — see below)
-        _wide_pred = (
-            F.shiftright("last_doc", G) - F.shiftright("first_doc", G)
-            >= SPAN_CAP
-        )
-        agg_rows = (
-            ub.groupBy("term")
-            .agg(
-                F.max("_ub").alias("_mx"),
-                F.max(F.when(_wide_pred, F.col("_ub"))).alias("_wmx"),
-            )
-            .collect()
-        )
-        mx = {r["term"]: r["_mx"] for r in agg_rows}
-        wide_mx = {
-            r["term"]: float(r["_wmx"])
-            for r in agg_rows
-            if r["_wmx"] is not None
-        }
-        total_ub = sum(mx.values())
-        theta_eff = self.sem.theta_eff(theta)
-        rest_map = F.map_from_arrays(
-            F.array(*[F.lit(t) for t in mx]),
-            F.array(*[F.lit(float(total_ub - v)) for v in mx.values()]),
-        )
-        c0_map = F.map_from_arrays(
-            F.array(*[F.lit(t) for t in weights]),
-            F.array(*[F.lit(float(w)) for w in weights.values()]),
-        )
-        # ---- per-range rest mass (round 5): the global rest (sum of
-        # the OTHER terms' corpus-wide max bounds) almost never prunes
-        # a multi-term disjunction — theta rarely beats it. The real
-        # block-max-WAND lever is ALIGNMENT: what the other terms can
-        # score near THIS block's doc ids. Blocks carry
-        # (first_doc, last_doc); coarse 2^G-doc ranges give each term
-        # a per-range max bound, rest(t, s) = sum over other terms of
-        # their range-s bound (absent term -> 0). A block whose
-        # 128 postings stretch over many ranges (rare terms) falls
-        # back to its global rest. All of this runs on the META table
-        # (no posting blobs); the keep list then prunes the blob scan
-        # through a BROADCAST semi-join — small by construction when
-        # pruning engages, and an adaptive row-count guard falls back
-        # to the row-local global-rest filter when it does not (also
-        # the 10^12-doc safety: a keep list near the full block count
-        # must not be broadcast).
-        wide_of = {t: wide_mx.get(t, 0.0) for t in weights}
-        base = sum(wide_of.values())
-        wide_map = F.map_from_arrays(
-            F.array(*[F.lit(t) for t in wide_of]),
-            F.array(*[F.lit(v) for v in wide_of.values()]),
-        )
-        # per (term, range) max bound: mx_rs (checkpointed above, also
-        # the seed-range ranking input)
-        # sum over terms of each range's effective bound
-        # eff(t, s) = max(narrow mx, wide global) ; absent narrow rows
-        # contribute wide_of[t], so sum_s = base + sum(excess)
-        excess = F.greatest(
-            F.col("_mx") - F.element_at(wide_map, F.col("term")), F.lit(0.0)
-        )
-        sums = mx_rs.groupBy("_s").agg(F.sum(excess).alias("_exc"))
-        rest_rs = mx_rs.join(sums, "_s").select(
-            "term",
-            "_s",
-            (
-                F.lit(base)
-                + F.col("_exc")
-                - F.greatest(
-                    F.col("_mx"), F.element_at(wide_map, F.col("term"))
-                )
-            ).alias("_rest"),
-        )
-        # keep decision per narrow block: survives if ANY overlapped
-        # range lets it reach theta (rest of a range with no rest row =
-        # base - wide_of[term], from the other terms' wide blocks only)
-        nb = narrow.withColumn("_s", F.explode(F.sequence("_s0", "_s1")))
-        nb = nb.join(rest_rs, ["term", "_s"], "left").withColumn(
-            "_rest",
-            F.coalesce(
-                F.col("_rest"),
-                F.lit(base) - F.element_at(wide_map, F.col("term")),
-            ),
-        )
-        keep_narrow = (
-            nb.filter(F.col("_ub") + F.col("_rest") >= F.lit(theta_eff))
-            .select("term", "block_id")
-            .distinct()
-        )
-        # wide blocks: global rest (the pre-round-5 bound)
-        keep_wide = wide.filter(
-            F.col("_ub") + F.element_at(rest_map, F.col("term"))
-            >= F.lit(theta_eff)
-        ).select("term", "block_id")
-        keep = keep_narrow.unionByName(keep_wide).localCheckpoint(eager=True)
-        n_keep = keep.count()
-        # ub is checkpointed — counting it is a trivial job (cannot be
-        # estimated from dfs: segment boundaries add partial blocks)
-        n_blocks = ub.count()
-        if self.collect_wand_stats:
-            self.last_wand_stats = {
-                "blocks_total": int(n_blocks),
-                "blocks_kept": int(n_keep),
-                "theta": theta,
-            }
-        if n_keep * 2 < n_blocks and n_keep <= 200_000:
-            # pruning engaged: broadcast the keep ids against the blob
-            # scan (hash semi-join, no blob shuffle)
-            survivors = self.index.postings_for_terms(list(weights)).join(
-                F.broadcast(keep), ["term", "block_id"], "left_semi"
-            )
-        else:
-            # pruning does not pay (or keep list too big to broadcast):
-            # row-local global-rest filter, zero join against blobs
-            bound = F.element_at(c0_map, F.col("term")) * self._block_g_ub(
-            ) + F.element_at(rest_map, F.col("term"))
-            survivors = self.index.postings_for_terms(list(weights)).filter(
-                bound >= F.lit(theta_eff)
-            )
-        return self._eval(query, 1.0, postings=survivors)
 
 
 def _order_cols(order) -> list:
@@ -1790,15 +1396,14 @@ class ColumnOps:
     sqrt = staticmethod(F.sqrt)
 
 
-def _fold_scores(f32: bool):
-    """The Spark form of semantics.fold_sum: a doc group's scores
-    folded left in `_leaf` order (array_sort on the (_leaf, score)
-    structs pins the order under the shuffle), accumulating in float32
-    in parity mode."""
+def _fold_scores(f32: bool, key: str = "_leaf"):
+    """The Spark form of semantics.fold_sum: a group's scores folded
+    left in `key` order (array_sort on the (key, score) structs pins the
+    order under the shuffle), accumulating in float32 in parity mode."""
     t = "float" if f32 else "double"
     return (
         F.aggregate(
-            F.array_sort(F.collect_list(F.struct("_leaf", "score"))),
+            F.array_sort(F.collect_list(F.struct(key, "score"))),
             F.lit(0.0).cast(t),
             lambda acc, x: (acc + x["score"].cast(t)).cast(t),
         )
@@ -1807,21 +1412,16 @@ def _fold_scores(f32: bool):
     )
 
 
-def _make_fused_scorer(
-    weights: dict, params: tuple, topk: int | None, leaf_of: dict | None = None
-):
-    """decode + score (+ optional per-partition top-k) in one pass.
-    With `leaf_of` (term -> boolean-child index) the output gains a
-    _leaf column so one scan serves every plain-Term child of a
-    boolean node."""
+def _make_fused_scorer(weights: dict, params: tuple, leaf_of: dict | None = None):
+    """decode + score in one pass. With `leaf_of` (term -> boolean-child
+    index) the output gains a _leaf column so one scan serves every
+    plain-Term child of a boolean node."""
 
     kernel = sem_.make_score_kernel(params)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from iresearch_spark.index.model import decode_batch_arrays
+        from iresearch_spark.index.codec import decode_batch_arrays
 
-        acc_doc: list[np.ndarray] = []
-        acc_score: list[np.ndarray] = []
         for batch in batches:
             d = decode_batch_arrays(batch, False)
             if d is None:
@@ -1833,38 +1433,16 @@ def _make_fused_scorer(
                 count=len(dict_terms),
             )
             score = kernel(c0[d["row_codes"]], d["freqs"], d["dls"])
+            arrays = [pa.array(d["doc_ids"]), pa.array(score)]
+            names = ["doc_id", "score"]
             if leaf_of is not None:
                 leaf_codes = np.fromiter(
                     (leaf_of.get(t, -1) for t in dict_terms),
                     dtype=np.int32,
                     count=len(dict_terms),
                 )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(d["doc_ids"]),
-                        pa.array(score),
-                        pa.array(leaf_codes[d["row_codes"]]),
-                    ],
-                    names=["doc_id", "score", "_leaf"],
-                )
-            elif topk is None:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(d["doc_ids"]), pa.array(score)],
-                    names=["doc_id", "score"],
-                )
-            else:
-                acc_doc.append(d["doc_ids"])
-                acc_score.append(score)
-        if topk is not None and acc_doc:
-            docs = np.concatenate(acc_doc)
-            scores = np.concatenate(acc_score)
-            if docs.size > topk:
-                # ties broken by doc_id asc to keep the global
-                # (score desc, doc_id asc) order exact under pruning
-                order = sem_.topk_order(docs, scores, topk)
-                docs, scores = docs[order], scores[order]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(docs), pa.array(scores)], names=["doc_id", "score"]
-            )
+                arrays.append(pa.array(leaf_codes[d["row_codes"]]))
+                names.append("_leaf")
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return run

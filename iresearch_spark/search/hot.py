@@ -17,9 +17,13 @@ cluster path exactly (differential-tested).
 mode="wand" here is a REAL block-max WAND: per-block upper bounds from
 the stored (tf, dl) impact pairs, theta seeded from the doc-range with
 the highest stacked bound, surviving blocks decoded only — with no job
-floor the pruning shows up directly as wall-clock (the cluster path's
-two extra driver-synchronized jobs cost more than the decode they
-save below ~10M postings/query; this path has no such overhead).
+floor the pruning shows up directly as wall-clock.
+
+The pinned data and every cache over it live in one HotState per
+commit; HotEngine holds a single reference to it, which a query reads
+once and refresh() swaps. The cluster runs the SAME evaluator: each
+doc-range shard of its one-job query plan builds a HotState from its
+posting blocks (`ShardPlan`, `shard_kernel`).
 
 Multi-term leaves (Prefix / Wildcard / Range / Fuzzy) are served too:
 the hot segment holds the FULL term dictionary in memory, so expansion
@@ -60,6 +64,8 @@ answers in-memory).
 
 from __future__ import annotations
 
+import dataclasses
+import threading
 from collections import defaultdict
 
 import numpy as np
@@ -67,6 +73,27 @@ import numpy as np
 from iresearch_spark.index import codec
 from iresearch_spark.search import ast, planner
 from iresearch_spark.search import semantics as sem_
+
+# posting-block columns every replica and cluster shard reads; positions
+# and the occurrence (OFFS/PAY) blobs ride along when present
+BLOCK_COLS = (
+    "term", "n_docs", "first_doc", "last_doc", "docs", "dls",
+    "block_impacts", "block_max_freq", "block_min_dl",
+)
+_AUX_COLS = ("off_starts", "off_lens", "pay_lens", "pay_bytes")
+
+
+def deleted_ids(index) -> np.ndarray | None:
+    """Sorted int64 doc ids of the index's delete mask (None without
+    one) — one collect of the mask table."""
+    if index.deleted is None:
+        return None
+    return np.sort(
+        np.asarray(
+            [r["doc_id"] for r in index.deleted.select("doc_id").collect()],
+            dtype=np.int64,
+        )
+    )
 
 
 def _dir_fingerprint(path: str):
@@ -116,37 +143,93 @@ def _multifield_fingerprint(path: str):
     )
 
 
-class HotEngine:
-    """In-driver replica of an index's postings for low-latency
-    serving. Construct from a SearchEngine (one collect), or Spark-free
-    with `from_dir`; query with `search(node, k, mode)` -> list of
-    (doc_id, score), score desc, doc_id asc — the cluster path's exact
-    output order. `engine` is what the replica was pinned from: the
-    SearchEngine, or for `from_dir` an embedded.LocalSource (a
-    LocalIndex plus its Semantics, with no cluster behind it)."""
+def _sorted_pairs(d: np.ndarray, p: np.ndarray):
+    """The distinct (d, p) pairs, sorted by (d, p)."""
+    o = np.lexsort((p, d))
+    d, p = d[o], p[o]
+    keep = np.ones(d.size, bool)
+    keep[1:] = (d[1:] != d[:-1]) | (p[1:] != p[:-1])
+    return d[keep], p[keep]
 
-    def __init__(self, engine, max_bytes: int = 1 << 30):
+
+def _common_pairs(a, b):
+    """The pairs in both of two _sorted_pairs results, sorted."""
+    d = np.concatenate((a[0], b[0]))
+    p = np.concatenate((a[1], b[1]))
+    o = np.lexsort((p, d))
+    d, p = d[o], p[o]
+    dup = np.flatnonzero((d[1:] == d[:-1]) & (p[1:] == p[:-1]))
+    return d[dup], p[dup]
+
+
+class HotState:
+    """One pinned commit of an index's posting blocks plus every cache
+    built over it (decoded blocks, WAND bounds, expansions, pinned doc
+    columns). A query reads its replica's state ONCE and runs on that
+    object alone, so a concurrent refresh() — which swaps the replica's
+    one state reference — can never mix two commits in one answer.
+
+    The same object is the cluster's per-shard kernel (see
+    `shard_kernel`): built from one doc-range shard's Arrow block table
+    plus the driver's GLOBAL df, multiterm expansions and delete mask,
+    with every decode clipped to the shard's doc-id range, so shard-local
+    values never reach a score or a WAND bound."""
+
+    def __init__(
+        self,
+        sem,
+        tbl,
+        *,
+        engine=None,
+        deleted=None,
+        dfs=None,
+        expansions=None,
+        doc_range=None,
+        blob_bytes: int = 0,
+        max_bytes: int = 0,
+    ):
         self.engine = engine
-        self.index = index = engine.index
-        self.sem = engine.sem
-        self._kernel = self.sem.kernel
+        self.index = getattr(engine, "index", None)
+        self.sem = sem
+        self._kernel = sem.kernel
         self._max_bytes = max_bytes
-        cols = [
-            "term", "n_docs", "first_doc", "last_doc",
-            "docs", "dls", "block_impacts", "block_max_freq",
-            "block_min_dl",
-        ]
-        self._with_positions = bool(index.with_positions)
-        if self._with_positions:
+        self._blob_bytes = int(blob_bytes)
+        names = tbl.column_names
+        self._with_positions = "positions" in names
+        self._with_offsets = "off_starts" in names
+        self._with_payloads = "pay_lens" in names
+        self._deleted = deleted
+        # driver-supplied {node: (expansion, complete)} and doc range of
+        # a cluster shard (None on a pinned replica)
+        self._given = dict(expansions or {})
+        self._range = doc_range
+        self._ingest(tbl, [c for c in _AUX_COLS if c in names])
+        if dfs is not None:
+            self._df = dict(dfs)
+        self._decoded: dict[str, list] = {}
+        self._decoded_pos: dict[str, tuple] = {}
+        self._bounds: dict[str, tuple] = {}
+        self._vocab: sem_.Vocabulary | None = None
+        self._expansion: dict = {}
+        self._cols: dict[str, tuple] = {}
+        self._spine: np.ndarray | None = None
+        self._proxy: dict = {}
+        self._field_hots: dict[str, "HotState"] | None = None
+        self.last_wand_stats: dict | None = None
+
+    @classmethod
+    def pin(cls, engine, max_bytes: int) -> "HotState":
+        """Pin `engine`'s index: one Arrow read of its posting blocks
+        (a Spark collect, or pyarrow for an embedded LocalSource) under
+        the `max_bytes` blob budget, plus its delete mask."""
+        index = engine.index
+        cols = list(BLOCK_COLS)
+        if index.with_positions:
             cols.append("positions")
-        self._with_offsets = bool(getattr(index, "with_offsets", False))
-        self._with_payloads = bool(getattr(index, "with_payloads", False))
-        aux_cols = []
-        if self._with_offsets:
-            aux_cols += ["off_starts", "off_lens"]
-        if self._with_payloads:
-            aux_cols += ["pay_lens", "pay_bytes"]
-        cols += aux_cols
+        if getattr(index, "with_offsets", False):
+            cols += ["off_starts", "off_lens"]
+        if getattr(index, "with_payloads", False):
+            cols += ["pay_lens", "pay_bytes"]
 
         def _over_budget(size):
             raise ValueError(
@@ -181,94 +264,16 @@ class HotEngine:
             # Arrow collect: Row-object conversion of a ~10^5-block
             # index took ~90 s; the Arrow table lands in ~2 s
             tbl = slim.toArrow()
-        self._blob_bytes = int(size or 0)
-        self._ingest(tbl, cols, aux_cols, index)
-
-    @classmethod
-    def from_dir(
-        cls,
-        path: str,
-        scorer: str | object = "bm25",
-        score_dtype: str = "float64",
-        scored_terms_limit: int = 1024,
-        max_bytes: int = 1 << 30,
-        encryption=None,
-    ) -> "HotEngine":
-        """Spark-free replica of a SAVED index: read the parquet layout
-        with pyarrow (no SparkSession, no JVM) and serve it in-process
-        — the reference's embedded `directory_reader` deployment shape
-        (core/index/directory_reader.hpp). Results are identical to a
-        Spark-built HotEngine (differential-tested); shapes the hot
-        path cannot serve raise instead of falling back (there is no
-        cluster here). A SEALED index decrypts in-process when
-        `encryption=` carries the master keys (EmbeddedDecryption —
-        pyarrow modular decryption, still no JVM)."""
-        from iresearch_spark.search.embedded import (
-            LocalSource,
-            load_local_index,
-        )
-
-        # fingerprint BEFORE the (multi-second) pin: a commit landing
-        # mid-load must make the next refresh() rebuild, not be stamped
-        # as already-seen
-        fp = _dir_fingerprint(path)
-        eng = cls(
-            LocalSource.open(
-                load_local_index(path, encryption=encryption),
-                scorer=scorer,
-                score_dtype=score_dtype,
-                scored_terms_limit=scored_terms_limit,
-            ),
+        return cls(
+            engine.sem,
+            tbl,
+            engine=engine,
+            deleted=deleted_ids(index),
+            blob_bytes=size or 0,
             max_bytes=max_bytes,
         )
-        eng._source = {
-            "path": path,
-            "kwargs": dict(
-                scorer=scorer,
-                score_dtype=score_dtype,
-                scored_terms_limit=scored_terms_limit,
-                max_bytes=max_bytes,
-                encryption=encryption,
-            ),
-            "fingerprint": fp,
-        }
-        return eng
 
-    def refresh(self) -> bool:
-        """Reopen semantics for a `from_dir` replica (the reference's
-        `directory_reader` reopen, core/index/directory_reader.hpp):
-        re-check the source directory's commit state — the incremental
-        manifest version for IncrementalIndexer dirs, the manifest
-        file's (mtime, size) for batch saves and snapshot pointers —
-        and rebuild the replica when it changed. Returns True when the
-        replica was rebuilt, False when it was already current.
-
-        Reopen granularity is the whole replica (a fresh pin, measured
-        in seconds at ~1M posting blocks), not the reference's
-        per-new-segment increment — the lazy columnar ingest makes a
-        full re-pin cheap enough that segment-granular patching of the
-        sorted in-memory arrays isn't worth its complexity. The swap
-        is ONE rebinding of the instance attribute dict (atomic under
-        the GIL): queries already running on another thread finish
-        against the old arrays; queries issued after refresh()
-        returns see the new commit."""
-        src = getattr(self, "_source", None)
-        if src is None:
-            raise ValueError(
-                "refresh() requires a replica built with from_dir (a "
-                "Spark-built HotEngine re-pins by reconstructing from "
-                "its SearchEngine)"
-            )
-        fp = _dir_fingerprint(src["path"])
-        if fp == src["fingerprint"]:
-            return False
-        fresh = type(self).from_dir(src["path"], **src["kwargs"])
-        # single assignment = atomic swap; never clear-then-update,
-        # which would expose an empty dict to concurrent readers
-        self.__dict__ = dict(fresh.__dict__)
-        return True
-
-    def _ingest(self, tbl, cols, aux_cols, index):
+    def _ingest(self, tbl, aux_cols):
         import pyarrow.compute as pc
 
         # ONE C-side sort by (term, first_doc): every term's block list
@@ -304,8 +309,9 @@ class HotEngine:
         ).astype(np.int64)
         # blob columns STAY as arrow arrays: materializing 3M python
         # bytes objects up front was most of replica pin time (and
-        # ~100s of MB of object overhead at 1M blocks); _bl() converts
-        # per TERM on first touch, so only queried terms ever pay
+        # ~100s of MB of object overhead at 1M blocks); the decode
+        # reads a term's row span on first touch, so only queried
+        # terms ever pay
         self._bin_docs = tbl.column("docs").combine_chunks()
         self._bin_dls = tbl.column("dls").combine_chunks()
         self._bin_pos = (
@@ -340,11 +346,8 @@ class HotEngine:
                     else ~np.asarray(impcol.is_null())
                 ),
             )
-        # contiguous per-term row spans of the sorted columns; _bl()
-        # materializes a term's block-tuple list from its span on first
-        # touch (the per-term analogue of the lazy block decode cache)
+        # contiguous per-term row spans of the sorted columns
         self._spans: dict[str, tuple] = {}
-        self._blocks: dict[str, list] = {}
         self._aux: dict[str, list] = {}
         self._df: dict[str, int] = defaultdict(int)
         n = len(terms_c)
@@ -360,57 +363,11 @@ class HotEngine:
                 t = terms_c[s]
                 self._spans[t] = (s, e)
                 self._df[t] = int(dfv)
-        self._decoded: dict[str, list] = {}
-        self._run_init_tail(index)
-
-    def _bl(self, term: str) -> list:
-        """The term's block-tuple list
-        (first, last, n, docs_blob, dls_blob, (tf[], dl[])|None,
-        max_freq, min_dl, pos_blob|None), first_doc-ordered —
-        materialized from the column arrays' row span on first touch
-        and cached (only queried terms ever build python tuples)."""
-        hit = self._blocks.get(term)
-        if hit is not None:
-            return hit
-        span = self._spans.get(term)
-        if span is None:
-            return []
-        s, e = span
-        if self._imp_a is None:
-            imp = [None] * (e - s)
-        else:
-            tfv, dlv, offs, ok = self._imp_a
-            imp = [
-                (tfv[offs[i]:offs[i + 1]], dlv[offs[i]:offs[i + 1]])
-                if ok[i]
-                else None
-                for i in range(s, e)
-            ]
-        pos = (
-            self._bin_pos[s:e].to_pylist()
-            if self._bin_pos is not None
-            else [None] * (e - s)
-        )
-        out = list(
-            zip(
-                self._fd_a[s:e].tolist(),
-                self._ld_a[s:e].tolist(),
-                self._nd_a[s:e].tolist(),
-                self._bin_docs[s:e].to_pylist(),
-                self._bin_dls[s:e].to_pylist(),
-                imp,
-                self._mf_a[s:e].tolist(),
-                self._md_a[s:e].tolist(),
-                pos,
-            )
-        )
-        self._blocks[term] = out
-        return out
 
     def _auxl(self, term: str) -> list:
         """The term's (first_doc, (aux blobs...)) list (OFFS/PAY
-        occurrence features), block-aligned with _bl(term) — same lazy
-        per-term materialization."""
+        occurrence features), block-aligned with the term's row span —
+        materialized on first touch."""
         if self._bin_aux is None:
             return []
         hit = self._aux.get(term)
@@ -428,28 +385,6 @@ class HotEngine:
         )
         self._aux[term] = out
         return out
-
-    def _run_init_tail(self, index):
-        self._decoded_pos: dict[str, tuple] = {}
-        self._bounds: dict[str, tuple] = {}
-        self._vocab: tuple | None = None
-        self._expansion: dict = {}
-        self._cols: dict[str, tuple] = {}
-        self._spine: np.ndarray | None = None
-        self._proxy: dict = {}
-        self._field_hots: dict[str, "HotEngine"] | None = None
-        self.last_wand_stats: dict | None = None
-        self._deleted: np.ndarray | None = None
-        if index.deleted is not None:
-            self._deleted = np.sort(
-                np.asarray(
-                    [
-                        r["doc_id"]
-                        for r in index.deleted.select("doc_id").collect()
-                    ],
-                    dtype=np.int64,
-                )
-            )
 
     # ------------------------------------------------------------ memory
 
@@ -505,7 +440,9 @@ class HotEngine:
             _arr_bytes(a) for hit in self._cols.values() for a in hit
         )
         vocab = (
-            sum(_arr_bytes(a) for a in self._vocab) if self._vocab else 0
+            sum(_arr_bytes(a) for a in (self._vocab.terms, self._vocab.dfs))
+            if self._vocab
+            else 0
         )
         spine = self._spine.nbytes if self._spine is not None else 0
         stats = {
@@ -530,42 +467,71 @@ class HotEngine:
 
     # ------------------------------------------------------------ decode
 
+    def _decode_rows(self, rows: np.ndarray, want_pos: bool) -> dict:
+        """codec.decode_batch_arrays over the posting-block rows `rows`
+        of the sorted columns: ONE vectorized pass, however many
+        blocks."""
+        import pyarrow as pa
+
+        if rows[-1] - rows[0] + 1 == rows.size:  # a contiguous run
+            take = lambda a: a.slice(int(rows[0]), int(rows.size))  # noqa: E731
+        else:
+            idx = pa.array(rows)
+            take = lambda a: a.take(idx)  # noqa: E731
+        cols = [pa.array(self._nd_a[rows]), take(self._bin_docs), take(self._bin_dls)]
+        names = ["n_docs", "docs", "dls"]
+        if want_pos:
+            cols.append(take(self._bin_pos))
+            names.append("positions")
+        return codec.decode_batch_arrays(
+            pa.RecordBatch.from_arrays(cols, names=names), want_pos
+        )
+
     def _decode_blocks(self, term: str, idxs=None):
         """Decode (and cache) the term's posting blocks — PER BLOCK, so
-        a WAND-pruned read only ever decodes surviving blocks. idxs:
-        iterable of block indices (None = all). Returns concatenated
-        (doc_ids, freqs, dls)."""
-        bl = self._bl(term)
+        a WAND-pruned read only ever decodes surviving blocks (all the
+        missing ones of a call in one vectorized pass). idxs: iterable
+        of block indices (None = all). Returns concatenated (doc_ids,
+        freqs, dls)."""
+        s, e = self._spans.get(term, (0, 0))
         slots = self._decoded.get(term)
         if slots is None:
-            slots = [None] * len(bl)
+            slots = [None] * (e - s)
             self._decoded[term] = slots
-        want = range(len(bl)) if idxs is None else sorted(idxs)
-        parts = []
-        for i in want:
-            if i >= len(bl):
-                continue
-            hit = slots[i]
-            if hit is None:
-                first, last, n, docs_b, dls_b, _imp, _mf, _md, _pb = bl[i]
-                d, f = codec.unpack_docs_freqs(docs_b, n, base=0)
-                hit = (
-                    d.astype(np.int64),
-                    f.astype(np.int64),
-                    codec.varint_decode(dls_b).astype(np.int64),
-                )
-                slots[i] = hit
-            parts.append(hit)
+        want = range(e - s) if idxs is None else sorted(
+            i for i in idxs if i < e - s
+        )
+        missing = np.asarray([i for i in want if slots[i] is None], np.int64)
+        if missing.size:
+            d = self._decode_rows(s + missing, False)
+            hit = (d["doc_ids"], d["freqs"], d["dls"])
+            if self._range is not None:
+                m = self._in_range(hit[0])
+                owner = np.repeat(np.arange(missing.size), self._nd_a[s + missing])
+                hit = tuple(a[m] for a in hit)
+                cuts = np.cumsum(np.bincount(owner[m], minlength=missing.size))
+            else:
+                cuts = np.cumsum(self._nd_a[s + missing])
+            for i, block in zip(
+                missing.tolist(), zip(*(np.split(a, cuts[:-1]) for a in hit))
+            ):
+                slots[i] = block
+            if missing.size == len(want):
+                return hit  # every wanted block, already in block order
+        parts = [slots[i] for i in want]
         if not parts:
             e = np.empty(0, np.int64)
             return e, e.copy(), e.copy()
         if len(parts) == 1:
             return parts[0]
-        return (
-            np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
-            np.concatenate([p[2] for p in parts]),
-        )
+        return tuple(np.concatenate([p[j] for p in parts]) for j in range(3))
+
+    def _in_range(self, doc_ids: np.ndarray) -> np.ndarray:
+        """Mask of the doc ids inside this shard's [lo, hi) range — a
+        posting block straddling a shard boundary is decoded by every
+        shard it overlaps and clipped here."""
+        lo, hi = self._range
+        return (doc_ids >= lo) & (doc_ids < hi)
 
     def _decode_positions(self, term: str):
         """Concatenated (doc_ids, dls, pos_values, pos_offsets) for ALL
@@ -574,29 +540,19 @@ class HotEngine:
         hit = self._decoded_pos.get(term)
         if hit is not None:
             return hit
-        bl = self._bl(term)
-        d_parts, l_parts, p_parts, f_parts = [], [], [], []
-        for first, last, n, docs_b, dls_b, _i, _mf, _md, pos_b in bl:
-            if pos_b is None:
-                raise ValueError("index was built without positions")
-            d, f = codec.unpack_docs_freqs(docs_b, n, base=0)
-            f = f.astype(np.int64)
-            d_parts.append(d.astype(np.int64))
-            f_parts.append(f)
-            l_parts.append(codec.varint_decode(dls_b).astype(np.int64))
-            p_parts.append(
-                codec.decode_position_lists(pos_b, f).astype(np.int64)
-            )
-        if d_parts:
-            doc_ids = np.concatenate(d_parts)
-            dls = np.concatenate(l_parts)
-            freqs = np.concatenate(f_parts)
-            pos = np.concatenate(p_parts)
+        if not self._with_positions:
+            raise ValueError("index was built without positions")
+        s, e = self._spans.get(term, (0, 0))
+        if e > s:
+            d = self._decode_rows(np.arange(s, e), True)
+            doc_ids, dls, freqs = d["doc_ids"], d["dls"], d["freqs"]
+            pos = d["pos_values"].astype(np.int64)
         else:
-            doc_ids = np.empty(0, np.int64)
-            dls = doc_ids.copy()
-            freqs = doc_ids.copy()
-            pos = doc_ids.copy()
+            doc_ids = dls = freqs = pos = np.empty(0, np.int64)
+        if self._range is not None:
+            m = self._in_range(doc_ids)
+            pos = pos[np.repeat(m, freqs)]
+            doc_ids, dls, freqs = doc_ids[m], dls[m], freqs[m]
         offsets = np.concatenate(([0], np.cumsum(freqs)))
         out = (doc_ids, dls, pos, offsets)
         self._decoded_pos[term] = out
@@ -629,80 +585,34 @@ class HotEngine:
 
     # --------------------------------------------------------- expansion
 
-    def _vocab_arrays(self):
-        """Sorted in-memory term dictionary (terms object[], df int64[])
-        — Python str comparison == Spark's UTF8String order (UTF-8 byte
-        order preserves code-point order), so slices match the cluster
-        term intervals exactly."""
+    def _vocabulary(self) -> sem_.Vocabulary:
+        """The replica's sorted in-memory term dictionary (for a cluster
+        shard: the terms of its block table)."""
         if self._vocab is None:
-            terms = sorted(self._df)
-            self._vocab = (
-                np.asarray(terms, dtype=object),
-                np.asarray([self._df[t] for t in terms], dtype=np.int64),
+            self._vocab = sem_.Vocabulary.of(
+                {t: self._df.get(t, 0) for t in self._spans}
             )
         return self._vocab
-
-    def _vocab_slice(self, lo, hi, include_min: bool, include_max: bool):
-        terms, dfs = self._vocab_arrays()
-        i = (
-            0
-            if lo is None
-            else int(
-                np.searchsorted(terms, lo, "left" if include_min else "right")
-            )
-        )
-        j = (
-            terms.size
-            if hi is None
-            else int(
-                np.searchsorted(terms, hi, "right" if include_max else "left")
-            )
-        )
-        return terms[i:j], dfs[i:j]
 
     def _hot_expansion(self, node):
         """([(term, df)] expansion, [matched terms], complete) for a
         multiterm leaf, computed against the in-memory vocabulary under
         the semantics core's caps and order — output-identical to the
         cluster's _leaf_expansion (pinned by parity tests) — and cached
-        per node in this replica."""
+        per node in this replica. A cluster shard takes the expansion
+        the driver supplied instead (its vocabulary is the shard's block
+        table): complete, it is the matched set; capped, the leaf also
+        matches the unscored terms the scan predicate brought in."""
         hit = self._expansion.get(node)
         if hit is not None:
             return hit
-        if isinstance(node, ast.Prefix):
-            t, d = self._vocab_slice(
-                node.prefix, sem_.prefix_successor(node.prefix), True, False
-            )
-            matched, mdf = t.tolist(), d.tolist()
-        elif isinstance(node, ast.Wildcard):
-            import re
-
-            rx = re.compile(sem_.like_to_regex(node.pattern))
-            terms, dfs = self._vocab_arrays()
-            matched, mdf = [], []
-            for t, d in zip(terms.tolist(), dfs.tolist()):
-                if rx.match(t):
-                    matched.append(t)
-                    mdf.append(d)
-        elif isinstance(node, ast.Range):
-            t, d = self._vocab_slice(
-                node.min_term,
-                node.max_term,
-                node.include_min,
-                node.include_max,
-            )
-            matched, mdf = t.tolist(), d.tolist()
-        elif isinstance(node, ast.Fuzzy):
-            expanded = self._fuzzy_expansion(node)
-            out = (expanded, [t for t, _ in expanded], True)
-            self._expansion[node] = out
-            return out
-        else:  # pragma: no cover
-            raise TypeError(f"not an expansion leaf: {node}")
-        expanded, complete = sem_.capped(
-            list(zip(matched, mdf)), self.sem.expansion_limit(node)
-        )
-        out = (expanded, matched, complete)
+        given = self._given.get(node)
+        if given is not None and given[1]:
+            out = (given[0], [t for t, _ in given[0]], True)
+        else:
+            out = self._vocabulary().expand(node, self.sem)
+            if given is not None:
+                out = (given[0], out[1], False)
         self._expansion[node] = out
         return out
 
@@ -711,34 +621,6 @@ class HotEngine:
         reads."""
         expanded, _matched, complete = self._hot_expansion(node)
         return expanded, complete
-
-    def _fuzzy_expansion(self, node: ast.Fuzzy):
-        """The cluster's _fuzzy_candidates against the in-memory
-        vocabulary: exact-prefix pinning, the length band, the distance
-        kernels and the FUZZY_ORDER max_terms cap, all from the
-        semantics core."""
-        if node.prefix:
-            t, d = self._vocab_slice(
-                node.prefix, sem_.prefix_successor(node.prefix), True, False
-            )
-        else:
-            t, d = self._vocab_arrays()
-        if t.size == 0:
-            return []
-        lens = np.fromiter((len(x) for x in t), np.int64, count=t.size)
-        lo, hi = sem_.fuzzy_band(node)
-        band = (lens >= lo) & (lens <= hi)
-        t, d = t[band], d[band]
-        if t.size == 0:
-            return []
-        dist = sem_.fuzzy_distances(node, t)
-        m = dist <= node.distance
-        cand = sem_.rank(
-            list(zip(t[m].tolist(), d[m].tolist(), dist[m].tolist())),
-            sem_.FUZZY_ORDER,
-            node.max_terms,
-        )
-        return [(term, df) for term, df, _ in cand]
 
     def _expansion_postings(self, node, boost, keep=None):
         """Scored multiterm leaf -> (doc_ids, scores): the cluster's
@@ -751,6 +633,12 @@ class HotEngine:
         w = {t: self.sem.c0(df, eff) for t, df in expanded}
         return self._score_terms(w, matched, keep)
 
+    def _score(self, c0: float, freqs, dls) -> np.ndarray:
+        """float64 score per posting (semantics.score_expr); c0 goes in
+        as an np.float64 scalar, and a BM1 constant is broadcast."""
+        s = np.asarray(self._kernel(np.float64(c0), freqs, dls), np.float64)
+        return s if s.shape == freqs.shape else np.full(freqs.shape, s)
+
     def _score_terms(self, weights: dict, terms, keep):
         """(doc_ids, scores) of a leaf over `terms`: each term's postings
         scored with its c0 (absent = 0.0, matched but unscored), a doc's
@@ -759,7 +647,7 @@ class HotEngine:
         (WAND survivors)."""
         parts = []
         for term in sorted(terms):
-            if self._df.get(term, 0) == 0:
+            if term not in self._spans:
                 continue
             sel = keep.get(term) if keep is not None else None
             if keep is not None and sel is None:
@@ -767,9 +655,7 @@ class HotEngine:
             d, f, l = self._decode_blocks(term, sel)
             if d.size == 0:
                 continue
-            # np.float64 scalar: the f32 kernel calls .astype on c0
-            s = self._kernel(np.float64(weights.get(term, 0.0)), f, l)
-            parts.append((d, np.asarray(s, dtype=np.float64)))
+            parts.append((d, self._score(weights.get(term, 0.0), f, l)))
         if not parts:
             e = np.empty(0, np.int64)
             return e, np.empty(0, np.float64)
@@ -891,7 +777,10 @@ class HotEngine:
             )
         else:
             par = par_raw.astype(np.int64)
-        order = np.argsort(par, kind="stable")
+        # children in (parent, child doc id) order: a parent's sum is
+        # the left fold over its children in doc-id order, as on the
+        # cluster
+        order = np.lexsort((cd[ok], par))
         par, cs = par[order], cs[order]
         bound = np.empty(par.size, bool)
         bound[0] = True
@@ -904,7 +793,7 @@ class HotEngine:
         elif node.merge_type == "min":
             us = np.minimum.reduceat(cs, starts)
         else:  # sum / noop
-            us = np.add.reduceat(cs, starts)
+            us = sem_.fold_sum(cs, starts)
         m = nc >= node.min_children
         if node.max_children is not None:
             m &= nc <= node.max_children
@@ -1012,14 +901,24 @@ class HotEngine:
                 (r["doc_id"], r["score"])
                 for r in self._cluster().search(query, k=k, mode=mode).collect()
             ]
-        if mode == "wand":
+        d, s = self.answer(norm, k, mode)
+        return list(zip(d.tolist(), s.tolist()))
+
+    def answer(self, norm, k: int | None, mode: str = "exhaustive"):
+        """(doc_ids, scores) of a normalized servable query: every match
+        when k is None, else the top k by (score desc, doc_id asc),
+        block-max WAND-pruned when mode="wand" and the shape allows."""
+        if k is not None and mode == "wand":
             terms = self.sem.wand_terms(norm, self._expand_complete)
             if terms is not None:
                 out = self._wand(norm, terms, k)
                 if out is not None:
                     return out
-        doc_ids, scores = self._eval(norm, 1.0, None)
-        return sem_.topk(doc_ids, scores, k)
+        d, s = self._eval(norm, 1.0, None)
+        if k is None:
+            return d, s
+        top = sem_.topk_order(d, s, k)
+        return d[top], s[top]
 
     def _cluster(self):
         """The cluster engine a Spark-built replica falls back to; a
@@ -1051,8 +950,8 @@ class HotEngine:
                 (r["doc_id"], r["score"])
                 for r in self._cluster().matches(query).collect()
             ]
-        doc_ids, scores = self._eval(norm, 1.0, None)
-        return list(zip(doc_ids.tolist(), scores.tolist()))
+        d, s = self.answer(norm, None)
+        return list(zip(d.tolist(), s.tolist()))
 
     def top_docs(self, k: int = 10, query=None, columns=None):
         """First k live docs in index order (doc_id asc) — the hot
@@ -1327,69 +1226,49 @@ class HotEngine:
         if weight is None:
             return empty  # a slot with no live terms
         clean, c0_sum = weight
-        # per-slot decoded postings + per-slot doc universe (union over
-        # the slot's candidate terms)
-        per_slot: list[list[tuple]] = []
-        common = None
-        for terms in clean:
-            datas = [self._decode_positions(t) for t in terms]
-            docs = datas[0][0]
-            for dd in datas[1:]:
-                docs = np.union1d(docs, dd[0])
-            per_slot.append(datas)
-            common = (
-                docs
-                if common is None
-                else np.intersect1d(common, docs, assume_unique=True)
-            )
-        if common is None or common.size == 0:
-            return empty
-        freqs = np.empty(common.size, np.int64)
-        dls = np.empty(common.size, np.int64)
-        for j in range(common.size):
-            doc = common[j]
-            inter = None
-            dl = -1
-            for datas, off in zip(per_slot, offsets):
-                pos_u = None
-                for d_ids, dlc, pos, offs in datas:
-                    i = int(np.searchsorted(d_ids, doc))
-                    if i >= d_ids.size or d_ids[i] != doc:
-                        continue
-                    p = pos[offs[i] : offs[i + 1]] - off
-                    pos_u = p if pos_u is None else np.union1d(pos_u, p)
-                    if dl < 0:
-                        dl = int(dlc[i])
-                inter = (
-                    pos_u
-                    if inter is None
-                    else np.intersect1d(inter, pos_u, assume_unique=True)
-                )
-                if inter.size == 0:
-                    break
-            freqs[j] = 0 if inter is None else inter.size
-            dls[j] = dl
-        m = freqs > 0
-        if not m.any():
-            return empty
-        s = self._kernel(np.float64(c0_sum), freqs[m], dls[m])
-        return common[m], np.asarray(s, dtype=np.float64)
+        # (doc, position - offset) pairs: each slot's union over its
+        # candidate terms, intersected slot by slot; a doc's phrase
+        # freq is its count of surviving pairs
+        pairs = None
+        dl_docs, dl_vals = [], []
+        for terms, off in zip(clean, offsets):
+            docs_l, pos_l = [], []
+            for t in terms:
+                d_ids, dlc, pos, offs = self._decode_positions(t)
+                docs_l.append(np.repeat(d_ids, np.diff(offs)))
+                pos_l.append(pos - off)
+                dl_docs.append(d_ids)
+                dl_vals.append(dlc)
+            slot = _sorted_pairs(np.concatenate(docs_l), np.concatenate(pos_l))
+            pairs = slot if pairs is None else _common_pairs(pairs, slot)
+            if pairs[0].size == 0:
+                return empty
+        docs, freqs = np.unique(pairs[0], return_counts=True)
+        ud, first = np.unique(np.concatenate(dl_docs), return_index=True)
+        dls = np.concatenate(dl_vals)[first[np.searchsorted(ud, docs)]]
+        return docs, self._score(c0_sum, freqs, dls)
 
     # -------------------------------------------------------------- WAND
 
     def _wand(self, query, terms: dict[str, float], k: int):
         """In-memory block-max WAND: the semantics core's range-aligned
         BoundWalk over the cached per-block bounds, without any Spark
-        job. Returns None when the seed cannot fill k (caller falls
-        through to the exhaustive in-memory path)."""
+        job: the top-k (doc_ids, scores). Returns None when the seed
+        cannot fill k (caller falls through to the exhaustive in-memory
+        path; the stats then report every block kept, theta 0)."""
         weights = self.sem.wand_weights(query, terms, self._df)
         if not weights:
-            return []
+            return np.empty(0, np.int64), np.empty(0, np.float64)
         per_term = {}
         for t, c0 in weights.items():
             g, s0, s1 = self._term_bound_arrays(t)
             per_term[t] = (c0 * g, s0, s1)
         walk = sem_.BoundWalk(per_term)
+        self.last_wand_stats = {
+            "blocks_total": walk.n_blocks,
+            "blocks_kept": walk.n_blocks,
+            "theta": 0.0,
+        }
         d, s = self._eval(query, 1.0, walk.seed(k))
         if d.size < k:
             return None  # seed can't fill k -> no theta -> no pruning
@@ -1397,35 +1276,169 @@ class HotEngine:
         if theta <= 0.0:
             return None
         keep = walk.keep(self.sem.theta_eff(theta))
-        self.last_wand_stats = {
-            "blocks_total": walk.n_blocks,
-            "blocks_kept": sum(int(v.size) for v in keep.values()),
-            "theta": theta,
-        }
+        self.last_wand_stats.update(
+            blocks_kept=sum(int(v.size) for v in keep.values()), theta=theta
+        )
         d, s = self._eval(query, 1.0, keep)
-        return sem_.topk(d, s, k)
+        top = sem_.topk_order(d, s, k)
+        return d[top], s[top]
 
 
-class HotMultiFieldEngine:
-    """Driver-resident MultiFieldEngine: one HotEngine replica per
+class _Replica:
+    """A served replica: ONE state reference that every query reads
+    once and runs on alone, and that refresh() swaps — under a lock, so
+    concurrent refreshes re-pin at most once per commit — when the
+    source directory's commit state moved."""
+
+    def _init_replica(self, state) -> None:
+        self._state = state
+        self._lock = threading.Lock()
+        self._source = None
+
+    def __getattr__(self, name):
+        # everything not defined on the replica (its query API, `engine`,
+        # memory_stats, the caches) is the CURRENT state's
+        state = self.__dict__.get("_state")
+        if state is None or name.startswith("__"):
+            raise AttributeError(name)
+        return getattr(state, name)
+
+    def _remember(self, path: str, kwargs: dict, fingerprint) -> None:
+        self._source = {"path": path, "kwargs": kwargs, "fingerprint": fingerprint}
+
+    def refresh(self) -> bool:
+        """Reopen semantics for a `from_dir` replica (the reference's
+        `directory_reader` reopen, core/index/directory_reader.hpp):
+        re-check the source directory's commit state — the incremental
+        manifest version for IncrementalIndexer dirs, the manifest
+        file's (mtime, size) for batch saves and snapshot pointers —
+        and rebuild the replica when it changed. Returns True when the
+        replica was rebuilt, False when it was already current.
+
+        Reopen granularity is the whole replica (a fresh pin, measured
+        in seconds at ~1M posting blocks), not the reference's
+        per-new-segment increment — the lazy columnar ingest makes a
+        full re-pin cheap enough that segment-granular patching of the
+        sorted in-memory arrays isn't worth its complexity. The swap
+        is ONE assignment of the state reference: queries already
+        running on another thread finish against the old state;
+        queries issued after refresh() returns see the new commit."""
+        src = self._source
+        if src is None:
+            raise ValueError(
+                "refresh() requires a replica built with from_dir (a "
+                "Spark-built replica re-pins by reconstructing from "
+                "its engine)"
+            )
+        with self._lock:
+            if self._fingerprint(src["path"]) == self._source["fingerprint"]:
+                return False
+            fresh = type(self).from_dir(src["path"], **src["kwargs"])
+            self._state = fresh._state
+            self._source = fresh._source
+        return True
+
+
+class HotEngine(_Replica):
+    """In-driver replica of an index's postings for low-latency
+    serving. Construct from a SearchEngine (one collect), or Spark-free
+    with `from_dir`; query with `search(node, k, mode)` -> list of
+    (doc_id, score), score desc, doc_id asc — the cluster path's exact
+    output order. `search_many`, `matches`, `top_docs`, `highlight`,
+    `payloads` and `memory_stats` are the pinned HotState's. `engine`
+    is what the replica was pinned from: the SearchEngine, or for
+    `from_dir` an embedded.LocalSource (a LocalIndex plus its
+    Semantics, with no cluster behind it)."""
+
+    _fingerprint = staticmethod(_dir_fingerprint)
+
+    def __init__(self, engine, max_bytes: int = 1 << 30):
+        self._init_replica(HotState.pin(engine, max_bytes))
+
+    @classmethod
+    def from_dir(
+        cls,
+        path: str,
+        scorer: str | object = "bm25",
+        score_dtype: str = "float64",
+        scored_terms_limit: int = 1024,
+        max_bytes: int = 1 << 30,
+        encryption=None,
+    ) -> "HotEngine":
+        """Spark-free replica of a SAVED index: read the parquet layout
+        with pyarrow (no SparkSession, no JVM) and serve it in-process
+        — the reference's embedded `directory_reader` deployment shape
+        (core/index/directory_reader.hpp). Results are identical to a
+        Spark-built HotEngine (differential-tested); shapes the hot
+        path cannot serve raise instead of falling back (there is no
+        cluster here). A SEALED index decrypts in-process when
+        `encryption=` carries the master keys (EmbeddedDecryption —
+        pyarrow modular decryption, still no JVM)."""
+        from iresearch_spark.search.embedded import (
+            LocalSource,
+            load_local_index,
+        )
+
+        # fingerprint BEFORE the (multi-second) pin: a commit landing
+        # mid-load must make the next refresh() rebuild, not be stamped
+        # as already-seen
+        fp = _dir_fingerprint(path)
+        eng = cls(
+            LocalSource.open(
+                load_local_index(path, encryption=encryption),
+                scorer=scorer,
+                score_dtype=score_dtype,
+                scored_terms_limit=scored_terms_limit,
+            ),
+            max_bytes=max_bytes,
+        )
+        eng._remember(
+            path,
+            dict(
+                scorer=scorer,
+                score_dtype=score_dtype,
+                scored_terms_limit=scored_terms_limit,
+                max_bytes=max_bytes,
+                encryption=encryption,
+            ),
+            fp,
+        )
+        return eng
+
+
+@dataclasses.dataclass(frozen=True)
+class _FieldStates:
+    """A multifield replica's one pinned commit: the per-field states
+    (each knowing the others, for Field subtrees) and the default."""
+
+    engine: object
+    hots: dict
+    default: HotState
+
+
+class HotMultiFieldEngine(_Replica):
+    """Driver-resident MultiFieldEngine: one pinned HotState per
     field (each pinning its field's postings and keeping its own
-    expansion cache), Field subtrees route to that field's replica,
+    expansion cache), Field subtrees route to that field's state,
     and cross-field booleans compose in numpy over the shared
     deterministic doc-id space — exactly the cluster
     MultiFieldEngine's per-field BM25 + kSum/kMax/kMin merge
     (search/multifield.py). A single-Field root runs NATIVELY on that
-    field's hot engine, keeping its WAND path; unservable shapes fall
-    back per HotEngine.search."""
+    field's state, keeping its WAND path; unservable shapes fall
+    back per HotEngine.search. All fields swap together on refresh()."""
+
+    _fingerprint = staticmethod(_multifield_fingerprint)
 
     def __init__(self, engine, max_bytes: int = 1 << 30):
-        self.engine = engine
-        self.hots = {
-            f: HotEngine(e, max_bytes=max_bytes)
+        hots = {
+            f: HotState.pin(e, max_bytes=max_bytes)
             for f, e in engine.engines.items()
         }
-        for h in self.hots.values():
-            h._field_hots = self.hots
-        self.default = self.hots[engine.index.default_field]
+        for h in hots.values():
+            h._field_hots = hots
+        self._init_replica(
+            _FieldStates(engine, hots, hots[engine.index.default_field])
+        )
 
     @classmethod
     def from_dir(
@@ -1438,8 +1451,11 @@ class HotMultiFieldEngine:
     ) -> "HotMultiFieldEngine":
         """Spark-free multifield replica of a SAVED multifield dir
         (field=<name>/ per-field indexes + multifield.json): one
-        embedded HotEngine per field, same routing/compose semantics —
-        see HotEngine.from_dir for the embedded-path boundaries."""
+        embedded state per field, same routing/compose semantics —
+        see HotEngine.from_dir for the embedded-path boundaries. The
+        refresh() fingerprint covers multifield.json plus every field's
+        manifest, so a re-save of any field (or a field-set change)
+        triggers one full re-pin swap."""
         from iresearch_spark.search.embedded import load_local_multifield
 
         fp = _multifield_fingerprint(path)  # BEFORE the pin (see HotEngine)
@@ -1451,39 +1467,21 @@ class HotMultiFieldEngine:
             ),
             max_bytes=max_bytes,
         )
-        eng._source = {
-            "path": path,
-            "kwargs": dict(
+        eng._remember(
+            path,
+            dict(
                 scorer=scorer,
                 score_dtype=score_dtype,
                 scored_terms_limit=scored_terms_limit,
                 max_bytes=max_bytes,
             ),
-            "fingerprint": fp,
-        }
+            fp,
+        )
         return eng
 
-    def refresh(self) -> bool:
-        """Reopen semantics over a from_dir multifield replica: the
-        fingerprint covers multifield.json plus every field's manifest,
-        so a re-save of any field (or a field-set change) triggers one
-        full re-pin swap. See HotEngine.refresh for the semantics."""
-        src = getattr(self, "_source", None)
-        if src is None:
-            raise ValueError(
-                "refresh() requires a replica built with from_dir"
-            )
-        fp = _multifield_fingerprint(src["path"])
-        if fp == src["fingerprint"]:
-            return False
-        fresh = type(self).from_dir(src["path"], **src["kwargs"])
-        # single assignment = atomic swap; never clear-then-update,
-        # which would expose an empty dict to concurrent readers
-        self.__dict__ = dict(fresh.__dict__)
-        return True
-
-    def _route(self, query: ast.Node):
-        return sem_.route_field(query, self.hots, self.default)
+    def _route(self, query: ast.Node, state: _FieldStates | None = None):
+        st = state or self._state
+        return sem_.route_field(query, st.hots, st.default)
 
     def search(self, query: ast.Node, k: int = 10, mode: str = "exhaustive"):
         hot, q = self._route(query)
@@ -1493,15 +1491,23 @@ class HotMultiFieldEngine:
         hot, q = self._route(query)
         return hot.matches(q)
 
-    # batched top-k over routed fields: the warmth of the shared
-    # per-field caches is the batching
-    search_many = HotEngine.search_many
+    def search_many(
+        self, queries: dict, k: int = 10, mode: str = "exhaustive"
+    ) -> dict:
+        """Batched top-k over routed fields, all against one commit:
+        the warmth of the shared per-field caches is the batching."""
+        st = self._state
+        out = {}
+        for name, q in queries.items():
+            hot, qq = self._route(q, st)
+            out[name] = hot.search(qq, k=k, mode=mode)
+        return out
 
     def memory_stats(self) -> dict:
         """Per-field residency plus fleet totals (see
-        HotEngine.memory_stats) — the budget applies per field replica,
+        HotState.memory_stats) — the budget applies per field replica,
         so `budget_bytes` here is the per-field budget, not a sum."""
-        per_field = {f: h.memory_stats() for f, h in self.hots.items()}
+        per_field = {f: h.memory_stats() for f, h in self._state.hots.items()}
         total = {
             k: sum(s[k] for s in per_field.values())
             for k in next(iter(per_field.values()))
@@ -1512,3 +1518,103 @@ class HotMultiFieldEngine:
         )["budget_bytes"]
         total["fields"] = per_field
         return total
+
+
+# ------------------------------------------------------ cluster shards
+
+
+class WandStats:
+    """Accumulator param of a cluster query's WAND counters
+    (blocks_total, blocks_kept, theta): blocks sum over shards, theta
+    is the largest shard threshold."""
+
+    def zero(self, value):
+        return (0, 0, 0.0)
+
+    def addInPlace(self, a, b):
+        return (a[0] + b[0], a[1] + b[1], max(a[2], b[2]))
+
+
+@dataclasses.dataclass(frozen=True)
+class ShardPlan:
+    """A compiled cluster query batch: everything a doc-range shard
+    needs besides its posting blocks. `queries` maps names to
+    normalized postings-only trees; `dfs`, `expansions` and `deleted`
+    are the driver's GLOBAL df per touched term, multiterm expansions
+    ({node: (expansion, complete)}) and sorted deleted doc ids. Shard s
+    covers doc ids [base + s * width, base + (s + 1) * width), the first
+    and last shard open-ended. `stats` is a WandStats accumulator or
+    None."""
+
+    sem: object
+    queries: dict
+    k: int | None
+    mode: str
+    dfs: dict
+    expansions: dict
+    deleted: np.ndarray | None
+    n_shards: int = 1
+    base: int = 0
+    width: int = 0
+    stats: object = None
+
+    def state(self, tbl, shard: int) -> HotState:
+        """The HotState of shard `shard` over its block table."""
+        rng = None
+        if self.n_shards > 1:
+            lo = self.base + shard * self.width
+            hi = lo + self.width
+            if shard == 0:
+                lo = np.iinfo(np.int64).min
+            if shard == self.n_shards - 1:
+                hi = np.iinfo(np.int64).max
+            rng = (lo, hi)
+        return HotState(
+            self.sem,
+            tbl,
+            deleted=self.deleted,
+            dfs=self.dfs,
+            expansions=self.expansions,
+            doc_range=rng,
+        )
+
+
+def shard_kernel(plan: ShardPlan):
+    """The mapInArrow function of a ShardPlan. A task holds the posting
+    blocks of one shard (the `_shard` column names it when there are
+    several) and answers every query on that shard's HotState — its
+    exact top k, or every match when k is None — as (query, doc_id,
+    score) rows."""
+
+    def run(batches):
+        import pyarrow as pa
+
+        batches = list(batches)
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        shard = tbl.column("_shard")[0].as_py() if plan.n_shards > 1 else 0
+        st = plan.state(tbl, shard)
+        names, docs, scores = [], [], []
+        for name, node in plan.queries.items():
+            st.last_wand_stats = None
+            d, s = st.answer(node, plan.k, plan.mode)
+            names.append(name)
+            docs.append(d)
+            scores.append(s)
+            w = st.last_wand_stats
+            if plan.stats is not None and w:
+                plan.stats.add((w["blocks_total"], w["blocks_kept"], w["theta"]))
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(
+                    np.repeat(np.asarray(names, object), [d.size for d in docs]),
+                    pa.string(),
+                ),
+                pa.array(np.concatenate(docs), pa.int64()),
+                pa.array(np.concatenate(scores), pa.float64()),
+            ],
+            names=["query", "doc_id", "score"],
+        )
+
+    return run

@@ -16,6 +16,7 @@ the leaf-order sum fold, the (score desc, doc_id asc) top-k).
 
 from __future__ import annotations
 
+import copy
 import dataclasses
 import functools
 import heapq
@@ -152,6 +153,16 @@ class Semantics:
         return ("tfidf", 0.0, 0.0, 0.0,
                 bool(getattr(self.scorer, "with_norms", False)),
                 self.norm_mode)
+
+    def portable(self) -> "Semantics":
+        """A copy that pickles to the cluster's Arrow workers: the score
+        parameters resolved now, the tier's max_dl callback left
+        behind."""
+        self.scorer_params()  # resolves max_dl when the chain reads it
+        out = copy.copy(self)
+        out._max_dl_fn = None
+        out._kernel = None
+        return out
 
     @property
     def kernel(self):
@@ -514,6 +525,89 @@ def capped(rows, limit: int):
     the expansion may stand in for the pattern predicate."""
     head = rank(rows, TERM_ORDER, limit)
     return head, len(head) < limit
+
+
+class Vocabulary:
+    """A sorted in-memory term dictionary (terms, df) and the expansion
+    of multiterm leaves against it — a hot replica's vocabulary, or a
+    preload_stats cluster engine's whole term dictionary. Python str
+    order is Spark's UTF8String order (UTF-8 byte order preserves code
+    point order), so slices are the cluster's term intervals and the
+    expansions equal the cluster's term_stats scans (pinned by parity
+    tests)."""
+
+    def __init__(self, terms, dfs):
+        self.terms = np.asarray(terms, dtype=object)
+        self.dfs = np.asarray(dfs, dtype=np.int64)
+
+    @classmethod
+    def of(cls, df_by_term: dict) -> "Vocabulary":
+        terms = sorted(df_by_term)
+        return cls(terms, [df_by_term[t] for t in terms])
+
+    def slice(self, lo, hi, include_min=True, include_max=False):
+        """(terms, dfs) in the interval [lo, hi] (None = unbounded)."""
+        t = self.terms
+        i = 0 if lo is None else int(
+            np.searchsorted(t, lo, "left" if include_min else "right")
+        )
+        j = t.size if hi is None else int(
+            np.searchsorted(t, hi, "right" if include_max else "left")
+        )
+        return t[i:j], self.dfs[i:j]
+
+    def _prefixed(self, prefix: str):
+        return self.slice(prefix, prefix_successor(prefix))
+
+    def expand(self, node, sem) -> tuple[list, list, bool]:
+        """([(term, df)] expansion, [matched terms], complete) of a
+        Prefix/Wildcard/Range leaf under `sem`'s scored-term cap, or of
+        a Fuzzy leaf (complete: its max_terms cap IS its semantics)."""
+        if isinstance(node, ast.Fuzzy):
+            expanded = self._fuzzy(node)
+            return expanded, [t for t, _ in expanded], True
+        if isinstance(node, ast.Prefix):
+            t, d = self._prefixed(node.prefix)
+        elif isinstance(node, ast.Range):
+            t, d = self.slice(
+                node.min_term, node.max_term, node.include_min,
+                node.include_max,
+            )
+        elif isinstance(node, ast.Wildcard):
+            # the literal prefix bounds the regex walk
+            t, d = self._prefixed(wildcard_literal_prefix(node.pattern))
+            rx = re.compile(like_to_regex(node.pattern))
+            m = np.fromiter((bool(rx.match(x)) for x in t), bool, t.size)
+            t, d = t[m], d[m]
+        else:
+            raise TypeError(f"not an expansion leaf: {node}")
+        matched = t.tolist()
+        expanded, complete = capped(
+            list(zip(matched, d.tolist())), sem.expansion_limit(node)
+        )
+        return expanded, matched, complete
+
+    def _fuzzy(self, node) -> list[tuple[str, int]]:
+        """The cluster's fuzzy candidates: exact-prefix pinning, the
+        length band, the distance kernels and the FUZZY_ORDER max_terms
+        cap."""
+        t, d = self._prefixed(node.prefix)
+        if t.size == 0:
+            return []
+        lens = np.fromiter((len(x) for x in t), np.int64, count=t.size)
+        lo, hi = fuzzy_band(node)
+        band = (lens >= lo) & (lens <= hi)
+        t, d = t[band], d[band]
+        if t.size == 0:
+            return []
+        dist = fuzzy_distances(node, t)
+        m = dist <= node.distance
+        cand = rank(
+            list(zip(t[m].tolist(), d[m].tolist(), dist[m].tolist())),
+            FUZZY_ORDER,
+            node.max_terms,
+        )
+        return [(term, df) for term, df, _ in cand]
 
 
 def fuzzy_band(node) -> tuple[int, int]:
@@ -988,11 +1082,3 @@ def topk_order(doc_ids: np.ndarray, scores: np.ndarray, k: int):
     reference's heap keeps the earliest doc on ties
     (utils/index-search.cpp:759)."""
     return np.lexsort((doc_ids, -scores))[:k]
-
-
-def topk(doc_ids: np.ndarray, scores: np.ndarray, k: int):
-    """[(doc_id, score)] of the top k by (score desc, doc_id asc)."""
-    return [
-        (int(doc_ids[i]), float(scores[i]))
-        for i in topk_order(doc_ids, scores, k)
-    ]

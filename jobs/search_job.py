@@ -112,12 +112,6 @@ def main():
                     help="skip driver-side term-dictionary preload "
                     "(use for one-shot queries on huge vocabularies)")
     ap.add_argument(
-        "--wand-min-postings", type=int, default=1 << 16,
-        help="mode=wand falls back to the exhaustive plan below this "
-             "candidate-postings count (pruning overhead beats payoff "
-             "on small candidate sets); 0 forces WAND",
-    )
-    ap.add_argument(
         "--encrypt-keys", default=None,
         help="master-key secrets file (name:base64 lines) for an "
         "encrypted index (add --jars jars/iresearch-kms.jar on a "
@@ -233,7 +227,6 @@ def main():
     engine = SearchEngine(
         idx,
         scorer=args.scorer,
-        wand_min_postings=args.wand_min_postings,
         # task-set serving: hold the term dictionary driver-side (the
         # reference's memory-resident FST) — one fewer job per query
         preload_stats=not args.no_preload_stats,

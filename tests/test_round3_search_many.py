@@ -67,7 +67,7 @@ def test_not_shapes_are_batched(eng):
 
     for name in ("and_not", "and_not_prefix", "or_not_mm"):
         norm = planner.normalize(QUERIES[name])
-        assert eng._batchable(norm) is not None, name
+        assert eng._shard_servable(norm), name
 
 
 def _run(eng, queries, k, mode="exhaustive"):

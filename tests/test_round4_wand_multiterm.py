@@ -12,8 +12,8 @@ falls back to the exhaustive plan — eligibility mirrors
 PreparedLeaf.exact_terms.
 
 Differential: mode="wand" must be result-identical to exhaustive for
-every shape, both via the adaptive path and with pruning forced
-(wand_min_postings=0).
+every shape, both with the adaptive shard count and with the query
+forced onto several doc-range shards (WAND then runs per shard).
 """
 
 import pytest
@@ -71,8 +71,12 @@ SHAPES = [
     "shape", SHAPES, ids=lambda s: f"{type(s).__name__}{SHAPES.index(s)}"
 )
 @pytest.mark.parametrize("forced", [False, True], ids=["adaptive", "forced"])
-def test_wand_multiterm_equals_exhaustive(idx, shape, forced):
-    eng = SearchEngine(idx, wand_min_postings=0 if forced else 1 << 16)
+def test_wand_multiterm_equals_exhaustive(idx, shape, forced, monkeypatch):
+    if forced:
+        from iresearch_spark.search import executor
+
+        monkeypatch.setattr(executor, "POSTINGS_PER_SHARD", 64)
+    eng = SearchEngine(idx)
     exh = [
         (r["doc_id"], round(r["score"], 9))
         for r in eng.search(shape, k=10).collect()
@@ -89,7 +93,7 @@ def test_capped_expansion_not_wand_eligible(idx):
     unscored terms beyond the sample — it must NOT enter the WAND
     weight map (the pruned scan would drop those matches); results
     still correct via the exhaustive fallback."""
-    eng = SearchEngine(idx, scored_terms_limit=2, wand_min_postings=0)
+    eng = SearchEngine(idx, scored_terms_limit=2)
     node = Prefix("s", scored_terms_limit=2)
     assert eng.sem.wand_terms(node, eng._leaf_expansion) is None
     exh = [
@@ -119,7 +123,7 @@ def test_duplicate_terms_across_leaves_fall_back(idx):
     """Prefix('sc') expands to terms overlapping Term('scan') — the
     weight map would collapse them, so WAND must decline (exhaustive
     handles duplicates exactly)."""
-    eng = SearchEngine(idx, wand_min_postings=0)
+    eng = SearchEngine(idx)
     node = Or([Prefix("sca"), Term("scan")])
     # only a real overlap makes this test meaningful
     expanded, complete = eng._leaf_expansion(Prefix("sca"))

@@ -291,3 +291,38 @@ def test_refresh_under_concurrent_serving(spark, tmp_path):
     assert errors == []
     assert "new" in views  # post-swap queries saw the new commit
     assert emb.search(Term("zeta"), k=20) != []
+
+
+def test_refresh_mid_query_never_mixes_commits(spark, tmp_path, monkeypatch):
+    """Deterministic form of the race above: a hook in the scoring of
+    the query's first term swaps the replica to a new commit while the
+    two-term query is between reading its first and its second term.
+    The query must answer from ONE commit (the one it started on), and
+    the next query from the new commit."""
+    from iresearch_spark.search.semantics import Semantics
+
+    d = str(tmp_path / "swap")
+    ix = IncrementalIndexer(index_dir=d, bucket_bits=7)
+    ix.process_batch(_batch(spark, "u", "alpha beta", 30), 0)
+    q = Or([Term("alpha"), Term("zeta")])
+    old = HotEngine.from_dir(d).search(q, k=100)
+    emb = HotEngine.from_dir(d)  # nothing decoded yet
+    ix.process_batch(_batch(spark, "v", "alpha zeta", 12), 1)
+    new = HotEngine.from_dir(d).search(q, k=100)
+    assert old != new
+
+    real = Semantics.c0
+    fired, swapped = [], []
+
+    def hooked(self, *args):
+        if not fired:
+            fired.append(True)
+            swapped.append(emb.refresh())
+        return real(self, *args)
+
+    monkeypatch.setattr(Semantics, "c0", hooked)
+    got = emb.search(q, k=100)
+    monkeypatch.undo()
+    assert swapped == [True]
+    assert got == old
+    assert emb.search(q, k=100) == new

@@ -215,7 +215,7 @@ def test_hot_memory_stats(engines):
     import numpy as np
 
     blob = sum(
-        len(b[3]) + len(b[4]) for t in hot._spans for b in hot._bl(t)
+        len(b) for col in (hot._bin_docs, hot._bin_dls) for b in col.to_pylist()
     )
     # budget check counts the empty-term stats row too, so >= blocks sum
     assert s1["blob_bytes"] >= blob
