@@ -1460,7 +1460,7 @@ GROUP BY t.doc_id {having}
 
 def _phrase_sql(terms: list[str], boost: float = 1.0, extra_select: bool = True) -> str:
     """Phrase BM25: tf = adjacent-position match count, c0 = summed
-    per-slot idf (engine semantics, see executor._eval_phrase)."""
+    per-slot idf (engine semantics, see Semantics.phrase_weight)."""
     joins = []
     conds = [f"p0.term = '{terms[0]}'"]
     for i in range(1, len(terms)):
@@ -2309,7 +2309,7 @@ ORDER BY d.n_chars DESC, d.doc_id ASC LIMIT 25
     )
     o["phrase_bigram"] = _phrase_sql(PHRASE)
     # SamePosition([t, t]): matches every posting of t with tf = freq and
-    # the per-term constant summed twice (executor._eval_positional)
+    # the per-term constant summed twice (Semantics.phrase_weight)
     o["same_position"] = f"""{_CTE}
 SELECT t.doc_id, ROUND(SUM(2.0 * {_score()}), 6) AS score
 FROM tf t JOIN dl d USING (doc_id) CROSS JOIN stats s

@@ -31,8 +31,8 @@ class Terms(Node):
     `min_match` (terms_filter.hpp:63) requires a doc to contain at
     least that many DISTINCT terms of the set; `merge_type` picks how
     per-term scores merge (sum/max/min/noop). Both are planner-rewritten
-    onto the boolean Or machinery; the min_match=1 sum default keeps the
-    single-leaf fused-scan path."""
+    onto the boolean Or machinery; the min_match=1 sum default stays
+    one leaf."""
 
     terms: tuple[str, ...]
     boost: float = 1.0
@@ -240,7 +240,7 @@ class Should(Node):
     a doc its score merges in like any sibling. The reference reaches
     the same semantics by folding should-scores into a min_match=0
     disjunction (boolean_filter.cpp:287-312); here a dedicated wrapper
-    keeps And's fused-scan shape. Only valid as a direct child of And."""
+    keeps And's shape. Only valid as a direct child of And."""
 
     child: Node
     boost: float = 1.0

@@ -8,8 +8,8 @@ the Spark-free search/semantics.py core that the hot and embedded tiers
 share, so all tiers answer alike.
 
 Lifecycle of a postings-only query (every leaf a Term, Terms, Prefix,
-Wildcard, Range, Fuzzy, Phrase or SamePosition, under And / Or / Not /
-Should) — the reference's per-segment pass (SURVEY §3.2):
+Wildcard, Range, Fuzzy, Phrase, SamePosition or NgramSimilarity, under
+And / Or / Not / Should) — the reference's per-segment pass (SURVEY §3.2):
 
   compile  = driver-side: planner rewrites + multiterm expansion
              against the term dictionary + the GLOBAL df of every term
@@ -45,22 +45,28 @@ shard count counts a capped multiterm expansion's scored head only, not
 the unscored tail its pattern still matches.
 
 search_many() answers every postings-only query of a batch in the same
-single pass (each shard evaluates the whole batch). Trees that mix in
-docs-table leaves (AllDocs, Exists, NumericRange, GranularRange,
-Nested, NgramSimilarity, Cached, Field) keep the DataFrame plan below:
-a fused decode+score mapInArrow per leaf group, a union +
-groupBy(doc_id) boolean merge with the same leaf-order fold, and an
-anti-join against the delete mask.
+single pass (each shard evaluates the whole batch).
+
+The shard scan is the only reader of postings for scoring. A tree that
+mixes in docs-table leaves (AllDocs, Exists, NumericRange,
+GranularRange, Nested, Cached, Field) runs a DataFrame plan that reads
+only the docs table: the docs-table leaves, the Nested rollup, the
+Cached materialization and Field routing. Each of its postings-only
+subtrees is answered by the shard scan with k None (every match),
+scored with the boost it inherits; the postings-only children of one
+mixed And / Or, exclusions included, are the named queries of ONE
+scan. The children's rows meet in one groupBy(doc_id) — the same
+leaf-order fold as every tier — and an anti-join against the delete
+mask drops the deleted docs the docs-table leaves bring in.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import functools
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -77,16 +83,15 @@ RESULT_SCHEMA = T.StructType(
     ]
 )
 
-LEAF_RESULT_SCHEMA = T.StructType(
-    RESULT_SCHEMA.fields + [T.StructField("_leaf", T.IntegerType(), False)]
-)
-
 SHARD_SCHEMA = T.StructType(
     [T.StructField("query", T.StringType(), False)] + RESULT_SCHEMA.fields
 )
 
-# leaves the shard plan evaluates (besides positional ones)
-_SHARD_LEAVES = (ast.Empty, ast.Term, ast.Terms) + sem_.EXPANSION_LEAVES
+# leaves the shard plan evaluates (besides Phrase and SamePosition)
+_SHARD_LEAVES = (
+    (ast.Empty, ast.Term, ast.Terms, ast.NgramSimilarity)
+    + sem_.EXPANSION_LEAVES
+)
 
 # Query postings per doc-range shard. It trades latency and per-task
 # memory against CPU: a second shard never removes kernel CPU, it adds a
@@ -104,19 +109,6 @@ _SHARD_LEAVES = (ast.Empty, ast.Term, ast.Terms) + sem_.EXPANSION_LEAVES
 # kernel peaks at ~140 B per posting, so this also bounds a task to
 # ~140 MB.
 POSTINGS_PER_SHARD = 1_000_000
-
-
-@dataclass
-class PreparedLeaf:
-    """A leaf compiled against the index: a match predicate over the
-    postings `term` column plus per-term score weights (c0)."""
-
-    predicate: object  # Column
-    weights: dict[str, float]  # term -> c0 (0.0 => matched but unscored)
-    single_term: bool = False
-    # exact matched-term list when statically known (Term/Terms/Fuzzy):
-    # enables term-bucket partition pruning on a saved index
-    exact_terms: list | None = None
 
 
 class SearchEngine:
@@ -482,59 +474,6 @@ class SearchEngine:
         row = self.index.docs.agg(F.max("dl").alias("m")).collect()[0]
         return int(row["m"] or 0)
 
-    def _positional_scores(self, rows: DataFrame, keys: list[str]) -> DataFrame:
-        """(*keys, _c0, freq, dl) rows -> (*keys, score): the shared
-        score chain (semantics.score_expr) as a JVM expression, in
-        either dtype."""
-        score = sem_.score_expr(
-            self.sem.scorer_params(),
-            F.col("_c0"),
-            F.col("freq"),
-            F.col("dl"),
-            ColumnOps,
-        )
-        return rows.select(*keys, score.alias("score"))
-
-    def _prepare_leaf(self, node: ast.Node, boost: float) -> PreparedLeaf:
-        boost = boost * node.boost  # boost multiplies down the tree
-        col = F.col("term")
-        c0 = self.sem.c0
-        if isinstance(node, ast.Term):
-            dfs = self._term_dfs([node.term])
-            return PreparedLeaf(
-                predicate=col == node.term,
-                weights={node.term: c0(dfs[node.term], boost)},
-                single_term=True,
-                exact_terms=[node.term],
-            )
-        if isinstance(node, ast.Terms):
-            terms = list(dict.fromkeys(node.terms))
-            return PreparedLeaf(
-                predicate=col.isin(terms),
-                weights=self.sem.terms_weights(
-                    node, self._term_dfs(terms), boost
-                ),
-                exact_terms=terms,
-            )
-        if not isinstance(node, sem_.EXPANSION_LEAVES):
-            raise TypeError(f"not a leaf: {node}")
-        pred = self._leaf_predicate(node)
-        expanded, complete = self._leaf_expansion(node)
-        terms = [t for t, _ in expanded]
-        if pred is None:
-            pred = col.isin(terms) if terms else F.lit(False)
-        return PreparedLeaf(
-            predicate=pred,
-            weights={t: c0(d, boost) for t, d in expanded},
-            # expansion below the cap is COMPLETE: the leaf matches
-            # exactly these terms, unlocking bucket pruning + the
-            # decode-spread shuffle of the exact-term path
-            exact_terms=(
-                (terms or None) if isinstance(node, ast.Fuzzy)
-                else terms if complete else None
-            ),
-        )
-
     def _leaf_predicate(self, node: ast.Node):
         """The term-column predicate a Prefix/Wildcard/Range leaf
         matches by (None for Fuzzy: its expansion is its match set)."""
@@ -713,61 +652,18 @@ class SearchEngine:
     def _empty(self) -> DataFrame:
         return self._spark.createDataFrame([], RESULT_SCHEMA)
 
-    def _eval_leaf_df(self, leaf: PreparedLeaf) -> DataFrame:
-        """leaf -> (doc_id, score), one row per matching doc.
-
-        Decode + score run FUSED in one mapInArrow pass (the c0 weights
-        are a tiny closure dict; the score is semantics.score_expr over
-        numpy arrays) so only (doc_id, score)
-        ever crosses back to the JVM — the decoded-rows transfer was
-        the dominant query cost."""
-        if leaf.exact_terms is not None:
-            blocks = self.index.postings_for_terms(leaf.exact_terms)
-        else:
-            blocks = self.index.postings.filter(leaf.predicate)
-        slim = blocks.select("term", "n_docs", "docs", "dls")
-        if leaf.exact_terms is not None:
-            # narrow exact-term scans land in one bucket file — a tiny
-            # blob shuffle buys decode parallelism. Broad predicate
-            # leaves (prefix/wildcard/range, full matches()) already
-            # span many partitions; shuffling ALL their blobs would
-            # move most of the index, so they decode in place.
-            slim = slim.repartition(
-                self._spark.sparkContext.defaultParallelism
-            )
-        if leaf.single_term:
-            fused = _make_fused_scorer(
-                dict(leaf.weights), self.sem.scorer_params()
-            )
-            return slim.mapInArrow(fused, RESULT_SCHEMA)
-        # a doc's per-term scores fold in term order (every tier sums a
-        # multi-term leaf this way; unscored terms add 0.0 anywhere)
-        fused = _make_fused_scorer(
-            dict(leaf.weights),
-            self.sem.scorer_params(),
-            leaf_of={t: i for i, t in enumerate(sorted(leaf.weights))},
-        )
-        return (
-            slim.mapInArrow(fused, LEAF_RESULT_SCHEMA)
-            .groupBy("doc_id")
-            .agg(_fold_scores(False))
-        )
-
     def _eval(self, node: ast.Node, boost: float) -> DataFrame:
         """node -> (doc_id, score) DataFrame, unique per doc."""
         if isinstance(node, ast.Empty):
             return self._empty()
+        if self._shard_servable(node):
+            # a postings-only subtree of a mixed tree: every match
+            rows, _ = self._shard_scan({"": node}, None, boosts={"": boost})
+            return rows.select("doc_id", "score")
         if isinstance(node, ast.AllDocs):
             return self.index.docs.select(
                 "doc_id",
                 F.lit(self.sem.const_score(node.boost * boost)).alias("score"),
-            )
-        if isinstance(node, (ast.Phrase, ast.SamePosition)):
-            expand = lambda p: self._leaf_expansion(p)[0]  # noqa: E731
-            return self._eval_positional(
-                [sem_.slot_candidates(p, self._term_dfs, expand) for p in node.terms],
-                sem_.slot_offsets(node),
-                node.boost * boost,
             )
         if isinstance(node, ast.Exists):
             cols = sem_.exists_columns(node, self.index.docs.columns)
@@ -839,186 +735,66 @@ class SearchEngine:
             return eng._eval(node.child, boost * node.boost)
         if isinstance(node, ast.Nested):
             return self._eval_nested(node, boost)
-        if isinstance(node, ast.NgramSimilarity):
-            return self._eval_ngram_similarity(node, boost)
         if isinstance(node, (ast.And, ast.Or)):
             return self._eval_bool(node, boost)
         if isinstance(node, ast.Not):
             raise ValueError("Not is only valid inside And/Or")
         if isinstance(node, ast.Should):
             raise ValueError("Should is only valid as a child of And")
-        leaf = self._prepare_leaf(node, boost)
-        return self._eval_leaf_df(leaf)
+        raise TypeError(f"unsupported query node: {node!r}")
 
     def _eval_bool(self, node, boost: float) -> DataFrame:
+        """A mixed And/Or: every postings-only child is one named query
+        of ONE shard scan, every other child its own plan; the rows meet
+        in one groupBy(doc_id) that merges the positives' scores and
+        drops the docs an exclusion matched."""
         boost = boost * node.boost
-        # Should children score like any positive but never count toward
-        # `required` — a per-row _leaf flag keeps the fused-scan fold
-        # applicable to them
         positives, optional_idx, negatives, required = sem_.bool_parts(node)
-        # fold all plain-Term children into ONE fused scan: a single
-        # postings read + decode+score pass emits (doc_id, score, _leaf)
-        # for every folded term — n-term booleans cost one Python stage
-        # instead of n (duplicated terms fall back to per-leaf eval so
-        # each child keeps its own leaf id)
-        term_children = [
-            (i, c) for i, c in enumerate(positives) if isinstance(c, ast.Term)
-        ]
-        seen_terms = [c.term for _, c in term_children]
-        fold = term_children if len(set(seen_terms)) == len(seen_terms) else []
-        folded_idx = {i for i, _ in fold}
+        # leaf ids: the positives in order, then the exclusions
+        children = positives + negatives
+        boosts = [boost] * len(positives) + [1.0] * len(negatives)
+        scan = {
+            str(i): c for i, c in enumerate(children) if self._postings_only(c)
+        }
         parts = []
-        if fold:
-            dfs = self._term_dfs([c.term for _, c in fold])
-            weights = {
-                c.term: self.sem.c0(dfs[c.term], boost * c.boost) for _, c in fold
-            }
-            leaf_of = {c.term: i for i, c in fold}
-            blocks = self.index.postings_for_terms(list(weights))
-            slim = blocks.select("term", "n_docs", "docs", "dls").repartition(
-                self._spark.sparkContext.defaultParallelism
+        if scan:
+            rows, _ = self._shard_scan(
+                scan, None, boosts={q: boosts[int(q)] for q in scan}
             )
-            fused = _make_fused_scorer(
-                weights, self.sem.scorer_params(), leaf_of=leaf_of
-            )
-            parts.append(slim.mapInArrow(fused, LEAF_RESULT_SCHEMA))
-        for i, c in enumerate(positives):
-            if i in folded_idx and fold:
-                continue
-            parts.append(
-                self._eval(c, boost).withColumn(
-                    "_leaf", F.lit(i).cast("int")
-                )
-            )
-        if not parts:
-            return self._empty()
-        unioned = parts[0]
-        for p in parts[1:]:
-            unioned = unioned.unionByName(p)
-        # every leaf emits each doc at most once, so count == distinct
-        # leaf count (countDistinct would force a dedup expansion).
-        # Child scores merge per ScoreMergeType (scorer.hpp:224-235):
-        # sum (default — the fixed leaf-order fold, float32 in parity
-        # mode: the reference sums in child iterator order), max
-        # (dismax/best-field), min, or noop (score untouched ->
-        # constant 0).
+            parts.append(rows.select(
+                "doc_id", "score", F.col("query").cast("int").alias("_leaf")
+            ))
+        for i, c in enumerate(children):
+            if str(i) not in scan:
+                parts.append(self._eval(c, boosts[i]).withColumn("_leaf", F.lit(i)))
+        unioned = functools.reduce(DataFrame.unionByName, parts)
+        # every leaf emits each doc at most once, so counting rows counts
+        # leaves; optional (Should) leaves score but never count toward
+        # `required`. Child scores merge per ScoreMergeType
+        # (scorer.hpp:224-235): sum (default — the fixed leaf-order
+        # fold, float32 in parity mode: the reference sums in child
+        # iterator order), max (dismax/best-field), min, or noop (score
+        # untouched -> constant 0).
+        leaf = F.col("_leaf")
+        positive = leaf < len(positives)
         merge = node.merge_type
         if merge in ("max", "min"):
-            score_agg = getattr(F, merge)("score").alias("score")
+            score = F.when(positive, F.col("score"))
+            score_agg = getattr(F, merge)(score).alias("score")
         else:
-            score_agg = _fold_scores(self.sem.f32)
-        if optional_idx:
-            # optional (Should) leaves score but don't count toward
-            # `required`: a 0/1 flag per row, summed instead of count
-            cnt_agg = F.sum(
-                F.when(
-                    F.col("_leaf").isin([int(i) for i in optional_idx]), 0
-                ).otherwise(1)
-            ).alias("_cnt")
-        else:
-            cnt_agg = F.count(F.lit(1)).alias("_cnt")
+            score_agg = _fold_scores(self.sem.f32, where=positive)
+        counted = positive & ~leaf.isin(sorted(optional_idx))
         merged = (
             unioned.groupBy("doc_id")
-            .agg(score_agg, cnt_agg)
-            .filter(F.col("_cnt") >= required)
+            .agg(
+                score_agg,
+                F.sum(counted.cast("int")).alias("_cnt"),
+                F.bool_or(~positive).alias("_excl"),
+            )
+            .filter((F.col("_cnt") >= required) & ~F.col("_excl"))
         )
-        if merge == "noop":
-            merged = merged.select("doc_id", F.lit(0.0).alias("score"))
-        else:
-            merged = merged.select("doc_id", "score")
-        if negatives:
-            excl = None
-            for neg in negatives:
-                e = self._eval(neg, 1.0).select("doc_id")
-                excl = e if excl is None else excl.unionByName(e)
-            merged = merged.join(excl.distinct(), "doc_id", "left_anti")
-        return merged
-
-    def _eval_positional(
-        self,
-        slots: list[list[tuple[str, int]]],
-        offsets: list[int],
-        boost: float,
-    ) -> DataFrame:
-        """Positional conjunction: match positions p where SOME candidate
-        term of slot_i occurs at p + offsets[i] for every i. Phrase =
-        offsets 0..m-1 (reference phrase_iterator.hpp leapfrog);
-        same-position = all-zero offsets (same_position_filter.cpp);
-        variadic slots carry >1 candidate (phrase_filter.cpp:75-121).
-        The match count feeds the scorer with the summed per-slot c0,
-        each slot's df being the SUM over its matched variants — the
-        reference's visitor collects every matched term into the same
-        stats slot (phrase_query.cpp composes per-part scorers over the
-        shared phrase frequency)."""
-        if not self.index.with_positions:
-            raise ValueError("index was built without positions")
-        weight = self.sem.phrase_weight(slots, boost)
-        if weight is None:
-            return self._empty()  # a slot with no live terms
-        clean, c0_sum = weight
-        all_terms = list(dict.fromkeys(t for s in clean for t in s))
-        decoded = self.index.decoded_postings(
-            terms=all_terms, with_positions=True
-        )
-        # fully declarative position leapfrog in ONE decode pass + ONE
-        # shuffle: each decoded (term, doc) row fans out to the slot(s)
-        # the term serves (a literal map — a term can appear in several
-        # phrase positions), positions are pre-shifted by the slot's
-        # offset, then one groupBy(doc_id) builds every slot's distinct
-        # position set as a conditional aggregate and phrase freq =
-        # |∩_i (P_i − offset_i)| via JVM array_intersect. The previous
-        # shape ran the Python decode once PER SLOT and chained (m−1)
-        # doc_id joins — m× the dominant JVM↔Python transfer cost and
-        # m−1 extra shuffles (the round-2 Phrase bench regression).
-        m = len(clean)
-        slot_of: dict[str, list[int]] = {}
-        for i, s in enumerate(clean):
-            for t in s:
-                slot_of.setdefault(t, []).append(i)
-        slot_map = F.map_from_arrays(
-            F.array(*[F.lit(t) for t in slot_of]),
-            F.array(
-                *[
-                    F.array(*[F.lit(i) for i in idxs])
-                    for idxs in slot_of.values()
-                ]
-            ),
-        )
-        off_arr = F.array(*[F.lit(int(o)) for o in offsets])
-        shift = F.element_at(off_arr, F.col("_slot") + 1)
-        rows = decoded.select(
-            "doc_id",
-            "dl",
-            F.explode(F.element_at(slot_map, F.col("term"))).alias("_slot"),
-            "positions",
-        ).select(
-            "doc_id",
-            "dl",
-            "_slot",
-            # NB: a 2-arg lambda would make F.transform pass the element
-            # INDEX as the second arg — reference the outer shift column
-            F.transform(F.col("positions"), lambda x: x - shift).alias("_sp"),
-        )
-        grouped = rows.groupBy("doc_id").agg(
-            *[
-                F.array_distinct(
-                    F.flatten(
-                        F.collect_list(
-                            F.when(F.col("_slot") == i, F.col("_sp"))
-                        )
-                    )
-                ).alias(f"_p{i}")
-                for i in range(m)
-            ],
-            F.min("dl").alias("dl"),
-        )
-        inter = F.col("_p0")
-        for i in range(1, m):
-            inter = F.array_intersect(inter, F.col(f"_p{i}"))
-        freq_df = grouped.select(
-            "doc_id", F.size(inter).alias("freq"), "dl", F.lit(c0_sum).alias("_c0")
-        ).filter(F.col("freq") > 0)
-        return self._positional_scores(freq_df, ["doc_id"])
+        score = F.lit(0.0) if merge == "noop" else F.col("score")
+        return merged.select("doc_id", score.alias("score"))
 
     def _eval_granular(
         self, node: "ast.GranularRange", boost: float
@@ -1131,78 +907,11 @@ class SearchEngine:
         # parents must be actual docs of this index
         return out.join(self.index.docs.select("doc_id"), "doc_id", "left_semi")
 
-    def _eval_ngram_similarity(self, node: ast.NgramSimilarity, boost: float) -> DataFrame:
-        """by_ngram_similarity (ngram_similarity_filter.hpp:33-49,
-        ngram_similarity_query.cpp): candidate docs hold >= ceil(t*m)
-        distinct query ngrams (min-match prefilter over the postings —
-        cheap, no positions); the exact longest-common-subsequence of
-        (query ngram sequence, doc ngram stream) then runs vectorized
-        per candidate in a pandas UDF. similarity = LCS/m; match iff
-        similarity >= threshold; score = boost * similarity."""
-        if not self.index.with_positions:
-            raise ValueError("index was built without positions")
-        boost = boost * node.boost
-        m = len(node.terms)
-        if m == 0:
-            return self._empty()
-        q_codes, tcode, min_match = sem_.ngram_codes(node)
-        dfs = self._term_dfs(list(tcode))
-        present = [t for t in tcode if dfs[t] > 0]
-        if not present:
-            return self._empty()
-        decoded = self.index.decoded_postings(terms=present, with_positions=True)
-        # sound prefilter (semantics.ngram_codes): the candidate needs
-        # min_match doc occurrences of query ngrams (occurrence count,
-        # not distinct terms — the query sequence may repeat an ngram)
-        cand = (
-            decoded.groupBy("doc_id")
-            .agg(
-                F.sum(F.size("positions")).alias("_nocc"),
-                F.collect_list(F.struct("term", "positions")).alias("_plists"),
-            )
-            .filter(F.col("_nocc") >= min_match)
-        )
-        threshold = node.threshold
-
-        def lcs_ratio(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    yield pd.DataFrame({"doc_id": [], "_sim": []})
-                    continue
-                # flatten every doc's (term, positions) lists into one
-                # occurrence-level array triple (light list ops only)
-                ridx_p, pos_p, code_p = [], [], []
-                for ri, plists in enumerate(pdf["_plists"]):
-                    for item in plists:
-                        ps = np.asarray(item["positions"], dtype=np.int64)
-                        ridx_p.append(np.full(ps.size, ri, np.int64))
-                        pos_p.append(ps)
-                        code_p.append(
-                            np.full(ps.size, tcode[item["term"]], np.int32)
-                        )
-                ridx = np.concatenate(ridx_p)
-                order = np.lexsort((np.concatenate(pos_p), ridx))
-                codes = np.concatenate(code_p)[order]
-                lens = np.bincount(ridx[order], minlength=n)
-                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                sims = sem_.lcs_lengths(codes, starts, lens, q_codes) / m
-                keep = sims >= threshold
-                yield pd.DataFrame(
-                    {"doc_id": pdf["doc_id"].to_numpy()[keep], "_sim": sims[keep]}
-                )
-
-        sim_df = cand.mapInPandas(lcs_ratio, "doc_id long, _sim double")
-        return sim_df.select(
-            "doc_id", (F.lit(boost) * F.col("_sim")).alias("score")
-        )
-
     # ---------------------------------------------------- the shard plan
 
     def _shard_servable(self, node: ast.Node) -> bool:
         """A postings-only tree the shard plan evaluates; a root Not or
-        Should, and positional leaves on an index without positions,
-        keep the DataFrame plan (which raises for them)."""
+        Should keeps the DataFrame plan (which raises for it)."""
         if isinstance(node, (ast.Not, ast.Should)):
             return False
         return self._postings_only(node)
@@ -1211,7 +920,7 @@ class SearchEngine:
         if isinstance(node, _SHARD_LEAVES):
             return True
         if isinstance(node, (ast.Phrase, ast.SamePosition)):
-            return bool(self.index.with_positions) and all(
+            return all(
                 isinstance(p, (str, ast.Terms) + sem_.EXPANSION_LEAVES)
                 for p in node.terms
             )
@@ -1237,8 +946,12 @@ class SearchEngine:
             given[node] = self._leaf_expansion(node)
             if not slot and not given[node][1]:
                 preds.append(self._leaf_predicate(node))
-        elif isinstance(node, (ast.Phrase, ast.SamePosition)):
-            for p in node.terms:
+        elif isinstance(
+            node, (ast.Phrase, ast.SamePosition, ast.NgramSimilarity)
+        ):
+            if not self.index.with_positions:
+                raise ValueError("index was built without positions")
+            for p in node.terms:  # an n-gram is a plain term
                 self._gather(p, plain, given, preds, slot=True)
             return True
         elif isinstance(node, (ast.Not, ast.Should)):
@@ -1250,12 +963,17 @@ class SearchEngine:
         return False
 
     def _shard_scan(
-        self, queries: dict, k: int | None, mode: str = "exhaustive"
+        self,
+        queries: dict,
+        k: int | None,
+        mode: str = "exhaustive",
+        boosts: dict | None = None,
     ) -> tuple[DataFrame, int]:
         """(query, doc_id, score) rows of every shard's answer to each
         normalized postings-only query — its top k, or every match when
         k is None — and the shard count: one mapInArrow over the
-        queries' posting blocks (see the module docstring)."""
+        queries' posting blocks (see the module docstring). `boosts`
+        maps a query name to the boost it inherits (1.0 when absent)."""
         plain: set = set()
         given: dict = {}
         preds: list = []
@@ -1286,6 +1004,7 @@ class SearchEngine:
         plan = _hot.ShardPlan(
             self.sem.portable(),
             dict(queries),
+            dict(boosts or {}),
             k,
             mode,
             dfs,
@@ -1385,64 +1104,21 @@ def _order_cols(order) -> list:
     return [getattr(F, d)(c) for c, d in order]
 
 
-class ColumnOps:
-    """semantics.NumpyOps over Spark Columns, so the score chains run as
-    JVM expressions: a float op float Column is a Java float op, and
-    `/` (which Spark takes in doubles) is rounded back by f32."""
-
-    f64 = staticmethod(lambda c: c.cast("double"))
-    f32 = staticmethod(lambda c: c.cast("float"))
-    lit32 = staticmethod(lambda x: F.lit(float(np.float32(x))).cast("float"))
-    sqrt = staticmethod(F.sqrt)
-
-
-def _fold_scores(f32: bool, key: str = "_leaf"):
-    """The Spark form of semantics.fold_sum: a group's scores folded
-    left in `key` order (array_sort on the (key, score) structs pins the
-    order under the shuffle), accumulating in float32 in parity mode."""
+def _fold_scores(f32: bool, key: str = "_leaf", where=None):
+    """The Spark form of semantics.fold_sum: a group's scores (of the
+    rows `where` holds, when given) folded left in `key` order
+    (array_sort on the (key, score) structs pins the order under the
+    shuffle), accumulating in float32 in parity mode."""
     t = "float" if f32 else "double"
+    item = F.struct(key, "score")
+    if where is not None:
+        item = F.when(where, item)  # collect_list drops the nulls
     return (
         F.aggregate(
-            F.array_sort(F.collect_list(F.struct(key, "score"))),
+            F.array_sort(F.collect_list(item)),
             F.lit(0.0).cast(t),
             lambda acc, x: (acc + x["score"].cast(t)).cast(t),
         )
         .cast("double")
         .alias("score")
     )
-
-
-def _make_fused_scorer(weights: dict, params: tuple, leaf_of: dict | None = None):
-    """decode + score in one pass. With `leaf_of` (term -> boolean-child
-    index) the output gains a _leaf column so one scan serves every
-    plain-Term child of a boolean node."""
-
-    kernel = sem_.make_score_kernel(params)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from iresearch_spark.index.codec import decode_batch_arrays
-
-        for batch in batches:
-            d = decode_batch_arrays(batch, False)
-            if d is None:
-                continue
-            dict_terms = d["term_dict"].to_pylist()
-            c0 = np.fromiter(
-                (weights.get(t, 0.0) for t in dict_terms),
-                dtype=np.float64,
-                count=len(dict_terms),
-            )
-            score = kernel(c0[d["row_codes"]], d["freqs"], d["dls"])
-            arrays = [pa.array(d["doc_ids"]), pa.array(score)]
-            names = ["doc_id", "score"]
-            if leaf_of is not None:
-                leaf_codes = np.fromiter(
-                    (leaf_of.get(t, -1) for t in dict_terms),
-                    dtype=np.int32,
-                    count=len(dict_terms),
-                )
-                arrays.append(pa.array(leaf_codes[d["row_codes"]]))
-                names.append("_leaf")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return run

@@ -21,9 +21,13 @@ floor the pruning shows up directly as wall-clock.
 
 The pinned data and every cache over it live in one HotState per
 commit; HotEngine holds a single reference to it, which a query reads
-once and refresh() swaps. The cluster runs the SAME evaluator: each
-doc-range shard of its one-job query plan builds a HotState from its
-posting blocks (`ShardPlan`, `shard_kernel`).
+once and refresh() swaps. The cluster scores postings with the SAME
+evaluator and no other: each doc-range shard of its one-job scan
+builds a HotState from its posting blocks (`ShardPlan`,
+`shard_kernel`) and answers the query — or, in a tree that mixes in
+docs-table leaves, each postings-only subtree under the boost it
+inherits — while the cluster's DataFrame plan reads only the docs
+table.
 
 Multi-term leaves (Prefix / Wildcard / Range / Fuzzy) are served too:
 the hot segment holds the FULL term dictionary in memory, so expansion
@@ -623,11 +627,10 @@ class HotState:
         return expanded, complete
 
     def _expansion_postings(self, node, boost, keep=None):
-        """Scored multiterm leaf -> (doc_ids, scores): the cluster's
-        predicate-scan semantics — EVERY matched term's docs are rows
-        (capped expansions leave beyond-cap terms matched at weight
-        0.0, executor._make_fused_scorer's weights.get(t, 0.0)), scored
-        terms carry c0(df, eff_boost)."""
+        """Scored multiterm leaf -> (doc_ids, scores): EVERY matched
+        term's docs are rows (a capped expansion leaves its beyond-cap
+        terms matched at weight 0.0), scored terms carry c0(df,
+        eff_boost)."""
         expanded, matched, _complete = self._hot_expansion(node)
         eff = boost * node.boost
         w = {t: self.sem.c0(df, eff) for t, df in expanded}
@@ -810,14 +813,13 @@ class HotState:
         return self._apply_deletes(up[live], us[live])
 
     def _eval_ngram_sim_hot(self, node, boost):
-        """by_ngram_similarity in-memory — the cluster
-        _eval_ngram_similarity semantics: candidate docs hold >=
-        ceil(threshold*m) occurrences of the query's (present) ngrams;
-        per candidate, LCS of (query ngram sequence, doc's
-        position-ordered ngram stream); similarity = LCS/m, match iff
-        >= threshold, score = boost * similarity (plain f64 multiply,
-        exactly the cluster's lit(boost) * _sim — never rounded
-        through Semantics.const_score)."""
+        """by_ngram_similarity (ngram_similarity_filter.hpp:33-49):
+        candidate docs hold >= ceil(threshold*m) occurrences of the
+        query's (present) ngrams; per candidate, LCS of (query ngram
+        sequence, doc's position-ordered ngram stream); similarity =
+        LCS/m, match iff >= threshold, score = boost * similarity (a
+        plain f64 multiply, never rounded through
+        Semantics.const_score)."""
         if not self._with_positions:
             raise ValueError("index was built without positions")
         empty = (np.empty(0, np.int64), np.empty(0, np.float64))
@@ -904,17 +906,22 @@ class HotState:
         d, s = self.answer(norm, k, mode)
         return list(zip(d.tolist(), s.tolist()))
 
-    def answer(self, norm, k: int | None, mode: str = "exhaustive"):
+    def answer(
+        self, norm, k: int | None, mode: str = "exhaustive", boost: float = 1.0
+    ):
         """(doc_ids, scores) of a normalized servable query: every match
         when k is None, else the top k by (score desc, doc_id asc),
-        block-max WAND-pruned when mode="wand" and the shape allows."""
+        block-max WAND-pruned when mode="wand" and the shape allows.
+        `boost` is the boost a subtree inherits from its tree: a cluster
+        shard answers a mixed tree's postings-only subtree this way, for
+        every match (k None)."""
         if k is not None and mode == "wand":
             terms = self.sem.wand_terms(norm, self._expand_complete)
             if terms is not None:
                 out = self._wand(norm, terms, k)
                 if out is not None:
                     return out
-        d, s = self._eval(norm, 1.0, None)
+        d, s = self._eval(norm, boost, None)
         if k is None:
             return d, s
         top = sem_.topk_order(d, s, k)
@@ -1111,8 +1118,7 @@ class HotState:
         return self._score_terms(weights, weights, keep)
 
     def _eval(self, node, boost, keep):
-        """(doc_ids, scores) for a normalized servable node — the
-        executor's _eval/_eval_bool semantics in numpy."""
+        """(doc_ids, scores) for a normalized servable node."""
         if isinstance(node, (ast.Term, ast.Terms)):
             d, s = self._leaf_postings(node, boost, keep)
             return self._apply_deletes(d, s)
@@ -1120,7 +1126,7 @@ class HotState:
             d, s = self._expansion_postings(node, boost, keep)
             return self._apply_deletes(d, s)
         if isinstance(node, (ast.Phrase, ast.SamePosition)):
-            d, s = self._eval_positional(node, boost)
+            d, s = self._positional_postings(node, boost)
             return self._apply_deletes(d, s)
         if isinstance(node, ast.Empty):
             return np.empty(0, np.int64), np.empty(0, np.float64)
@@ -1204,11 +1210,10 @@ class HotState:
             return ud, us
         raise TypeError(f"unservable node {node!r}")  # pragma: no cover
 
-    def _eval_positional(self, node, boost):
-        """Phrase / SamePosition incl. VARIADIC slots — the cluster
-        _eval_positional semantics in numpy: per doc, phrase freq =
-        |intersection over slots of (union of the slot's candidate
-        positions − offset_i)|, scored with the SUMMED per-slot c0,
+    def _positional_postings(self, node, boost):
+        """Phrase / SamePosition incl. VARIADIC slots: per doc, phrase
+        freq = |intersection over slots of (union of the slot's
+        candidate positions − offset_i)|, scored with the SUMMED per-slot c0,
         each slot's df being the SUM over its matched variants
         (phrase_query.cpp composes per-part scorers over the shared
         phrase frequency)."""
@@ -1539,7 +1544,8 @@ class WandStats:
 class ShardPlan:
     """A compiled cluster query batch: everything a doc-range shard
     needs besides its posting blocks. `queries` maps names to
-    normalized postings-only trees; `dfs`, `expansions` and `deleted`
+    normalized postings-only trees and `boosts` names to the boost a
+    query inherits (1.0 when absent); `dfs`, `expansions` and `deleted`
     are the driver's GLOBAL df per touched term, multiterm expansions
     ({node: (expansion, complete)}) and sorted deleted doc ids. Shard s
     covers doc ids [base + s * width, base + (s + 1) * width), the first
@@ -1548,6 +1554,7 @@ class ShardPlan:
 
     sem: object
     queries: dict
+    boosts: dict
     k: int | None
     mode: str
     dfs: dict
@@ -1598,7 +1605,7 @@ def shard_kernel(plan: ShardPlan):
         names, docs, scores = [], [], []
         for name, node in plan.queries.items():
             st.last_wand_stats = None
-            d, s = st.answer(node, plan.k, plan.mode)
+            d, s = st.answer(node, plan.k, plan.mode, plan.boosts.get(name, 1.0))
             names.append(name)
             docs.append(d)
             scores.append(s)

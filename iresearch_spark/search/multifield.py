@@ -12,10 +12,10 @@ EXACTLY like the reference's conjunction/disjunction over per-field
 filters: per-field BM25 (field-local df/N/avg_dl/norms), merged by
 kSum/kMax/kMin/kNoop.
 
-WAND and the fused batch paths remain per-field fast paths: a query
-whose root is a single Field node is unwrapped onto that field's
-engine, so `search(Field("body", Or(terms)), mode="wand")` prunes with
-body's block maxima. Mixed-field roots run the exhaustive plan (the
+WAND and the one-job shard scan stay per field: a query whose root
+is a single Field node is unwrapped onto that field's engine, so
+`search(Field("body", Or(terms)), mode="wand")` prunes with body's
+block maxima. Mixed-field roots run the exhaustive plan (the
 reference equally has no cross-field wanderator)."""
 
 from __future__ import annotations
@@ -41,7 +41,7 @@ class MultiFieldEngine:
 
     def _route(self, query: ast.Node) -> tuple[SearchEngine, ast.Node]:
         """A single-Field root runs NATIVELY on that field's engine —
-        keeps WAND / fused-scan / batch fast paths per field."""
+        keeps its WAND and shard scan per field."""
         return route_field(query, self.engines, self.default)
 
     def search(
@@ -57,7 +57,7 @@ class MultiFieldEngine:
     def search_many(self, queries: dict, k: int = 10, mode: str = "exhaustive"):
         """Batched multi-query throughput; queries may mix fields. All
         single-Field-rooted queries of the SAME field batch on that
-        field's shared fused scan; the rest run on the default engine."""
+        field's shared shard scan; the rest run on the default engine."""
         by_field: dict[str, dict] = {}
         for name, q in queries.items():
             eng, qq = self._route(q)

@@ -5,7 +5,7 @@ The reference is a C++ library whose filters are built programmatically
 This module provides that layer for the Spark engine: the familiar
 Lucene query-string subset, parsed into the SAME AST nodes the
 programmatic API uses (so parsed queries hit every tested execution
-path — WAND, fused scans, multi-field routing — with zero new executor
+path — WAND, shard scans, multi-field routing — with zero new executor
 code).
 
 Supported syntax:

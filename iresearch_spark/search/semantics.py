@@ -40,26 +40,6 @@ EXPANSION_LEAVES = (ast.Prefix, ast.Wildcard, ast.Range, ast.Fuzzy)
 # ------------------------------------------------------------- scoring
 
 
-class NumpyOps:
-    """The four numeric ops the score chains below are written in, over
-    numpy arrays. A tier with another numeric type supplies the same
-    four (the cluster: Spark Columns, evaluated in the JVM), so the
-    chains are the one definition of the score in every tier."""
-
-    @staticmethod
-    def f64(x):
-        """x as float64."""
-        return np.asarray(x, np.float64)
-
-    @staticmethod
-    def f32(x):
-        """x rounded to float32."""
-        return np.asarray(x, np.float32)
-
-    lit32 = staticmethod(np.float32)  # a float32 constant
-    sqrt = staticmethod(np.sqrt)  # square root of a float64
-
-
 class Semantics:
     """Scoring and expansion rules bound to one field's statistics.
 
@@ -169,13 +149,13 @@ class Semantics:
         """(c0, freqs, dls) -> float64 scores over numpy arrays (see
         score_expr)."""
         if self._kernel is None:
-            self._kernel = make_score_kernel(self.scorer_params())
+            self._kernel = functools.partial(score_expr, self.scorer_params())
         return self._kernel
 
-    def g(self, freqs, dls, o=NumpyOps):
+    def g(self, freqs, dls):
         """g(tf, dl) in float64 (see g_expr) — the WAND bound (float32
         scores can exceed it by an ulp; theta_eff absorbs that)."""
-        return g_expr(self._g_params(), freqs, dls, o)
+        return g_expr(self._g_params(), freqs, dls)
 
     def block_g_ub(self, tf, dl, offsets, valid, max_freq, min_dl):
         """Per-block upper bound on g(tf, dl) — the max over the block's
@@ -320,28 +300,28 @@ class Semantics:
         }
 
 
-def g_expr(params: tuple, freq, dl, o=NumpyOps):
+def g_expr(params: tuple, freq, dl):
     """The per-posting factor g(tf, dl) with c0 factored out, in float64
     — the float64 score is c0 * g, and g bounds WAND blocks in both
     dtypes. `params` is Semantics.scorer_params() (its first six
     entries suffice)."""
     kind, k, b, avg_dl, with_norms, norm_mode = params[:6]
-    freq, dl = o.f64(freq), o.f64(dl)
+    freq, dl = np.asarray(freq, np.float64), np.asarray(dl, np.float64)
     if kind == "bm25":
         if norm_mode == "legacy":
             # old-style Norm (bm25.hpp:29-46): tf = sqrt(freq),
             # |doc| = sqrt(dl) (the stored 1/sqrt(dl) inverted)
-            freq, dl = o.sqrt(freq), o.sqrt(dl)
+            freq, dl = np.sqrt(freq), np.sqrt(dl)
         c1 = k * (1.0 - b) + (k * b / avg_dl if avg_dl else 0.0) * dl
         return freq / (c1 + freq)
-    s = o.sqrt(freq)
+    s = np.sqrt(freq)
     if with_norms:
-        s = s / o.sqrt(dl)
+        s = s / np.sqrt(dl)
     return s
 
 
-def score_expr(params: tuple, c0, freq, dl, o=NumpyOps):
-    """score(c0, tf, dl) as float64.
+def score_expr(params: tuple, c0, freq, dl):
+    """score(c0, tf, dl) as float64 over numpy arrays.
 
     float64 (default): c0 * g(tf, dl) — algebraically the reference
     formula, evaluated in doubles for the DuckDB oracle.
@@ -350,43 +330,45 @@ def score_expr(params: tuple, c0, freq, dl, o=NumpyOps):
     (itself a transcription of bm25.cpp:198-365); see the scorers
     module docstring for the map. A square root or quotient taken in
     float64 and rounded once to float32 equals the float32 operation
-    (a double carries more than twice a float's precision), so `o` may
-    compute those in doubles.
+    (a double carries more than twice a float's precision), so the
+    square roots below run in doubles.
     """
     (kind, k, b, avg_dl, with_norms, norm_mode, dtype, n_docs, ttf,
      tiny) = params
     if dtype != "float32":
-        return c0 * g_expr(params, freq, dl, o)
-    f, one = o.f32, o.lit32(1.0)
+        return c0 * g_expr(params, freq, dl)
+
+    def f(x):  # x rounded to float32
+        return np.asarray(x, np.float32)
+
+    def f64(x):
+        return np.asarray(x, np.float64)
+
+    one = np.float32(1.0)
     c0 = f(c0)
     if kind == "tfidf":
-        s = f(c0 * f(o.sqrt(o.f64(f(freq)))))
+        s = f(c0 * f(np.sqrt(f64(f(freq)))))
         if with_norms:
-            s = f(s * f(one / f(o.sqrt(o.f64(dl)))))
-        return o.f64(s)
+            s = f(s * f(one / f(np.sqrt(f64(dl)))))
+        return f64(s)
     if k == 0.0:  # BM1: constant per term
-        return o.f64(c0)
+        return f64(c0)
     if b == 0.0:  # BM15: no norm feature at all (tf = freq)
         tf = f(freq)
-        return o.f64(f(c0 - f(c0 / f(one + f(tf / o.lit32(k))))))
+        return f64(f(c0 - f(c0 / f(one + f(tf / np.float32(k))))))
     if norm_mode == "legacy":
-        tf = f(o.sqrt(o.f64(f(freq))))
-        stored = f(one / f(o.sqrt(o.f64(dl))))
+        tf = f(np.sqrt(f64(f(freq))))
+        stored = f(one / f(np.sqrt(f64(dl))))
         nrm = f(one / stored)
     else:
         tf, nrm = f(freq), f(dl)
     nc, nl = f32_stats(k, b, n_docs, ttf)
-    c1 = f(o.lit32(nc) + f(o.lit32(nl) * nrm))
+    c1 = f(np.float32(nc) + f(np.float32(nl) * nrm))
     if tiny and norm_mode != "legacy":
         # kNorm2Tiny: inverse-norm cache path (bm25.cpp:348-352)
         inv_c1 = f(one / c1)
-        return o.f64(f(c0 - f(c0 / f(one + f(tf * inv_c1)))))
-    return o.f64(f(c0 - f(f(c0 * c1) / f(c1 + tf))))
-
-
-def make_score_kernel(params: tuple):
-    """(c0_row, freqs, dls) -> float64 scores over numpy arrays."""
-    return functools.partial(score_expr, params)
+        return f64(f(c0 - f(c0 / f(one + f(tf * inv_c1)))))
+    return f64(f(c0 - f(f(c0 * c1) / f(c1 + tf))))
 
 
 # ----------------------------------------------------------- expansion
@@ -1011,8 +993,8 @@ def exists_columns(node, columns) -> list[str]:
 
 def route_field(query, by_field: dict, default):
     """(target, query) of a multi-field engine: a single-Field root runs
-    NATIVELY on that field's engine (keeping its WAND and fused fast
-    paths) with its boost folded onto the child; any other root runs on
+    NATIVELY on that field's engine (keeping its WAND and shard scan)
+    with its boost folded onto the child; any other root runs on
     the default field's engine."""
     if not isinstance(query, ast.Field):
         return default, query

@@ -85,7 +85,7 @@ def main():
         "--batched",
         action="store_true",
         help="answer the whole task set with one search_many job "
-        "(shared fused scans; the serving-throughput mode) instead of "
+        "(one shared shard scan; the serving-throughput mode) instead of "
         "one job per task",
     )
     ap.add_argument(

@@ -21,7 +21,7 @@ def _lcs_classic(q, s):
 
 
 def _lcs_vectorized(q, s):
-    # the formulation used in executor._eval_ngram_similarity
+    # the formulation of semantics.lcs_lengths
     stream = np.asarray(s)
     prev = np.zeros(stream.size + 1, dtype=np.int32)
     cur = np.empty_like(prev)

@@ -8,8 +8,7 @@ scored_terms_limit cap; always true for Fuzzy) contributes its
 re-evaluates the ORIGINAL query, so group semantics (And counts,
 min_match, Not) are preserved. An expansion that HIT the cap keeps
 the pattern predicate authoritative over unscored extra terms, so it
-falls back to the exhaustive plan — eligibility mirrors
-PreparedLeaf.exact_terms.
+falls back to the exhaustive plan (Semantics.wand_leaf_boosts).
 
 Differential: mode="wand" must be result-identical to exhaustive for
 every shape, both with the adaptive shard count and with the query

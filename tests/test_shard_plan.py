@@ -15,12 +15,16 @@ from iresearch_spark.index.builder import build_index
 from iresearch_spark.index.model import InvertedIndex
 from iresearch_spark.search import (
     And,
+    Exists,
     Fuzzy,
     Nested,
+    NgramSimilarity,
     Not,
+    NumericRange,
     Or,
     Phrase,
     Prefix,
+    SamePosition,
     SearchEngine,
     Should,
     Term,
@@ -208,18 +212,21 @@ def test_wand_stats_sum_over_shards(spark, saved, monkeypatch):
 @pytest.fixture(scope="module")
 def nested_saved(spark, tmp_path_factory):
     """Parents 0..9; children 10.. with parent_id = i % 10, so every
-    parent has many children matching the child query."""
+    parent has many children matching the child query; a numeric doc
+    column n."""
     rng = random.Random(5)
     rows = []
     for i in range(200):
         text = " ".join(rng.choices(WORDS[:4], k=rng.randint(2, 25)))
-        rows.append((i, text, None if i < 10 else i % 10))
+        rows.append((i, text, None if i < 10 else i % 10, float(i % 13)))
     idx = build_index(
-        spark.createDataFrame(rows, "doc_id long, text string, parent_id long"),
+        spark.createDataFrame(
+            rows, "doc_id long, text string, parent_id long, n double"
+        ),
         id_col="doc_id",
         text_col="text",
         bucket_bits=6,
-        extra_doc_cols=["parent_id"],
+        extra_doc_cols=["parent_id", "n"],
     )
     path = str(tmp_path_factory.mktemp("nested") / "ix")
     idx.save(path)
@@ -246,3 +253,46 @@ def test_nested_rollup_folds_children_in_doc_order(spark, nested_saved, dtype):
         for c in sorted(d for d in scores if d >= 10 and d % 10 == parent):
             acc += scores[c]
         assert score == acc, parent
+
+
+def test_mixed_tree_jobs(spark, nested_saved):
+    """A tree mixing docs-table leaves scans its postings-only children
+    in one shard scan per boolean node: no more Spark jobs than the
+    DataFrame postings evaluators it replaced took (3, 4 and 6 jobs on
+    this index), and a root NgramSimilarity is one job."""
+    eng = SearchEngine(InvertedIndex.load(spark, nested_saved).cache(),
+                       preload_stats=True)
+    eng.search(Term("alpha"), k=1).collect()
+    for q, most in (
+        (And([Term("alpha"), Exists("n")]), 3),
+        (Or([Phrase(("alpha", "beta")), NumericRange("n", 2.0, 6.0)]), 4),
+        (Nested(Or([Term("alpha"), Term("gamma")])), 6),
+    ):
+        assert _jobs(spark, lambda: eng.search(q, k=10).collect()) <= most, q
+    q = NgramSimilarity(("alpha", "beta", "gamma"), threshold=0.5)
+    assert _jobs(spark, lambda: eng.search(q, k=10).collect()) == 1
+
+
+def test_positional_leaves_need_positions(spark):
+    """Phrase, SamePosition and NgramSimilarity on an index built
+    without positions fail on the driver with a clear message, at the
+    root and inside a tree that mixes in a docs-table leaf."""
+    rows = [(i, "alpha beta gamma", float(i)) for i in range(20)]
+    eng = SearchEngine(build_index(
+        spark.createDataFrame(rows, "doc_id long, text string, n double"),
+        id_col="doc_id",
+        text_col="text",
+        bucket_bits=6,
+        with_positions=False,
+        extra_doc_cols=["n"],
+    ))
+    for leaf in (
+        Phrase(("alpha", "beta")),
+        SamePosition(("alpha", "beta")),
+        NgramSimilarity(("alpha", "beta"), threshold=0.5),
+    ):
+        for q in (leaf, And([leaf, Exists("n")])):
+            with pytest.raises(ValueError, match="built without positions"):
+                eng.search(q, k=5)
+            with pytest.raises(ValueError, match="built without positions"):
+                eng.matches(q)
