@@ -31,6 +31,11 @@ parallelism — doc ids are hash-bucket ranks of the sort key, segment
 boundaries are a pure function of the key set and parameters, and block
 content depends only on (term, doc-id set), never on partition
 enumeration order (byte-identity tested at different partitionings).
+Saved `postings/` and `docs/` files are byte-identical run to run; the
+dictionary files (`term_stats/`, `term_stats_rev/`, `term_grams/`) hold
+the same values but not the same file boundaries: `InvertedIndex.save`
+range-partitions them, and Spark's RangePartitioner seeds its boundary
+sample from the RDD id, so their sizes vary run to run.
 """
 
 from __future__ import annotations
@@ -38,7 +43,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -53,131 +57,6 @@ from iresearch_spark.index.model import (
 )
 
 BLOCK_SIZE = 128  # posting block granularity (formats_10.cpp:88-129)
-
-
-def assign_doc_ids(df: DataFrame, key_col: str, n_buckets: int = 1024) -> DataFrame:
-    """Deterministic, parallelism-independent global doc ids.
-
-    Total order = (xxhash64(key) % n_buckets, key): a deterministic
-    hash bucket plus the key itself. Two passes, both deterministic —
-    bucket counts (groupBy, a pure function of the data) give the
-    bucket offsets, a per-bucket window assigns dense local ranks.
-    Ids depend ONLY on the key set, never on partitioning (SURVEY §7.0
-    determinism rule; the reference assigns segment-local ids in
-    insertion order, `core/index/segment_writer.cpp:76`, and remaps on
-    merge — we assign one global deterministic order instead).
-
-    NOTE: an earlier variant used repartitionByRange + per-partition
-    ranks; range boundaries come from RANDOM SAMPLING and differ between
-    the count pass and the rank pass, producing duplicate ids — hash
-    buckets have no such nondeterminism. Requires unique keys.
-    """
-    spark = df.sparkSession
-    with_b = df.withColumn(
-        "_bkt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
-    )
-    counts = {
-        r["_bkt"]: r["cnt"]
-        for r in with_b.groupBy("_bkt").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets = {}
-    acc = 0
-    for bkt in sorted(counts):
-        offsets[bkt] = acc
-        acc += counts[bkt]
-    offs = spark.createDataFrame(
-        [(int(b), int(o)) for b, o in offsets.items()],
-        "_bkt long, _offset long",
-    )
-    w = Window.partitionBy("_bkt").orderBy(key_col)
-    return (
-        with_b.withColumn("_rank", F.row_number().over(w) - 1)
-        .join(F.broadcast(offs), "_bkt")
-        .withColumn("doc_id", F.col("_offset") + F.col("_rank"))
-        .drop("_bkt", "_rank", "_offset")
-    )
-
-
-def build_postings(
-    tokens: DataFrame,
-    with_positions: bool,
-    bucket_bits: int = 16,
-    with_offsets: bool = False,
-    with_payloads: bool = False,
-) -> DataFrame:
-    """(doc,term) rows -> posting-block rows, skew-bounded by doc bucket.
-
-    Physical shape: repartition by (term, bucket) + in-partition sort,
-    then ONE mapInPandas pass per partition that walks the sorted runs
-    with numpy boundary detection (carrying a partial trailing group
-    across Arrow batches). This avoids applyInPandas' per-group pandas
-    overhead — with a 30k-term vocabulary that is 30k tiny groups, which
-    dominated build time — while keeping identical output: block content
-    is a pure function of (term, bucket, doc-id set)."""
-    bucketed = tokens.withColumn(
-        "_bucket", F.shiftright(F.col("doc_id"), bucket_bits)
-    )
-    arranged = bucketed.repartition("term", "_bucket").sortWithinPartitions(
-        "term", "_bucket", "doc_id"
-    )
-    return arranged.mapInPandas(
-        _make_partition_block_builder(
-            with_positions, bucket_bits, with_offsets, with_payloads
-        ),
-        POSTINGS_SCHEMA,
-    )
-
-
-def _make_partition_block_builder(
-    with_positions: bool, bucket_bits: int, with_offsets: bool = False,
-    with_payloads: bool = False,
-):
-    blocks_per_bucket_bits = max(bucket_bits - 7, 1)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            terms = pdf["term"].to_numpy()
-            buckets = pdf["_bucket"].to_numpy()
-            n = len(pdf)
-            if n == 0:
-                continue
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            change[1:] = (terms[1:] != terms[:-1]) | (buckets[1:] != buckets[:-1])
-            starts = np.flatnonzero(change)
-            # the trailing group may continue into the next Arrow batch
-            if starts.size > 1:
-                cut = starts[-1]
-                pending = pdf.iloc[cut:]
-                pdf = pdf.iloc[:cut]
-                starts = starts[:-1]
-            else:
-                pending = pdf
-                continue
-            yield _encode_groups(
-                pdf, starts, with_positions, blocks_per_bucket_bits,
-                with_offsets, with_payloads,
-            )
-        if pending is not None and len(pending):
-            terms = pending["term"].to_numpy()
-            buckets = pending["_bucket"].to_numpy()
-            change = np.empty(len(pending), dtype=bool)
-            change[0] = True
-            change[1:] = (terms[1:] != terms[:-1]) | (buckets[1:] != buckets[:-1])
-            yield _encode_groups(
-                pending.reset_index(drop=True),
-                np.flatnonzero(change),
-                with_positions,
-                blocks_per_bucket_bits,
-                with_offsets,
-                with_payloads,
-            )
-
-    return build
 
 
 _IMPACT_CLASSES = 24  # power-of-two dl classes (dl < 2^24 per class cap)
@@ -229,118 +108,6 @@ def _block_impacts_arrow(freqs, dls, bs, be):
     return pa.ListArray.from_arrays(pa.array(offsets), struct)
 
 
-def _block_impacts_lists(freqs, dls, bs, be):
-    g_tf, g_dl, offsets = _block_impacts_arrays(freqs, dls, bs, be)
-    return [
-        [
-            {"tf": int(g_tf[j]), "dl": int(g_dl[j])}
-            for j in range(offsets[i], offsets[i + 1])
-        ]
-        for i in range(bs.size)
-    ]
-
-
-def _encode_groups(pdf, starts, with_positions, blocks_per_bucket_bits,
-                   with_offsets=False, with_payloads=False):
-    """Encode every (term,bucket) run of a sorted batch into posting
-    blocks with ONE whole-batch codec pass (codec.encode_blocks_batch);
-    per-block Python cost is two byte-slices."""
-    doc_ids = pdf["doc_id"].to_numpy().astype(np.int64)
-    freqs = pdf["freq"].to_numpy().astype(np.int64)
-    dls = pdf["dl"].to_numpy().astype(np.int64)
-    terms = pdf["term"].to_numpy()
-    buckets = pdf["_bucket"].to_numpy().astype(np.int64)
-    n = len(pdf)
-    ends = np.append(starts[1:], n)
-    sizes = ends - starts
-    n_blocks = (sizes + BLOCK_SIZE - 1) // BLOCK_SIZE
-    gidx = np.repeat(np.arange(starts.size), n_blocks)
-    blk_base = np.concatenate(([0], np.cumsum(n_blocks)[:-1]))
-    local = np.arange(int(n_blocks.sum()), dtype=np.int64) - blk_base[gidx]
-    block_starts = starts[gidx] + local * BLOCK_SIZE
-    block_ends = np.minimum(block_starts + BLOCK_SIZE, ends[gidx])
-    flat_pos = None
-    if with_positions:
-        pos_col = pdf["positions"].to_numpy()
-        flat_pos = (
-            np.concatenate(pos_col).astype(np.uint64)
-            if len(pos_col)
-            else np.empty(0, np.uint64)
-        )
-    docs_blobs, dls_blobs, pos_blobs = codec.encode_blocks_batch(
-        doc_ids, freqs, dls, block_starts, block_ends, flat_pos
-    )
-    plen_blobs = pbyte_blobs = None
-    if with_payloads:
-        # token rows carry `payloads`: list<bytes> per (term,doc) row in
-        # occurrence order (the re-blocking/merge path — decode side of
-        # the PAY stream)
-        pay_col = pdf["payloads"].to_numpy()
-        flat_list = [b for row in pay_col for b in row]
-        occ_lens = np.fromiter(
-            (len(b) for b in flat_list), dtype=np.int64, count=len(flat_list)
-        )
-        blob = b"".join(flat_list)
-        flat_pay = (
-            np.frombuffer(blob, dtype=np.uint8)
-            if blob
-            else np.empty(0, dtype=np.uint8)
-        )
-        plb, plo = codec.encode_occurrence_stream(
-            occ_lens, freqs, block_starts, block_ends, delta=False
-        )
-        pbb, pbo = codec.encode_bytes_stream(
-            flat_pay, occ_lens, freqs, block_starts, block_ends
-        )
-        plen_blobs = [plb[x:y] for x, y in zip(plo[:-1], plo[1:])]
-        pbyte_blobs = [pbb[x:y] for x, y in zip(pbo[:-1], pbo[1:])]
-    ostart_blobs = olen_blobs = None
-    if with_offsets:
-        def _flat(colname):
-            col = pdf[colname].to_numpy()
-            return (
-                np.concatenate(col).astype(np.uint64)
-                if len(col)
-                else np.empty(0, np.uint64)
-            )
-
-        ob, oo = codec.encode_occurrence_stream(
-            _flat("off_starts"), freqs, block_starts, block_ends, delta=True
-        )
-        lb, lo = codec.encode_occurrence_stream(
-            _flat("off_lens"), freqs, block_starts, block_ends, delta=False
-        )
-        ostart_blobs = [ob[x:y] for x, y in zip(oo[:-1], oo[1:])]
-        olen_blobs = [lb[x:y] for x, y in zip(lo[:-1], lo[1:])]
-    block_id = (buckets[block_starts] << blocks_per_bucket_bits) | local
-    return pd.DataFrame(
-        {
-            "term": terms[block_starts],
-            "block_id": block_id,
-            "n_docs": (block_ends - block_starts).astype(np.int32),
-            "first_doc": doc_ids[block_starts],
-            "last_doc": doc_ids[block_ends - 1],
-            "docs": docs_blobs,
-            "dls": dls_blobs,
-            "positions": pos_blobs if with_positions else None,
-            "block_max_freq": np.maximum.reduceat(freqs, block_starts).astype(
-                np.int32
-            ),
-            "block_min_dl": np.minimum.reduceat(dls, block_starts).astype(
-                np.int32
-            ),
-            "block_cf": np.add.reduceat(freqs, block_starts).astype(np.int64),
-            "off_starts": ostart_blobs,
-            "off_lens": olen_blobs,
-            "pay_lens": plen_blobs,
-            "pay_bytes": pbyte_blobs,
-            "block_impacts": _block_impacts_lists(
-                freqs, dls, block_starts, block_ends
-            ),
-        }
-    )
-
-
 NORM_TERM = ""  # sentinel term for per-segment norm (doc-length) blocks
 
 
@@ -356,7 +123,7 @@ def build_segments(
     lang_col: str | None = None,
 ) -> DataFrame:
     """Local segment build — the reference's per-writer-thread segment
-    (`segment_writer.cpp` + `field_data::invert`) as ONE mapInPandas
+    (`segment_writer.cpp` + `field_data::invert`) as ONE mapInArrow
     pass: tokenize, (doc,term) aggregate, term-major sort, posting-block
     encode, all inside the partition. The ONLY shuffle moves pages rows
     (one per document) into their segment: token rows never cross the
@@ -462,16 +229,13 @@ def _segment_record_batches(
     seg_tbl: pa.Table, analyzer, text_col, with_positions, fused,
     with_offsets=False, payload_delim=None, lang_col=None,
 ) -> Iterator[pa.RecordBatch]:
-    """One segment -> posting-block + norm-block RecordBatches.
-
-    All columns are built from numpy/Arrow buffers; the posting blobs
-    map zero-copy onto the codec's contiguous buffers (no per-block
-    bytes objects), term strings come from an Arrow take on the
-    tokenizer's dictionary (no per-block Python strings)."""
+    """One segment -> norm-block + posting-block RecordBatches: tokenize,
+    sort the (term code, doc) rows, then encode_postings over the
+    tokenizer's dictionary."""
     n = seg_tbl.num_rows
     if fused:
         # bucket-contiguous doc ids: offset[bucket] + rank within the
-        # (sorted) bucket run — same values as assign_doc_ids
+        # (sorted) bucket run — same values as fused_doc_map
         bkt = seg_tbl.column("_bkt").to_numpy()
         off = seg_tbl.column("_off").to_numpy()
         boundary = np.empty(n, dtype=bool)
@@ -565,6 +329,38 @@ def _segment_record_batches(
     row_code = s_codes[g_starts]
     row_doc = s_doc[g_starts]
     row_dl = s_dl[g_starts]
+    offs = pays = None
+    if with_offsets:
+        # per-occurrence char spans ride the SAME occurrence order as
+        # positions (stable lexsort)
+        offs = (ft.starts[order], ft.lens[order])
+    if payload_delim is not None:
+        # payload bytes ride the same occurrence order (stable lexsort
+        # keeps within-(term,doc) occurrences position-ascending)
+        s_old = ft.codes[order]
+        occ_lens = pay_lens_u[s_old]
+        pays = (
+            occ_lens, codec.gather_bytes(pay_buf_u, pay_start_u[s_old], occ_lens)
+        )
+    yield encode_postings(
+        uniques_arrow, row_code, row_doc, freqs, row_dl,
+        s_pos if with_positions else None, offs, pays,
+    )
+
+
+def encode_postings(
+    uniques, row_code, row_doc, freqs, row_dl, pos=None, offs=None, pays=None
+) -> pa.RecordBatch:
+    """(term, doc) rows sorted by (term code, doc) -> one RecordBatch of
+    128-doc posting blocks, block_id = first_doc. The one posting-block
+    encoder: the build calls it per segment, merge._reblock per batch of
+    doc ranges. `uniques[row_code]` is a row's term; a term run ends
+    where the code changes. Occurrence streams are flat in row order,
+    None when absent: `pos` positions, `offs` (char starts, lens),
+    `pays` (payload lengths, uint8 payload bytes). Posting blobs map
+    zero-copy onto the codec's contiguous buffers (no per-block bytes
+    objects), terms come from an Arrow take on `uniques` (no per-block
+    Python strings)."""
     # term runs over the (term,doc) rows -> 128-doc blocks
     t_change = np.empty(row_code.size, dtype=bool)
     t_change[0] = True
@@ -578,50 +374,30 @@ def _segment_record_batches(
     local = np.arange(int(n_blocks.sum()), dtype=np.int64) - blk_base[gidx]
     bs = t_starts[gidx] + local * BLOCK_SIZE
     be = np.minimum(bs + BLOCK_SIZE, t_ends[gidx])
-    flat_pos_for_enc = s_pos if with_positions else None
     docs_buf, docs_off, dls_buf, dls_off, pos_buf, pos_off = (
-        codec.encode_blocks_batch_offsets(
-            row_doc, freqs, row_dl, bs, be, flat_pos_for_enc
-        )
+        codec.encode_blocks_batch_offsets(row_doc, freqs, row_dl, bs, be, pos)
     )
-    if with_offsets:
-        # per-occurrence char spans ride the SAME occurrence order as
-        # positions (stable lexsort), encoded as delta starts + raw lens
-        s_starts = ft.starts[order]
-        s_lens = ft.lens[order]
-        ostart_buf, ostart_off = codec.encode_occurrence_stream(
-            s_starts, freqs, bs, be, delta=True
-        )
-        olen_buf, olen_off = codec.encode_occurrence_stream(
-            s_lens, freqs, bs, be, delta=False
-        )
-    if payload_delim is not None:
-        # payload bytes ride the same occurrence order (stable lexsort
-        # keeps within-(term,doc) occurrences position-ascending);
-        # lengths as raw varints + bytes as one contiguous slab
-        s_old = ft.codes[order]
-        occ_lens = pay_lens_u[s_old]
-        flat_pay = codec.gather_bytes(
-            pay_buf_u, pay_start_u[s_old], occ_lens
-        )
-        plen_buf, plen_off = codec.encode_occurrence_stream(
-            occ_lens, freqs, bs, be, delta=False
-        )
-        pbuf, pboff = codec.encode_bytes_stream(
-            flat_pay, occ_lens, freqs, bs, be
-        )
     B = bs.size
-    term_arr = pc.take(uniques_arrow, pa.array(row_code[bs]))
+
+    def _blobs(buf_off):
+        if buf_off is None:
+            return pa.nulls(B, pa.binary())
+        return _binary_from_offsets(*buf_off)
+
+    ostart = olen = plen = pbytes = None
+    if offs is not None:
+        ostart = codec.encode_occurrence_stream(offs[0], freqs, bs, be, delta=True)
+        olen = codec.encode_occurrence_stream(offs[1], freqs, bs, be, delta=False)
+    if pays is not None:
+        # lengths as raw varints + bytes as one contiguous slab
+        plen = codec.encode_occurrence_stream(pays[0], freqs, bs, be, delta=False)
+        pbytes = codec.encode_bytes_stream(pays[1], pays[0], freqs, bs, be)
+    term_arr = pc.take(uniques, pa.array(row_code[bs]))
     if isinstance(term_arr, pa.ChunkedArray):
         term_arr = term_arr.combine_chunks()
     if pa.types.is_dictionary(term_arr.type):
         term_arr = term_arr.cast(pa.string())
-    positions_arr = (
-        _binary_from_offsets(pos_buf, pos_off)
-        if with_positions
-        else pa.nulls(B, pa.binary())
-    )
-    yield pa.RecordBatch.from_arrays(
+    return pa.RecordBatch.from_arrays(
         [
             term_arr,
             pa.array(row_doc[bs]),  # block_id = first_doc (doc-ordered)
@@ -630,30 +406,14 @@ def _segment_record_batches(
             pa.array(row_doc[be - 1]),
             _binary_from_offsets(docs_buf, docs_off),
             _binary_from_offsets(dls_buf, dls_off),
-            positions_arr,
+            _blobs(None if pos is None else (pos_buf, pos_off)),
             pa.array(np.maximum.reduceat(freqs, bs).astype(np.int32)),
             pa.array(np.minimum.reduceat(row_dl, bs).astype(np.int32)),
             pa.array(np.add.reduceat(freqs, bs).astype(np.int64)),
-            (
-                _binary_from_offsets(ostart_buf, ostart_off)
-                if with_offsets
-                else pa.nulls(B, pa.binary())
-            ),
-            (
-                _binary_from_offsets(olen_buf, olen_off)
-                if with_offsets
-                else pa.nulls(B, pa.binary())
-            ),
-            (
-                _binary_from_offsets(plen_buf, plen_off)
-                if payload_delim is not None
-                else pa.nulls(B, pa.binary())
-            ),
-            (
-                _binary_from_offsets(pbuf, pboff)
-                if payload_delim is not None
-                else pa.nulls(B, pa.binary())
-            ),
+            _blobs(ostart),
+            _blobs(olen),
+            _blobs(plen),
+            _blobs(pbytes),
             _block_impacts_arrow(freqs, row_dl, bs, be),
         ],
         names=_POSTINGS_COLS,
@@ -735,10 +495,19 @@ def _bucket_layout(
         .agg(F.count("*").alias("cnt"))
         .collect()
     )
-    cnt = {r["_bkt"]: r["cnt"] for r in counts}
+    return _layout({r["_bkt"]: r["cnt"] for r in counts}, seg_target_docs, id_base)
+
+
+def _layout(
+    cnt: dict[int, int], seg_target_docs: int, id_base: int
+) -> tuple[dict[int, int], dict[int, int]]:
+    """(offsets, seg_of) from per-bucket doc counts: buckets in id order
+    claim consecutive doc-id runs from id_base (incremental segments
+    claim [id_base, ...)), and adjacent buckets group into segments of
+    ~seg_target_docs documents."""
     offsets: dict[int, int] = {}
     seg_of: dict[int, int] = {}
-    acc = id_base  # incremental segments claim the range [id_base, ...)
+    acc = id_base
     seg = 0
     seg_acc = 0
     for b in sorted(cnt):
@@ -908,19 +677,7 @@ def _sorted_bucket_layout(
         # order == ascending doc-id order
         bkt = (-bkt).cast("long")
         cnt = {-b: c for b, c in cnt.items()}
-    offsets: dict[int, int] = {}
-    seg_of: dict[int, int] = {}
-    acc = id_base
-    seg = 0
-    seg_acc = 0
-    for b in sorted(cnt):
-        offsets[b] = acc
-        acc += cnt[b]
-        if seg_acc >= seg_target_docs:
-            seg += 1
-            seg_acc = 0
-        seg_of[b] = seg
-        seg_acc += cnt[b]
+    offsets, seg_of = _layout(cnt, seg_target_docs, id_base)
     sort_col = F.col(sort_field)
     # within-bucket order on the REAL column (callers append their key
     # column as the unique tie-break)
@@ -998,8 +755,6 @@ def fused_doc_map(
         [(int(b), int(o)) for b, o in offsets.items()],
         "_bkt long, _offset long",
     )
-    from pyspark.sql import Window
-
     if bkt_expr is None:
         bkt_expr = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
     order = [order_col, F.col(key_col).asc()] if order_col is not None \

@@ -10,7 +10,7 @@ numpy gives the vectorization (Arrow batches keep this off the hot
 Python path).
 
 All functions are pure numpy (no Python-level per-element loops) so they
-stay fast inside pandas/Arrow UDF batches.
+stay fast inside Arrow UDF batches.
 """
 
 from __future__ import annotations
@@ -164,7 +164,7 @@ def decode_position_lists(buf: bytes, freqs: np.ndarray) -> np.ndarray:
     return csum - seg_base[owner]
 
 
-def encode_blocks_batch(
+def encode_blocks_batch_offsets(
     doc_ids: np.ndarray,
     freqs: np.ndarray,
     dls: np.ndarray,
@@ -176,34 +176,11 @@ def encode_blocks_batch(
 
     Equivalent to calling pack_docs_freqs / varint_encode /
     encode_position_lists per block (unit-tested equivalence), but all
-    varint work happens in three whole-batch passes; per-block cost is
-    reduced to two Python byte-slices. Blocks MUST tile the row range
-    contiguously (block_ends[b] == block_starts[b+1]) — validated.
+    varint work happens in three whole-batch passes. Blocks MUST tile
+    the row range contiguously (block_ends[b] == block_starts[b+1]) —
+    validated.
 
-    Returns (docs_blobs, dls_blobs, pos_blobs|None) as lists of bytes.
-    """
-    bufs = encode_blocks_batch_offsets(
-        doc_ids, freqs, dls, block_starts, block_ends, flat_pos
-    )
-    docs_buf, docs_off, dls_buf, dls_off, pos_buf, pos_off = bufs
-    docs_blobs = [docs_buf[x:y] for x, y in zip(docs_off[:-1], docs_off[1:])]
-    dls_blobs = [dls_buf[x:y] for x, y in zip(dls_off[:-1], dls_off[1:])]
-    pos_blobs = None
-    if pos_buf is not None:
-        pos_blobs = [pos_buf[x:y] for x, y in zip(pos_off[:-1], pos_off[1:])]
-    return docs_blobs, dls_blobs, pos_blobs
-
-
-def encode_blocks_batch_offsets(
-    doc_ids: np.ndarray,
-    freqs: np.ndarray,
-    dls: np.ndarray,
-    block_starts: np.ndarray,
-    block_ends: np.ndarray,
-    flat_pos: np.ndarray | None = None,
-):
-    """Like encode_blocks_batch but returns contiguous byte buffers plus
-    per-block offset arrays instead of per-block bytes objects:
+    Returns contiguous byte buffers plus per-block offset arrays:
     (docs_buf, docs_off[B+1], dls_buf, dls_off[B+1], pos_buf|None,
     pos_off|None). Block b's blob is buf[off[b]:off[b+1]] — consecutive
     blocks are contiguous, so the (buffer, offsets) pair maps ZERO-COPY

@@ -1,22 +1,31 @@
 """Segment merge / consolidation (reference `IndexWriter::Consolidate`,
 `core/index/merge_writer.cpp` — SURVEY §2.6, §3.3).
 
-Because block_ids encode contiguous doc-id ranges ((bucket << k) |
-local), posting blocks from different segments with DISJOINT doc-id
-ranges union without any re-sort: the reference's k-way heap merge of
-term iterators (`merge_writer.cpp:511` CompoundTermIterator) becomes a
+Because block_ids (= first_doc) are globally doc-ordered per term,
+posting blocks from different segments with DISJOINT doc-id ranges
+union without any re-sort: the reference's k-way heap merge of term
+iterators (`merge_writer.cpp:511` CompoundTermIterator) becomes a
 plain `unionByName` + optional re-blocking pass. The re-blocking
-("consolidation") rewrites underfull blocks into full 128-doc blocks —
-a groupBy (term, coarse-bucket) + applyInPandas, the same skew-bounded
-shape as the initial build.
+("consolidation") rewrites underfull blocks into full 128-doc blocks
+on a doc-range grid with the build's own encoder
+(builder.encode_postings): compact blocks are shuffled by doc range
+and decoded inside one mapInArrow, so token rows never cross the wire
+— the reference merge likewise rewrites postings with the flush's
+postings writer (`merge_writer.cpp:1525-1610`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from typing import Iterator
 
-from iresearch_spark.index.builder import build_postings
-from iresearch_spark.index.model import FieldStats, InvertedIndex
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, functions as F
+
+from iresearch_spark.index import codec
+from iresearch_spark.index.builder import encode_postings
+from iresearch_spark.index.model import POSTINGS_SCHEMA, FieldStats, InvertedIndex
 
 
 def merge_indexes(a: InvertedIndex, b: InvertedIndex) -> InvertedIndex:
@@ -105,46 +114,134 @@ def merge_indexes(a: InvertedIndex, b: InvertedIndex) -> InvertedIndex:
     )
 
 
-def _reblock_columns(decoded, index: InvertedIndex):
-    """Project decoded rows to the token-row shape build_postings
-    expects, with null placeholders for absent occurrence streams."""
-    cols = [
-        F.col("doc_id"),
-        F.col("term"),
-        F.col("freq"),
-        (
-            F.col("positions")
-            if index.with_positions
-            else F.lit(None).cast("array<int>").alias("positions")
-        ),
-        F.col("dl").cast("int").alias("dl"),
-    ]
+def _reblock(
+    index: InvertedIndex, bits: int, deleted: DataFrame | None = None
+) -> DataFrame:
+    """The index's postings re-encoded into full 128-doc blocks on the
+    doc-range grid [s << bits, (s+1) << bits), minus the `deleted` doc
+    ids. A block goes to every range it overlaps (the
+    executor._shard_blocks pattern) and keeps there only its postings
+    inside the range; a range's deleted ids ride along as null-term
+    rows, which sort ahead of its blocks."""
+    cols = ["term", "n_docs", "first_doc", "last_doc", "docs", "dls"]
+    if index.with_positions:
+        cols.append("positions")
     if index.with_offsets:
-        cols.extend([F.col("off_starts"), F.col("off_lens")])
+        cols.extend(["off_starts", "off_lens"])
     if index.with_payloads:
-        cols.append(F.col("payloads"))
-    return decoded.select(*cols)
+        cols.extend(["pay_lens", "pay_bytes"])
+    rng = F.explode(F.sequence(
+        F.shiftright("first_doc", bits), F.shiftright("last_doc", bits)
+    ))
+    rows = index.postings.select(*cols, rng.alias("_seg"))
+    if deleted is not None:
+        doc = F.col("doc_id").cast("long")
+        rows = rows.unionByName(
+            deleted.select(
+                doc.alias("first_doc"), F.shiftright(doc, bits).alias("_seg")
+            ),
+            allowMissingColumns=True,
+        )
+    return (
+        rows.repartition("_seg")
+        .sortWithinPartitions("_seg", "term", "first_doc")
+        .mapInArrow(
+            _make_reblock_gen(
+                bits, index.with_positions, index.with_offsets,
+                index.with_payloads,
+            ),
+            POSTINGS_SCHEMA,
+        )
+    )
+
+
+def _make_reblock_gen(bits, want_pos, want_offs, want_pay):
+    """Partition consumer of _reblock: a task holds one Arrow batch of
+    blocks plus the carried trailing (range, term) run — never a whole
+    range — and the deleted ids of the ranges still ahead."""
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pending: pa.Table | None = None
+        dead = np.empty(0, dtype=np.int64)
+        for batch in batches:
+            tbl = pa.Table.from_batches([batch])
+            if pending is not None:
+                tbl = pa.concat_tables([pending, tbl])
+                pending = None
+            tbl = tbl.combine_chunks()
+            gone = pc.is_null(tbl.column("term"))
+            if pc.any(gone).as_py():
+                dead = np.concatenate(
+                    (dead, tbl.filter(gone).column("first_doc").to_numpy())
+                )
+                tbl = tbl.filter(pc.invert(gone))
+            if tbl.num_rows == 0:
+                continue
+            segs = tbl.column("_seg").to_numpy()
+            terms = tbl.column("term").combine_chunks().dictionary_encode()
+            codes = terms.indices.to_numpy()
+            run = np.flatnonzero(
+                (segs[1:] != segs[:-1]) | (codes[1:] != codes[:-1])
+            )
+            # the trailing (range, term) run may go on in the next batch
+            cut = int(run[-1]) + 1 if run.size else 0
+            pending = tbl.slice(cut)
+            if cut:
+                yield from _reblock_batch(
+                    tbl.slice(0, cut), bits, dead, want_pos, want_offs,
+                    want_pay,
+                )
+            # later rows belong to this range or later ones
+            dead = dead[(dead >> bits) >= segs[-1]]
+        if pending is not None:
+            yield from _reblock_batch(
+                pending, bits, dead, want_pos, want_offs, want_pay
+            )
+
+    return gen
+
+
+def _reblock_batch(tbl, bits, dead, want_pos, want_offs, want_pay):
+    """Whole (range, term) runs of block rows -> re-encoded blocks, in
+    one encode_postings call: the row codes number the (range, term)
+    runs, so two adjacent ranges sharing a term stay apart."""
+    d = codec.decode_batch_arrays(tbl, want_pos, want_offs, want_pay)
+    n_docs = tbl.column("n_docs").to_numpy()
+    seg = np.repeat(tbl.column("_seg").to_numpy(), n_docs)
+    doc = d["doc_ids"]
+    keep = ((doc >> bits) == seg) & ~np.isin(doc, dead)
+    if not keep.any():
+        return
+    seg, code, doc = seg[keep], d["row_codes"][keep], doc[keep]
+    change = np.empty(doc.size, dtype=bool)
+    change[0] = True
+    change[1:] = (seg[1:] != seg[:-1]) | (code[1:] != code[:-1])
+    occ = np.repeat(keep, d["freqs"])
+    pos = d["pos_values"][occ] if want_pos else None
+    offs = (
+        (d["off_start_values"][occ], d["off_len_values"][occ])
+        if want_offs else None
+    )
+    pays = None
+    if want_pay:
+        lens = d["pay_len_values"]
+        pays = (lens[occ], d["pay_byte_slab"][np.repeat(occ, lens)])
+    yield encode_postings(
+        d["term_dict"].take(pa.array(code[change])), np.cumsum(change) - 1,
+        doc, d["freqs"][keep], d["dls"][keep], pos, offs, pays,
+    )
 
 
 def consolidate(index: InvertedIndex, bucket_bits: int = 16) -> InvertedIndex:
     """Rewrite posting blocks into full 128-doc blocks under a (possibly
-    coarser) doc-bucket grid: decode -> re-block. One shuffle keyed by
-    (term, bucket) — bounded group sizes, skew-proof (SURVEY §3.3)."""
-    decoded = index.decoded_postings(
-        with_positions=index.with_positions,
-        with_offsets=index.with_offsets,
-        with_payloads=index.with_payloads,
-    )
-    decoded = _reblock_columns(decoded, index)
-    postings = build_postings(
-        decoded, index.with_positions, bucket_bits, index.with_offsets,
-        index.with_payloads,
-    )
-    # the re-encoded blocks still contain deleted docs' postings (decode
-    # above is mask-free), so pending deletes must survive as a mask —
-    # dropping it here would silently resurrect deleted docs. Callers
-    # wanting a mask-free result run purge_deleted first (the
-    # consolidate job does).
+    coarser) doc-range grid (see _reblock). One shuffle of compact
+    blocks keyed by doc range — bounded task memory, skew-proof (SURVEY
+    §3.3)."""
+    postings = _reblock(index, bucket_bits)
+    # the re-encoded blocks still contain deleted docs' postings, so
+    # pending deletes must survive as a mask — dropping it here would
+    # silently resurrect deleted docs. Callers wanting a mask-free
+    # result run purge_deleted first (the consolidate job does).
     return InvertedIndex(
         postings=postings,
         docs=index.docs,
@@ -174,19 +271,10 @@ def purge_deleted(index: InvertedIndex, bucket_bits: int = 16) -> InvertedIndex:
     if index.deleted is None:
         return index
     mask = index.deleted.select("doc_id")
-    decoded = index.decoded_postings(
-        with_positions=index.with_positions,
-        with_offsets=index.with_offsets,
-        with_payloads=index.with_payloads,
-    )
-    live = _reblock_columns(decoded.join(mask, "doc_id", "left_anti"), index)
-    postings = build_postings(
-        live, index.with_positions, bucket_bits, index.with_offsets,
-        index.with_payloads,
-    )
+    postings = _reblock(index, bucket_bits, mask)
     docs = index.docs.join(mask, "doc_id", "left_anti")
-    term_stats = live.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("freq").alias("cf")
+    term_stats = postings.groupBy("term").agg(
+        F.sum("n_docs").alias("df"), F.sum("block_cf").alias("cf")
     )
     # BM25's N = docs_with_field (dl>0), matching build_index — the
     # docs table itself keeps dl=0 rows for AllDocs coverage

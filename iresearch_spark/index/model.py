@@ -21,9 +21,10 @@ columnstore, `core/formats/`) maps to four Spark tables:
   field_stats a tiny dict {n_docs, total_term_freq, avg_dl}
               (the reference's FieldCollector output, bm25.cpp:366-410)
 
-`block_id` is globally ordered by doc-id range within each term, so
-posting blocks concatenate into a sorted posting list without any
-further sort (merge = re-blocking, see merge.py).
+`block_id` is the block's first_doc, so within each term it orders
+blocks by doc-id range: posting blocks concatenate into a sorted
+posting list without any further sort (merge = union + optional
+re-blocking, see merge.py).
 """
 
 from __future__ import annotations
@@ -591,7 +592,9 @@ class InvertedIndex:
         # the dictionary is written three times (forward + reversed +
         # k-gram layouts) and counted once — persist so the groupBy
         # over posting blocks that derives it runs ONCE, not per
-        # consumer
+        # consumer. Its values are deterministic; its file boundaries
+        # are not (repartitionByRange samples with an RDD-id seed), so
+        # the three dictionaries' sizes vary run to run.
         ts_cached = self.term_stats.persist()
         if optimize_layout:
             # term dictionary: range-partitioned and sorted by term, so
@@ -619,7 +622,8 @@ class InvertedIndex:
                     # (top_docs) reads only the head files — the
                     # distributed analogue of the reference's in-order
                     # segment iteration stopping at k. Range boundaries
-                    # come from sampling (file SIZES may vary run to
+                    # come from sampling (Spark's RangePartitioner seeds
+                    # it from the RDD id, so file SIZES may vary run to
                     # run) but values/order are already fixed, so
                     # determinism of results is unaffected.
                     (

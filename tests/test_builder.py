@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iresearch_spark.analysis import get_analyzer
-from iresearch_spark.index.builder import assign_doc_ids, build_index
+from iresearch_spark.index.builder import build_index
 
 
 def _corpus(n=300, seed=7):
@@ -105,20 +105,6 @@ def test_bucketing_invariant(spark, built):
         for r in idx2.decoded_postings().collect()
     )
     assert a == b
-
-
-def test_assign_doc_ids_deterministic(spark):
-    rows = [(f"https://site{i % 7}.example/p/{i}",) for i in range(200)]
-    df1 = spark.createDataFrame(rows, "url string").repartition(2)
-    df8 = spark.createDataFrame(list(reversed(rows)), "url string").repartition(8)
-    a = {r["url"]: r["doc_id"] for r in assign_doc_ids(df1, "url").collect()}
-    b = {r["url"]: r["doc_id"] for r in assign_doc_ids(df8, "url").collect()}
-    assert a == b
-    # ids are a dense 0..n-1 permutation, deterministic given the key set
-    assert sorted(a.values()) == list(range(200))
-    # and repeatable across a fresh computation of the same lineage
-    c = {r["url"]: r["doc_id"] for r in assign_doc_ids(df8, "url").collect()}
-    assert a == c
 
 
 def test_save_load_roundtrip(tmp_path, spark, built):

@@ -106,16 +106,20 @@ def test_encode_blocks_batch_equivalence():
     pos_off = np.concatenate(([0], np.cumsum(freqs)))
     bs = np.asarray(block_starts)
     be = np.asarray(block_ends)
-    d_blobs, l_blobs, p_blobs = codec.encode_blocks_batch(
+    d_buf, d_off, l_buf, l_off, p_buf, p_off = codec.encode_blocks_batch_offsets(
         doc_ids, freqs, dls, bs, be, flat_pos
     )
     for i, (s, e) in enumerate(zip(bs, be)):
-        assert d_blobs[i] == codec.pack_docs_freqs(doc_ids[s:e], freqs[s:e])
-        assert l_blobs[i] == codec.varint_encode(dls[s:e].astype(np.uint64))
+        assert d_buf[d_off[i]:d_off[i + 1]] == codec.pack_docs_freqs(
+            doc_ids[s:e], freqs[s:e]
+        )
+        assert l_buf[l_off[i]:l_off[i + 1]] == codec.varint_encode(
+            dls[s:e].astype(np.uint64)
+        )
         want_pos = codec.encode_position_lists(
             flat_pos[pos_off[s] : pos_off[e]], freqs[s:e]
         )
-        assert p_blobs[i] == want_pos, i
+        assert p_buf[p_off[i]:p_off[i + 1]] == want_pos, i
 
 
 def test_occurrence_stream_roundtrip():

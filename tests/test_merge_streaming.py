@@ -1,13 +1,20 @@
 """Segment merge + incremental indexing tests (reference
 merge_writer_tests.cpp / index_writer two-phase-commit semantics)."""
 
+import dataclasses
 import math
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from iresearch_spark.index.builder import build_index
-from iresearch_spark.index.merge import build_metrics, consolidate, merge_indexes
+from iresearch_spark.index.merge import (
+    build_metrics,
+    consolidate,
+    merge_indexes,
+    purge_deleted,
+)
 from iresearch_spark.search import Or, SearchEngine, Term
 from iresearch_spark.streaming.incremental import IncrementalIndexer
 
@@ -209,3 +216,117 @@ def test_multi_segment_read_keeps_bucket_pruning(spark, tmp_path):
     # and the pruned scan still returns exactly tok1's postings
     eng = SearchEngine(idx)
     assert eng.matches(Term("tok1")).count() == 30
+
+
+# --- one posting-block encoder: the build and consolidate()/purge_deleted()
+# both write blocks through builder.encode_postings
+
+_FEATURES = {
+    "nopos": dict(with_positions=False),
+    "pos": dict(with_positions=True),
+    "offs": dict(with_positions=True, with_offsets=True),
+    "pay": dict(with_positions=True, payload_delimiter="|"),
+}
+
+
+def _feature_rows(lo, hi, pay, seed):
+    """Skewed texts: a few terms in nearly every doc (multi-block runs
+    that straddle ranges), a long tail, and some empty docs."""
+    rnd = random.Random(seed)
+    vocab = [f"w{i}" for i in range(30)] + ["common"] * 15
+    rows = []
+    for i in range(lo, hi):
+        toks = [rnd.choice(vocab) for _ in range(rnd.randint(0, 12))]
+        if pay:
+            toks = [
+                t + (f"|p{rnd.randint(0, 9)}" if rnd.random() < 0.5 else "")
+                for t in toks
+            ]
+        rows.append((i, " ".join(toks)))
+    return rows
+
+
+def _block_rows(idx):
+    """Posting rows as comparable tuples (blobs as bytes)."""
+    out = []
+    for r in idx.postings.collect():
+        d = r.asDict(recursive=True)
+        if d["block_impacts"] is not None:
+            d["block_impacts"] = [(x["tf"], x["dl"]) for x in d["block_impacts"]]
+        out.append(tuple(
+            (k, bytes(v) if isinstance(v, (bytes, bytearray)) else v)
+            for k, v in sorted(d.items())
+        ))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("feature", sorted(_FEATURES))
+def test_consolidate_on_build_grid_is_identity(spark, feature):
+    """consolidate() on the build's own doc-range grid rewrites every
+    block byte for byte, block_id (= first_doc) included."""
+    kw = _FEATURES[feature]
+    rows = _feature_rows(0, 300, "payload_delimiter" in kw, seed=3)
+    built = build_index(
+        spark.createDataFrame(rows, "doc_id long, text string"),
+        analyzer="simple", seg_bits=5, **kw,
+    )
+    assert _block_rows(consolidate(built, bucket_bits=5)) == _block_rows(built)
+
+
+@pytest.fixture(scope="module", params=sorted(_FEATURES))
+def merged_with_deletes(request, spark):
+    kw = _FEATURES[request.param]
+    pay = "payload_delimiter" in kw
+
+    def part(lo, hi, bits):
+        df = spark.createDataFrame(
+            _feature_rows(lo, hi, pay, seed=lo), "doc_id long, text string"
+        )
+        return build_index(df, analyzer="simple", bucket_bits=bits, **kw)
+
+    merged = merge_indexes(part(0, 260, 7), part(260, 600, 5))
+    dead = [(i,) for i in range(0, 600, 7)] + [(i,) for i in range(300, 360)]
+    return merged.delete_docs(spark.createDataFrame(dead, "doc_id long"))
+
+
+def _reblocked(idx, n_parts):
+    idx = dataclasses.replace(idx, postings=idx.postings.repartition(n_parts))
+    purged = purge_deleted(idx, bucket_bits=6)
+    return (
+        _block_rows(consolidate(idx, bucket_bits=6)),
+        _block_rows(purged),
+        sorted(tuple(r) for r in purged.term_stats.collect()),
+    )
+
+
+def test_reblock_partition_and_batch_independent(spark, merged_with_deletes):
+    """Re-blocked rows depend only on the postings, never on how the
+    input is partitioned or cut into Arrow batches (7-row batches force
+    (range, term) runs and deleted ids to carry across batches)."""
+    idx = merged_with_deletes
+    one = _reblocked(idx, 1)
+    assert one == _reblocked(idx, 7)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        small = _reblocked(idx, 7)
+    finally:
+        spark.conf.set(key, old)
+    assert one == small
+
+
+def test_purge_stats_count_live_postings(spark, merged_with_deletes):
+    """Purged term_stats (summed from the new blocks) equal a df/cf
+    count over the live decoded postings, and no deleted doc survives."""
+    idx = merged_with_deletes
+    dead = {r["doc_id"] for r in idx.deleted.collect()}
+    want = {}
+    for r in idx.decoded_postings().collect():
+        if r["doc_id"] not in dead:
+            df, cf = want.get(r["term"], (0, 0))
+            want[r["term"]] = (df + 1, cf + r["freq"])
+    purged = purge_deleted(idx, bucket_bits=6)
+    got = {r["term"]: (r["df"], r["cf"]) for r in purged.term_stats.collect()}
+    assert got == want
+    assert not dead & {r["doc_id"] for r in purged.decoded_postings().collect()}
