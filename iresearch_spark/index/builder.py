@@ -31,11 +31,14 @@ parallelism — doc ids are hash-bucket ranks of the sort key, segment
 boundaries are a pure function of the key set and parameters, and block
 content depends only on (term, doc-id set), never on partition
 enumeration order (byte-identity tested at different partitionings).
-Saved `postings/` and `docs/` files are byte-identical run to run; the
-dictionary files (`term_stats/`, `term_stats_rev/`, `term_grams/`) hold
-the same values but not the same file boundaries: `InvertedIndex.save`
-range-partitions them, and Spark's RangePartitioner seeds its boundary
-sample from the RDD id, so their sizes vary run to run.
+Saved files are byte-identical run to run in every table: the
+dictionaries' and a sorted docs table's file boundaries are chosen on
+the driver (`InvertedIndex.save`), never by Spark's sampling
+RangePartitioner.
+
+The build counts what save() and the commit path need in one summary
+pass over the cached blocks (posting blocks, BM25's N, total term
+freq, max dl, doc-id span), so no later step re-counts a table.
 """
 
 from __future__ import annotations
@@ -930,14 +933,7 @@ def build_index(
     docs = norm_blocks.mapInArrow(
         _make_block_decoder(False), DECODED_SCHEMA
     ).select("doc_id", F.col("dl").cast("int").alias("dl"))
-    # BM25's N = docs_with_field (docs that produced >=1 token,
-    # bm25.cpp:48-54); the docs table itself covers EVERY doc (dl=0
-    # rows included) so AllDocs matches the reference's all().
-    stats_row = docs.agg(
-        F.count(F.when(F.col("dl") > 0, True)).alias("n"),
-        F.sum("dl").alias("ttf"),
-        F.max("dl").alias("mx"),
-    ).collect()[0]
+    summary = block_summary(blocks)
     if norm == "legacy":
         # the reference's NormWriter value (norm.cpp:36-41): float32 of
         # sqrt(dl) computed in double, inverted in float32 — written as
@@ -979,9 +975,9 @@ def build_index(
     )
 
     field_stats = FieldStats(
-        n_docs=int(stats_row["n"] or 0),
-        total_term_freq=int(stats_row["ttf"] or 0),
-        max_dl=int(stats_row["mx"] or 0),
+        n_docs=summary["n"],
+        total_term_freq=summary["ttf"],
+        max_dl=summary["max_dl"],
     )
 
     return InvertedIndex(
@@ -1000,4 +996,63 @@ def build_index(
         precision_step=precision_step,
         sort_field=sort_field,
         sort_ascending=sort_ascending,
+        n_blocks=summary["blocks"],
+        doc_span=summary["span"],
     )
+
+
+_SUMMARY_FIELDS = ("blocks", "n", "ttf", "max_dl", "min_doc", "max_doc")
+_SUMMARY_ARROW = pa.schema([(f, pa.int64()) for f in _SUMMARY_FIELDS])
+
+
+def _summarize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """One row of partial counts per batch of block rows (see
+    block_summary). Only norm blocks' dl streams are decoded."""
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        is_norm = batch.column(0)
+        nb = batch.filter(is_norm)
+        dls = np.zeros(0, dtype=np.int64)
+        if nb.num_rows:
+            data, off = codec._binary_slab(nb.column(3))
+            dls = codec.varint_decode(data[off[0]:off[-1]]).astype(np.int64)
+        yield pa.RecordBatch.from_pylist(
+            [{
+                "blocks": batch.num_rows - nb.num_rows,
+                "n": int((dls > 0).sum()),
+                "ttf": int(dls.sum()),
+                "max_dl": int(dls.max()) if dls.size else 0,
+                "min_doc": pc.min(nb.column(1)).as_py(),
+                "max_doc": pc.max(nb.column(2)).as_py(),
+            }],
+            schema=_SUMMARY_ARROW,
+        )
+
+
+def block_summary(blocks: DataFrame) -> dict:
+    """The counts save() and the commit path need, from ONE pass over
+    a build's block rows (norm blocks under NORM_TERM included):
+    posting blocks, BM25's N = docs with dl > 0 (docs_with_field,
+    bm25.cpp:48-54), total term freq, max dl and the [min, max] doc id
+    of the docs table, which covers every doc, dl=0 included, so that
+    AllDocs matches the reference's all() (None when empty). Partials
+    per Arrow batch, summed on the driver."""
+    is_norm = F.col("term") == NORM_TERM
+    rows = (
+        blocks.select(
+            is_norm.alias("is_norm"), "first_doc", "last_doc",
+            F.when(is_norm, F.col("dls")).alias("dls"),
+        )
+        .mapInArrow(_summarize, ", ".join(f"{f} long" for f in _SUMMARY_FIELDS))
+        .collect()
+    )
+    lo = [r["min_doc"] for r in rows if r["min_doc"] is not None]
+    hi = [r["max_doc"] for r in rows if r["max_doc"] is not None]
+    return {
+        "blocks": sum(r["blocks"] for r in rows),
+        "n": sum(r["n"] for r in rows),
+        "ttf": sum(r["ttf"] for r in rows),
+        "max_dl": max((r["max_dl"] for r in rows), default=0),
+        "span": (min(lo), max(hi)) if lo else None,
+    }

@@ -111,6 +111,11 @@ def merge_indexes(a: InvertedIndex, b: InvertedIndex) -> InvertedIndex:
         # means rebuilding via build_index(sort_field=...)). The merged
         # view honestly drops the sorted property.
         sort_field=None,
+        n_blocks=(
+            a.n_blocks + b.n_blocks
+            if a.n_blocks is not None and b.n_blocks is not None
+            else None
+        ),
     )
 
 
@@ -315,11 +320,15 @@ def build_metrics(index: InvertedIndex, bucket_bits: int = 16) -> "DataFrame":
     """Per-bucket lineage/metrics rows (the north rule's per-partition
     lineage + build-metrics table): doc-bucket -> blocks, postings,
     distinct terms, doc-id range. Deterministic (bucket = doc-id range),
-    independent of physical partitioning."""
+    independent of physical partitioning. One shuffle: rows hash-
+    partitioned by bucket satisfy both of countDistinct's aggregation
+    steps, which then run without a second exchange."""
     return (
-        index.postings.withColumn(
-            "bucket", F.shiftright(F.col("first_doc"), bucket_bits)
+        index.postings.select(
+            F.shiftright(F.col("first_doc"), bucket_bits).alias("bucket"),
+            "term", "n_docs", "first_doc", "last_doc",
         )
+        .repartition("bucket")
         .groupBy("bucket")
         .agg(
             F.count("*").alias("n_blocks"),

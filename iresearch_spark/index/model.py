@@ -248,6 +248,12 @@ class InvertedIndex:
     # before handing rows to callers. A single saved index has unique
     # rows carrying the global stats and skips that shuffle.
     gram_df_duplicated: bool = False
+    # counts the build already has, so save() never re-counts a table
+    # (None when unknown): posting-block rows and the docs table's
+    # [min, max] doc id. A loaded index carries n_blocks from its
+    # manifest.
+    n_blocks: int | None = None
+    doc_span: tuple[int, int] | None = None
 
     def _agg_stats(self, df: DataFrame) -> DataFrame:
         """Collapse per-segment dictionary rows to global stats (sum
@@ -558,11 +564,16 @@ class InvertedIndex:
                 postings = postings.drop(c)
         term_buckets = None
         docs_ranges = None
+        n_blocks = self.n_blocks
+        # each table's schema as a parquet read returns it: load() reads
+        # with it instead of running a schema-inference job per table
+        schemas = {"docs": self.docs.schema}
         if optimize_layout:
             # ~2M block rows per bucket keeps files O(100MB); min 16
             # buckets so exact-term queries prune to <=1/16 of the
             # index even when it is small
-            n_blocks = postings.count()
+            if n_blocks is None:
+                n_blocks = postings.count()
             n_part = max(1, min(
                 postings.rdd.getNumPartitions(), (n_blocks // 2_000_000) + 1
             ))
@@ -585,17 +596,21 @@ class InvertedIndex:
                 .repartition(term_buckets, "_tb")
                 .sortWithinPartitions("term", "block_id")
             )
+            # partition discovery appends the _tb directory column
+            data = postings.drop("_tb").schema
+            schemas["postings"] = T.StructType(
+                data.fields + [postings.schema["_tb"]]
+            )
         else:
             n_part = max(self.postings.rdd.getNumPartitions(), 1)
+            schemas["postings"] = postings.schema
         ts_path = os.path.join(path, "term_stats")
         term_stats_ranges = None
         # the dictionary is written three times (forward + reversed +
-        # k-gram layouts) and counted once — persist so the groupBy
-        # over posting blocks that derives it runs ONCE, not per
-        # consumer. Its values are deterministic; its file boundaries
-        # are not (repartitionByRange samples with an RDD-id seed), so
-        # the three dictionaries' sizes vary run to run.
+        # k-gram layouts) — persist so the groupBy over posting blocks
+        # that derives it runs ONCE, not per consumer
         ts_cached = self.term_stats.persist()
+        schemas["term_stats"] = ts_cached.schema
         if optimize_layout:
             # term dictionary: range-partitioned and sorted by term, so
             # each file covers one contiguous term interval; the
@@ -604,11 +619,20 @@ class InvertedIndex:
             # Range expansion seek instead of scanning the vocabulary.
             # ~2M terms per file keeps dictionaries O(10MB); min 16
             # files so even small indexes demonstrate pruning.
-            n_terms = ts_cached.count()
+            most_files = max(16, n_part * 4)
+            n_terms, sample = _term_sample(ts_cached, 64 * most_files)
             ts_files = max(16, min(n_part * 4, (n_terms // 2_000_000) + 16))
             rev_path = os.path.join(path, "term_stats_rev")
             grams_path = os.path.join(path, "term_grams")
             gram_files = max(16, min(n_part * 4, (n_terms // 250_000) + 16))
+            # file boundaries are quantiles of one deterministic term
+            # sample (the same sample serves all three layouts), so the
+            # dictionary files are identical run to run
+            fwd_bounds = _split_keys(sample, ts_files)
+            rev_bounds = _split_keys([t[::-1] for t in sample], ts_files)
+            gram_bounds = _split_keys(
+                [g for t in sample for g in _padded_grams(t)], gram_files
+            )
 
             def _w_postings():
                 postings.write.options(**wopts).mode(mode).partitionBy("_tb").parquet(
@@ -621,15 +645,17 @@ class InvertedIndex:
                     # disjoint file ranges, so "first k in sort order"
                     # (top_docs) reads only the head files — the
                     # distributed analogue of the reference's in-order
-                    # segment iteration stopping at k. Range boundaries
-                    # come from sampling (Spark's RangePartitioner seeds
-                    # it from the RDD id, so file SIZES may vary run to
-                    # run) but values/order are already fixed, so
-                    # determinism of results is unaffected.
+                    # segment iteration stopping at k. Files cut the
+                    # doc-id span into equal id ranges, so they are
+                    # identical run to run.
+                    n_files = max(16, n_part)
+                    lo, hi = self.doc_span or _doc_span(self.docs)
+                    fid = F.expr(
+                        f"cast((doc_id - {lo}) * {n_files}"
+                        f" div {hi - lo + 1} as int)"
+                    )
                     (
-                        self.docs.repartitionByRange(
-                            max(16, n_part), "doc_id"
-                        )
+                        self.docs.repartitionById(n_files, fid)
                         .sortWithinPartitions("doc_id")
                         .write.options(**wopts).mode(mode)
                         .parquet(os.path.join(path, "docs"))
@@ -641,7 +667,7 @@ class InvertedIndex:
 
             def _w_fwd():
                 (
-                    ts_cached.repartitionByRange(ts_files, "term")
+                    _by_range(ts_cached, "term", fwd_bounds, ts_files)
                     .sortWithinPartitions("term")
                     .write.options(**wopts).mode(mode)
                     .parquet(ts_path)
@@ -653,8 +679,10 @@ class InvertedIndex:
                 # pattern with only a literal SUFFIX ('%tion') prunes
                 # files by the reversed-suffix interval
                 (
-                    ts_cached.withColumn("rterm", F.reverse(F.col("term")))
-                    .repartitionByRange(ts_files, "rterm")
+                    _by_range(
+                        ts_cached.withColumn("rterm", F.reverse(F.col("term"))),
+                        "rterm", rev_bounds, ts_files,
+                    )
                     .sortWithinPartitions("rterm")
                     .write.options(**wopts).mode(mode)
                     .parquet(rev_path)
@@ -666,25 +694,25 @@ class InvertedIndex:
                 # serves infix-only wildcards and unprefixed fuzzy, the
                 # two shapes the forward/reversed dictionaries can't
                 # seek (the Spark analogue of the reference's automaton
-                # ∩ FST walk, wildcard_utils.cpp/levenshtein_utils.cpp)
-                (
-                    ts_cached.withColumn(
-                        "_p",
-                        F.concat(F.lit("\x02"), F.col("term"), F.lit("\x03")),
-                    )
-                    .select(
-                        F.explode(
-                            F.array_distinct(
-                                F.expr(
-                                    "transform(sequence(1, length(_p) - 2),"
-                                    " i -> substring(_p, i, 3))"
-                                )
+                # ∩ FST walk, wildcard_utils.cpp/levenshtein_utils.cpp).
+                # _padded_grams is the same expansion in Python.
+                grams = ts_cached.withColumn(
+                    "_p",
+                    F.concat(F.lit("\x02"), F.col("term"), F.lit("\x03")),
+                ).select(
+                    F.explode(
+                        F.array_distinct(
+                            F.expr(
+                                "transform(sequence(1, length(_p) - 2),"
+                                " i -> substring(_p, i, 3))"
                             )
-                        ).alias("gram"),
-                        "term",
-                        "df",
-                    )
-                    .repartitionByRange(gram_files, "gram")
+                        )
+                    ).alias("gram"),
+                    "term",
+                    "df",
+                )
+                (
+                    _by_range(grams, "gram", gram_bounds, gram_files)
                     .sortWithinPartitions("gram", "term")
                     .write.options(**wopts).mode(mode)
                     .parquet(grams_path)
@@ -747,8 +775,11 @@ class InvertedIndex:
                     os.path.join(path, "num_terms")
                 )
         ts_cached.unpersist()
+        if self.num_terms is not None:
+            schemas["num_terms"] = self.num_terms.schema
         if self.deleted is not None:
             self.deleted.write.options(**wopts).mode(mode).parquet(os.path.join(path, "deleted"))
+            schemas["deleted"] = self.deleted.schema
         manifest = {
             "version": 1,
             "n_docs": self.field_stats.n_docs,
@@ -779,6 +810,12 @@ class InvertedIndex:
             "encryption": (
                 encryption.manifest_record() if encryption else None
             ),
+            # posting-block rows (None if never counted) and each
+            # table's read schema: column names and types only
+            "n_blocks": n_blocks,
+            "schemas": {
+                name: _as_read(sch).jsonValue() for name, sch in schemas.items()
+            },
         }
         tmp = os.path.join(path, "_manifest.json.tmp")
         with open(tmp, "w") as f:
@@ -1043,7 +1080,12 @@ class InvertedIndex:
             )
         if encryption is not None:
             encryption.apply(spark)
-        postings = spark.read.parquet(os.path.join(path, "postings"))
+        schemas = manifest.get("schemas") or {}
+
+        def _read(name):
+            return read_parquet(spark, os.path.join(path, name), schemas.get(name))
+
+        postings = _read("postings")
         if "block_impacts" not in postings.columns:
             # pre-round-5 index: no impacts column — null-fill so every
             # consumer sees one schema (WAND then uses the loose bound)
@@ -1053,8 +1095,8 @@ class InvertedIndex:
             )
         return cls(
             postings=postings,
-            docs=spark.read.parquet(os.path.join(path, "docs")),
-            term_stats=spark.read.parquet(os.path.join(path, "term_stats")),
+            docs=_read("docs"),
+            term_stats=_read("term_stats"),
             field_stats=FieldStats(
                 n_docs=manifest["n_docs"],
                 total_term_freq=manifest["total_term_freq"],
@@ -1066,7 +1108,7 @@ class InvertedIndex:
             norm=manifest.get("norm", "norm2"),
             analyzer_name=manifest["analyzer"],
             deleted=(
-                spark.read.parquet(os.path.join(path, "deleted"))
+                _read("deleted")
                 if manifest.get("has_deleted")
                 else None
             ),
@@ -1096,7 +1138,7 @@ class InvertedIndex:
                 else None
             ),
             num_terms=(
-                spark.read.parquet(os.path.join(path, "num_terms"))
+                _read("num_terms")
                 if manifest.get("numeric_meta")
                 else None
             ),
@@ -1112,6 +1154,7 @@ class InvertedIndex:
                 if manifest.get("docs_ranges")
                 else None
             ),
+            n_blocks=manifest.get("n_blocks"),
         )
 
     def cache(self) -> "InvertedIndex":
@@ -1119,6 +1162,126 @@ class InvertedIndex:
         self.docs.cache()
         self.term_stats.cache()
         return self
+
+
+# ---- save(): driver-chosen file boundaries, read schemas --------------
+
+
+def _as_read(dt: T.DataType) -> T.DataType:
+    """`dt` as a parquet read returns it: Spark writes every column,
+    element and value as nullable."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_read(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_read(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_read(dt.keyType), _as_read(dt.valueType), True)
+    return dt
+
+
+def read_parquet(spark: SparkSession, paths, schema: dict | None = None,
+                 **options) -> DataFrame:
+    """spark.read.parquet with a manifest's recorded schema (JSON), so
+    the read plans without a schema-inference job; infers when the
+    manifest predates the record (None)."""
+    r = spark.read.options(**options)
+    if schema is not None:
+        r = r.schema(T.StructType.fromJson(schema))
+    return r.parquet(*([paths] if isinstance(paths, str) else paths))
+
+
+def _term_sample(ts: DataFrame, k: int) -> tuple[int, list[str]]:
+    """(row count, the k terms with the smallest (crc32, term)) of a
+    term table, in one job: each task keeps its own bottom k and counts
+    its rows, the driver merges. The sample is a pure function of the
+    term set — uniform, but never random."""
+    schema = pa.schema(
+        [("h", pa.int64()), ("term", pa.string()), ("n", pa.int64())]
+    )
+
+    def gen(batches):
+        n = 0
+        keep = None
+        for b in batches:
+            n += b.num_rows
+            t = pa.Table.from_batches([b])
+            keep = t if keep is None else pa.concat_tables([keep, t])
+            if keep.num_rows > k:
+                h = keep.column("h").to_numpy()
+                # ties at the k-th hash stay in: the driver breaks them
+                keep = keep.filter(pa.array(h <= np.partition(h, k - 1)[k - 1]))
+        if keep is not None and keep.num_rows:
+            keep = keep.append_column(
+                "n", pa.array(np.zeros(keep.num_rows, dtype=np.int64))
+            )
+            yield from keep.cast(schema).to_batches()
+        yield pa.RecordBatch.from_pydict(
+            {"h": [None], "term": [None], "n": [n]}, schema=schema
+        )
+
+    rows = (
+        ts.select(F.crc32(F.col("term").cast("binary")).alias("h"), "term")
+        .mapInArrow(gen, "h long, term string, n long")
+        .collect()
+    )
+    sample = sorted((r["h"], r["term"]) for r in rows if r["term"] is not None)
+    return sum(r["n"] for r in rows), [t for _, t in sample[:k]]
+
+
+def _padded_grams(term: str) -> set[str]:
+    """The k-gram index's rows for one term: its distinct character
+    3-grams, padded with \\x02 / \\x03 (save()'s Spark expression)."""
+    p = "\x02" + term + "\x03"
+    return {p[i:i + 3] for i in range(len(p) - 2)}
+
+
+def _split_keys(keys: list[str], n: int) -> list[str]:
+    """At most n-1 increasing split keys that cut the sorted sample
+    into n runs of about equal size. A cut inside a run of equal keys
+    moves to the next distinct key, as Spark's RangePartitioner does,
+    so repeated keys (common k-grams) cost no file."""
+    keys = sorted(keys)
+    step = len(keys) / n
+    bounds: list[str] = []
+    for i, k in enumerate(keys, 1):
+        if len(bounds) == n - 1:
+            break
+        if i >= step * (len(bounds) + 1) and (not bounds or k > bounds[-1]):
+            bounds.append(k)
+    return bounds
+
+
+def _range_id(col, bounds: list[str]):
+    """Column: the number of `bounds` < col (a key equal to a bound
+    stays below it, as in Spark's RangePartitioner) — a balanced CASE
+    tree, O(log n) comparisons per row. Spark compares strings by UTF-8
+    bytes, the same order as Python's code-point order."""
+
+    def node(lo: int, hi: int):
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(col <= F.lit(bounds[mid]), node(lo, mid)).otherwise(
+            node(mid + 1, hi)
+        )
+
+    return node(0, len(bounds))
+
+
+def _by_range(df: DataFrame, key: str, bounds: list[str], n: int) -> DataFrame:
+    """df repartitioned into n consecutive `key` intervals split at
+    `bounds` — repartitionByRange without its sampling job, and with
+    boundaries that do not change run to run."""
+    return df.repartitionById(n, _range_id(F.col(key), bounds))
+
+
+def _doc_span(docs: DataFrame) -> tuple[int, int]:
+    """[min, max] doc id of a docs table ((0, 0) when empty)."""
+    r = docs.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).first()
+    return (int(r["lo"]), int(r["hi"])) if r["lo"] is not None else (0, 0)
 
 
 def _make_block_decoder(

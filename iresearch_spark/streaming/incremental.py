@@ -20,6 +20,8 @@ requirement of the north rule.
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 import json
 import os
 import time
@@ -34,7 +36,38 @@ from iresearch_spark.index.model import (
     FieldStats,
     InvertedIndex,
     check_segments_agree,
+    read_parquet,
 )
+
+
+def _sub_manifests(paths: list[str]) -> list[dict]:
+    out = []
+    for p in paths:
+        with open(os.path.join(p, "manifest.json")) as f:
+            out.append(json.load(f))
+    return out
+
+
+def _scan_each(spark, paths, sub_manifests, table: str) -> DataFrame:
+    """One scan of `table` per segment, unioned in the given order."""
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [
+            read_parquet(
+                spark, os.path.join(p, table), (m.get("schemas") or {}).get(table)
+            )
+            for p, m in zip(paths, sub_manifests)
+        ],
+    )
+
+
+def _common_schema(sub_manifests: list[dict], table: str) -> dict | None:
+    """The table's recorded read schema when every segment records the
+    same one, else None (the read then infers it)."""
+    recs = [(m.get("schemas") or {}).get(table) for m in sub_manifests]
+    if recs[0] is None or any(r != recs[0] for r in recs[1:]):
+        return None
+    return recs[0]
 
 
 def _concat_ranges(paths, sub_manifests, key):
@@ -109,9 +142,6 @@ class IncrementalIndexer:
         seg_id = f"seg_{epoch_id}"
         if any(s["id"] == seg_id for s in manifest["segments"]):
             return  # checkpoint replay — already committed
-        n_rows = batch_df.count()
-        if n_rows == 0:
-            return
         base = manifest["next_doc_id"]
         # fused build with an id offset: the micro-batch's segment claims
         # the doc-id range [base, base+n) in one projected shuffle (no
@@ -130,6 +160,11 @@ class IncrementalIndexer:
             with_offsets=self.with_offsets,
             payload_delimiter=self.payload_delimiter,
         )
+        if idx.doc_span is None:  # the build found no rows
+            idx.unpersist()
+            return
+        # the fused build's ids are dense: [base, last + 1)
+        n_rows = idx.doc_span[1] + 1 - base
         seg_path = os.path.join(self.index_dir, "segments", seg_id)
         idx.save(seg_path, encryption=self.encryption)
         build_metrics(idx, self.bucket_bits).write.options(
@@ -137,6 +172,7 @@ class IncrementalIndexer:
         ).mode("overwrite").parquet(
             os.path.join(seg_path, "metrics")
         )
+        idx.unpersist()
         manifest["segments"].append(
             {
                 "id": seg_id,
@@ -234,7 +270,6 @@ class IncrementalIndexer:
         Returns the new segment id (None when <2 segments selected)."""
         from iresearch_spark.index.merge import (
             consolidate as _reblock,
-            merge_indexes,
             purge_deleted,
         )
 
@@ -250,11 +285,17 @@ class IncrementalIndexer:
         paths = [
             os.path.join(self.index_dir, "segments", s["id"]) for s in sel
         ]
-        idx = InvertedIndex.load(spark, paths[0], encryption=self.encryption)
-        for p in paths[1:]:
-            idx = merge_indexes(
-                idx, InvertedIndex.load(spark, p, encryption=self.encryption)
-            )
+        sub_manifests = _sub_manifests(paths)
+        idx = self._merged_view(spark, paths, sub_manifests, "consolidating")
+        # save() writes postings and docs rows in the order it scans
+        # them, and a multi-path scan orders its files by size: one scan
+        # per segment, in manifest order, keeps the rewrite's files
+        # independent of file sizes
+        idx = dataclasses.replace(
+            idx,
+            postings=_scan_each(spark, paths, sub_manifests, "postings"),
+            docs=_scan_each(spark, paths, sub_manifests, "docs"),
+        )
         if idx.deleted is not None:
             idx = purge_deleted(idx, bits)
         elif reblock:
@@ -307,8 +348,6 @@ class IncrementalIndexer:
         a driver-side plan explosion after months of daily micro-batches.
         Doc-id disjointness across segments is the manifest's contract,
         so a plain union IS the merged index."""
-        import json as _json
-
         manifest = self._read_manifest()
         segs = manifest["segments"]
         if not segs:
@@ -320,10 +359,15 @@ class IncrementalIndexer:
             return InvertedIndex.load(
                 spark, paths[0], encryption=self.encryption
             )
-        sub_manifests = []
-        for p in paths:
-            with open(os.path.join(p, "manifest.json")) as f:
-                sub_manifests.append(_json.load(f))
+        return self._merged_view(spark, paths, _sub_manifests(paths), "reading")
+
+    def _merged_view(
+        self, spark: SparkSession, paths: list[str], sub_manifests: list[dict],
+        action: str,
+    ) -> InvertedIndex:
+        """The segments at `paths` as one index: one multi-path read
+        per table (with the segments' recorded schemas when they all
+        agree — no inference job) and one term_stats groupBy."""
         if any(m.get("encryption") for m in sub_manifests):
             if self.encryption is None:
                 raise ValueError(
@@ -332,12 +376,15 @@ class IncrementalIndexer:
                 )
         if self.encryption is not None:
             self.encryption.apply(spark)
-        check_segments_agree(sub_manifests, "reading")
+        check_segments_agree(sub_manifests, action)
         if any(m.get("has_deleted") for m in sub_manifests):
             # deletes are per-segment parquet dirs; only some exist, so
             # they can't ride one multi-path read
             parts = [
-                spark.read.parquet(os.path.join(p, "deleted")).select("doc_id")
+                read_parquet(
+                    spark, os.path.join(p, "deleted"),
+                    (m.get("schemas") or {}).get("deleted"),
+                ).select("doc_id")
                 for p, m in zip(paths, sub_manifests)
                 if m.get("has_deleted")
             ]
@@ -359,8 +406,14 @@ class IncrementalIndexer:
         # different bucket counts, so term_buckets becomes the LIST of
         # distinct counts (pruning includes a term's bucket under every
         # count — over-includes, never drops).
-        postings = spark.read.option("recursiveFileLookup", "true").parquet(
-            *[os.path.join(p, "postings") for p in paths]
+        postings_schema = _common_schema(sub_manifests, "postings")
+        if postings_schema is not None:  # no partition discovery: no _tb
+            postings_schema = dict(postings_schema, fields=[
+                f for f in postings_schema["fields"] if f["name"] != "_tb"
+            ])
+        postings = read_parquet(
+            spark, [os.path.join(p, "postings") for p in paths],
+            postings_schema, recursiveFileLookup="true",
         )
         if all(m.get("tb_data_col") for m in sub_manifests):
             postings = postings.withColumnRenamed("_tbd", "_tb")
@@ -369,7 +422,10 @@ class IncrementalIndexer:
         else:  # pre-_tbd segments in the mix: no bucket column to prune on
             term_buckets = None
         term_stats = (
-            spark.read.parquet(*[os.path.join(p, "term_stats") for p in paths])
+            read_parquet(
+                spark, [os.path.join(p, "term_stats") for p in paths],
+                _common_schema(sub_manifests, "term_stats"),
+            )
             .groupBy("term")
             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         )
@@ -383,13 +439,17 @@ class IncrementalIndexer:
         metas = [m.get("numeric_meta") for m in sub_manifests]
         steps = {m.get("precision_step", 64) for m in sub_manifests}
         if all(metas) and len({json.dumps(x, sort_keys=True) for x in metas}) == 1 and len(steps) == 1:
-            num_terms = spark.read.parquet(
-                *[os.path.join(p, "num_terms") for p in paths]
+            num_terms = read_parquet(
+                spark, [os.path.join(p, "num_terms") for p in paths],
+                _common_schema(sub_manifests, "num_terms"),
             )
             numeric_meta = metas[0]
         return InvertedIndex(
             postings=postings,
-            docs=spark.read.parquet(*[os.path.join(p, "docs") for p in paths]),
+            docs=read_parquet(
+                spark, [os.path.join(p, "docs") for p in paths],
+                _common_schema(sub_manifests, "docs"),
+            ),
             term_stats=term_stats,
             field_stats=FieldStats(
                 n_docs=sum(m["n_docs"] for m in sub_manifests),
@@ -431,4 +491,9 @@ class IncrementalIndexer:
             num_terms=num_terms,
             numeric_meta=numeric_meta,
             precision_step=min(steps),  # irrelevant when num_terms is None
+            n_blocks=(
+                sum(m["n_blocks"] for m in sub_manifests)
+                if all(m.get("n_blocks") is not None for m in sub_manifests)
+                else None
+            ),
         )

@@ -173,25 +173,18 @@ def test_search_many_and_matches_across_shards(tiers, monkeypatch, per_shard):
         assert sorted(_rows(eng.matches(q))) == sorted(hot.matches(q)), name
 
 
-def _jobs(spark, fn):
-    jvm_sc = spark.sparkContext._jsc.sc()
-    j0 = jvm_sc.dagScheduler().nextJobId()
-    fn()
-    return jvm_sc.dagScheduler().nextJobId() - j0
-
-
-def test_one_spark_job_per_query(spark, saved, monkeypatch):
+def test_one_spark_job_per_query(spark, saved, monkeypatch, spark_jobs):
     eng = SearchEngine(InvertedIndex.load(spark, saved).cache(),
                        preload_stats=True)
     eng.search(Term("alpha"), k=1).collect()  # delete mask collected once
     for name in ("term", "and", "or", "phrase"):
         q = QUERIES[name]
-        assert _jobs(spark, lambda: eng.search(q, k=10).collect()) == 1, name
+        assert spark_jobs(lambda: eng.search(q, k=10).collect()) == 1, name
     q = QUERIES["or"]
-    assert _jobs(spark, lambda: eng.search(q, k=10, mode="wand").collect()) == 1
+    assert spark_jobs(lambda: eng.search(q, k=10, mode="wand").collect()) == 1
     monkeypatch.setattr(executor, "POSTINGS_PER_SHARD", 50)
     eng.search(q, k=10).collect()  # the doc-id span is read once
-    assert _jobs(spark, lambda: eng.search(q, k=10, mode="wand").collect()) <= 2
+    assert spark_jobs(lambda: eng.search(q, k=10, mode="wand").collect()) <= 2
 
 
 def test_wand_stats_sum_over_shards(spark, saved, monkeypatch):
@@ -255,7 +248,7 @@ def test_nested_rollup_folds_children_in_doc_order(spark, nested_saved, dtype):
         assert score == acc, parent
 
 
-def test_mixed_tree_jobs(spark, nested_saved):
+def test_mixed_tree_jobs(spark, nested_saved, spark_jobs):
     """A tree mixing docs-table leaves scans its postings-only children
     in one shard scan per boolean node: no more Spark jobs than the
     DataFrame postings evaluators it replaced took (3, 4 and 6 jobs on
@@ -268,9 +261,9 @@ def test_mixed_tree_jobs(spark, nested_saved):
         (Or([Phrase(("alpha", "beta")), NumericRange("n", 2.0, 6.0)]), 4),
         (Nested(Or([Term("alpha"), Term("gamma")])), 6),
     ):
-        assert _jobs(spark, lambda: eng.search(q, k=10).collect()) <= most, q
+        assert spark_jobs(lambda: eng.search(q, k=10).collect()) <= most, q
     q = NgramSimilarity(("alpha", "beta", "gamma"), threshold=0.5)
-    assert _jobs(spark, lambda: eng.search(q, k=10).collect()) == 1
+    assert spark_jobs(lambda: eng.search(q, k=10).collect()) == 1
 
 
 def test_positional_leaves_need_positions(spark):
