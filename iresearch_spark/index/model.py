@@ -594,7 +594,9 @@ class InvertedIndex:
                 # Cost: one constant int per file, RLE'd to ~nothing.
                 .withColumn("_tbd", F.col("_tb"))
                 .repartition(term_buckets, "_tb")
-                .sortWithinPartitions("term", "block_id")
+                # _tb leads: partitionBy("_tb") sorts by it, and keeps
+                # the inner order only when the rows already are
+                .sortWithinPartitions("_tb", "term", "block_id")
             )
             # partition discovery appends the _tb directory column
             data = postings.drop("_tb").schema
@@ -725,12 +727,22 @@ class InvertedIndex:
                     # numeric term dictionary: sorted by (field, shift,
                     # prefix) so each per-level BETWEEN of a granular
                     # range decomposition reads only the row groups
-                    # whose min/max prefix intersects it
+                    # whose min/max prefix intersects it; file
+                    # boundaries are quantiles of a deterministic
+                    # sample (the rows of least hash), so the files are
+                    # identical run to run
+                    key = ("field", "shift", "prefix")
+                    n_files = max(16, n_part)
+                    sample = (
+                        self.num_terms.select(F.xxhash64(*key).alias("h"), *key)
+                        .orderBy("h", *key)
+                        .limit(64 * n_files)
+                        .collect()
+                    )
+                    bounds = _split_keys([tuple(r)[1:] for r in sample], n_files)
                     (
-                        self.num_terms.repartitionByRange(
-                            max(16, n_part), "field", "shift", "prefix"
-                        )
-                        .sortWithinPartitions("field", "shift", "prefix")
+                        _by_range(self.num_terms, key, bounds, n_files)
+                        .sortWithinPartitions(*key)
                         .write.options(**wopts).mode(mode)
                         .parquet(os.path.join(path, "num_terms"))
                     )
@@ -1158,9 +1170,11 @@ class InvertedIndex:
         )
 
     def cache(self) -> "InvertedIndex":
-        self.postings.cache()
-        self.docs.cache()
-        self.term_stats.cache()
+        """Cache the tables every query reads: the delete mask too, as
+        every shard scan of an index with deletes reads it."""
+        for df in (self.postings, self.docs, self.term_stats, self.deleted):
+            if df is not None:
+                df.cache()
         return self
 
 
@@ -1254,28 +1268,38 @@ def _split_keys(keys: list[str], n: int) -> list[str]:
     return bounds
 
 
-def _range_id(col, bounds: list[str]):
-    """Column: the number of `bounds` < col (a key equal to a bound
-    stays below it, as in Spark's RangePartitioner) — a balanced CASE
-    tree, O(log n) comparisons per row. Spark compares strings by UTF-8
-    bytes, the same order as Python's code-point order."""
+def _range_id(cols: list, bounds: list[tuple]):
+    """Column: the number of `bounds` < the `cols` key in lexicographic
+    order (a key equal to a bound stays below it, as in Spark's
+    RangePartitioner) — a balanced CASE tree, O(log n) comparisons per
+    row. Spark compares strings by UTF-8 bytes, the same order as
+    Python's code-point order."""
+
+    def le(i: int, bound: tuple):
+        c, v = cols[i], F.lit(bound[i])
+        if i == len(cols) - 1:
+            return c <= v
+        return (c < v) | ((c == v) & le(i + 1, bound))
 
     def node(lo: int, hi: int):
         if lo == hi:
             return F.lit(lo)
         mid = (lo + hi) // 2
-        return F.when(col <= F.lit(bounds[mid]), node(lo, mid)).otherwise(
+        return F.when(le(0, bounds[mid]), node(lo, mid)).otherwise(
             node(mid + 1, hi)
         )
 
     return node(0, len(bounds))
 
 
-def _by_range(df: DataFrame, key: str, bounds: list[str], n: int) -> DataFrame:
-    """df repartitioned into n consecutive `key` intervals split at
-    `bounds` — repartitionByRange without its sampling job, and with
-    boundaries that do not change run to run."""
-    return df.repartitionById(n, _range_id(F.col(key), bounds))
+def _by_range(df: DataFrame, key, bounds: list, n: int) -> DataFrame:
+    """df repartitioned into n consecutive intervals of its `key` column
+    (or tuple of columns) split at `bounds` — repartitionByRange without
+    its sampling job, and with boundaries that do not change run to
+    run."""
+    if isinstance(key, str):
+        key, bounds = (key,), [(b,) for b in bounds]
+    return df.repartitionById(n, _range_id([F.col(c) for c in key], bounds))
 
 
 def _doc_span(docs: DataFrame) -> tuple[int, int]:

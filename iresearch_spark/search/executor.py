@@ -1,97 +1,78 @@
-"""Query execution on the cluster: AST -> DataFrame plan.
+"""Query execution on the cluster: AST -> one shard scan.
 
-This module holds only the Spark DRIVERS — term-dictionary scans, the
-shard plan, and the DataFrame plan of trees that read the docs table.
-What a query means (scores, expansion caps and order, WAND eligibility
-and bounds, the boolean merge order, the top-k tie-break) comes from
-the Spark-free search/semantics.py core that the hot and embedded tiers
-share, so all tiers answer alike.
+This module holds only the Spark DRIVERS — term-dictionary scans and
+the shard plan. What a query means (scores, expansion caps and order,
+WAND eligibility and bounds, the boolean merge order, the top-k
+tie-break) comes from the Spark-free search/semantics.py core, and
+every tree is evaluated by the hot tier's HotState, so all tiers
+answer alike.
 
-Lifecycle of a postings-only query (every leaf a Term, Terms, Prefix,
-Wildcard, Range, Fuzzy, Phrase, SamePosition or NgramSimilarity, under
-And / Or / Not / Should) — the reference's per-segment pass (SURVEY §3.2):
+Lifecycle of a query — the reference's per-segment pass (SURVEY §3.2):
 
   compile  = driver-side: planner rewrites + multiterm expansion
              against the term dictionary + the GLOBAL df of every term
              the query touches (one term_stats lookup, none on a
              preload_stats engine — the reference seeks the term
              dictionary and caches cookies, term_filter.cpp:92-128) +
-             the scorer parameters + the delete mask, into one
-             picklable hot.ShardPlan.
-  execute  = ONE mapInArrow over the query's posting blocks. The
-             blocks split into ceil(postings / POSTINGS_PER_SHARD)
-             equal ranges of the index's doc-id span (one shard is a
-             coalesce(1) scan with no shuffle; more shards than cores
-             run in waves, so a task holds about POSTINGS_PER_SHARD
-             postings when the query's doc ids spread evenly; a
-             block straddling a shard boundary goes to every shard it
-             overlaps and is clipped after decode). Each shard builds
-             the hot tier's HotState from its Arrow block table and the
-             plan — decode, score_expr, the leaf-order fold, required
-             and exclusions, phrases from positions and, for
-             mode="wand", the range-aligned block-max WAND walk — and
-             returns its exact top k (the reference's per-segment
-             wanderator + heap, formats_10.cpp:2426-2642).
+             the scorer parameters, into one picklable hot.ShardPlan.
+             The same walk collects the side rows, what the tree reads
+             besides posting blocks: the delete mask, the docs rows
+             and columns its docs-table leaves test, and the subtrees
+             answered before the scan (a GranularRange's pruned
+             num_terms BETWEEN scan, a Cached child's materialized
+             rows, a Field subtree's scan on that field's engine, a
+             Nested child's (child, parent, score) rows). A tree the
+             shards cannot answer fails here, on the driver.
+  execute  = ONE mapInArrow over the query's posting blocks plus its
+             side rows as null-term rows. They split into
+             ceil(rows / POSTINGS_PER_SHARD) equal ranges of the
+             index's doc-id span (one shard is a coalesce(1) scan with
+             no shuffle; more shards than cores run in waves, so a task
+             holds about POSTINGS_PER_SHARD rows when the doc ids spread
+             evenly; a block straddling a shard boundary goes to every
+             shard it overlaps and is clipped after decode, a side row
+             to its doc's shard — a Nested child's to its parent's).
+             Each shard answers the whole tree on the hot tier's
+             HotState built from its Arrow table and the plan, and
+             returns its exact top k (for mode="wand" by the
+             range-aligned block-max WAND walk: the reference's
+             per-segment wanderator + heap, formats_10.cpp:2426-2642).
   merge    = orderBy(score desc, doc_id asc) LIMIT k over the shards'
              top-k lists (tie-break parity: the reference's heap keeps
              the earliest doc on ties, utils/index-search.cpp:759) — a
              driver-side takeOrdered, so a one-shard query is ONE Spark
-             job and a multi-shard one adds only its shard shuffle.
+             job and a multi-shard one adds only its shard shuffle. A
+             Nested child's scan runs inside its parent's job, adding
+             a shuffle when either scan spans several shards; a Cached
+             child is materialized once per engine.
 
-Scale limits of the shard plan: the delete mask travels as sorted doc
-ids (8 bytes per deleted doc) inside every task's pickled plan, so a
-mask of tens of millions of docs wants a consolidation first; and the
-shard count counts a capped multiterm expansion's scored head only, not
-the unscored tail its pattern still matches.
+Scale limits of the shard plan: the shard count counts a capped
+multiterm expansion's scored head only, not the unscored tail its
+pattern still matches, and a numeric-dictionary GranularRange as every
+doc of the index (its match count is unknown until the scan).
 
-search_many() answers every postings-only query of a batch in the same
-single pass (each shard evaluates the whole batch).
-
-The shard scan is the only reader of postings for scoring. A tree that
-mixes in docs-table leaves (AllDocs, Exists, NumericRange,
-GranularRange, Nested, Cached, Field) runs a DataFrame plan that reads
-only the docs table: the docs-table leaves, the Nested rollup, the
-Cached materialization and Field routing. Each of its postings-only
-subtrees is answered by the shard scan with k None (every match),
-scored with the boost it inherits; the postings-only children of one
-mixed And / Or, exclusions included, are the named queries of ONE
-scan. The children's rows meet in one groupBy(doc_id) — the same
-leaf-order fold as every tier — and an anti-join against the delete
-mask drops the deleted docs the docs-table leaves bring in.
+search_many() answers every query of a batch in the same single pass
+(each shard evaluates the whole batch).
 """
 
 from __future__ import annotations
 
-import functools
+import dataclasses
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from iresearch_spark.index.model import InvertedIndex
+from iresearch_spark.index.model import InvertedIndex, _doc_span
 from iresearch_spark.search import ast, planner
 from iresearch_spark.search import hot as _hot
 from iresearch_spark.search import semantics as sem_
 from iresearch_spark.search.semantics import Semantics
 
-RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
-
-SHARD_SCHEMA = T.StructType(
-    [T.StructField("query", T.StringType(), False)] + RESULT_SCHEMA.fields
-)
-
-# leaves the shard plan evaluates (besides Phrase and SamePosition)
-_SHARD_LEAVES = (
-    (ast.Empty, ast.Term, ast.Terms, ast.NgramSimilarity)
-    + sem_.EXPANSION_LEAVES
-)
+SHARD_SCHEMA = "query string, doc_id long, score double"
+# a Nested child scan's rows: each matching child with its parent
+CHILD_SCHEMA = SHARD_SCHEMA + ", parent long"
 
 # Query postings per doc-range shard. It trades latency and per-task
 # memory against CPU: a second shard never removes kernel CPU, it adds a
@@ -145,7 +126,7 @@ class SearchEngine:
         # way). Sound because the index view is immutable per engine;
         # repeated executions reuse ONE expansion job.
         self._expansion_cache: dict = {}
-        self._deleted: np.ndarray | None = None  # the collected mask
+        self._deleted_count: int | None = None
         self._span: tuple[int, int] | None = None  # (min, max) doc id
         self._stats_preloaded = False
         self._vocab: sem_.Vocabulary | None = None
@@ -154,7 +135,7 @@ class SearchEngine:
 
     def close(self) -> None:
         """Release engine-held caches (Cached-node materializations)."""
-        for df in self._proxy_cache.values():
+        for df, _ in self._proxy_cache.values():
             try:
                 df.unpersist()
             except Exception:
@@ -197,22 +178,15 @@ class SearchEngine:
         self, query: ast.Node, k: int = 10, mode: str = "exhaustive"
     ) -> DataFrame:
         """Top-k (doc_id, score), score desc, doc_id asc."""
-        norm = planner.normalize(query)
-        if self._shard_servable(norm):
-            df = self._shard_scan({"": norm}, k, mode)[0]
-            df = df.select("doc_id", "score")
-        else:
-            df = self._execute(norm)
-        return df.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        df = self._shard_scan({"": planner.normalize(query)}, k, mode)[0]
+        return df.select("doc_id", "score").orderBy(
+            F.desc("score"), F.asc("doc_id")
+        ).limit(k)
 
     def matches(self, query: ast.Node) -> DataFrame:
         """All matching docs with scores (unordered)."""
-        norm = planner.normalize(query)
-        if self._shard_servable(norm):
-            return self._shard_scan({"": norm}, None)[0].select(
-                "doc_id", "score"
-            )
-        return self._execute(norm)
+        df = self._shard_scan({"": planner.normalize(query)}, None)[0]
+        return df.select("doc_id", "score")
 
     def top_docs(
         self,
@@ -270,43 +244,25 @@ class SearchEngine:
         Query THROUGHPUT (the reference benchmark's q/s metric,
         scripts/search-benchmark.sh) on Spark is bounded by the
         ~0.3s/job scheduling floor when queries run one at a time.
-        Every postings-only query of the batch is answered in ONE shard
-        scan over the union of their posting blocks, each shard
-        evaluating the whole batch; other shapes union their own
-        search() plans into the same result."""
+        Every query of the batch is answered in ONE shard scan over the
+        union of their posting blocks and side rows, each shard
+        evaluating the whole batch."""
         if not queries:
-            return self._spark.createDataFrame(
-                [], "query string, doc_id long, score double"
-            )
-        shared: dict[str, ast.Node] = {}
-        parts = []
-        for name, node in queries.items():
-            norm = planner.normalize(node)
-            if self._shard_servable(norm):
-                shared[name] = norm
-            else:
-                topk = self.search(node, k=k, mode=mode)
-                parts.append(
-                    topk.select(F.lit(name).alias("query"), "doc_id", "score")
-                )
-        if shared:
-            df, n_shards = self._shard_scan(shared, k, mode)
-            if n_shards > 1:
-                from pyspark.sql import Window
+            return self._spark.createDataFrame([], SHARD_SCHEMA)
+        norms = {name: planner.normalize(q) for name, q in queries.items()}
+        df, n_shards, _ = self._shard_scan(norms, k, mode)
+        if n_shards > 1:
+            from pyspark.sql import Window
 
-                w = Window.partitionBy("query").orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                )
-                df = (
-                    df.withColumn("_rk", F.row_number().over(w))
-                    .filter(F.col("_rk") <= k)
-                    .drop("_rk")
-                )
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.orderBy("query", F.desc("score"), F.asc("doc_id"))
+            w = Window.partitionBy("query").orderBy(
+                F.desc("score"), F.asc("doc_id")
+            )
+            df = (
+                df.withColumn("_rk", F.row_number().over(w))
+                .filter(F.col("_rk") <= k)
+                .drop("_rk")
+            )
+        return df.orderBy("query", F.desc("score"), F.asc("doc_id"))
 
     def explain(self, query: ast.Node, k: int = 10, mode: str = "exhaustive"):
         self.search(query, k, mode).explain("formatted")
@@ -525,34 +481,21 @@ class SearchEngine:
         if self._vocab is not None:
             expanded, _matched, complete = self._vocab.expand(node, self.sem)
             out = (expanded, complete)
-        elif isinstance(node, ast.Prefix):
-            out = self._expand(
-                F.col("term").startswith(node.prefix),
-                self.sem.expansion_limit(node),
-                lo=node.prefix,
-                hi=sem_.prefix_successor(node.prefix),
-                hi_inclusive=False,
-            )
-        elif isinstance(node, ast.Wildcard):
-            wsrc, wkw = self._wildcard_expand_plan(node.pattern)
-            out = self._expand(
-                F.col("term").rlike(sem_.like_to_regex(node.pattern)),
-                self.sem.expansion_limit(node),
-                source=wsrc,
-                **wkw,
-            )
-        elif isinstance(node, ast.Range):
-            out = self._expand(
-                self._range_pred(node, F.col("term")),
-                self.sem.expansion_limit(node),
-                lo=node.min_term,
-                hi=node.max_term,
-                hi_inclusive=node.include_max,
-            )
         elif isinstance(node, ast.Fuzzy):
             out = (self._fuzzy_candidates(node), True)
         else:
-            raise TypeError(f"not an expansion leaf: {node}")
+            pred = self._leaf_predicate(node)
+            limit = self.sem.expansion_limit(node)
+            if isinstance(node, ast.Prefix):
+                hi = sem_.prefix_successor(node.prefix)
+                out = self._expand(pred, limit, node.prefix, hi, False)
+            elif isinstance(node, ast.Wildcard):
+                wsrc, wkw = self._wildcard_expand_plan(node.pattern)
+                out = self._expand(pred, limit, source=wsrc, **wkw)
+            else:  # Range
+                out = self._expand(
+                    pred, limit, node.min_term, node.max_term, node.include_max
+                )
         self._expansion_cache[node] = out
         return out
 
@@ -647,295 +590,24 @@ class SearchEngine:
         )
         return [(r["term"], r["df"]) for r in rows]
 
-    # ------------------------------------------------------ execute helpers
-
-    def _empty(self) -> DataFrame:
-        return self._spark.createDataFrame([], RESULT_SCHEMA)
-
-    def _eval(self, node: ast.Node, boost: float) -> DataFrame:
-        """node -> (doc_id, score) DataFrame, unique per doc."""
-        if isinstance(node, ast.Empty):
-            return self._empty()
-        if self._shard_servable(node):
-            # a postings-only subtree of a mixed tree: every match
-            rows, _ = self._shard_scan({"": node}, None, boosts={"": boost})
-            return rows.select("doc_id", "score")
-        if isinstance(node, ast.AllDocs):
-            return self.index.docs.select(
-                "doc_id",
-                F.lit(self.sem.const_score(node.boost * boost)).alias("score"),
-            )
-        if isinstance(node, ast.Exists):
-            cols = sem_.exists_columns(node, self.index.docs.columns)
-            if cols[0] not in self.index.docs.columns:
-                raise ValueError(
-                    f"docs table has no column {node.column!r}; build "
-                    "the index with extra_doc_cols=[...] to store it"
-                )
-            pred = F.col(cols[0]).isNotNull()
-            for c in cols[1:]:
-                pred = pred | F.col(c).isNotNull()
-            return self.index.docs.filter(pred).select(
-                "doc_id",
-                F.lit(self.sem.const_score(node.boost * boost)).alias("score"),
-            )
-        if isinstance(node, ast.NumericRange):
-            if node.column not in self.index.docs.columns:
-                raise ValueError(
-                    f"docs table has no column {node.column!r}; build the "
-                    "index with extra_doc_cols=[...] to store it"
-                )
-            col = F.col(node.column)
-            pred = col.isNotNull()
-            if node.min_val is not None:
-                pred = pred & (
-                    col >= node.min_val if node.include_min else col > node.min_val
-                )
-            if node.max_val is not None:
-                pred = pred & (
-                    col <= node.max_val if node.include_max else col < node.max_val
-                )
-            return self.index.docs.filter(pred).select(
-                "doc_id",
-                F.lit(self.sem.const_score(node.boost * boost)).alias("score"),
-            )
-        if isinstance(node, ast.GranularRange):
-            return self._eval_granular(node, boost)
-        if isinstance(node, ast.Cached):
-            key = node.child
-            if key not in self._proxy_cache:
-                # materialize + cache the child's result once; later
-                # executions reuse the in-memory (doc_id, score) table
-                # (the reference's proxy_filter bitset cache)
-                df = self._eval(node.child, 1.0).cache()
-                df.count()
-                self._proxy_cache[key] = df
-            cached = self._proxy_cache[key]
-            b = float(node.boost * boost)
-            if b == 1.0:
-                return cached
-            return cached.select(
-                "doc_id", (F.col("score") * F.lit(b)).alias("score")
-            )
-        if isinstance(node, ast.Field):
-            # field-scoped subtree (reference per-leaf field names): the
-            # wrapped query evaluates against THAT field's postings +
-            # stats (its own df/N/avg_dl/norms — the reference's
-            # field_meta / per-field FieldCollector, bm25.cpp:45-80) and
-            # the (doc_id, score) result composes here because every
-            # field index shares the deterministic doc-id space
-            engines = getattr(self, "_field_engines", None) or {}
-            eng = engines.get(node.field)
-            if eng is None:
-                raise ValueError(
-                    f"no indexed field {node.field!r} — query a "
-                    "MultiFieldEngine over indexes built by "
-                    "build_multi_field_index"
-                )
-            return eng._eval(node.child, boost * node.boost)
-        if isinstance(node, ast.Nested):
-            return self._eval_nested(node, boost)
-        if isinstance(node, (ast.And, ast.Or)):
-            return self._eval_bool(node, boost)
-        if isinstance(node, ast.Not):
-            raise ValueError("Not is only valid inside And/Or")
-        if isinstance(node, ast.Should):
-            raise ValueError("Should is only valid as a child of And")
-        raise TypeError(f"unsupported query node: {node!r}")
-
-    def _eval_bool(self, node, boost: float) -> DataFrame:
-        """A mixed And/Or: every postings-only child is one named query
-        of ONE shard scan, every other child its own plan; the rows meet
-        in one groupBy(doc_id) that merges the positives' scores and
-        drops the docs an exclusion matched."""
-        boost = boost * node.boost
-        positives, optional_idx, negatives, required = sem_.bool_parts(node)
-        # leaf ids: the positives in order, then the exclusions
-        children = positives + negatives
-        boosts = [boost] * len(positives) + [1.0] * len(negatives)
-        scan = {
-            str(i): c for i, c in enumerate(children) if self._postings_only(c)
-        }
-        parts = []
-        if scan:
-            rows, _ = self._shard_scan(
-                scan, None, boosts={q: boosts[int(q)] for q in scan}
-            )
-            parts.append(rows.select(
-                "doc_id", "score", F.col("query").cast("int").alias("_leaf")
-            ))
-        for i, c in enumerate(children):
-            if str(i) not in scan:
-                parts.append(self._eval(c, boosts[i]).withColumn("_leaf", F.lit(i)))
-        unioned = functools.reduce(DataFrame.unionByName, parts)
-        # every leaf emits each doc at most once, so counting rows counts
-        # leaves; optional (Should) leaves score but never count toward
-        # `required`. Child scores merge per ScoreMergeType
-        # (scorer.hpp:224-235): sum (default — the fixed leaf-order
-        # fold, float32 in parity mode: the reference sums in child
-        # iterator order), max (dismax/best-field), min, or noop (score
-        # untouched -> constant 0).
-        leaf = F.col("_leaf")
-        positive = leaf < len(positives)
-        merge = node.merge_type
-        if merge in ("max", "min"):
-            score = F.when(positive, F.col("score"))
-            score_agg = getattr(F, merge)(score).alias("score")
-        else:
-            score_agg = _fold_scores(self.sem.f32, where=positive)
-        counted = positive & ~leaf.isin(sorted(optional_idx))
-        merged = (
-            unioned.groupBy("doc_id")
-            .agg(
-                score_agg,
-                F.sum(counted.cast("int")).alias("_cnt"),
-                F.bool_or(~positive).alias("_excl"),
-            )
-            .filter((F.col("_cnt") >= required) & ~F.col("_excl"))
-        )
-        score = F.lit(0.0) if merge == "noop" else F.col("score")
-        return merged.select("doc_id", score.alias("score"))
-
-    def _eval_granular(
-        self, node: "ast.GranularRange", boost: float
-    ) -> DataFrame:
-        """Granular numeric range over the num_terms dictionary
-        (reference by_granular_range, granular_range_filter.cpp): the
-        query bounds map to signed sortable keys, exclusivity becomes
-        a ±1 key step (for doubles that IS nextafter — the sortable
-        transform is a monotone bijection), and the trie decomposition
-        (index/numeric.py split_range) yields O(levels) contiguous
-        BETWEENs over the (field, shift, prefix)-sorted table — each
-        pruned by parquet min/max stats. Constant score = boost, like
-        the reference's kNoBoost granular-term collection. Indexes
-        built without numeric_fields fall back to the stored docs
-        column (same semantics, unpruned scan)."""
-        from iresearch_spark.index import numeric as _num
-
-        idx = self.index
-        meta = idx.numeric_meta or {}
-        if idx.num_terms is None or node.column not in meta:
-            if node.column in idx.docs.columns:
-                return self._eval(
-                    ast.NumericRange(
-                        column=node.column,
-                        min_val=node.min_val,
-                        max_val=node.max_val,
-                        include_min=node.include_min,
-                        include_max=node.include_max,
-                        boost=node.boost,
-                    ),
-                    boost,
-                )
-            raise ValueError(
-                f"index has no numeric dictionary for {node.column!r} and "
-                "no stored column to fall back to; build with "
-                "numeric_fields=[...] (or extra_doc_cols)"
-            )
-        dtype = meta[node.column]
-        lo = hi = None
-        if node.min_val is not None:
-            lo = _num.sortable_py(node.min_val, dtype)
-            if not node.include_min:
-                if lo == _num.LONG_MAX:
-                    return self._empty()
-                lo += 1
-        if node.max_val is not None:
-            hi = _num.sortable_py(node.max_val, dtype)
-            if not node.include_max:
-                if hi == _num.LONG_MIN:
-                    return self._empty()
-                hi -= 1
-        if lo is not None and hi is not None and lo > hi:
-            return self._empty()
-        pred = _num.range_predicate(
-            node.column, lo, hi, idx.precision_step
-        )
-        # the covering intervals are pairwise disjoint and every doc
-        # has exactly one dictionary row per level, so each matching
-        # doc appears exactly once — no distinct needed
-        return idx.num_terms.filter(pred).select(
-            "doc_id",
-            F.lit(self.sem.const_score(node.boost * boost)).alias("score"),
-        )
-
-    def _eval_nested(self, node: ast.Nested, boost: float) -> DataFrame:
-        """Parent/child match (reference ByNestedFilter,
-        nested_filter.hpp:33-94): evaluate the child query, roll matches
-        up to parents via the stored parent_col, keep parents whose
-        matching-child count lies in [min_children, max_children]. The
-        rollup is ONE groupBy shuffle bounded by matching child docs —
-        at 100 TB that is the candidate set, not the corpus."""
-        if node.parent_col not in self.index.docs.columns:
-            raise ValueError(
-                f"docs table has no column {node.parent_col!r}; build the "
-                "index with extra_doc_cols=[...] to store it"
-            )
-        if node.min_children < 1:
-            raise ValueError("min_children must be >= 1")
-        # the reference applies the deleted-docs bitset in every
-        # doc_iterator — deleted children must not count toward
-        # min/max_children nor contribute to the merged score
-        child = self._apply_delete_mask(self._eval(node.child, 1.0))
-        pmap = self.index.docs.filter(
-            F.col(node.parent_col).isNotNull()
-        ).select("doc_id", F.col(node.parent_col).alias("_parent"))
-        # a parent's sum is the left fold over its children in doc-id
-        # order (semantics.fold_sum), as in the hot tier
-        merge = node.merge_type
-        merged = (
-            child.join(pmap, "doc_id")
-            .groupBy("_parent")
-            .agg(
-                getattr(F, merge)("score").alias("score")
-                if merge in ("max", "min")
-                else _fold_scores(False, "doc_id"),
-                F.count(F.lit(1)).alias("_nc"),
-            )
-        )
-        cond = F.col("_nc") >= node.min_children
-        if node.max_children is not None:
-            cond = cond & (F.col("_nc") <= node.max_children)
-        score = (
-            F.lit(0.0)
-            if node.merge_type == "noop"
-            else F.lit(float(node.boost * boost)) * F.col("score")
-        )
-        out = merged.filter(cond).select(
-            F.col("_parent").alias("doc_id"), score.alias("score")
-        )
-        # parents must be actual docs of this index
-        return out.join(self.index.docs.select("doc_id"), "doc_id", "left_semi")
-
     # ---------------------------------------------------- the shard plan
 
     def _shard_servable(self, node: ast.Node) -> bool:
-        """A postings-only tree the shard plan evaluates; a root Not or
-        Should keeps the DataFrame plan (which raises for it)."""
-        if isinstance(node, (ast.Not, ast.Should)):
-            return False
-        return self._postings_only(node)
+        """Every tree runs on the shard plan but a Not or Should outside
+        And / Or, which has no meaning on its own."""
+        return not isinstance(node, (ast.Not, ast.Should))
 
-    def _postings_only(self, node: ast.Node) -> bool:
-        if isinstance(node, _SHARD_LEAVES):
-            return True
-        if isinstance(node, (ast.Phrase, ast.SamePosition)):
-            return all(
-                isinstance(p, (str, ast.Terms) + sem_.EXPANSION_LEAVES)
-                for p in node.terms
-            )
-        if isinstance(node, (ast.Not, ast.Should)):
-            return self._postings_only(node.child)
-        if isinstance(node, (ast.And, ast.Or)):
-            return all(self._postings_only(c) for c in node.children)
-        return False
-
-    def _gather(self, node, plain: set, given: dict, preds: list, slot=False):
-        """Walk a postings-only tree: its plain terms, the driver-side
-        expansion of each multiterm leaf and, for a capped one, the
-        pattern predicate whose unscored terms the leaf still matches
-        (a phrase slot uses only the expansion). True when it reads
-        positions."""
+    def _gather(
+        self, node, plain: set, given: dict, preds: list, side: "_Side",
+        boost: float = 1.0, slot: bool = False,
+    ):
+        """Walk a tree as HotState._eval will, `boost` being the boost
+        the node inherits: its plain terms, the driver-side expansion of
+        each multiterm leaf and, for a capped one, the pattern predicate
+        whose unscored terms the leaf still matches (a phrase slot uses
+        only the expansion); and into `side` what the shards read
+        besides posting blocks. A tree the shards cannot answer fails
+        here, on the driver. True when it reads positions."""
         if isinstance(node, str):
             plain.add(node)
         elif isinstance(node, ast.Term):
@@ -952,15 +624,127 @@ class SearchEngine:
             if not self.index.with_positions:
                 raise ValueError("index was built without positions")
             for p in node.terms:  # an n-gram is a plain term
-                self._gather(p, plain, given, preds, slot=True)
+                self._gather(p, plain, given, preds, side, slot=True)
             return True
-        elif isinstance(node, (ast.Not, ast.Should)):
-            return self._gather(node.child, plain, given, preds)
         elif isinstance(node, (ast.And, ast.Or)):
+            positives, _, negatives, _ = sem_.bool_parts(node)
+            b = boost * node.boost
             return any(
-                [self._gather(c, plain, given, preds) for c in node.children]
+                [self._gather(c, plain, given, preds, side, b) for c in positives]
+                + [self._gather(c, plain, given, preds, side) for c in negatives]
             )
+        elif isinstance(node, (ast.AllDocs, ast.Exists, ast.NumericRange)):
+            side.read_docs(self._doc_columns(node))
+        elif isinstance(node, ast.GranularRange):
+            self._gather_granular(node, boost, side)
+        elif isinstance(node, ast.Cached):
+            key = node.child
+            if key not in self._proxy_cache:
+                # materialize the child's result once; later executions
+                # reuse the in-memory (doc_id, score) table (the
+                # reference's proxy_filter bitset cache)
+                rows = self._shard_scan({"": key}, None)[0]
+                rows = rows.select("doc_id", "score").cache()
+                self._proxy_cache[key] = (rows, rows.count())
+            side.proxies[key] = self._proxy_cache[key]
+        elif isinstance(node, ast.Field):
+            # field-scoped subtree: that field's own stats (the
+            # reference's per-field FieldCollector, bm25.cpp:45-80); its
+            # rows compose here as every field shares the doc-id space
+            eng = (getattr(self, "_field_engines", None) or {}).get(node.field)
+            if eng is None:
+                raise ValueError(
+                    f"no indexed field {node.field!r} — query a "
+                    "MultiFieldEngine over indexes built by "
+                    "build_multi_field_index"
+                )
+            rows, _, est = eng._shard_scan(
+                {"": node.child}, None, boosts={"": boost * node.boost}
+            )
+            side.proxies[(node, boost)] = (rows.select("doc_id", "score"), est)
+        elif isinstance(node, ast.Nested):
+            # parent/child match (reference ByNestedFilter,
+            # nested_filter.hpp:33-94): the child's scan maps matches to
+            # parents, whose shards roll them up
+            if node.min_children < 1:
+                raise ValueError("min_children must be >= 1")
+            side.read_docs(())
+            rows, _, est = self._shard_scan({"": node}, None, children=True)
+            side.proxies[(node, "children")] = (rows, est)
+        elif not self._shard_servable(node):
+            raise ValueError(
+                f"{type(node).__name__} is only valid inside And/Or"
+            )
+        elif not isinstance(node, ast.Empty):
+            raise TypeError(f"unsupported query node: {node!r}")
         return False
+
+    def _doc_columns(self, node) -> list[str]:
+        """The stored docs columns a docs-table leaf (or a Nested
+        node's parent column) tests — checked against the docs table's
+        schema, so a missing one fails on the driver."""
+        if isinstance(node, ast.AllDocs):
+            return []
+        have = self.index.docs.columns
+        if isinstance(node, ast.Exists):
+            cols = sem_.exists_columns(node, have)
+        elif isinstance(node, ast.Nested):
+            cols = [node.parent_col]
+        else:
+            cols = [node.column]
+        if cols[0] not in have:
+            raise ValueError(
+                f"docs table has no column {cols[0]!r}; build the index "
+                "with extra_doc_cols=[...] to store it"
+            )
+        return cols
+
+    def _gather_granular(self, node: ast.GranularRange, boost, side) -> None:
+        """Granular numeric range (reference by_granular_range,
+        granular_range_filter.cpp). Over the num_terms dictionary its
+        matches come from a scan before the shards: the query bounds map
+        to signed sortable keys, exclusivity becomes a ±1 key step (for
+        doubles that IS nextafter — the sortable transform is a monotone
+        bijection), and the trie decomposition (index/numeric.py
+        split_range) yields O(levels) contiguous BETWEENs over the
+        (field, shift, prefix)-sorted table — each pruned by parquet
+        min/max stats. Constant score = boost, like the reference's
+        kNoBoost granular-term collection. Indexes built without
+        numeric_fields fall back to the stored docs column (same
+        semantics, unpruned), which the shards test themselves."""
+        from iresearch_spark.index import numeric as _num
+
+        idx = self.index
+        meta = idx.numeric_meta or {}
+        if idx.num_terms is None or node.column not in meta:
+            if node.column not in idx.docs.columns:
+                raise ValueError(
+                    f"index has no numeric dictionary for {node.column!r} "
+                    "and no stored column to fall back to; build with "
+                    "numeric_fields=[...] (or extra_doc_cols)"
+                )
+            side.read_docs([node.column])
+            return
+        dtype = meta[node.column]
+        lo = hi = None
+        rows = None
+        if node.min_val is not None:
+            lo = _num.sortable_py(node.min_val, dtype) + (not node.include_min)
+        if node.max_val is not None:
+            hi = _num.sortable_py(node.max_val, dtype) - (not node.include_max)
+        if (
+            (lo is None or lo <= _num.LONG_MAX)
+            and (hi is None or hi >= _num.LONG_MIN)
+            and (lo is None or hi is None or lo <= hi)
+        ):
+            # the covering intervals are pairwise disjoint and every doc
+            # has exactly one dictionary row per level, so each matching
+            # doc appears exactly once
+            score = self.sem.const_score(node.boost * boost)
+            rows = idx.num_terms.filter(
+                _num.range_predicate(node.column, lo, hi, idx.precision_step)
+            ).select("doc_id", F.lit(score).alias("score"))
+        side.proxies[(node, boost)] = (rows, idx.field_stats.n_docs)
 
     def _shard_scan(
         self,
@@ -968,24 +752,32 @@ class SearchEngine:
         k: int | None,
         mode: str = "exhaustive",
         boosts: dict | None = None,
-    ) -> tuple[DataFrame, int]:
+        children: bool = False,
+    ) -> tuple[DataFrame, int, int]:
         """(query, doc_id, score) rows of every shard's answer to each
-        normalized postings-only query — its top k, or every match when
-        k is None — and the shard count: one mapInArrow over the
-        queries' posting blocks (see the module docstring). `boosts`
-        maps a query name to the boost it inherits (1.0 when absent)."""
+        normalized query (its top k, or every match when k is None), the
+        shard count and the rows the scan reads (see the module
+        docstring). `boosts` maps a query name to the boost it inherits
+        (1.0 when absent). With `children` each query is a Nested node
+        and the rows are its matching children's, plus `parent`."""
         plain: set = set()
         given: dict = {}
         preds: list = []
-        positional = any(
-            [self._gather(q, plain, given, preds) for q in queries.values()]
-        )
+        side = _Side()
+        positional = False
+        for name, q in queries.items():
+            if children:
+                side.read_docs(self._doc_columns(q))
+                q = q.child
+            positional |= self._gather(
+                q, plain, given, preds, side, (boosts or {}).get(name, 1.0)
+            )
         dfs = self._term_dfs(sorted(plain))
         for expanded, _complete in given.values():
             dfs.update(expanded)
         if preds:
             # a capped expansion matches beyond its scored head: scan
-            # by its pattern, as the DataFrame plan does
+            # by its pattern too
             pred = F.col("term").isin(sorted(dfs)) if dfs else F.lit(False)
             for p in preds:
                 pred = pred | p
@@ -993,8 +785,14 @@ class SearchEngine:
         else:
             blocks = self.index.postings_for_terms(sorted(dfs))
         cols = list(_hot.BLOCK_COLS) + (["positions"] if positional else [])
-        n = max(1, -(-sum(dfs.values()) // POSTINGS_PER_SHARD))
-        blocks, base, width = self._shard_blocks(blocks.select(*cols), n)
+        blocks = blocks.select(*cols)
+        rows = sum(dfs.values())
+        parts, doc_cols, proxies, side_rows = self._side_rows(side)
+        for p in parts:
+            blocks = blocks.unionByName(p, allowMissingColumns=True)
+        rows += side_rows
+        n = max(1, -(-rows // POSTINGS_PER_SHARD))
+        blocks, base, width = self._shard_blocks(blocks, n)
         stats = None
         if self.collect_wand_stats and mode == "wand" and k is not None:
             stats = self._spark.sparkContext.accumulator(
@@ -1002,20 +800,60 @@ class SearchEngine:
             )
             self._wand_acc = stats
         plan = _hot.ShardPlan(
-            self.sem.portable(),
-            dict(queries),
-            dict(boosts or {}),
-            k,
-            mode,
-            dfs,
-            given,
-            self._deleted_ids(),
-            n,
-            base,
-            width,
-            stats,
+            sem=self.sem.portable(),
+            queries=dict(queries),
+            boosts=dict(boosts or {}),
+            k=k,
+            mode=mode,
+            dfs=dfs,
+            expansions=given,
+            doc_cols=doc_cols,
+            proxies=proxies,
+            children=children,
+            n_shards=n,
+            base=base,
+            width=width,
+            stats=stats,
         )
-        return blocks.mapInArrow(_hot.shard_kernel(plan), SHARD_SCHEMA), n
+        schema = CHILD_SCHEMA if children else SHARD_SCHEMA
+        return blocks.mapInArrow(_hot.shard_kernel(plan), schema), n, rows
+
+    def _side_rows(self, side: "_Side"):
+        """(DataFrames, docs columns, {side key: HotState._proxy key},
+        row estimate) of a scan's side rows (hot.ShardPlan). A row names
+        its doc in doc_id and the doc whose shard it goes to in
+        first_doc = last_doc: a Nested child row goes to its parent's."""
+
+        def part(key: str, df: DataFrame, *cols, route: str = "doc_id"):
+            at = F.col(route).cast("long")
+            return df.select(
+                F.lit(key).alias("_side"),
+                at.alias("first_doc"),
+                at.alias("last_doc"),
+                F.col("doc_id").cast("long").alias("doc_id"),
+                *cols,
+            )
+
+        parts, rows = [], 0
+        if self.index.deleted is not None:
+            parts.append(part("x", self.index.deleted))
+            rows += self._n_deleted()
+        doc_cols = tuple(sorted(side.cols or ()))
+        if side.cols is not None:
+            parts.append(part("d", self.index.docs, *(
+                F.col(c).alias(f"_c{i}") for i, c in enumerate(doc_cols)
+            )))
+            rows += self.index.field_stats.n_docs
+        proxies = {}
+        for i, (pkey, (df, est)) in enumerate(side.proxies.items()):
+            proxies[str(i)] = pkey
+            if df is not None:
+                nested = "parent" in df.columns
+                parts.append(part(
+                    str(i), df, "score", route="parent" if nested else "doc_id"
+                ))
+            rows += est
+        return parts, doc_cols, proxies, rows
 
     def _shard_blocks(
         self, blocks: DataFrame, n: int
@@ -1044,52 +882,19 @@ class SearchEngine:
 
     def _doc_span(self) -> tuple[int, int]:
         """The index's (min, max) doc id — doc ids may be sparse or
-        offset (build_index takes them from id_col) — read once per
-        engine (the index view is immutable)."""
+        offset (build_index takes them from id_col) — known to a fresh
+        build, else read once per engine (the index view is
+        immutable)."""
         if self._span is None:
-            row = self.index.docs.agg(
-                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-            ).first()
-            self._span = (int(row["lo"] or 0), int(row["hi"] or 0))
+            self._span = self.index.doc_span or _doc_span(self.index.docs)
         return self._span
 
-    def _deleted_ids(self) -> np.ndarray | None:
-        """The delete mask's sorted doc ids, collected once per engine
-        (the index view is immutable)."""
-        if self.index.deleted is not None and self._deleted is None:
-            self._deleted = _hot.deleted_ids(self.index)
-        return self._deleted
-
-    # ------------------------------------------------- the DataFrame plan
-
-    def _plain_terms(self, node: ast.Node, acc: list[str]) -> None:
-        if isinstance(node, ast.Term):
-            acc.append(node.term)
-        elif isinstance(node, (ast.Terms, ast.NgramSimilarity)):
-            acc.extend(node.terms)
-        elif isinstance(node, (ast.Phrase, ast.SamePosition)):
-            for p in node.terms:  # variadic slots expand at prepare time
-                if isinstance(p, str):
-                    acc.append(p)
-                elif isinstance(p, ast.Terms):
-                    acc.extend(p.terms)
-        elif isinstance(node, (ast.And, ast.Or)):
-            for c in node.children:
-                self._plain_terms(c, acc)
-        elif isinstance(node, (ast.Not, ast.Nested, ast.Should)):
-            self._plain_terms(node.child, acc)
-
-    def _execute(self, norm: ast.Node) -> DataFrame:
-        """All live matches (doc_id, score) of a normalized tree that
-        the shard plan does not serve."""
-        # prefetch stats for every plain term in ONE driver round-trip
-        # (the reference's prepare pass seeks all terms up front,
-        # term_filter.cpp:92-128); per-leaf lookups then hit _df_cache
-        acc: list[str] = []
-        self._plain_terms(norm, acc)
-        if acc:
-            self._term_dfs(list(dict.fromkeys(acc)))
-        return self._apply_delete_mask(self._eval(norm, 1.0))
+    def _n_deleted(self) -> int:
+        """The delete mask's size, counted once per engine (the index
+        view is immutable)."""
+        if self._deleted_count is None:
+            self._deleted_count = self.index.deleted.count()
+        return self._deleted_count
 
     def _apply_delete_mask(self, df: DataFrame) -> DataFrame:
         """Exclude deleted docs at read time (the reference applies the
@@ -1104,21 +909,15 @@ def _order_cols(order) -> list:
     return [getattr(F, d)(c) for c, d in order]
 
 
-def _fold_scores(f32: bool, key: str = "_leaf", where=None):
-    """The Spark form of semantics.fold_sum: a group's scores (of the
-    rows `where` holds, when given) folded left in `key` order
-    (array_sort on the (key, score) structs pins the order under the
-    shuffle), accumulating in float32 in parity mode."""
-    t = "float" if f32 else "double"
-    item = F.struct(key, "score")
-    if where is not None:
-        item = F.when(where, item)  # collect_list drops the nulls
-    return (
-        F.aggregate(
-            F.array_sort(F.collect_list(item)),
-            F.lit(0.0).cast(t),
-            lambda acc, x: (acc + x["score"].cast(t)).cast(t),
-        )
-        .cast("double")
-        .alias("score")
-    )
+@dataclasses.dataclass
+class _Side:
+    """What a shard scan reads besides posting blocks: the docs columns
+    its tree tests (None: no docs rows; empty: their doc ids only) and
+    the subtrees answered before it, {HotState._proxy key: (rows or
+    None, row estimate)}."""
+
+    cols: set | None = None
+    proxies: dict = dataclasses.field(default_factory=dict)
+
+    def read_docs(self, cols) -> None:
+        self.cols = (self.cols or set()) | set(cols)

@@ -21,13 +21,11 @@ floor the pruning shows up directly as wall-clock.
 
 The pinned data and every cache over it live in one HotState per
 commit; HotEngine holds a single reference to it, which a query reads
-once and refresh() swaps. The cluster scores postings with the SAME
-evaluator and no other: each doc-range shard of its one-job scan
-builds a HotState from its posting blocks (`ShardPlan`,
-`shard_kernel`) and answers the query — or, in a tree that mixes in
-docs-table leaves, each postings-only subtree under the boost it
-inherits — while the cluster's DataFrame plan reads only the docs
-table.
+once and refresh() swaps. The cluster has no other evaluator: each
+doc-range shard of its one-job scan builds a HotState from its posting
+blocks and side rows — the docs rows, delete mask and before-the-scan
+subtree answers of its doc range (`ShardPlan`, `shard_kernel`) — and
+answers the whole tree.
 
 Multi-term leaves (Prefix / Wildcard / Range / Fuzzy) are served too:
 the hot segment holds the FULL term dictionary in memory, so expansion
@@ -185,6 +183,7 @@ class HotState:
         tbl,
         *,
         engine=None,
+        docs=None,
         deleted=None,
         dfs=None,
         expansions=None,
@@ -194,6 +193,9 @@ class HotState:
     ):
         self.engine = engine
         self.index = getattr(engine, "index", None)
+        # the docs table surface (`.columns`, `.select(...).toArrow()`):
+        # the index's, or a cluster shard's docs rows
+        self._docs = docs if docs is not None else getattr(self.index, "docs", None)
         self.sem = sem
         self._kernel = sem.kernel
         self._max_bytes = max_bytes
@@ -674,7 +676,7 @@ class HotState:
         """Sorted int64 doc_id array of the docs table, pinned once
         (AllDocs / Nested parent-membership)."""
         if self._spine is None:
-            tbl = self.index.docs.select("doc_id").toArrow()
+            tbl = self._docs.select("doc_id").toArrow()
             ids = tbl.column("doc_id").to_numpy(
                 zero_copy_only=False
             ).astype(np.int64)
@@ -691,7 +693,7 @@ class HotState:
         hit = self._cols.get(name)
         if hit is not None:
             return hit
-        docs = self.index.docs
+        docs = self._docs
         if name not in docs.columns:
             raise ValueError(
                 f"docs table has no column {name!r}; build the index "
@@ -716,16 +718,15 @@ class HotState:
 
     def _numeric_range_docs(self, node) -> np.ndarray:
         """Matching doc_ids of a NumericRange/GranularRange over the
-        stored column — the cluster predicate in numpy. NULL never
-        matches (valid mask). NaN mirrors the tier the CLUSTER would
-        use for this node: Spark comparison semantics order NaN above
-        every number, so a stored-column NumericRange matches NaN on
+        stored column. NULL never matches (valid mask). NaN follows
+        Spark's comparison semantics, which order NaN above every
+        number, so a stored-column NumericRange matches NaN on
         min-only/unbounded predicates — numpy's IEEE compares (always
         False) are fixed up to agree; a GranularRange whose column is
         in the numeric dictionary never matches NaN (the dictionary
-        build filters NULL/NaN, index/numeric.py:147-148), while a
-        dictionary-less GranularRange is the cluster's NumericRange
-        fallback and keeps Spark NaN semantics."""
+        build filters NULL/NaN, index/numeric.py:147-148; a cluster
+        shard gets such a range's doc ids from the dictionary scan),
+        while a dictionary-less GranularRange is a NumericRange."""
         ids, valid, vals = self._doc_col(node.column)
         ids, v = ids[valid], vals[valid]
         m = np.ones(v.size, bool)
@@ -744,7 +745,8 @@ class HotState:
         if v.size and np.issubdtype(np.asarray(v).dtype, np.floating):
             idx = self.index
             dict_tier = isinstance(node, ast.GranularRange) and (
-                idx.num_terms is not None
+                idx is not None
+                and idx.num_terms is not None
                 and node.column in (idx.numeric_meta or {})
             )
             isnan = v != v
@@ -754,36 +756,38 @@ class HotState:
                 m |= isnan
         return ids[m]
 
+    def _nested_children(self, node):
+        """(child doc ids, scores, parent ids) of a Nested node's
+        matching children (deletes already applied per leaf) that name
+        a parent in the stored parent_col — on the cluster, each shard
+        of the child's scan sends these rows to the parent's shard."""
+        ids, valid, pvals = self._doc_col(node.parent_col)
+        cd, cs = self._eval(node.child, 1.0, None)
+        if cd.size == 0 or ids.size == 0:
+            e = np.empty(0, np.int64)
+            return e, np.empty(0, np.float64), e
+        pos = np.minimum(np.searchsorted(ids, cd), ids.size - 1)
+        ok = (ids[pos] == cd) & valid[pos]
+        par = pvals[pos[ok]]
+        if par.dtype == object:
+            par = np.asarray([int(x) for x in par.tolist()], dtype=np.int64)
+        return cd[ok], np.asarray(cs)[ok], par.astype(np.int64)
+
     def _eval_nested_hot(self, node, boost):
-        """Nested parent/child rollup in numpy — the cluster
-        _eval_nested semantics: child matches (deletes already applied
-        per leaf) map to parents via the pinned parent_col, scores
+        """Nested parent/child rollup in numpy: the children's scores
         merge per merge_type, parents keep iff matching-child count in
         [min_children, max_children] and the parent is itself a live
         doc of this index."""
         if node.min_children < 1:
             raise ValueError("min_children must be >= 1")
-        ids, valid, pvals = self._doc_col(node.parent_col)
         empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-        cd, cs = self._eval(node.child, 1.0, None)
-        if cd.size == 0 or ids.size == 0:
+        hit = self._proxy.get((node, "children"))
+        cd, cs, par = hit if hit is not None else self._nested_children(node)
+        if cd.size == 0:
             return empty
-        pos = np.minimum(np.searchsorted(ids, cd), ids.size - 1)
-        ok = (ids[pos] == cd) & valid[pos]
-        if not ok.any():
-            return empty
-        par_raw = pvals[pos[ok]]
-        cs = np.asarray(cs)[ok]
-        if par_raw.dtype == object:
-            par = np.asarray(
-                [int(x) for x in par_raw.tolist()], dtype=np.int64
-            )
-        else:
-            par = par_raw.astype(np.int64)
         # children in (parent, child doc id) order: a parent's sum is
-        # the left fold over its children in doc-id order, as on the
-        # cluster
-        order = np.lexsort((cd[ok], par))
+        # the left fold over its children in doc-id order
+        order = np.lexsort((cd, par))
         par, cs = par[order], cs[order]
         bound = np.empty(par.size, bool)
         bound[0] = True
@@ -877,9 +881,9 @@ class HotState:
         if isinstance(node, ast.GranularRange):
             # stored-column tier only; dictionary-only columns fall
             # back to the cluster's pruned num_terms scan
-            return node.column in self.index.docs.columns
+            return node.column in self._docs.columns
         if isinstance(node, ast.Nested):
-            return node.parent_col in self.index.docs.columns and (
+            return node.parent_col in self._docs.columns and (
                 self._servable(node.child)
             )
         if isinstance(node, ast.NgramSimilarity):
@@ -1137,7 +1141,7 @@ class HotState:
             )
             return self._apply_deletes(d, s)
         if isinstance(node, ast.Exists):
-            cols = sem_.exists_columns(node, self.index.docs.columns)
+            cols = sem_.exists_columns(node, self._docs.columns)
             ids, mask, _ = self._doc_col(cols[0])
             for c in cols[1:]:
                 mask = mask | self._doc_col(c)[1]
@@ -1146,6 +1150,12 @@ class HotState:
                 d.size, self.sem.const_score(node.boost * boost)
             )
             return self._apply_deletes(d, s)
+        if isinstance(node, (ast.GranularRange, ast.Field)):
+            # a cluster shard's answer computed before its scan (a
+            # Field's under its own index's deletes)
+            hit = self._proxy.get((node, boost))
+            if hit is not None:
+                return hit if isinstance(node, ast.Field) else self._apply_deletes(*hit)
         if isinstance(node, (ast.NumericRange, ast.GranularRange)):
             d = self._numeric_range_docs(node)
             s = np.full(
@@ -1543,13 +1553,18 @@ class WandStats:
 @dataclasses.dataclass(frozen=True)
 class ShardPlan:
     """A compiled cluster query batch: everything a doc-range shard
-    needs besides its posting blocks. `queries` maps names to
-    normalized postings-only trees and `boosts` names to the boost a
-    query inherits (1.0 when absent); `dfs`, `expansions` and `deleted`
-    are the driver's GLOBAL df per touched term, multiterm expansions
-    ({node: (expansion, complete)}) and sorted deleted doc ids. Shard s
-    covers doc ids [base + s * width, base + (s + 1) * width), the first
-    and last shard open-ended. `stats` is a WandStats accumulator or
+    needs besides its posting blocks and side rows. `queries` maps
+    names to normalized trees and `boosts` names to the boost a query
+    inherits (1.0 when absent); `dfs` and `expansions` are the driver's
+    GLOBAL df per touched term and multiterm expansions ({node:
+    (expansion, complete)}). The side rows (a non-null `_side` key)
+    carry the delete mask ("x"), the docs rows with the `doc_cols`
+    columns as _c0.._cN ("d") and the subtrees answered before the
+    scan: `proxies` maps each one's key to its HotState._proxy key.
+    With `children` each query is a Nested node, answered with its
+    matching children's (doc_id, score, parent) rows. Shard s covers
+    doc ids [base + s * width, base + (s + 1) * width), the first and
+    last shard open-ended. `stats` is a WandStats accumulator or
     None."""
 
     sem: object
@@ -1559,14 +1574,19 @@ class ShardPlan:
     mode: str
     dfs: dict
     expansions: dict
-    deleted: np.ndarray | None
+    doc_cols: tuple = ()
+    proxies: dict = dataclasses.field(default_factory=dict)
+    children: bool = False
     n_shards: int = 1
     base: int = 0
     width: int = 0
     stats: object = None
 
     def state(self, tbl, shard: int) -> HotState:
-        """The HotState of shard `shard` over its block table."""
+        """The HotState of shard `shard` over its Arrow table."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         rng = None
         if self.n_shards > 1:
             lo = self.base + shard * self.width
@@ -1576,22 +1596,67 @@ class ShardPlan:
             if shard == self.n_shards - 1:
                 hi = np.iinfo(np.int64).max
             rng = (lo, hi)
-        return HotState(
+        # the side rows (a non-null _side key) leave the block table
+        side = pa.table({
+            "_side": pa.array([], pa.string()),
+            "first_doc": pa.array([], pa.int64()),
+            "doc_id": pa.array([], pa.int64()),
+            "score": pa.array([], pa.float64()),
+        })
+        if "_side" in tbl.column_names:
+            side = tbl.filter(pc.is_valid(tbl.column("_side")))
+            tbl = tbl.filter(pc.is_null(tbl.column("_side")))
+
+        def rows(key: str):
+            return side.filter(pc.equal(side.column("_side"), key))
+
+        def ids(t, col="doc_id"):
+            return t.column(col).to_numpy(zero_copy_only=False).astype(np.int64)
+
+        docs = rows("d").select(
+            ["doc_id"] + [f"_c{i}" for i in range(len(self.doc_cols))]
+        )
+        st = HotState(
             self.sem,
             tbl,
-            deleted=self.deleted,
+            docs=_SideDocs(docs.rename_columns(["doc_id", *self.doc_cols])),
+            deleted=np.sort(ids(rows("x"))),
             dfs=self.dfs,
             expansions=self.expansions,
             doc_range=rng,
         )
+        for key, pkey in self.proxies.items():
+            r = rows(key)
+            d = ids(r)
+            o = np.argsort(d, kind="stable")
+            s = r.column("score").to_numpy(zero_copy_only=False)[o]
+            # a Nested child row also names its parent (routed by it)
+            nested = isinstance(pkey, tuple) and pkey[1] == "children"
+            st._proxy[pkey] = (d[o], s, ids(r, "first_doc")[o]) if nested else (d[o], s)
+        return st
+
+
+class _SideDocs:
+    """A cluster shard's docs rows behind the slim docs-table surface
+    HotState reads (`.columns`, `.select(...).toArrow()`)."""
+
+    def __init__(self, tbl):
+        self._tbl = tbl
+        self.columns = tbl.column_names
+
+    def select(self, *cols) -> "_SideDocs":
+        return _SideDocs(self._tbl.select(list(cols)))
+
+    def toArrow(self):
+        return self._tbl
 
 
 def shard_kernel(plan: ShardPlan):
     """The mapInArrow function of a ShardPlan. A task holds the posting
-    blocks of one shard (the `_shard` column names it when there are
-    several) and answers every query on that shard's HotState — its
-    exact top k, or every match when k is None — as (query, doc_id,
-    score) rows."""
+    blocks and side rows of one shard (the `_shard` column names it
+    when there are several) and answers every query on that shard's
+    HotState — its exact top k, or every match when k is None — as
+    (query, doc_id, score) rows, plus `parent` for `children`."""
 
     def run(batches):
         import pyarrow as pa
@@ -1602,26 +1667,31 @@ def shard_kernel(plan: ShardPlan):
         tbl = pa.Table.from_batches(batches)
         shard = tbl.column("_shard")[0].as_py() if plan.n_shards > 1 else 0
         st = plan.state(tbl, shard)
-        names, docs, scores = [], [], []
+        names, outs = [], []
         for name, node in plan.queries.items():
             st.last_wand_stats = None
-            d, s = st.answer(node, plan.k, plan.mode, plan.boosts.get(name, 1.0))
+            if plan.children:
+                out = st._nested_children(node)
+            else:
+                out = st.answer(node, plan.k, plan.mode, plan.boosts.get(name, 1.0))
             names.append(name)
-            docs.append(d)
-            scores.append(s)
+            outs.append(out)
             w = st.last_wand_stats
             if plan.stats is not None and w:
                 plan.stats.add((w["blocks_total"], w["blocks_kept"], w["theta"]))
+        types = (pa.int64(), pa.float64(), pa.int64())
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(
-                    np.repeat(np.asarray(names, object), [d.size for d in docs]),
+                    np.repeat(np.asarray(names, object), [o[0].size for o in outs]),
                     pa.string(),
-                ),
-                pa.array(np.concatenate(docs), pa.int64()),
-                pa.array(np.concatenate(scores), pa.float64()),
+                )
+            ]
+            + [
+                pa.array(np.concatenate([o[j] for o in outs]), types[j])
+                for j in range(len(outs[0]))
             ],
-            names=["query", "doc_id", "score"],
+            names=["query", "doc_id", "score", "parent"][: len(outs[0]) + 1],
         )
 
     return run

@@ -2,21 +2,21 @@
 level filter names its field, filter.hpp; scoring stats are per field,
 bm25.cpp:45-80).
 
-MultiFieldEngine wires one SearchEngine per field together: `Field`
-nodes route their subtree to that field's engine (executor._eval
-interception), everything else runs on the DEFAULT field's engine —
-including the boolean combinators, whose (doc_id, score) algebra is
-field-agnostic because all field indexes share the deterministic doc-id
-space (index/multifield.py). Cross-field And/Or therefore score
-EXACTLY like the reference's conjunction/disjunction over per-field
-filters: per-field BM25 (field-local df/N/avg_dl/norms), merged by
-kSum/kMax/kMin/kNoop.
+MultiFieldEngine wires one SearchEngine per field together: a `Field`
+node's subtree is a scan on that field's engine whose rows join the
+shard scan of the DEFAULT field's engine, which answers everything
+else — including the boolean combinators, whose (doc_id, score)
+algebra is field-agnostic because all field indexes share the
+deterministic doc-id space (index/multifield.py). Cross-field And/Or
+therefore score EXACTLY like the reference's conjunction/disjunction
+over per-field filters: per-field BM25 (field-local df/N/avg_dl/norms),
+merged by kSum/kMax/kMin/kNoop.
 
-WAND and the one-job shard scan stay per field: a query whose root
-is a single Field node is unwrapped onto that field's engine, so
+WAND stays per field: a query whose root is a single Field node is
+unwrapped onto that field's engine, so
 `search(Field("body", Or(terms)), mode="wand")` prunes with body's
-block maxima. Mixed-field roots run the exhaustive plan (the
-reference equally has no cross-field wanderator)."""
+block maxima. Mixed-field roots run exhaustively (the reference
+equally has no cross-field wanderator)."""
 
 from __future__ import annotations
 

@@ -1,6 +1,6 @@
 """One Spark-free query-semantics core for every serving tier.
 
-The cluster `SearchEngine` (DataFrame plans), the driver-resident
+The cluster `SearchEngine` (its shard scan), the driver-resident
 `HotEngine` and its Spark-free `from_dir` replica are only DRIVERS:
 each finds postings and runs kernels its own way, but every rule that
 decides what a query means lives here, once — scoring (norm-mode

@@ -3,7 +3,9 @@ appends and consolidation) launches only the Spark jobs it needs, and
 writes the same files for the same input.
 
 - save() picks every range-partitioned table's file boundaries on the
-  driver, so two saves of one input are byte-identical in every table;
+  driver, so two saves of one input are byte-identical in every table
+  (the numeric dictionary included), and every postings file is sorted
+  by (term, block_id);
 - the manifest records each table's read schema, so load() plans its
   reads without schema-inference jobs (older manifests still infer);
 - an append and a consolidation stay within a pinned job budget, and a
@@ -17,8 +19,9 @@ import os
 import random
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import types as T
+from pyspark.sql import functions as F, types as T
 
 from iresearch_spark.index.builder import build_index
 from iresearch_spark.index.model import InvertedIndex, check_segments_agree
@@ -78,15 +81,22 @@ def pages(spark, tmp_path_factory):
     return _pages(spark, tmp_path_factory.mktemp("commit_pages"), "p", 400, 7)
 
 
-@pytest.mark.parametrize("sort_field", [None, "url"], ids=["url_keyed", "sorted"])
-def test_two_saves_are_byte_identical(spark, pages, tmp_path, sort_field):
+@pytest.mark.parametrize(
+    "sort_field, numeric",
+    [(None, False), ("url", False), (None, True)],
+    ids=["url_keyed", "sorted", "numeric"],
+)
+def test_two_saves_are_byte_identical(spark, pages, tmp_path, sort_field, numeric):
     """Two builds and saves of one input write the same bytes in every
-    table directory, dictionaries and a sorted docs table included."""
+    table directory, dictionaries (the numeric one included) and a
+    sorted docs table included."""
+    src = pages.withColumn("n", F.length("text").cast("long")) if numeric else pages
     saved = []
     for i in range(2):
         ix = build_index(
-            pages, id_col=None, sort_key="url", sort_field=sort_field,
+            src, id_col=None, sort_key="url", sort_field=sort_field,
             analyzer="simple", seg_bits=6,
+            numeric_fields=["n"] if numeric else None,
         )
         ix.save(str(tmp_path / f"ix{i}"))
         ix.unpersist()
@@ -96,7 +106,30 @@ def test_two_saves_are_byte_identical(spark, pages, tmp_path, sort_field):
         assert len(saved[0][t]) > 1, t  # several range files to agree on
     if sort_field is not None:
         assert len(saved[0]["docs"]) > 1
+    if numeric:
+        assert len(saved[0]["num_terms"]) > 1
     assert saved[0] == saved[1]
+
+
+def test_postings_files_are_sorted(pages, tmp_path):
+    """Every postings file holds its rows in (term, block_id) order, so
+    its row groups' term min/max stay tight."""
+    path = str(tmp_path / "ix")
+    ix = build_index(pages, id_col=None, sort_key="url", analyzer="simple",
+                     seg_bits=6)
+    ix.save(path)
+    ix.unpersist()
+    files = [
+        os.path.join(root, f)
+        for root, _dirs, fs in os.walk(os.path.join(path, "postings"))
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert len(files) > 1
+    for f in files:
+        t = pq.read_table(f, columns=["term", "block_id"])
+        keys = list(zip(t.column("term").to_pylist(), t.column("block_id").to_pylist()))
+        assert keys == sorted(keys), f
 
 
 def test_manifest_schemas_match_inference(spark, pages, tmp_path, spark_jobs):

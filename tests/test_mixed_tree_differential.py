@@ -6,7 +6,7 @@ and merge types, and Nested and Cached wrappers. On a small positions
 index with deletes and stored doc columns, the cluster engine's
 matches() and search() must equal the hot tier bit for bit, in both
 score dtypes, with every shard scan on one and on three doc-range
-shards."""
+shards; and so must the embedded tier over the saved index."""
 
 import functools
 import random
@@ -59,7 +59,7 @@ class _Shards:
 
 
 @pytest.fixture(scope="module")
-def engines(spark):
+def engines(spark, tmp_path_factory):
     rng = random.Random(17)
     rows = []
     for i in range(N_DOCS):
@@ -84,10 +84,13 @@ def engines(spark):
     idx = idx.delete_docs(
         spark.createDataFrame([(d,) for d in sorted(DELETED)], "doc_id long")
     ).cache()
+    path = str(tmp_path_factory.mktemp("mixed") / "ix")
+    idx.save(path)
     out = []
     for dtype in ("float64", "float32"):
         eng = SearchEngine(idx, score_dtype=dtype, preload_stats=True)
-        out.append((eng, HotEngine(eng)))
+        emb = HotEngine.from_dir(path, score_dtype=dtype)
+        out.append((eng, HotEngine(eng), emb))
     return out
 
 
@@ -158,7 +161,7 @@ def _cluster_rows(engines, cases) -> dict:
     and shard count, keyed (dtype, shards, kind + case index): one
     collect, so Spark runs the plans side by side."""
     parts = []
-    for eng, _hot in engines:
+    for eng, _hot, _emb in engines:
         dtype = eng.sem.score_dtype
         for n in (1, 3):
             with mock.patch.object(executor, "POSTINGS_PER_SHARD", _Shards(n)):
@@ -188,12 +191,14 @@ def _cluster_rows(engines, cases) -> dict:
 @given(st.lists(_case, min_size=5, max_size=5))
 def test_generated_trees_cluster_equals_hot(engines, cases):
     got = _cluster_rows(engines, cases)
-    for eng, hot in engines:
+    for eng, hot, emb in engines:
         dtype = eng.sem.score_dtype
         for i, (q, mode) in enumerate(cases):
             assert hot._servable(planner.normalize(q)), q
             want_m = sorted(hot.matches(q))
             want_s = hot.search(q, k=K, mode=mode)
+            assert sorted(emb.matches(q)) == want_m, (dtype, "embedded", q)
+            assert emb.search(q, k=K, mode=mode) == want_s, (dtype, "embedded", q)
             for n in (1, 3):
                 have_m = sorted(got.get(f"{dtype} {n} m{i}", []))
                 assert have_m == want_m, (dtype, n, "matches", q)

@@ -89,15 +89,10 @@ def tiers(request, spark, saved):
 
 
 def _force_shards(monkeypatch, eng, node, n):
-    """Patch POSTINGS_PER_SHARD so `node` runs on exactly n shards."""
-    plain, given = set(), {}
-    eng._gather(planner.normalize(node), plain, given, [])
-    dfs = eng._term_dfs(sorted(plain))
-    for expanded, _ in given.values():
-        dfs.update(expanded)
-    monkeypatch.setattr(
-        executor, "POSTINGS_PER_SHARD", -(-sum(dfs.values()) // n)
-    )
+    """Patch POSTINGS_PER_SHARD so `node` runs on exactly n shards (the
+    rows a scan reads: its postings plus its side rows)."""
+    rows = eng._shard_scan({"": planner.normalize(node)}, 10)[2]
+    monkeypatch.setattr(executor, "POSTINGS_PER_SHARD", -(-rows // n))
     assert eng._shard_scan({"": planner.normalize(node)}, 10)[1] == n
 
 
@@ -187,6 +182,35 @@ def test_one_spark_job_per_query(spark, saved, monkeypatch, spark_jobs):
     assert spark_jobs(lambda: eng.search(q, k=10, mode="wand").collect()) <= 2
 
 
+def test_plan_size_does_not_grow_with_deletes(spark, monkeypatch):
+    """The delete mask reaches the shards as side rows, not inside the
+    pickled plan: one query's ShardPlan is the same size on an index
+    with 10 deleted docs and on one with 10,000."""
+    from pyspark import cloudpickle
+
+    from iresearch_spark.search import hot
+
+    rows = [(i, f"{WORDS[i % 4]} {WORDS[i % 7]}") for i in range(10_100)]
+    idx = build_index(
+        spark.createDataFrame(rows, "doc_id long, text string"),
+        id_col="doc_id",
+        text_col="text",
+        bucket_bits=6,
+    )
+    plans = []
+    kernel = hot.shard_kernel
+    monkeypatch.setattr(hot, "shard_kernel", lambda p: plans.append(p) or kernel(p))
+    sizes = []
+    for n_deleted in (10, 10_000):
+        eng = SearchEngine(idx.delete_docs(
+            spark.range(n_deleted).withColumnRenamed("id", "doc_id")
+        ))
+        got = _rows(eng.search(Term("alpha"), k=5))
+        assert len(got) == 5 and min(d for d, _ in got) >= n_deleted
+        sizes.append(len(cloudpickle.dumps(plans[-1])))
+    assert sizes[0] == sizes[1]
+
+
 def test_wand_stats_sum_over_shards(spark, saved, monkeypatch):
     eng = SearchEngine(InvertedIndex.load(spark, saved).cache())
     eng.collect_wand_stats = True
@@ -248,22 +272,30 @@ def test_nested_rollup_folds_children_in_doc_order(spark, nested_saved, dtype):
         assert score == acc, parent
 
 
-def test_mixed_tree_jobs(spark, nested_saved, spark_jobs):
-    """A tree mixing docs-table leaves scans its postings-only children
-    in one shard scan per boolean node: no more Spark jobs than the
-    DataFrame postings evaluators it replaced took (3, 4 and 6 jobs on
-    this index), and a root NgramSimilarity is one job."""
+def test_mixed_tree_jobs(spark, nested_saved, spark_jobs, monkeypatch):
+    """Every tree is one shard scan: a tree mixing in docs-table leaves
+    is one Spark job on one shard and at most two (its shard shuffle)
+    on several, a Nested tree at most three (its child's scan feeds the
+    parents' shards), and a root NgramSimilarity is one job."""
     eng = SearchEngine(InvertedIndex.load(spark, nested_saved).cache(),
                        preload_stats=True)
     eng.search(Term("alpha"), k=1).collect()
-    for q, most in (
-        (And([Term("alpha"), Exists("n")]), 3),
-        (Or([Phrase(("alpha", "beta")), NumericRange("n", 2.0, 6.0)]), 4),
-        (Nested(Or([Term("alpha"), Term("gamma")])), 6),
-    ):
-        assert spark_jobs(lambda: eng.search(q, k=10).collect()) <= most, q
+    mixed = (
+        And([Term("alpha"), Exists("n")]),
+        Or([Phrase(("alpha", "beta")), NumericRange("n", 2.0, 6.0)]),
+    )
+    nested = Nested(Or([Term("alpha"), Term("gamma")]))
+    for q in mixed:
+        assert spark_jobs(lambda: eng.search(q, k=10).collect()) == 1, q
+    assert spark_jobs(lambda: eng.search(nested, k=10).collect()) <= 3
     q = NgramSimilarity(("alpha", "beta", "gamma"), threshold=0.5)
     assert spark_jobs(lambda: eng.search(q, k=10).collect()) == 1
+    monkeypatch.setattr(executor, "POSTINGS_PER_SHARD", 50)
+    assert eng._shard_scan({"": mixed[0]}, 10)[1] > 1
+    eng.search(mixed[0], k=10).collect()  # the doc-id span is read once
+    for q in mixed:
+        assert spark_jobs(lambda: eng.search(q, k=10).collect()) <= 2, q
+    assert spark_jobs(lambda: eng.search(nested, k=10).collect()) <= 3
 
 
 def test_positional_leaves_need_positions(spark):
