@@ -38,7 +38,8 @@ RangePartitioner.
 
 The build counts what save() and the commit path need in one summary
 pass over the cached blocks (posting blocks, BM25's N, total term
-freq, max dl, doc-id span), so no later step re-counts a table.
+freq, max dl, doc-id span, and the dictionary sample save() cuts its
+files from), so no later step re-counts or samples a table.
 """
 
 from __future__ import annotations
@@ -488,17 +489,28 @@ def _bucket_layout(
     a bucket stays executor-sized; the counting pass stays one tiny
     aggregate of n_buckets rows.
     """
-    counts = (
-        df.select(
-            F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-            .cast("int")
-            .alias("_bkt")
-        )
-        .groupBy("_bkt")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
+    counts = _count_values(
+        df, F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
     )
-    return _layout({r["_bkt"]: r["cnt"] for r in counts}, seg_target_docs, id_base)
+    return _layout(counts, seg_target_docs, id_base)
+
+
+def _count_values(df: DataFrame, col) -> dict[int, int]:
+    """{value: rows} of a non-null integer column, in ONE job: each task
+    counts its own values, the driver sums the partials (a groupBy
+    would add a shuffle and a second job)."""
+
+    def count(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        parts = [np.unique(b.column(0).to_numpy(), return_counts=True) for b in batches]
+        if parts:
+            v, inv = np.unique(np.concatenate([p[0] for p in parts]), return_inverse=True)
+            n = np.bincount(inv, np.concatenate([p[1] for p in parts])).astype(np.int64)
+            yield pa.RecordBatch.from_arrays([pa.array(v), pa.array(n)], names=["v", "n"])
+
+    out: dict[int, int] = {}
+    for r in df.select(col.cast("long")).mapInArrow(count, "v long, n long").collect():
+        out[r["v"]] = out.get(r["v"], 0) + r["n"]
+    return out
 
 
 def _layout(
@@ -628,11 +640,7 @@ def _sorted_bucket_layout(
 
     hot_cap = max(total // 64, seg_target_docs)
     s = max(0, (span // 2 + 1).bit_length() - 16)
-    counts = {
-        int(r["b"]): int(r["cnt"])
-        for r in df.select(_q(s).alias("b")).groupBy("b")
-        .agg(F.count("*").alias("cnt")).collect()
-    }
+    counts = _count_values(df, _q(s))
     # final cells keyed by interval START in halved-domain units so
     # integer order == value order regardless of refinement depth
     cnt: dict[int, int] = {}
@@ -658,11 +666,7 @@ def _sorted_bucket_layout(
         flt = df
         for hs, hids in hot_chain:
             flt = flt.filter(_q(hs).isin(hids))
-        counts = {
-            int(r["b"]): int(r["cnt"])
-            for r in flt.select(_q(s2).alias("b")).groupBy("b")
-            .agg(F.count("*").alias("cnt")).collect()
-        }
+        counts = _count_values(flt, _q(s2))
         s = s2
     # bucket expression: deepest-first CASE down the hot chain, each
     # branch emitting the row's cell START in halved units
@@ -933,7 +937,10 @@ def build_index(
     docs = norm_blocks.mapInArrow(
         _make_block_decoder(False), DECODED_SCHEMA
     ).select("doc_id", F.col("dl").cast("int").alias("dl"))
-    summary = block_summary(blocks)
+    # save() samples 64 terms per dictionary file, at most 4 files per
+    # blocks partition (no more than the build's shuffle has)
+    k = 64 * max(16, 4 * int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+    summary = block_summary(blocks, k)
     if norm == "legacy":
         # the reference's NormWriter value (norm.cpp:36-41): float32 of
         # sqrt(dl) computed in double, inverted in float32 — written as
@@ -998,61 +1005,88 @@ def build_index(
         sort_ascending=sort_ascending,
         n_blocks=summary["blocks"],
         doc_span=summary["span"],
+        term_sample=(k, summary["terms"]),
     )
 
 
 _SUMMARY_FIELDS = ("blocks", "n", "ttf", "max_dl", "min_doc", "max_doc")
-_SUMMARY_ARROW = pa.schema([(f, pa.int64()) for f in _SUMMARY_FIELDS])
+_SUMMARY_ARROW = pa.schema(
+    [(f, pa.int64()) for f in _SUMMARY_FIELDS] + [("h", pa.int64()), ("term", pa.string())]
+)
 
 
-def _summarize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """One row of partial counts per batch of block rows (see
-    block_summary). Only norm blocks' dl streams are decoded."""
-    for batch in batches:
-        if batch.num_rows == 0:
-            continue
-        is_norm = batch.column(0)
-        nb = batch.filter(is_norm)
-        dls = np.zeros(0, dtype=np.int64)
-        if nb.num_rows:
-            data, off = codec._binary_slab(nb.column(3))
-            dls = codec.varint_decode(data[off[0]:off[-1]]).astype(np.int64)
-        yield pa.RecordBatch.from_pylist(
-            [{
-                "blocks": batch.num_rows - nb.num_rows,
-                "n": int((dls > 0).sum()),
-                "ttf": int(dls.sum()),
-                "max_dl": int(dls.max()) if dls.size else 0,
-                "min_doc": pc.min(nb.column(1)).as_py(),
-                "max_doc": pc.max(nb.column(2)).as_py(),
-            }],
-            schema=_SUMMARY_ARROW,
-        )
+def _summarizer(k: int):
+    """block_summary's mapInArrow body: one row of partial counts per
+    batch of block rows (only norm blocks' dl streams are decoded),
+    then the task's k least distinct (crc32(term), term) rows. Arrow
+    sorts strings by UTF-8 bytes, which is Python's code-point order."""
+
+    def summarize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        least = _SUMMARY_ARROW.empty_table().select(["h", "term"])
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            is_norm = batch.column(0)
+            nb = batch.filter(is_norm)
+            dls = np.zeros(0, dtype=np.int64)
+            if nb.num_rows:
+                data, off = codec._binary_slab(nb.column(3))
+                dls = codec.varint_decode(data[off[0]:off[-1]]).astype(np.int64)
+            yield pa.RecordBatch.from_pylist(
+                [{
+                    "blocks": batch.num_rows - nb.num_rows,
+                    "n": int((dls > 0).sum()),
+                    "ttf": int(dls.sum()),
+                    "max_dl": int(dls.max()) if dls.size else 0,
+                    "min_doc": pc.min(nb.column(1)).as_py(),
+                    "max_doc": pc.max(nb.column(2)).as_py(),
+                }],
+                schema=_SUMMARY_ARROW,
+            )
+            terms = pa.Table.from_batches([batch.filter(pc.invert(is_norm))])
+            least = (
+                pa.concat_tables([least, terms.select(["h", "term"]).cast(least.schema)])
+                .group_by(["h", "term"]).aggregate([])
+                .sort_by([("h", "ascending"), ("term", "ascending")])
+                .slice(0, k)
+            )
+        yield pa.RecordBatch.from_pylist(least.to_pylist(), schema=_SUMMARY_ARROW)
+
+    return summarize
 
 
-def block_summary(blocks: DataFrame) -> dict:
-    """The counts save() and the commit path need, from ONE pass over
-    a build's block rows (norm blocks under NORM_TERM included):
+def block_summary(blocks: DataFrame, k: int) -> dict:
+    """What save() and the commit path need, from ONE pass over a
+    build's block rows (norm blocks under NORM_TERM included):
     posting blocks, BM25's N = docs with dl > 0 (docs_with_field,
     bm25.cpp:48-54), total term freq, max dl and the [min, max] doc id
     of the docs table, which covers every doc, dl=0 included, so that
-    AllDocs matches the reference's all() (None when empty). Partials
-    per Arrow batch, summed on the driver."""
+    AllDocs matches the reference's all() (None when empty); and the
+    dictionary's k least distinct (crc32(term), term) pairs, ascending
+    (fewer than k: every term), from which save() cuts the dictionary
+    files without sampling the term table. Each task reports its
+    partials, the driver merges them."""
     is_norm = F.col("term") == NORM_TERM
     rows = (
         blocks.select(
             is_norm.alias("is_norm"), "first_doc", "last_doc",
             F.when(is_norm, F.col("dls")).alias("dls"),
+            F.crc32(F.col("term").cast("binary")).alias("h"), "term",
         )
-        .mapInArrow(_summarize, ", ".join(f"{f} long" for f in _SUMMARY_FIELDS))
+        .mapInArrow(
+            _summarizer(k),
+            ", ".join(f"{f} long" for f in _SUMMARY_FIELDS) + ", h long, term string",
+        )
         .collect()
     )
-    lo = [r["min_doc"] for r in rows if r["min_doc"] is not None]
-    hi = [r["max_doc"] for r in rows if r["max_doc"] is not None]
+    parts = [r for r in rows if r["term"] is None]
+    lo = [r["min_doc"] for r in parts if r["min_doc"] is not None]
+    hi = [r["max_doc"] for r in parts if r["max_doc"] is not None]
     return {
-        "blocks": sum(r["blocks"] for r in rows),
-        "n": sum(r["n"] for r in rows),
-        "ttf": sum(r["ttf"] for r in rows),
-        "max_dl": max((r["max_dl"] for r in rows), default=0),
+        "blocks": sum(r["blocks"] for r in parts),
+        "n": sum(r["n"] for r in parts),
+        "ttf": sum(r["ttf"] for r in parts),
+        "max_dl": max((r["max_dl"] for r in parts), default=0),
         "span": (min(lo), max(hi)) if lo else None,
+        "terms": sorted({(r["h"], r["term"]) for r in rows if r["term"] is not None})[:k],
     }

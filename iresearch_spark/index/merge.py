@@ -251,6 +251,8 @@ def consolidate(index: InvertedIndex, bucket_bits: int = 16) -> InvertedIndex:
         postings=postings,
         docs=index.docs,
         term_stats=index.term_stats,
+        term_sample=index.term_sample,
+        term_rows=index.term_rows,
         field_stats=index.field_stats,
         with_positions=index.with_positions,
         with_offsets=index.with_offsets,

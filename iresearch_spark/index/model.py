@@ -254,6 +254,14 @@ class InvertedIndex:
     # manifest.
     n_blocks: int | None = None
     doc_span: tuple[int, int] | None = None
+    # (k, the dictionary's k least distinct (crc32(term), term) pairs,
+    # ascending; fewer than k: every term), as the build's summary
+    # pass found them: save() cuts the dictionary files from them
+    term_sample: tuple[int, list[tuple[int, str]]] | None = None
+    # a merged view's dictionary rows before the per-term sum, and how
+    # often a term can repeat in them (once per segment): save() draws
+    # its sample from them without the sum's shuffle
+    term_rows: tuple[DataFrame, int] | None = None
 
     def _agg_stats(self, df: DataFrame) -> DataFrame:
         """Collapse per-segment dictionary rows to global stats (sum
@@ -545,6 +553,14 @@ class InvertedIndex:
         the reference's FST term-dictionary seek
         (`formats_burst_trie.cpp:953-966`).
 
+        The term dictionary is aggregated once: `term_stats/` is written
+        straight from its lazy aggregation, and `term_stats_rev/` and
+        `term_grams/` are cut from the forward files just written. The
+        three tables' file boundaries come from the dictionary's least
+        (crc32(term), term) pairs (`dictionary_sample`): a fresh build's
+        summary pass already holds them, a loaded or merged index draws
+        them in one job.
+
         With `encryption=` (an index.encryption.IndexEncryption) every
         table is written with Parquet Modular Encryption — pages AND
         footers AES-GCM-sealed — the Spark-native analogue of the
@@ -608,11 +624,7 @@ class InvertedIndex:
             schemas["postings"] = postings.schema
         ts_path = os.path.join(path, "term_stats")
         term_stats_ranges = None
-        # the dictionary is written three times (forward + reversed +
-        # k-gram layouts) — persist so the groupBy over posting blocks
-        # that derives it runs ONCE, not per consumer
-        ts_cached = self.term_stats.persist()
-        schemas["term_stats"] = ts_cached.schema
+        schemas["term_stats"] = self.term_stats.schema
         if optimize_layout:
             # term dictionary: range-partitioned and sorted by term, so
             # each file covers one contiguous term interval; the
@@ -622,7 +634,10 @@ class InvertedIndex:
             # ~2M terms per file keeps dictionaries O(10MB); min 16
             # files so even small indexes demonstrate pruning.
             most_files = max(16, n_part * 4)
-            n_terms, sample = _term_sample(ts_cached, 64 * most_files)
+            k = 64 * most_files
+            drawn, pairs = self.dictionary_sample(k)
+            n_terms = _n_terms(pairs, drawn)
+            sample = [t for _, t in pairs[:k]]
             ts_files = max(16, min(n_part * 4, (n_terms // 2_000_000) + 16))
             rev_path = os.path.join(path, "term_stats_rev")
             grams_path = os.path.join(path, "term_grams")
@@ -669,11 +684,24 @@ class InvertedIndex:
 
             def _w_fwd():
                 (
-                    _by_range(ts_cached, "term", fwd_bounds, ts_files)
+                    _by_range(self.term_stats, "term", fwd_bounds, ts_files)
                     .sortWithinPartitions("term")
                     .write.options(**wopts).mode(mode)
                     .parquet(ts_path)
                 )
+
+            def _fwd_rows():
+                # the reversed and k-gram tables are cut from the forward
+                # files just written, not from a second aggregation
+                rows = read_parquet(
+                    self.term_stats.sparkSession, ts_path,
+                    _as_read(schemas["term_stats"]).jsonValue(),
+                )
+                if not schemas["term_stats"]["term"].nullable:
+                    # a parquet read makes every column nullable: keep
+                    # `term` a required column, as the aggregation had it
+                    rows = rows.withColumn("term", F.coalesce("term", F.lit("")))
+                return rows
 
             def _w_rev():
                 # reversed-term dictionary (the Lucene reversed-field
@@ -682,7 +710,7 @@ class InvertedIndex:
                 # files by the reversed-suffix interval
                 (
                     _by_range(
-                        ts_cached.withColumn("rterm", F.reverse(F.col("term"))),
+                        _fwd_rows().withColumn("rterm", F.reverse(F.col("term"))),
                         "rterm", rev_bounds, ts_files,
                     )
                     .sortWithinPartitions("rterm")
@@ -698,7 +726,7 @@ class InvertedIndex:
                 # seek (the Spark analogue of the reference's automaton
                 # ∩ FST walk, wildcard_utils.cpp/levenshtein_utils.cpp).
                 # _padded_grams is the same expansion in Python.
-                grams = ts_cached.withColumn(
+                grams = _fwd_rows().withColumn(
                     "_p",
                     F.concat(F.lit("\x02"), F.col("term"), F.lit("\x03")),
                 ).select(
@@ -720,7 +748,7 @@ class InvertedIndex:
                     .parquet(grams_path)
                 )
 
-            writers = [_w_postings, _w_docs, _w_fwd, _w_rev, _w_grams]
+            writers = [_w_fwd, _w_postings, _w_docs]
             if self.num_terms is not None:
 
                 def _w_num():
@@ -733,13 +761,10 @@ class InvertedIndex:
                     # identical run to run
                     key = ("field", "shift", "prefix")
                     n_files = max(16, n_part)
-                    sample = (
-                        self.num_terms.select(F.xxhash64(*key).alias("h"), *key)
-                        .orderBy("h", *key)
-                        .limit(64 * n_files)
-                        .collect()
+                    sample = _least_hashed(
+                        self.num_terms, F.xxhash64(*key), key, 64 * n_files
                     )
-                    bounds = _split_keys([tuple(r)[1:] for r in sample], n_files)
+                    bounds = _split_keys([r[1:] for r in sample], n_files)
                     (
                         _by_range(self.num_terms, key, bounds, n_files)
                         .sortWithinPartitions(*key)
@@ -754,8 +779,10 @@ class InvertedIndex:
             # wall-clock is the longest write, not the sum
             from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=len(writers)) as ex:
+            with ThreadPoolExecutor(max_workers=len(writers) + 2) as ex:
                 futs = [ex.submit(f) for f in writers]
+                futs[0].result()  # _w_fwd: the next two read its files
+                futs += [ex.submit(_w_rev), ex.submit(_w_grams)]
                 for fut in futs:
                     fut.result()
             if encryption is None:
@@ -763,7 +790,14 @@ class InvertedIndex:
                     term_stats_ranges,
                     term_stats_rev_ranges,
                     term_grams_ranges,
-                ) = self._dictionary_file_ranges(path)
+                ) = (
+                    [r[:3] for r in ranges]
+                    for ranges in _file_ranges(self.term_stats.sparkSession, path, {
+                        "term_stats": ("term", "VARCHAR"),
+                        "term_stats_rev": ("rterm", "VARCHAR"),
+                        "term_grams": ("gram", "VARCHAR"),
+                    }).values()
+                )
             else:
                 # encrypted index: per-file TERM ranges are plaintext
                 # vocabulary — keeping them out of manifest.json is the
@@ -773,7 +807,10 @@ class InvertedIndex:
                 term_stats_rev_ranges = None
                 term_grams_ranges = None
             if self.sort_field is not None:
-                docs_ranges = self._docs_file_ranges(path)
+                (docs_ranges,) = _file_ranges(
+                    self.docs.sparkSession, path, {"docs": ("doc_id", "BIGINT")}
+                ).values()
+                docs_ranges.sort(key=lambda r: r[1])
         else:
             postings.write.options(**wopts).mode(mode).parquet(os.path.join(path, "postings"))
             self.docs.coalesce(n_part).write.options(**wopts).mode(mode).parquet(
@@ -781,12 +818,11 @@ class InvertedIndex:
             )
             term_stats_rev_ranges = None
             term_grams_ranges = None
-            ts_cached.coalesce(n_part).write.options(**wopts).mode(mode).parquet(ts_path)
+            self.term_stats.coalesce(n_part).write.options(**wopts).mode(mode).parquet(ts_path)
             if self.num_terms is not None:
                 self.num_terms.write.options(**wopts).mode(mode).parquet(
                     os.path.join(path, "num_terms")
                 )
-        ts_cached.unpersist()
         if self.num_terms is not None:
             schemas["num_terms"] = self.num_terms.schema
         if self.deleted is not None:
@@ -834,141 +870,20 @@ class InvertedIndex:
             json.dump(manifest, f)
         os.replace(tmp, os.path.join(path, "manifest.json"))  # atomic commit
 
-    def _dictionary_file_ranges(self, path: str):
-        """Per-file [min, max] key ranges for the three dictionary
-        layouts (forward/reversed/k-gram — the burst-trie block-index
-        analogue, formats_burst_trie.cpp:953-966).
-
-        Fast path: read the parquet FOOTER statistics driver-side — no
-        data scan, exactly what an Iceberg manifest provides for free.
-        Parquet writers may truncate long string stats but must keep
-        them valid bounds, so range selection stays sound (overlap
-        test only; the exact predicate is always re-applied). Falls
-        back to one Spark aggregation job when footers are unreadable
-        driver-side (remote filesystem) or any file lacks stats."""
-        dirs = [
-            (os.path.join(path, "term_stats"), "term"),
-            (os.path.join(path, "term_stats_rev"), "rterm"),
-            (os.path.join(path, "term_grams"), "gram"),
-        ]
-        try:
-            import duckdb
-
-            out = []
-            for d, colname in dirs:
-                n_files = sum(
-                    1 for f in os.listdir(d) if f.endswith(".parquet")
-                )
-                rows = duckdb.execute(
-                    "SELECT file_name, min(stats_min_value),"
-                    " max(stats_max_value)"
-                    " FROM parquet_metadata(?)"
-                    " WHERE path_in_schema = ? GROUP BY file_name",
-                    [os.path.join(d, "*.parquet"), colname],
-                ).fetchall()
-                if len(rows) != n_files or any(
-                    mn is None or mx is None for _, mn, mx in rows
-                ):
-                    raise ValueError("parquet stats missing")
-                out.append(
-                    sorted(
-                        (os.path.relpath(f, path), mn, mx)
-                        for f, mn, mx in rows
-                    )
-                )
-            return tuple(out)
-        except Exception:
-            pass
-        franges = (
-            self.term_stats.sparkSession.read.option("mergeSchema", "true")
-            .parquet(*[d for d, _ in dirs])
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(
-                F.min("term").alias("mn"),
-                F.max("term").alias("mx"),
-                F.min("rterm").alias("rmn"),
-                F.max("rterm").alias("rmx"),
-                F.min("gram").alias("gmn"),
-                F.max("gram").alias("gmx"),
-            )
-            .collect()
+    def dictionary_sample(self, k: int) -> tuple[int, list[tuple[int, str]]]:
+        """(k', the dictionary's k' least distinct (crc32(term), term)
+        pairs, ascending; fewer than k' pairs: every term), k' >= k.
+        A fresh build answers from its summary pass; a loaded or merged
+        index draws the pairs in one TakeOrdered job over its
+        unaggregated dictionary rows."""
+        if self.term_sample is not None and self.term_sample[0] >= k:
+            return self.term_sample
+        rows, dup = self.term_rows or (self.term_stats, 1)
+        # a term repeats at most dup times: k * dup rows hold k terms
+        least = _least_hashed(
+            rows, F.crc32(F.col("term").cast("binary")), ("term",), k * dup
         )
-        prefix = "file:"
-
-        def _rel(f: str) -> str:
-            return os.path.relpath(
-                f[len(prefix):] if f.startswith(prefix) else f, path
-            )
-
-        return (
-            sorted(
-                (_rel(r["f"]), r["mn"], r["mx"])
-                for r in franges
-                if r["rmn"] is None and r["gmn"] is None
-            ),
-            sorted(
-                (_rel(r["f"]), r["rmn"], r["rmx"])
-                for r in franges
-                if r["rmn"] is not None
-            ),
-            sorted(
-                (_rel(r["f"]), r["gmn"], r["gmx"])
-                for r in franges
-                if r["gmn"] is not None
-            ),
-        )
-
-    def _docs_file_ranges(self, path: str):
-        """Per-file [min_doc, max_doc, rows] for the doc-id-range-
-        partitioned docs table of a SORTED index. Footer statistics
-        driver-side (duckdb), Spark-aggregation fallback."""
-        d = os.path.join(path, "docs")
-        try:
-            import duckdb
-
-            n_files = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-            rows = duckdb.execute(
-                "SELECT file_name,"
-                " min(CAST(stats_min_value AS BIGINT)),"
-                " max(CAST(stats_max_value AS BIGINT)),"
-                " sum(num_values)"
-                " FROM parquet_metadata(?)"
-                " WHERE path_in_schema = 'doc_id' GROUP BY file_name",
-                [os.path.join(d, "*.parquet")],
-            ).fetchall()
-            if len(rows) != n_files or any(
-                mn is None or mx is None for _, mn, mx, _ in rows
-            ):
-                raise ValueError("parquet stats missing")
-            return sorted(
-                ((os.path.relpath(f, path), int(mn), int(mx), int(n))
-                 for f, mn, mx, n in rows),
-                key=lambda r: r[1],
-            )
-        except Exception:
-            pass
-        franges = (
-            self.docs.sparkSession.read.parquet(d)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(
-                F.min("doc_id").alias("mn"),
-                F.max("doc_id").alias("mx"),
-                F.count("*").alias("n"),
-            )
-            .collect()
-        )
-        prefix = "file:"
-
-        def _rel(f: str) -> str:
-            return os.path.relpath(
-                f[len(prefix):] if f.startswith(prefix) else f, path
-            )
-
-        return sorted(
-            ((_rel(r["f"]), int(r["mn"]), int(r["mx"]), int(r["n"]))
-             for r in franges),
-            key=lambda r: r[1],
-        )
+        return k, list(dict.fromkeys(least))[:k]
 
     # ------------------------------------------------ snapshot commits
 
@@ -1207,42 +1122,80 @@ def read_parquet(spark: SparkSession, paths, schema: dict | None = None,
     return r.parquet(*([paths] if isinstance(paths, str) else paths))
 
 
-def _term_sample(ts: DataFrame, k: int) -> tuple[int, list[str]]:
-    """(row count, the k terms with the smallest (crc32, term)) of a
-    term table, in one job: each task keeps its own bottom k and counts
-    its rows, the driver merges. The sample is a pure function of the
-    term set — uniform, but never random."""
-    schema = pa.schema(
-        [("h", pa.int64()), ("term", pa.string()), ("n", pa.int64())]
-    )
+def _file_ranges(spark: SparkSession, path: str, keys: dict) -> dict:
+    """{table: [(data file relative to path, min, max, rows)], sorted}
+    of each table's key column (keys: {table: (column, SQL type)}):
+    the per-file block index of a range-partitioned table, like the
+    reference burst-trie's per-block term ranges
+    (formats_burst_trie.cpp:953-966).
 
-    def gen(batches):
-        n = 0
-        keep = None
-        for b in batches:
-            n += b.num_rows
-            t = pa.Table.from_batches([b])
-            keep = t if keep is None else pa.concat_tables([keep, t])
-            if keep.num_rows > k:
-                h = keep.column("h").to_numpy()
-                # ties at the k-th hash stay in: the driver breaks them
-                keep = keep.filter(pa.array(h <= np.partition(h, k - 1)[k - 1]))
-        if keep is not None and keep.num_rows:
-            keep = keep.append_column(
-                "n", pa.array(np.zeros(keep.num_rows, dtype=np.int64))
+    Fast path: the parquet FOOTER statistics, read driver-side — no
+    data scan, exactly what an Iceberg manifest provides for free.
+    Parquet writers may truncate long string stats but must keep them
+    valid bounds, so range selection stays sound (overlap test only;
+    the exact predicate is always re-applied). Falls back to one Spark
+    aggregation job when footers are unreadable driver-side (remote
+    filesystem) or any file lacks stats."""
+    try:
+        import duckdb
+
+        out = {}
+        for table, (col, typ) in keys.items():
+            d = os.path.join(path, table)
+            n_files = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+            rows = duckdb.execute(
+                f"SELECT file_name, min(CAST(stats_min_value AS {typ})),"
+                f" max(CAST(stats_max_value AS {typ})), sum(num_values)"
+                " FROM parquet_metadata(?)"
+                " WHERE path_in_schema = ? GROUP BY file_name",
+                [os.path.join(d, "*.parquet"), col],
+            ).fetchall()
+            if len(rows) != n_files or any(r[1] is None or r[2] is None for r in rows):
+                raise ValueError("parquet stats missing")
+            out[table] = sorted(
+                (os.path.relpath(f, path), mn, mx, int(n)) for f, mn, mx, n in rows
             )
-            yield from keep.cast(schema).to_batches()
-        yield pa.RecordBatch.from_pydict(
-            {"h": [None], "term": [None], "n": [n]}, schema=schema
+        return out
+    except Exception:
+        pass
+    cols = sorted({c for c, _ in keys.values()})
+    franges = (
+        spark.read.option("mergeSchema", "true")
+        .parquet(*[os.path.join(path, t) for t in keys])
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(
+            *[F.min(c).alias("mn_" + c) for c in cols],
+            *[F.max(c).alias("mx_" + c) for c in cols],
+            F.count("*").alias("n"),
         )
-
-    rows = (
-        ts.select(F.crc32(F.col("term").cast("binary")).alias("h"), "term")
-        .mapInArrow(gen, "h long, term string, n long")
         .collect()
     )
-    sample = sorted((r["h"], r["term"]) for r in rows if r["term"] is not None)
-    return sum(r["n"] for r in rows), [t for _, t in sample[:k]]
+    out = {t: [] for t in keys}
+    for r in franges:
+        rel = os.path.relpath(r["f"].removeprefix("file:"), path)
+        table = rel.split(os.sep)[0]
+        col = keys[table][0]
+        out[table].append((rel, r["mn_" + col], r["mx_" + col], int(r["n"])))
+    return {t: sorted(v) for t, v in out.items()}
+
+
+def _least_hashed(df: DataFrame, h, key: tuple, n: int) -> list[tuple]:
+    """The n (h, *key) rows of df with the least (h, *key), ascending,
+    in one TakeOrdered job: a sample that is a pure function of the
+    rows — uniform, but never random."""
+    return [
+        tuple(r)
+        for r in df.select(h.alias("_h"), *key).orderBy("_h", *key).limit(n).collect()
+    ]
+
+
+def _n_terms(pairs: list[tuple[int, str]], k: int) -> int:
+    """The term count of a dictionary from its k least (crc32, term)
+    pairs: exact below k terms, else the k-th-least-hash estimate
+    (k - 1) * 2^32 / (h_k + 1), a pure function of the term set."""
+    if len(pairs) < k:
+        return len(pairs)
+    return (k - 1) * 2**32 // (pairs[k - 1][0] + 1)
 
 
 def _padded_grams(term: str) -> set[str]:

@@ -11,6 +11,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(physical: int | None = None) -> str:
+    """Default spark.driver.memory: 16g, or half of the host's physical
+    memory (`physical` bytes; read with os.sysconf when None) if that
+    is less, so a local session leaves room for its Python workers."""
+    if physical is None:
+        physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, physical // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "iresearch_spark",
     cores: int | None = None,
@@ -34,7 +43,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -421,13 +421,12 @@ class IncrementalIndexer:
             term_buckets = counts[0] if len(counts) == 1 else counts
         else:  # pre-_tbd segments in the mix: no bucket column to prune on
             term_buckets = None
-        term_stats = (
-            read_parquet(
-                spark, [os.path.join(p, "term_stats") for p in paths],
-                _common_schema(sub_manifests, "term_stats"),
-            )
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        term_rows = read_parquet(
+            spark, [os.path.join(p, "term_stats") for p in paths],
+            _common_schema(sub_manifests, "term_stats"),
+        )
+        term_stats = term_rows.groupBy("term").agg(
+            F.sum("df").alias("df"), F.sum("cf").alias("cf")
         )
         # granular numeric dictionary: one multi-path read when EVERY
         # segment carries a compatible layout (doc ids are disjoint, so
@@ -451,6 +450,7 @@ class IncrementalIndexer:
                 _common_schema(sub_manifests, "docs"),
             ),
             term_stats=term_stats,
+            term_rows=(term_rows, len(paths)),
             field_stats=FieldStats(
                 n_docs=sum(m["n_docs"] for m in sub_manifests),
                 total_term_freq=sum(m["total_term_freq"] for m in sub_manifests),

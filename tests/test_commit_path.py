@@ -8,6 +8,9 @@ writes the same files for the same input.
   by (term, block_id);
 - the manifest records each table's read schema, so load() plans its
   reads without schema-inference jobs (older manifests still infer);
+- the dictionary files are cut from the k least (crc32(term), term)
+  pairs: a fresh build's summary pass returns them, a merged view
+  draws them in one job;
 - an append and a consolidation stay within a pinned job budget, and a
   failed budget lists the jobs per SQL execution;
 - an empty micro-batch commits nothing.
@@ -18,6 +21,7 @@ import json
 import os
 import random
 import shutil
+import zlib
 
 import pyarrow.parquet as pq
 import pytest
@@ -33,8 +37,8 @@ TABLES = ("postings", "docs", "term_stats", "term_stats_rev", "term_grams")
 
 # Spark jobs of one append and of one consolidation of the small input
 # below, after a warm-up commit (local[4], 8 shuffle partitions)
-APPEND_JOBS = 20
-CONSOLIDATE_JOBS = 14
+APPEND_JOBS = 17
+CONSOLIDATE_JOBS = 13
 
 
 def _rows(n, seed, prefix="u"):
@@ -130,6 +134,50 @@ def test_postings_files_are_sorted(pages, tmp_path):
         t = pq.read_table(f, columns=["term", "block_id"])
         keys = list(zip(t.column("term").to_pylist(), t.column("block_id").to_pylist()))
         assert keys == sorted(keys), f
+
+
+def _least_pairs(terms, k):
+    """The k least (crc32(term), term) pairs of a vocabulary."""
+    return sorted((zlib.crc32(t.encode("utf-8")), t) for t in set(terms))[:k]
+
+
+def _saved_terms(path):
+    return pq.read_table(os.path.join(path, "term_stats")).column("term").to_pylist()
+
+
+def test_build_sample_is_least_hashed_terms(pages, tmp_path):
+    """A fresh build's summary pass returns the k least (crc32, term)
+    pairs of the dictionary that save() writes, and save() uses them
+    without drawing its own."""
+    ix = build_index(pages, id_col=None, sort_key="url", analyzer="simple",
+                     seg_bits=6)
+    path = str(tmp_path / "ix")
+    ix.save(path)
+    ix.unpersist()
+    k, pairs = ix.term_sample
+    terms = _saved_terms(path)
+    assert len(terms) == len(set(terms)) > k  # the sample is a strict subset
+    assert pairs == _least_pairs(terms, k)
+    assert ix.dictionary_sample(k) is ix.term_sample
+
+
+def test_merged_sample_is_least_hashed_terms(spark, tmp_path, spark_jobs):
+    """The sample a consolidation cuts its dictionary files from is the
+    k least (crc32, term) pairs of the merged vocabulary, drawn in one
+    job over the segments' unaggregated rows (a term shared by several
+    segments counts once)."""
+    inc = _commit_batches(spark, tmp_path, "m")
+    per_seg = [
+        _saved_terms(os.path.join(inc.index_dir, "segments", s["id"]))
+        for s in inc._read_manifest()["segments"]
+    ]
+    vocab = {t for terms in per_seg for t in terms}
+    assert sum(map(len, per_seg)) > len(vocab)  # segments share terms
+    view = inc.read(spark)
+    for k in (16, 1024):
+        got = []
+        assert spark_jobs(lambda: got.append(view.dictionary_sample(k))) == 1
+        assert got[0] == (k, _least_pairs(vocab, k))
 
 
 def test_manifest_schemas_match_inference(spark, pages, tmp_path, spark_jobs):
