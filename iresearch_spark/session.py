@@ -2,6 +2,18 @@
 
 Local mode is single-JVM; on a real cluster the same config applies, with
 AQE handling runtime skew/coalescing. Tuned per the public Spark docs.
+
+The driver JVM is C1-only (`-XX:TieredStopAtLevel=1`). Every JVM this
+engine starts is short-lived and mostly runs Spark's own control plane:
+a spark-submit job, a test session, a benchmark run, a cluster driver
+that answers a few dozen queries. With C2 on, HotSpot spends most of
+such a JVM's CPU compiling that cold code: of one cluster query's 0.79
+JVM CPU-s the compiler threads took 0.56 and the executor task 0.06,
+and a 1,500-page incremental append spent 8.8 of its 16.2 JVM CPU-s
+compiling (BENCH/BASELINE.md "Round 10").
+
+Python workers import this package from the driver's own package root,
+not from the JVM's working directory (see get_spark).
 """
 
 from __future__ import annotations
@@ -9,6 +21,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# where the driver imported this package from (a directory or a zip)
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def driver_memory(physical: int | None = None) -> str:
@@ -26,6 +41,18 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """The shared SparkSession, started with this engine's defaults.
+
+    `extra_conf` entries override the defaults. The driver JVM is
+    C1-only through spark.driver.defaultJavaOptions, which Spark puts
+    before spark.driver.extraJavaOptions: a caller's own extraJavaOptions
+    keep the policy, and `-XX:TieredStopAtLevel=4` there turns C2 back
+    on. The trade-off: C1 code runs slower once warm. On a 60,000-page
+    batch build a second build in the same JVM took +15-20 % wall time
+    (less CPU), while the first, cold build was no slower
+    (BENCH/BASELINE.md "Round 10"). A long-lived JVM that repeats large
+    builds should turn C2 back on.
+    """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
@@ -46,6 +73,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
+        # Python workers run `python -m pyspark.daemon`, which puts the
+        # JVM's working directory first on sys.path: started inside
+        # another checkout, they would import that checkout's package.
+        # PYTHONSAFEPATH (Python >= 3.11) drops that entry, and Spark
+        # appends this PYTHONPATH after its pyspark and py4j entries.
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -1,14 +1,18 @@
 """Process set-up the package does on import and in get_spark: the
-driver-memory default and the stat-checked zip re-read of Python
-workers."""
+driver-memory default, the stat-checked zip re-read of Python workers,
+the C1-only driver JVM and where Python workers import the package
+from."""
 
 import importlib
+import json
 import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
 
-import iresearch_spark  # noqa: F401  (installs the zip re-read check)
+import iresearch_spark  # also installs the zip re-read check
 from iresearch_spark.session import driver_memory
 
 GiB = 1 << 30
@@ -66,3 +70,80 @@ def test_unchanged_zip_is_not_reread(tmp_path, monkeypatch):
         for m in ("zmod_first", "zmod_second"):
             sys.modules.pop(m, None)
         sys.path_importer_cache.pop(archive, None)
+
+
+# Runs get_spark in a fresh process (the test session's JVM may already
+# be up) and prints what the JVM and one mapInArrow task report.
+_SESSION_FACTS = textwrap.dedent("""
+    import json, sys
+    import pyarrow as pa
+    from iresearch_spark.session import get_spark
+
+    spark = get_spark("session-facts", cores=1, extra_conf=json.loads(sys.argv[1]))
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    hotspot = mf.getPlatformMXBean(
+        spark.sparkContext._jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
+
+    def package_file(batches):
+        import iresearch_spark
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"f": [iresearch_spark.__file__]})
+
+    worker = spark.range(1, numPartitions=1).mapInArrow(package_file, "f string").collect()
+    print(json.dumps({
+        "args": list(mf.getRuntimeMXBean().getInputArguments()),
+        "tiered_stop": hotspot.getVMOption("TieredStopAtLevel").getValue(),
+        "worker_file": worker[0].f,
+    }))
+    spark.stop()
+""")
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(iresearch_spark.__file__)))
+
+
+def _session_facts(tmp_path, extra_conf, cwd=None):
+    script = tmp_path / "session_facts.py"
+    script.write_text(_SESSION_FACTS)
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (REPO, env.get("PYTHONPATH")) if p)
+    env.pop("PYTHONSAFEPATH", None)
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    conf = {"spark.driver.memory": "512m", **extra_conf}
+    out = subprocess.run(
+        [sys.executable, str(script), json.dumps(conf)],
+        cwd=cwd or tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def test_driver_jvm_is_c1_only_with_caller_java_options(tmp_path):
+    """A caller's own spark.driver.extraJavaOptions (perfbench passes
+    some) keep the C1-only policy."""
+    facts = _session_facts(
+        tmp_path, {"spark.driver.extraJavaOptions": "-XX:-UsePerfData"}
+    )
+    assert "-XX:TieredStopAtLevel=1" in facts["args"]
+    assert "-XX:-UsePerfData" in facts["args"]
+    assert facts["tiered_stop"] == "1"
+
+
+def test_caller_java_options_can_turn_c2_back_on(tmp_path):
+    facts = _session_facts(
+        tmp_path, {"spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=4"}
+    )
+    args = facts["args"]
+    assert args.index("-XX:TieredStopAtLevel=1") < args.index("-XX:TieredStopAtLevel=4")
+    assert facts["tiered_stop"] == "4"
+
+
+def test_workers_import_the_drivers_package(tmp_path):
+    """A driver started with a decoy `iresearch_spark` in its working
+    directory runs its own package in Python tasks, not the decoy."""
+    cwd = tmp_path / "other_checkout"
+    (cwd / "iresearch_spark").mkdir(parents=True)
+    (cwd / "iresearch_spark" / "__init__.py").write_text("")
+    facts = _session_facts(tmp_path, {}, cwd=cwd)
+    assert facts["worker_file"] == iresearch_spark.__file__
