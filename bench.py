@@ -40,7 +40,7 @@ from iresearch_spark.search import (
     Term,
     Wildcard,
 )
-from iresearch_spark.session import get_spark
+from iresearch_spark.session import C2_CONF, get_spark
 
 
 def timed(fn):
@@ -78,7 +78,7 @@ def host_control() -> dict:
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("iresearch-bench", cores=cpus, shuffle_partitions=cpus)
+    spark = get_spark("iresearch-bench", cores=cpus, shuffle_partitions=cpus, extra_conf=C2_CONF)
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     n_docs = docs.count()

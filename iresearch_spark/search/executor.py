@@ -79,19 +79,20 @@ CHILD_SCHEMA = SHARD_SCHEMA + ", parent long"
 # Python-task floor (0.04-0.05 CPU-s per task since Python workers stop
 # re-reading unchanged zips; BENCH/BASELINE.md "Round 8"), a shuffle of
 # the blocks and a second decode of the straddling ones. Most of a
-# query's JVM CPU is not its task: with C2 on, HotSpot's compiler
-# threads took 0.56 of a one-shard query's 0.79 JVM CPU-s and the
-# executor task 0.06; get_spark's C1-only driver JVM cuts the compiler
-# share to 0.07 (BENCH/BASELINE.md "Round 10"). The crossover below was
-# measured before both changes and not since. Measured on a 600k-doc
-# synthetic index (4-vCPU VM, local[4], Term/Or queries of 0.15-3.0 M
-# postings at 1, 2 and 4 shards, alternated, median of 5;
-# BENCH/BASELINE.md "Shard-count crossover"): 1 shard has the least CPU
-# at every size (+0.5 CPU-s for 2 shards, +1.0 for 4); 2 and 4 shards
-# are slower in wall time up to 0.6 M postings, break even at ~1 M, and
-# are faster from 1.8 M on (0.89 -> 0.78 / 0.69 s at 1.8 M; 1.12 ->
-# 0.88 / 0.69 s at 3.0 M). The kernel peaks at ~140 B per posting, so
-# this also bounds a task to ~140 MB.
+# small query's JVM CPU is not its task: with C2 on, HotSpot's compiler
+# threads took 0.56 of a one-shard query's 0.79 JVM CPU-s over
+# perfbench's 6,000-page index and the executor task 0.06; get_spark's
+# C1-only driver JVM cuts the compiler share to 0.07 (BENCH/BASELINE.md
+# "Round 10"). The crossover below was measured before both changes and
+# not since. Measured on a 600k-doc synthetic index (4-vCPU VM,
+# local[4], Term/Or queries of 0.15-3.0 M postings at 1, 2 and 4
+# shards, alternated, median of 5; BENCH/BASELINE.md "Shard-count
+# crossover"): 1 shard has the least CPU at every size (+0.5 CPU-s for
+# 2 shards, +1.0 for 4); 2 and 4 shards are slower in wall time up to
+# 0.6 M postings, break even at ~1 M, and are faster from 1.8 M on
+# (0.89 -> 0.78 / 0.69 s at 1.8 M; 1.12 -> 0.88 / 0.69 s at 3.0 M). The
+# kernel peaks at ~140 B per posting, so this also bounds a task to
+# ~140 MB.
 POSTINGS_PER_SHARD = 1_000_000
 
 

@@ -3,14 +3,27 @@
 Local mode is single-JVM; on a real cluster the same config applies, with
 AQE handling runtime skew/coalescing. Tuned per the public Spark docs.
 
-The driver JVM is C1-only (`-XX:TieredStopAtLevel=1`). Every JVM this
-engine starts is short-lived and mostly runs Spark's own control plane:
-a spark-submit job, a test session, a benchmark run, a cluster driver
-that answers a few dozen queries. With C2 on, HotSpot spends most of
-such a JVM's CPU compiling that cold code: of one cluster query's 0.79
-JVM CPU-s the compiler threads took 0.56 and the executor task 0.06,
-and a 1,500-page incremental append spent 8.8 of its 16.2 JVM CPU-s
-compiling (BENCH/BASELINE.md "Round 10").
+The driver JVM starts C1-only (`-XX:TieredStopAtLevel=1`) unless the
+caller passes `C2_CONF`. Which compiler pays depends on how the JVM's CPU
+splits between compiling code it runs only a few times (Spark's per-job
+planning and scheduling) and running the same code over large inputs
+(scans, shuffles, sorts and parquet encoding in its tasks). Measured on
+a 4-vCPU VM (BENCH/BASELINE.md "Round 10"):
+
+- compiling dominates a JVM that runs many jobs over little data. In
+  perfbench's `cluster` run (6,000 pages, one job per query) the
+  compiler threads took 0.56 of a query's 0.79 JVM CPU-s, and C1-only
+  halves the query's CPU; an `ingest` commit of 1,500 pages uses
+  36-51 % less JVM CPU, though its tasks use more;
+- task work dominates once the data grows, and C1 code is slower at it:
+  in bench.py's session a 100,000-page build took 26-32 s against
+  14.6-16.1 s with C2, and queries over that index 0.87-1.41 s against
+  0.35-0.46 s; the test suite's one JVM ran 2,102 s against 1,647 s.
+
+get_spark cannot see how much data its session will process, so the
+default serves short sessions over small inputs, and callers that
+process real volumes pass `C2_CONF`: bench.py, the test suite and the
+tools/ scripts do.
 
 Python workers import this package from the driver's own package root,
 not from the JVM's working directory (see get_spark).
@@ -19,8 +32,14 @@ not from the JVM's working directory (see get_spark).
 from __future__ import annotations
 
 import os
+import re
 
+import pyspark
 from pyspark.sql import SparkSession
+
+# extra_conf that turns C2 back on, for a session that processes real
+# data volumes (see the module docstring)
+C2_CONF = {"spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=4"}
 
 # where the driver imported this package from (a directory or a zip)
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -35,6 +54,25 @@ def driver_memory(physical: int | None = None) -> str:
     return f"{min(16 << 10, physical // 2 >> 20)}m"
 
 
+def site_defaults() -> dict:
+    """The spark-defaults.conf entries spark-submit loads under a
+    session's --conf values: from $SPARK_CONF_DIR, else
+    $SPARK_HOME/conf, else pyspark's own conf directory."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__), "conf"
+    )
+    out = {}
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            for line in f:
+                m = re.match(r"([^\s=:#!][^\s=:]*)\s*[=:\s]\s*(.*)", line.strip())
+                if m:
+                    out[m.group(1)] = m.group(2).strip()
+    except OSError:
+        pass
+    return out
+
+
 def get_spark(
     app_name: str = "iresearch_spark",
     cores: int | None = None,
@@ -46,13 +84,20 @@ def get_spark(
     `extra_conf` entries override the defaults. The driver JVM is
     C1-only through spark.driver.defaultJavaOptions, which Spark puts
     before spark.driver.extraJavaOptions: a caller's own extraJavaOptions
-    keep the policy, and `-XX:TieredStopAtLevel=4` there turns C2 back
-    on. The trade-off: C1 code runs slower once warm. On a 60,000-page
-    batch build a second build in the same JVM took +15-20 % wall time
-    (less CPU), while the first, cold build was no slower
-    (BENCH/BASELINE.md "Round 10"). A long-lived JVM that repeats large
-    builds should turn C2 back on.
+    keep the policy, and `C2_CONF`'s `-XX:TieredStopAtLevel=4` there
+    turns C2 back on (when to: see the module docstring). The flag goes
+    in front of the site's own defaultJavaOptions from
+    spark-defaults.conf, and the package root in front of the site's
+    spark.executorEnv.PYTHONPATH, so both site settings are kept; an
+    `extra_conf` value for either key replaces ours and the site's.
     """
+    site = site_defaults()
+    java_options = " ".join(
+        o for o in ("-XX:TieredStopAtLevel=1", site.get("spark.driver.defaultJavaOptions")) if o
+    )
+    worker_path = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, site.get("spark.executorEnv.PYTHONPATH")) if p
+    )
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
@@ -73,14 +118,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
+        .config("spark.driver.defaultJavaOptions", java_options)
         # Python workers run `python -m pyspark.daemon`, which puts the
         # JVM's working directory first on sys.path: started inside
         # another checkout, they would import that checkout's package.
         # PYTHONSAFEPATH (Python >= 3.11) drops that entry, and Spark
         # appends this PYTHONPATH after its pyspark and py4j entries.
         .config("spark.executorEnv.PYTHONSAFEPATH", "1")
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

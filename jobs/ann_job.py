@@ -7,23 +7,18 @@ the serving-tier twin of `search_job --embedded`).
 
 Usage:
   # one-time cell layout over an embeddings parquet
-  spark-submit --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
-      --py-files iresearch_spark.zip jobs/ann_job.py build \
+  spark-submit --py-files iresearch_spark.zip jobs/ann_job.py build \
       --input embeddings.parquet --output /path/ivf \
       [--centroids 16] [--kmeans] [--vec-col embedding] [--id-col vec_id]
 
   # query via the cluster (partition pruning skips unprobed cells)
-  spark-submit --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
-      --py-files iresearch_spark.zip jobs/ann_job.py query \
+  spark-submit --py-files iresearch_spark.zip jobs/ann_job.py query \
       --index /path/ivf --queries queries.parquet --k 5 --n-probe 4 \
       [--output /path/results]
 
   # query Spark-free (python jobs/ann_job.py — no spark-submit at all)
   python jobs/ann_job.py query --embedded --index /path/ivf \
       --queries queries.parquet --k 5 --n-probe 4
-
-The --conf runs the short-lived driver JVM C1-only, as
-session.get_spark does (BENCH/BASELINE.md "Round 10").
 """
 
 from __future__ import annotations

@@ -1,15 +1,11 @@
 """spark-submit entry point: build (or incrementally extend) an index.
 
 Usage:
-  spark-submit --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
-      --py-files iresearch_spark.zip jobs/build_index_job.py \
+  spark-submit --py-files iresearch_spark.zip jobs/build_index_job.py \
       --input /path/to/pages_parquet --output /path/to/index \
       [--analyzer segmentation] [--text-col text] [--sort-key url] \
       [--seg-bits 16] [--no-positions] [--incremental --checkpoint DIR] \
       [--sort-field warc_ts --sort-desc]   # sorted index (Comparer)
-
-The --conf runs the short-lived driver JVM C1-only, as
-session.get_spark does (BENCH/BASELINE.md "Round 10").
 
 Package with:  python jobs/package.py   (writes dist/iresearch_spark.zip)
 """

@@ -10,13 +10,9 @@ to full 128-doc blocks, purges deleted docs if a delete mask exists,
 and writes one term-bucket-partitioned index directory.
 
 Usage:
-  spark-submit --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
-      --py-files iresearch_spark.zip jobs/consolidate_job.py \
+  spark-submit --py-files iresearch_spark.zip jobs/consolidate_job.py \
       --index /path/to/incremental_index --output /path/to/compacted \
       [--reblock] [--bucket-bits 16]
-
-The --conf runs the short-lived driver JVM C1-only, as
-session.get_spark does (BENCH/BASELINE.md "Round 10").
 """
 
 from __future__ import annotations

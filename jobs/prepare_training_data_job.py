@@ -29,14 +29,9 @@ Outputs under --output:
                what each filter removed.
 
 Usage:
-  spark-submit --master 'local[8]' \
-    --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
-    --py-files dist/iresearch_spark.zip \
+  spark-submit --master 'local[8]' --py-files dist/iresearch_spark.zip \
     jobs/prepare_training_data_job.py --input docs.parquet --output out/ \
     --c4 --gopher --scrub-pii --minhash --annotate --pack-seq-len 2048
-
-The --conf runs the short-lived driver JVM C1-only, as
-session.get_spark does (BENCH/BASELINE.md "Round 10").
 
 Scale notes: every stage is a declarative DataFrame op from
 iresearch_spark.ops (JVM expressions / bounded joins — see each op's

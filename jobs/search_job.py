@@ -7,13 +7,9 @@ OrHigh*, MinMatch..., Prefix3 (trailing *), Wildcard, Fuzzy1/2
 (parser parity: utils/index-search.cpp:119-142,240-445).
 
 Usage:
-  spark-submit --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
-      --py-files iresearch_spark.zip jobs/search_job.py \
+  spark-submit --py-files iresearch_spark.zip jobs/search_job.py \
       --index /path/to/index --tasks tasks.txt [--k 10] [--mode wand] \
       [--scorer bm25] [--repeat 2]
-
-The --conf runs the short-lived driver JVM C1-only, as
-session.get_spark does (BENCH/BASELINE.md "Round 10").
 """
 
 from __future__ import annotations

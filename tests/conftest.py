@@ -3,12 +3,14 @@ import re
 
 import pytest
 
-from iresearch_spark.session import get_spark
+from iresearch_spark.session import C2_CONF, get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("iresearch-tests", cores=4, shuffle_partitions=8)
+    # one JVM runs the whole suite: C1-only it took 2,102 s against
+    # 1,647 (BENCH/BASELINE.md "Round 10")
+    s = get_spark("iresearch-tests", cores=4, shuffle_partitions=8, extra_conf=C2_CONF)
     yield s
 
 

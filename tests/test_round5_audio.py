@@ -17,12 +17,6 @@ from iresearch_spark.ops.multimodal import (
     audio_features,
     decode_wav,
 )
-from iresearch_spark.session import get_spark
-
-
-@pytest.fixture(scope="module")
-def spark():
-    return get_spark("audio-test", cores=4)
 
 
 def sine_wav_pcm16(freq=440.0, rate=8000, seconds=0.5, amp=0.5, channels=1):

@@ -37,9 +37,9 @@ def main() -> None:
     args = ap.parse_args()
 
     from iresearch_spark.index.model import InvertedIndex
-    from iresearch_spark.session import get_spark
+    from iresearch_spark.session import C2_CONF, get_spark
 
-    spark = get_spark("index-dump", cores=args.cores)
+    spark = get_spark("index-dump", cores=args.cores, extra_conf=C2_CONF)
     mf_path = os.path.join(args.index, "multifield.json")
     if os.path.exists(mf_path):
         with open(mf_path) as f:

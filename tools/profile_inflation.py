@@ -35,7 +35,7 @@ import pyarrow as pa
 from iresearch_spark.analysis.analyzers import get_analyzer
 from iresearch_spark.corpus import generate_pages
 from iresearch_spark.index.builder import build_index
-from iresearch_spark.session import get_spark
+from iresearch_spark.session import C2_CONF, get_spark
 
 
 def tree_cpu_sec():
@@ -62,7 +62,7 @@ def tree_cpu_sec():
 
 
 cores = int(sys.argv[1]); n_pages = int(sys.argv[2]); reps = int(sys.argv[3])
-spark = get_spark(f"prof-{cores}", cores=cores, shuffle_partitions=cores)
+spark = get_spark(f"prof-{cores}", cores=cores, shuffle_partitions=cores, extra_conf=C2_CONF)
 from pyspark.sql import functions as F
 
 pages = generate_pages(spark, n_pages, seed=42).cache()

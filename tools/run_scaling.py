@@ -32,7 +32,7 @@ import json, os, sys, time
 sys.path.insert(0, "/root/repo")
 from iresearch_spark.index.builder import build_index
 from iresearch_spark.search import And, Or, Phrase, Prefix, SearchEngine, Term
-from iresearch_spark.session import get_spark
+from iresearch_spark.session import C2_CONF, get_spark
 
 
 def tree_cpu_sec():
@@ -72,7 +72,7 @@ def steal_jiffies():
 
 cpus = int(sys.argv[1]); n_pages = int(sys.argv[2]); reps = int(sys.argv[3])
 corpus_path = sys.argv[4]
-spark = get_spark(f"scaling-{cpus}", cores=cpus, shuffle_partitions=cpus)
+spark = get_spark(f"scaling-{cpus}", cores=cpus, shuffle_partitions=cpus, extra_conf=C2_CONF)
 # identical on-disk input table for every level (the corpus is
 # materialized once, up front — generation is not build cost)
 pages = spark.read.parquet(corpus_path).cache()
