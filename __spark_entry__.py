@@ -384,8 +384,8 @@ def _engine(spark: SparkSession, sf_dir: str, scorer: str = "bm25") -> SearchEng
 
 def _saved_engine(spark: SparkSession, sf_dir: str) -> SearchEngine:
     """Engine over a SAVED+reloaded index: exercises the on-disk
-    dictionary layouts (forward/reversed/k-gram file pruning) that an
-    in-memory index doesn't have — the production read path."""
+    term dictionary's file pruning that an in-memory index doesn't
+    have — the production read path."""
     key = os.path.abspath(sf_dir)
     if key not in _SAVED_INDEX_CACHE:
         import tempfile
@@ -475,10 +475,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["prefix"] = _match_q(Prefix("s"))
     q["wildcard"] = _match_q(Wildcard("s%k"))
 
-    # round-4 k-gram index paths over the SAVED index (infix-only
-    # wildcard and unprefixed fuzzy resolve via gram-candidate lookup
-    # instead of a vocabulary scan; results must equal the oracle's
-    # plain LIKE/levenshtein semantics exactly)
+    # the shapes no term interval narrows, over the SAVED index
+    # (infix-only wildcard and unprefixed fuzzy expand in one scan of
+    # the term dictionary; results must equal the oracle's plain
+    # LIKE/levenshtein semantics exactly)
     def wildcard_infix(spark, sf_dir):
         return _rounded(
             _saved_engine(spark, sf_dir).matches(Wildcard("%atc%"))

@@ -137,9 +137,8 @@ def main():
         "Phrase": (Phrase(["table", "hash"]), "exhaustive"),
         "Prefix3": (Prefix("sca"), "exhaustive"),
         "Wildcard": (Wildcard("s%k"), "exhaustive"),
-        # infix-only pattern: no literal prefix/suffix to seek, so the
-        # round-4 k-gram index resolves candidates (pre-round-4 this
-        # was the full-vocabulary-scan shape)
+        # infix-only pattern: no literal prefix to seek (this engine
+        # preloads the dictionary, so it expands in memory)
         "WildcardInfix": (Wildcard("%atc%"), "exhaustive"),
         "Fuzzy1": (Fuzzy("spork", distance=1), "exhaustive"),
     }

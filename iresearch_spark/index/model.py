@@ -203,22 +203,6 @@ class InvertedIndex:
     # On an Iceberg deployment this map IS the table's file manifest —
     # the same pruning falls out of min/max column stats.
     term_stats_ranges: list | None = None
-    # the reversed-term dictionary's file ranges ([(path, min_rterm,
-    # max_rterm)], rows sorted by reverse(term)) — leading-wildcard
-    # patterns with a literal suffix prune on the reversed interval
-    term_stats_rev_ranges: list | None = None
-    # the k-gram index's file ranges ([(path, min_gram, max_gram)]):
-    # a (gram, term, df) table of every padded character 3-gram of
-    # every dictionary term, range-partitioned and sorted by gram —
-    # the classic IR-textbook k-gram index (Manning et al., IIR
-    # §3.2.2) that serves the two expansion shapes neither the
-    # forward nor the reversed dictionary can seek: infix-only
-    # wildcards ('%abc%def%') and unprefixed fuzzy terms. The
-    # reference walks a wildcard/Levenshtein automaton intersected
-    # with its FST (wildcard_utils.cpp, levenshtein_utils.cpp); on
-    # Spark the same "touch only plausible terms" effect comes from
-    # a gram-posting equi-lookup + count filter.
-    term_grams_ranges: list | None = None
     # granular numeric term dictionary (reference numeric_token_stream
     # + by_granular_range — see index/numeric.py): (field, shift,
     # prefix, doc_id) rows, written sorted by (field, shift, prefix) so
@@ -242,12 +226,13 @@ class InvertedIndex:
     # top_docs reads only the head files covering k rows
     docs_ranges: list | None = None
     # True on a merged multi-segment view (streaming/incremental.read):
-    # dictionary rows (term_stats/rev/gram files) then appear once PER
-    # SEGMENT with segment-local df/cf, so every pruned accessor must
-    # re-aggregate (sum df — doc ids are disjoint across segments)
-    # before handing rows to callers. A single saved index has unique
-    # rows carrying the global stats and skips that shuffle.
-    gram_df_duplicated: bool = False
+    # the term_stats files then hold each segment's dictionary, a term
+    # repeating once PER SEGMENT with segment-local df/cf, so every
+    # pruned accessor must re-aggregate (sum df — doc ids are disjoint
+    # across segments) before handing rows to callers. A single saved
+    # index has unique rows carrying the global stats and skips that
+    # shuffle.
+    per_segment_dictionary: bool = False
     # counts the build already has, so save() never re-counts a table
     # (None when unknown): posting-block rows and the docs table's
     # [min, max] doc id. A loaded index carries n_blocks from its
@@ -266,7 +251,7 @@ class InvertedIndex:
     def _agg_stats(self, df: DataFrame) -> DataFrame:
         """Collapse per-segment dictionary rows to global stats (sum
         df/cf per term) on merged views; identity on a single index."""
-        if not self.gram_df_duplicated:
+        if not self.per_segment_dictionary:
             return df
         aggs = [F.sum("df").alias("df")]
         if "cf" in df.columns:
@@ -308,38 +293,7 @@ class InvertedIndex:
                 0,
                 total,
             )
-        return self._agg_stats(spark.read.parquet(*sel)), len(sel), total
-
-    def pruned_rev_term_stats(
-        self, rlo: str, rhi: str | None
-    ) -> tuple[DataFrame, int | None, int | None]:
-        """term_stats narrowed via the REVERSED-term dictionary: files
-        whose [min_rterm, max_rterm] intersects [rlo, rhi) — the
-        leading-wildcard seek (a literal suffix reversed is a prefix of
-        reverse(term)). Falls back to the full table when the index
-        has no reversed layout (in-memory, or pre-round-4 manifests)."""
-        ranges = self.term_stats_rev_ranges
-        if not ranges:
-            return self.term_stats, None, None
-        sel = [
-            p
-            for (p, mn, mx) in ranges
-            if mx >= rlo and (rhi is None or mn < rhi)
-        ]
-        total = len(ranges)
-        if len(sel) == total:
-            return self.term_stats, total, total
-        spark = self.term_stats.sparkSession
-        if not sel:
-            return (
-                spark.createDataFrame([], self.term_stats.schema),
-                0,
-                total,
-            )
-        df = spark.read.parquet(*sorted(sel))
-        if "rterm" in df.columns:
-            df = df.drop("rterm")
-        return self._agg_stats(df), len(sel), total
+        return self._read_dictionary(sel), len(sel), total
 
     def term_stats_for_terms(self, terms: list[str]) -> DataFrame:
         """term_stats narrowed to the dictionary files that can hold the
@@ -353,7 +307,7 @@ class InvertedIndex:
         if not ranges or not terms:
             return self.term_stats
         sel: set[str] = set()
-        if self.gram_df_duplicated:
+        if self.per_segment_dictionary:
             # overlapping per-segment intervals: point-in-interval scan
             # (driver-side, O(terms x files) over tiny lists)
             for t in terms:
@@ -373,67 +327,16 @@ class InvertedIndex:
             return spark.createDataFrame([], self.term_stats.schema)
         if len(sel) == len(ranges):
             return self.term_stats
-        return self._agg_stats(spark.read.parquet(*sorted(sel)))
+        return self._read_dictionary(sorted(sel))
 
-    def gram_files_for(self, grams: list[str]) -> tuple[list[str], int]:
-        """(gram-index files that can hold any of the given grams,
-        total files). Point lookups over the sorted per-file [min, max]
-        gram ranges; a merged multi-segment view carries the
-        concatenation of its segments' ranges, so the linear
-        intersection scan stays correct there too (the list is
-        O(files), tiny)."""
-        ranges = self.term_grams_ranges or []
-        sel = sorted(
-            {
-                p
-                for (p, mn, mx) in ranges
-                for g in grams
-                if mn <= g <= mx
-            }
-        )
-        return sel, len(ranges)
-
-    def gram_candidate_terms(
-        self, grams: list[str], min_match: int
-    ) -> DataFrame | None:
-        """(term, df) of dictionary terms containing >= min_match of
-        the given padded 3-grams, via the k-gram index. None when the
-        index has no gram layout (in-memory, or a pre-round-4 save) —
-        callers fall back to the full vocabulary scan.
-
-        Two-level aggregation so multi-segment views are exact: a term
-        present in several segments contributes one gram row PER
-        segment with its segment-local df; summing df per (gram, term)
-        first reconstitutes the global df (doc ids are disjoint across
-        segments), then the distinct-gram count per term applies the
-        match threshold."""
-        if self.term_grams_ranges is None or not grams:
-            return None
-        sel, _total = self.gram_files_for(grams)
-        spark = self.term_stats.sparkSession
-        if not sel:
-            return spark.createDataFrame([], "term string, df long")
-        df = spark.read.parquet(*sel).filter(
-            F.col("gram").isin(list(grams))
-        )
-        if self.gram_df_duplicated:
-            # merged view: re-sum per-segment dfs first (doc ids are
-            # disjoint across segments, and every segment containing a
-            # term emits the same gram set, so the per-gram sums agree)
-            df = df.groupBy("gram", "term").agg(F.sum("df").alias("df"))
-        elif len(grams) == 1:
-            # unique (gram, term) rows with global df: the single-gram
-            # lookup needs no aggregation at all
-            return df.select("term", "df")
-        return (
-            df.groupBy("term")
-            .agg(
-                F.count("gram").alias("_gc"),
-                F.max("df").alias("df"),
-            )
-            .filter(F.col("_gc") >= int(min_match))
-            .select("term", "df")
-        )
+    def _read_dictionary(self, files: list[str]) -> DataFrame:
+        """term_stats rows of the given saved dictionary files, read
+        with the table's schema (no schema-inference job; on a merged
+        view the unaggregated rows' schema) and summed per term on a
+        merged view."""
+        rows = (self.term_rows or (self.term_stats, 1))[0]
+        read = self.term_stats.sparkSession.read.schema(rows.schema)
+        return self._agg_stats(read.parquet(*files))
 
     def postings_for_terms(self, terms: list[str]) -> DataFrame:
         """Postings scan narrowed to the given exact terms: directory
@@ -553,13 +456,12 @@ class InvertedIndex:
         the reference's FST term-dictionary seek
         (`formats_burst_trie.cpp:953-966`).
 
-        The term dictionary is aggregated once: `term_stats/` is written
-        straight from its lazy aggregation, and `term_stats_rev/` and
-        `term_grams/` are cut from the forward files just written. The
-        three tables' file boundaries come from the dictionary's least
-        (crc32(term), term) pairs (`dictionary_sample`): a fresh build's
-        summary pass already holds them, a loaded or merged index draws
-        them in one job.
+        The term dictionary is one table, as in the reference: the
+        term-sorted `term_stats/`, written straight from its lazy
+        aggregation. Its file boundaries come from the dictionary's
+        least (crc32(term), term) pairs (`dictionary_sample`): a fresh
+        build's summary pass already holds them, a loaded or merged
+        index draws them in one job.
 
         With `encryption=` (an index.encryption.IndexEncryption) every
         table is written with Parquet Modular Encryption — pages AND
@@ -639,17 +541,9 @@ class InvertedIndex:
             n_terms = _n_terms(pairs, drawn)
             sample = [t for _, t in pairs[:k]]
             ts_files = max(16, min(n_part * 4, (n_terms // 2_000_000) + 16))
-            rev_path = os.path.join(path, "term_stats_rev")
-            grams_path = os.path.join(path, "term_grams")
-            gram_files = max(16, min(n_part * 4, (n_terms // 250_000) + 16))
             # file boundaries are quantiles of one deterministic term
-            # sample (the same sample serves all three layouts), so the
-            # dictionary files are identical run to run
+            # sample, so the dictionary files are identical run to run
             fwd_bounds = _split_keys(sample, ts_files)
-            rev_bounds = _split_keys([t[::-1] for t in sample], ts_files)
-            gram_bounds = _split_keys(
-                [g for t in sample for g in _padded_grams(t)], gram_files
-            )
 
             def _w_postings():
                 postings.write.options(**wopts).mode(mode).partitionBy("_tb").parquet(
@@ -690,64 +584,6 @@ class InvertedIndex:
                     .parquet(ts_path)
                 )
 
-            def _fwd_rows():
-                # the reversed and k-gram tables are cut from the forward
-                # files just written, not from a second aggregation
-                rows = read_parquet(
-                    self.term_stats.sparkSession, ts_path,
-                    _as_read(schemas["term_stats"]).jsonValue(),
-                )
-                if not schemas["term_stats"]["term"].nullable:
-                    # a parquet read makes every column nullable: keep
-                    # `term` a required column, as the aggregation had it
-                    rows = rows.withColumn("term", F.coalesce("term", F.lit("")))
-                return rows
-
-            def _w_rev():
-                # reversed-term dictionary (the Lucene reversed-field
-                # trick): the same rows sorted by reverse(term), so a
-                # pattern with only a literal SUFFIX ('%tion') prunes
-                # files by the reversed-suffix interval
-                (
-                    _by_range(
-                        _fwd_rows().withColumn("rterm", F.reverse(F.col("term"))),
-                        "rterm", rev_bounds, ts_files,
-                    )
-                    .sortWithinPartitions("rterm")
-                    .write.options(**wopts).mode(mode)
-                    .parquet(rev_path)
-                )
-
-            def _w_grams():
-                # k-gram index (IIR §3.2.2): every padded character
-                # 3-gram of every dictionary term, sorted by gram —
-                # serves infix-only wildcards and unprefixed fuzzy, the
-                # two shapes the forward/reversed dictionaries can't
-                # seek (the Spark analogue of the reference's automaton
-                # ∩ FST walk, wildcard_utils.cpp/levenshtein_utils.cpp).
-                # _padded_grams is the same expansion in Python.
-                grams = _fwd_rows().withColumn(
-                    "_p",
-                    F.concat(F.lit("\x02"), F.col("term"), F.lit("\x03")),
-                ).select(
-                    F.explode(
-                        F.array_distinct(
-                            F.expr(
-                                "transform(sequence(1, length(_p) - 2),"
-                                " i -> substring(_p, i, 3))"
-                            )
-                        )
-                    ).alias("gram"),
-                    "term",
-                    "df",
-                )
-                (
-                    _by_range(grams, "gram", gram_bounds, gram_files)
-                    .sortWithinPartitions("gram", "term")
-                    .write.options(**wopts).mode(mode)
-                    .parquet(grams_path)
-                )
-
             writers = [_w_fwd, _w_postings, _w_docs]
             if self.num_terms is not None:
 
@@ -779,33 +615,20 @@ class InvertedIndex:
             # wall-clock is the longest write, not the sum
             from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=len(writers) + 2) as ex:
-                futs = [ex.submit(f) for f in writers]
-                futs[0].result()  # _w_fwd: the next two read its files
-                futs += [ex.submit(_w_rev), ex.submit(_w_grams)]
-                for fut in futs:
+            with ThreadPoolExecutor(max_workers=len(writers)) as ex:
+                for fut in [ex.submit(f) for f in writers]:
                     fut.result()
+            # an encrypted index keeps its per-file TERM ranges out of
+            # manifest.json: they are plaintext vocabulary, and sealing
+            # the dictionary files is the point. Keyed scans still
+            # prune at row-group level from the decrypted footer
+            # statistics.
             if encryption is None:
-                (
-                    term_stats_ranges,
-                    term_stats_rev_ranges,
-                    term_grams_ranges,
-                ) = (
-                    [r[:3] for r in ranges]
-                    for ranges in _file_ranges(self.term_stats.sparkSession, path, {
-                        "term_stats": ("term", "VARCHAR"),
-                        "term_stats_rev": ("rterm", "VARCHAR"),
-                        "term_grams": ("gram", "VARCHAR"),
-                    }).values()
-                )
-            else:
-                # encrypted index: per-file TERM ranges are plaintext
-                # vocabulary — keeping them out of manifest.json is the
-                # point of sealing the dictionary files. Keyed scans
-                # still prune at row-group level from the decrypted
-                # footer statistics.
-                term_stats_rev_ranges = None
-                term_grams_ranges = None
+                (ranges,) = _file_ranges(
+                    self.term_stats.sparkSession, path,
+                    {"term_stats": ("term", "VARCHAR")},
+                ).values()
+                term_stats_ranges = [r[:3] for r in ranges]
             if self.sort_field is not None:
                 (docs_ranges,) = _file_ranges(
                     self.docs.sparkSession, path, {"docs": ("doc_id", "BIGINT")}
@@ -816,8 +639,6 @@ class InvertedIndex:
             self.docs.coalesce(n_part).write.options(**wopts).mode(mode).parquet(
                 os.path.join(path, "docs")
             )
-            term_stats_rev_ranges = None
-            term_grams_ranges = None
             self.term_stats.coalesce(n_part).write.options(**wopts).mode(mode).parquet(ts_path)
             if self.num_terms is not None:
                 self.num_terms.write.options(**wopts).mode(mode).parquet(
@@ -841,8 +662,6 @@ class InvertedIndex:
             "has_deleted": self.deleted is not None,
             "term_buckets": term_buckets,
             "term_stats_ranges": term_stats_ranges,
-            "term_stats_rev_ranges": term_stats_rev_ranges,
-            "term_grams_ranges": term_grams_ranges,
             # bucket id also present as the _tbd data column (flat
             # multi-segment reads rely on it; absent in old segments)
             "tb_data_col": term_buckets is not None,
@@ -1048,22 +867,6 @@ class InvertedIndex:
                 if manifest.get("term_stats_ranges")
                 else None
             ),
-            term_stats_rev_ranges=(
-                [
-                    (os.path.join(path, f), mn, mx)
-                    for f, mn, mx in manifest["term_stats_rev_ranges"]
-                ]
-                if manifest.get("term_stats_rev_ranges")
-                else None
-            ),
-            term_grams_ranges=(
-                [
-                    (os.path.join(path, f), mn, mx)
-                    for f, mn, mx in manifest["term_grams_ranges"]
-                ]
-                if manifest.get("term_grams_ranges")
-                else None
-            ),
             num_terms=(
                 _read("num_terms")
                 if manifest.get("numeric_meta")
@@ -1198,18 +1001,11 @@ def _n_terms(pairs: list[tuple[int, str]], k: int) -> int:
     return (k - 1) * 2**32 // (pairs[k - 1][0] + 1)
 
 
-def _padded_grams(term: str) -> set[str]:
-    """The k-gram index's rows for one term: its distinct character
-    3-grams, padded with \\x02 / \\x03 (save()'s Spark expression)."""
-    p = "\x02" + term + "\x03"
-    return {p[i:i + 3] for i in range(len(p) - 2)}
-
-
 def _split_keys(keys: list[str], n: int) -> list[str]:
     """At most n-1 increasing split keys that cut the sorted sample
     into n runs of about equal size. A cut inside a run of equal keys
     moves to the next distinct key, as Spark's RangePartitioner does,
-    so repeated keys (common k-grams) cost no file."""
+    so repeated keys cost no file."""
     keys = sorted(keys)
     step = len(keys) / n
     bounds: list[str] = []

@@ -58,10 +58,8 @@ search_many() answers every query of a batch in the same single pass
 from __future__ import annotations
 
 import dataclasses
-from typing import Iterator
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from iresearch_spark.index.model import InvertedIndex, _doc_span
@@ -228,7 +226,7 @@ class SearchEngine:
                 acc += n
                 if acc >= k:
                     break
-            docs = self._spark.read.parquet(*sel)
+            docs = self._spark.read.schema(self.index.docs.schema).parquet(*sel)
         elif query is not None:
             m = self.matches(query)
             docs = docs.join(m.select("doc_id"), "doc_id", "semi")
@@ -356,78 +354,6 @@ class SearchEngine:
                 self._df_cache[t] = found.get(t, 0)
         return {t: self._df_cache[t] for t in terms}
 
-    def _wildcard_expand_plan(self, pattern: str):
-        """(source_df_or_None, bounds_kwargs) for a wildcard's
-        dictionary expansion, most-selective seek first: a literal
-        prefix >= 3 chars prunes the forward dictionary by interval; a
-        literal suffix >= 3 chars seeks the reversed one; otherwise
-        the pattern's required 3-grams drive a k-gram-index candidate
-        lookup (the Spark analogue of the reference's
-        automaton-intersected FST walk, wildcard_utils.cpp); short
-        prefixes/suffixes remain the interval fallback, and only a
-        pattern with no usable literal material on an index with no
-        gram layout scans the full vocabulary."""
-        litp = sem_.wildcard_literal_prefix(pattern)
-        suf = sem_.wildcard_literal_suffix(pattern)
-
-        def by_prefix():
-            hi = sem_.prefix_successor(litp)
-            return None, dict(lo=litp, hi=hi, hi_inclusive=False)
-
-        def by_suffix():
-            rsuf = suf[::-1]
-            src, _, _ = self.index.pruned_rev_term_stats(
-                rsuf, sem_.prefix_successor(rsuf)
-            )
-            return src, {}
-
-        if len(litp) >= 3:
-            return by_prefix()
-        if len(suf) >= 3:
-            return by_suffix()
-        grams = sem_.wildcard_required_grams(pattern)
-        if grams:
-            cand = self.index.gram_candidate_terms(grams, len(grams))
-            if cand is not None:
-                return cand, {}
-        if litp:
-            return by_prefix()
-        if suf:
-            return by_suffix()
-        return None, {}
-
-    def _expand(
-        self,
-        predicate,
-        limit: int,
-        lo: str | None = None,
-        hi: str | None = None,
-        hi_inclusive: bool = True,
-        source=None,
-    ) -> tuple[list[tuple[str, int]], bool]:
-        """Expand a multi-term leaf against term_stats: its capped
-        (df desc, term asc) head and completeness (semantics.capped —
-        the reference's limited_sample_collector, scored_terms_limit).
-        On a saved index the [lo, hi] term interval prunes whole
-        dictionary files via the manifest's per-file min/max map (the
-        FST seek analogue) — the predicate still applies exactly, so
-        pruning never changes the expansion. Leading-wildcard and
-        unprefixed-fuzzy leaves have no interval and scan the full
-        dictionary (the documented trade vs the reference's
-        automaton-intersected FST walk)."""
-        if source is not None:
-            src = source  # caller-pruned (e.g. the reversed dictionary)
-        else:
-            src, _, _ = self.index.pruned_term_stats(lo, hi, hi_inclusive)
-        rows = (
-            src.filter(predicate)
-            .orderBy(*_order_cols(sem_.TERM_ORDER))
-            .limit(limit)
-            .select("term", "df")
-            .collect()
-        )
-        return sem_.capped([(r["term"], r["df"]) for r in rows], limit)
-
     def _max_dl(self) -> int:
         """Max doc length of an index predating the manifest field —
         one tiny agg (see Semantics.max_dl)."""
@@ -470,129 +396,42 @@ class SearchEngine:
         self, node: ast.Node
     ) -> tuple[list[tuple[str, int]], bool]:
         """([(term, df)], complete) for a multiterm-expansion leaf
-        (Prefix/Wildcard/Range/Fuzzy). `complete` means the leaf
-        matches EXACTLY these terms (expansion finished below its
-        cap — always true for Fuzzy, whose max_terms cap IS the leaf
-        semantics); an incomplete expansion leaves the pattern
-        predicate authoritative and only the sampled terms scored.
-        Results are cached per (frozen, hashable) node — the
-        reference's prepared-query seek-cookie cache — so repeated
-        executions pay for ONE expansion job (none on a preload_stats
-        engine: it expands against its in-memory dictionary)."""
+        (Prefix/Wildcard/Range/Fuzzy), by semantics.Vocabulary.expand.
+        `complete` means the leaf matches EXACTLY these terms (expansion
+        finished below its cap — always true for Fuzzy, whose max_terms
+        cap IS the leaf semantics); an incomplete expansion leaves the
+        pattern predicate authoritative and only the sampled terms
+        scored. A preload_stats engine expands against its in-memory
+        dictionary; any other runs one mapInArrow over the dictionary
+        files the leaf's term interval selects (the FST seek analogue,
+        pruned_term_stats), expands each Arrow batch and re-caps the
+        union of the batches' heads on the driver (semantics.merge_heads
+        — exact). A leading wildcard or an unprefixed Fuzzy reads the
+        whole dictionary: the reference instead intersects an automaton
+        with its FST (wildcard_filter.cpp, levenshtein_filter.cpp).
+        Results are cached per (frozen, hashable) node — the reference's
+        prepared-query seek-cookie cache — so repeated executions pay
+        for ONE expansion job."""
         hit = self._expansion_cache.get(node)
         if hit is not None:
             return hit
         if self._vocab is not None:
             expanded, _matched, complete = self._vocab.expand(node, self.sem)
             out = (expanded, complete)
-        elif isinstance(node, ast.Fuzzy):
-            out = (self._fuzzy_candidates(node), True)
         else:
-            pred = self._leaf_predicate(node)
-            limit = self.sem.expansion_limit(node)
-            if isinstance(node, ast.Prefix):
-                hi = sem_.prefix_successor(node.prefix)
-                out = self._expand(pred, limit, node.prefix, hi, False)
-            elif isinstance(node, ast.Wildcard):
-                wsrc, wkw = self._wildcard_expand_plan(node.pattern)
-                out = self._expand(pred, limit, source=wsrc, **wkw)
-            else:  # Range
-                out = self._expand(
-                    pred, limit, node.min_term, node.max_term, node.include_max
+            lo, hi, _include_min, include_max = sem_.term_interval(node)
+            src, n_files, _ = self.index.pruned_term_stats(lo, hi, include_max)
+            heads = [] if n_files == 0 else (
+                src.select("term", "df")
+                .mapInArrow(
+                    _expansion_kernel(node, self.sem.portable()),
+                    "term string, df long, distance int",
                 )
+                .collect()
+            )
+            out = sem_.merge_heads(node, self.sem, [tuple(r) for r in heads])
         self._expansion_cache[node] = out
         return out
-
-    def _fuzzy_candidates(self, node: ast.Fuzzy) -> list[tuple[str, int]]:
-        """Edit-distance term expansion over the distinct-term table,
-        behind a cheap length-band prefilter (semantics.fuzzy_band) so
-        the O(len^2) DP runs only on plausible terms — at 10^8-term
-        vocabularies the band cuts the scan by ~the length
-        distribution's spread. Cap to max_terms by semantics.FUZZY_ORDER
-        (distance asc, df desc, term asc). Plain Levenshtein runs
-        JVM-side with the threshold short-circuit; transpositions
-        (Damerau/OSA — the reference's parametric DFA with
-        with_transpositions) run as an Arrow-batched pandas pass over
-        the banded vocabulary slice."""
-        plen = len(node.prefix)
-        # exact-prefix option (levenshtein_filter.hpp:49): candidates
-        # start with the prefix verbatim, distance applies to the rest
-        fuzzed = (
-            F.expr(f"substring(term, {plen + 1})")
-            if plen
-            else F.col("term")
-        )
-        ts_src = self.index.term_stats
-        if plen:
-            # the exact-prefix option pins a term interval -> dictionary
-            # file pruning on a saved index
-            ts_src, _, _ = self.index.pruned_term_stats(
-                node.prefix,
-                sem_.prefix_successor(node.prefix),
-                hi_inclusive=False,
-            )
-        else:
-            # unprefixed fuzzy: q-gram count filtering (the public
-            # approximate-string-join lemma — Gravano et al., VLDB'01).
-            # One edit destroys at most q distinct padded 3-grams of
-            # the query (q+1 for a transposition, which touches two
-            # adjacent positions), so every term within distance d
-            # shares >= |G(s)| - d*q of them. When that bound is
-            # positive, a k-gram-index candidate lookup replaces the
-            # full vocabulary scan (the Levenshtein-automaton ∩ FST
-            # analogue, levenshtein_utils.cpp); the exact banded DP
-            # below still verifies every candidate, so the prefilter
-            # never changes results.
-            padded = "\x02" + node.term + "\x03"
-            qgrams = sorted(
-                {padded[i : i + 3] for i in range(len(padded) - 2)}
-            )
-            per_edit = 4 if node.transpositions else 3
-            thresh = len(qgrams) - per_edit * node.distance
-            if thresh >= 1:
-                cand = self.index.gram_candidate_terms(qgrams, thresh)
-                if cand is not None:
-                    ts_src = cand
-        banded = ts_src.filter(F.length("term").between(*sem_.fuzzy_band(node)))
-        if plen:
-            banded = banded.filter(F.col("term").startswith(node.prefix))
-        if node.transpositions:
-            dmax = node.distance
-
-            def osa(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    d = sem_.fuzzy_distances(node, pdf["term"].to_numpy())
-                    out = pdf.assign(distance=d)
-                    yield out[out["distance"] <= dmax][["term", "df", "distance"]]
-
-            # JVM prefilter before the Python DP: every transposition
-            # costs <= 2 plain edits, so OSA <= d implies
-            # levenshtein <= 2d — the short-circuited JVM DP throws
-            # away almost the whole vocabulary slice before anything
-            # crosses the Arrow boundary (at 10^8 terms the Python
-            # stage sees only the 2d-neighborhood)
-            lev_band = F.levenshtein(fuzzed, F.lit(node.term), 2 * dmax)
-            scored = (
-                banded.filter(
-                    (lev_band >= 0) & (lev_band <= 2 * dmax)
-                )
-                .select("term", F.col("df").cast("long").alias("df"))
-                .mapInPandas(osa, "term string, df long, distance int")
-            )
-        else:
-            dist = F.levenshtein(
-                fuzzed, F.lit(node.term), node.distance
-            )  # threshold arg short-circuits the DP (returns -1 above it)
-            scored = banded.withColumn("distance", dist).filter(
-                (F.col("distance") >= 0) & (F.col("distance") <= node.distance)
-            )
-        rows = (
-            scored.orderBy(*_order_cols(sem_.FUZZY_ORDER))
-            .limit(node.max_terms)
-            .select("term", "df")
-            .collect()
-        )
-        return [(r["term"], r["df"]) for r in rows]
 
     # ---------------------------------------------------- the shard plan
 
@@ -908,9 +747,25 @@ class SearchEngine:
         return df.join(self.index.deleted.select("doc_id"), "doc_id", "left_anti")
 
 
-def _order_cols(order) -> list:
-    """A semantics expansion order as orderBy columns."""
-    return [getattr(F, d)(c) for c, d in order]
+def _expansion_kernel(node: ast.Node, sem: Semantics):
+    """mapInArrow body of a dictionary scan: each (term, df) batch's
+    semantics.Vocabulary.head rows for one expansion leaf."""
+    schema = pa.schema(
+        [("term", pa.string()), ("df", pa.int64()), ("distance", pa.int32())]
+    )
+
+    def run(batches):
+        for b in batches:
+            vocab = sem_.Vocabulary.of(
+                dict(zip(b.column(0).to_pylist(), b.column(1).to_pylist()))
+            )
+            rows = vocab.head(node, sem)
+            if rows:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c) for c in zip(*rows)], schema=schema
+                )
+
+    return run
 
 
 @dataclasses.dataclass

@@ -437,55 +437,27 @@ def wildcard_literal_prefix(pattern: str) -> str:
     return "".join(out)
 
 
-def wildcard_literal_suffix(pattern: str) -> str:
-    """Trailing literal run of a LIKE pattern (after the last unescaped
-    % or _) — the seekable REVERSED prefix of a leading-wildcard query
-    via the reversed-term dictionary (the classic reversed-field
-    trick)."""
-    out = []
-    for is_lit, ch in reversed(_like_tokens(pattern)):
-        if not is_lit:
-            break
-        out.append(ch)
-    return "".join(reversed(out))
-
-
-def wildcard_required_grams(pattern: str) -> list[str]:
-    """Distinct padded 3-grams every matching term MUST contain: each
-    literal run of the pattern appears verbatim in a matching term
-    (anchored runs appear at the term's start/end, so they pick up the
-    \\x02/\\x03 pad grams). Feeds the k-gram index (IIR §3.2.2) — the
-    automaton-∩-FST analogue for infix-only wildcards. Empty when no
-    run yields a 3-gram (all runs unanchored and < 3 chars)."""
-    toks = _like_tokens(pattern)
-    runs: list[tuple[str, bool, bool]] = []  # (text, at_start, at_end)
-    cur, cur_start_idx = "", -1
-    for idx, (is_lit, ch) in enumerate(toks):
-        if is_lit:
-            if not cur:
-                cur_start_idx = idx
-            cur += ch
-        else:
-            if cur:
-                runs.append((cur, cur_start_idx == 0, False))
-                cur = ""
-    if cur:
-        runs.append((cur, cur_start_idx == 0, True))
-    grams: set[str] = set()
-    for text, at_start, at_end in runs:
-        if at_start:
-            text = "\x02" + text
-        if at_end:
-            text = text + "\x03"
-        for j in range(len(text) - 2):
-            grams.add(text[j : j + 3])
-    return sorted(grams)
+def term_interval(node) -> tuple:
+    """(lo, hi, include_min, include_max) of the terms an expansion leaf
+    can match (None = unbounded): a Prefix's, a Wildcard's literal
+    prefix's or a Fuzzy leaf's exact prefix's interval, a Range's own
+    bounds. Both the in-memory slice and the cluster's dictionary file
+    pruning read it; a leading wildcard or an unprefixed Fuzzy spans
+    the whole dictionary."""
+    if isinstance(node, ast.Range):
+        return node.min_term, node.max_term, node.include_min, node.include_max
+    if isinstance(node, ast.Wildcard):
+        p = wildcard_literal_prefix(node.pattern)
+    elif isinstance(node, (ast.Prefix, ast.Fuzzy)):
+        p = node.prefix
+    else:
+        raise TypeError(f"not an expansion leaf: {node}")
+    return p, prefix_successor(p), True, False
 
 
 # expansion ranks as (column, "asc"|"desc") keys over (term, df[,
-# distance]) rows: the cluster turns them into an orderBy, the
-# in-memory tiers into a sort key (the reference's
-# limited_sample_collector and levenshtein_filter.cpp:251-263)
+# distance]) rows (the reference's limited_sample_collector and
+# levenshtein_filter.cpp:251-263)
 TERM_ORDER = (("df", "desc"), ("term", "asc"))
 FUZZY_ORDER = (("distance", "asc"),) + TERM_ORDER
 _ROW_FIELDS = {"term": 0, "df": 1, "distance": 2}
@@ -511,12 +483,11 @@ def capped(rows, limit: int):
 
 class Vocabulary:
     """A sorted in-memory term dictionary (terms, df) and the expansion
-    of multiterm leaves against it — a hot replica's vocabulary, or a
-    preload_stats cluster engine's whole term dictionary. Python str
-    order is Spark's UTF8String order (UTF-8 byte order preserves code
-    point order), so slices are the cluster's term intervals and the
-    expansions equal the cluster's term_stats scans (pinned by parity
-    tests)."""
+    of multiterm leaves against it — a hot replica's vocabulary, a
+    preload_stats cluster engine's whole term dictionary, or one Arrow
+    batch of a cluster engine's dictionary scan. Python str order is
+    Spark's UTF8String order (UTF-8 byte order preserves code point
+    order), so slices are the cluster's term intervals."""
 
     def __init__(self, terms, dfs):
         self.terms = np.asarray(terms, dtype=object)
@@ -538,42 +509,38 @@ class Vocabulary:
         )
         return t[i:j], self.dfs[i:j]
 
-    def _prefixed(self, prefix: str):
-        return self.slice(prefix, prefix_successor(prefix))
-
     def expand(self, node, sem) -> tuple[list, list, bool]:
         """([(term, df)] expansion, [matched terms], complete) of a
         Prefix/Wildcard/Range leaf under `sem`'s scored-term cap, or of
         a Fuzzy leaf (complete: its max_terms cap IS its semantics)."""
         if isinstance(node, ast.Fuzzy):
-            expanded = self._fuzzy(node)
+            expanded = [(t, df) for t, df, _ in self._fuzzy(node)]
             return expanded, [t for t, _ in expanded], True
-        if isinstance(node, ast.Prefix):
-            t, d = self._prefixed(node.prefix)
-        elif isinstance(node, ast.Range):
-            t, d = self.slice(
-                node.min_term, node.max_term, node.include_min,
-                node.include_max,
-            )
-        elif isinstance(node, ast.Wildcard):
+        t, d = self.slice(*term_interval(node))
+        if isinstance(node, ast.Wildcard):
             # the literal prefix bounds the regex walk
-            t, d = self._prefixed(wildcard_literal_prefix(node.pattern))
             rx = re.compile(like_to_regex(node.pattern))
             m = np.fromiter((bool(rx.match(x)) for x in t), bool, t.size)
             t, d = t[m], d[m]
-        else:
-            raise TypeError(f"not an expansion leaf: {node}")
         matched = t.tolist()
         expanded, complete = capped(
             list(zip(matched, d.tolist())), sem.expansion_limit(node)
         )
         return expanded, matched, complete
 
-    def _fuzzy(self, node) -> list[tuple[str, int]]:
-        """The cluster's fuzzy candidates: exact-prefix pinning, the
-        length band, the distance kernels and the FUZZY_ORDER max_terms
-        cap."""
-        t, d = self._prefixed(node.prefix)
+    def head(self, node, sem) -> list[tuple[str, int, int]]:
+        """The (term, df, distance) rows of the leaf's expansion
+        (distance 0 outside Fuzzy): what one part of a dictionary split
+        into parts contributes to `merge_heads`."""
+        if isinstance(node, ast.Fuzzy):
+            return self._fuzzy(node)
+        return [(t, df, 0) for t, df in self.expand(node, sem)[0]]
+
+    def _fuzzy(self, node) -> list[tuple[str, int, int]]:
+        """(term, df, distance) of the Fuzzy candidates: exact-prefix
+        pinning, the length band, the distance kernels and the
+        FUZZY_ORDER max_terms cap."""
+        t, d = self.slice(*term_interval(node))
         if t.size == 0:
             return []
         lens = np.fromiter((len(x) for x in t), np.int64, count=t.size)
@@ -584,12 +551,24 @@ class Vocabulary:
             return []
         dist = fuzzy_distances(node, t)
         m = dist <= node.distance
-        cand = rank(
+        return rank(
             list(zip(t[m].tolist(), d[m].tolist(), dist[m].tolist())),
             FUZZY_ORDER,
             node.max_terms,
         )
-        return [(term, df) for term, df, _ in cand]
+
+
+def merge_heads(node, sem, rows) -> tuple[list, bool]:
+    """(expansion, complete) of a leaf over a dictionary split into
+    parts, from the union of every part's `Vocabulary.head` rows. It is
+    exact: the terms are unique and the order total, so the global
+    first L rows lie inside the union of every part's first L, and the
+    union holds fewer than L rows only when every part returned all its
+    matches."""
+    if isinstance(node, ast.Fuzzy):
+        head = rank(rows, FUZZY_ORDER, node.max_terms)
+        return [(t, df) for t, df, _ in head], True
+    return capped([(t, df) for t, df, _ in rows], sem.expansion_limit(node))
 
 
 def fuzzy_band(node) -> tuple[int, int]:

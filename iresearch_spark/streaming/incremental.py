@@ -70,17 +70,17 @@ def _common_schema(sub_manifests: list[dict], table: str) -> dict | None:
     return recs[0]
 
 
-def _concat_ranges(paths, sub_manifests, key):
-    """Concatenated absolute-path [min, max] file ranges of one
-    dictionary layout across segments; None unless EVERY segment has
-    the layout (a range-less segment's terms would otherwise be
-    invisible to that seek path)."""
-    if not all(m.get(key) for m in sub_manifests):
+def _concat_ranges(paths, sub_manifests):
+    """Concatenated absolute-path [min, max] term_stats file ranges
+    across segments; None unless EVERY segment records them (a
+    range-less segment's terms would otherwise be invisible to the
+    seek)."""
+    if not all(m.get("term_stats_ranges") for m in sub_manifests):
         return None
     return [
         (os.path.join(p, f), mn, mx)
         for p, m in zip(paths, sub_manifests)
-        for f, mn, mx in m[key]
+        for f, mn, mx in m["term_stats_ranges"]
     ]
 
 
@@ -467,27 +467,19 @@ class IncrementalIndexer:
             analyzer_name=sub_manifests[0].get("analyzer"),
             deleted=deleted,
             term_buckets=term_buckets,
-            # ALL dictionary layouts survive the merged view: lookups
-            # intersect the CONCATENATED per-segment file ranges
-            # (overlapping intervals — gram_df_duplicated routes the
-            # accessors through a linear scan + a sum-df re-aggregation
-            # so per-segment rows reconstitute global stats exactly;
-            # doc ids are disjoint across segments). Without this,
-            # every stats lookup on a merged view re-shuffled the FULL
-            # re-aggregated vocabulary — the per-query cost the
-            # dictionary seek exists to avoid. All-or-nothing per
-            # layout: one range-less segment would make its terms
-            # invisible to that seek path, silently dropping matches.
-            term_stats_ranges=_concat_ranges(
-                paths, sub_manifests, "term_stats_ranges"
-            ),
-            term_stats_rev_ranges=_concat_ranges(
-                paths, sub_manifests, "term_stats_rev_ranges"
-            ),
-            term_grams_ranges=_concat_ranges(
-                paths, sub_manifests, "term_grams_ranges"
-            ),
-            gram_df_duplicated=True,
+            # the dictionary seek survives the merged view: lookups
+            # intersect the CONCATENATED per-segment term_stats file
+            # ranges (overlapping intervals — per_segment_dictionary
+            # routes the accessors through a linear scan + a sum-df
+            # re-aggregation so per-segment rows reconstitute global
+            # stats exactly; doc ids are disjoint across segments).
+            # Without this, every stats lookup on a merged view
+            # re-shuffled the FULL re-aggregated vocabulary — the
+            # per-query cost the dictionary seek exists to avoid.
+            # All-or-nothing: one range-less segment would make its
+            # terms invisible to the seek, silently dropping matches.
+            term_stats_ranges=_concat_ranges(paths, sub_manifests),
+            per_segment_dictionary=True,
             num_terms=num_terms,
             numeric_meta=numeric_meta,
             precision_step=min(steps),  # irrelevant when num_terms is None

@@ -21,7 +21,7 @@ def eng(spark):
 
 
 def _terms(eng, node):
-    return {t for t, _ in eng._fuzzy_candidates(node)}
+    return {t for t, _ in eng._leaf_expansion(node)[0]}
 
 
 def test_prefix_restricts_and_distances_suffix_only(eng):

@@ -1,16 +1,12 @@
-"""Round-4: k-gram index over the term dictionary.
+"""The expansion shapes the term dictionary cannot seek: infix-only
+wildcards ('%abc%'), leading wildcards and unprefixed fuzzy terms.
 
-The forward/reversed dictionaries seek prefix- and suffix-anchored
-patterns; the two remaining full-vocabulary-scan shapes were
-infix-only wildcards ('%abc%') and unprefixed fuzzy terms. A saved
-index now also writes a (gram, term, df) table of every padded
-character 3-gram, range-partitioned + sorted by gram with per-file
-[min, max] ranges in the manifest — the classic IR-textbook k-gram
-index (Manning et al., IIR §3.2.2), the Spark analogue of the
-reference's automaton-intersected FST walk (wildcard_utils.cpp,
-levenshtein_utils.cpp). Candidate lookup = gram equi-filter +
-match-count threshold; the exact predicate (regex / banded DP) still
-verifies every candidate, so pruning can never change results.
+A saved index keeps one term dictionary, as the reference does (its
+Wildcard and Levenshtein filters intersect an automaton with it,
+wildcard_filter.cpp, levenshtein_filter.cpp). These shapes read the
+whole dictionary in one distributed pass and must answer exactly as an
+in-memory index does, on a single saved index and on a merged
+multi-segment view.
 """
 
 import json
@@ -22,7 +18,6 @@ from pyspark.sql import SparkSession
 from iresearch_spark.index.builder import build_index
 from iresearch_spark.index.model import InvertedIndex
 from iresearch_spark.search import Fuzzy, SearchEngine, Wildcard
-from iresearch_spark.search.semantics import wildcard_required_grams
 from iresearch_spark.streaming.incremental import IncrementalIndexer
 
 WORDS = [
@@ -68,19 +63,18 @@ def _hits(idx, node):
     )
 
 
-def test_manifest_records_gram_ranges(saved):
+def test_save_writes_one_term_dictionary(saved):
+    """The manifest records the term_stats file ranges and nothing
+    else of the dictionary; no reversed or k-gram table is written."""
     _, idx, path = saved
     with open(os.path.join(path, "manifest.json")) as f:
         manifest = json.load(f)
-    ranges = manifest["term_grams_ranges"]
-    assert len(ranges) >= 16
-    assert idx.term_grams_ranges is not None
-    # forward/reversed layouts unaffected by the third table
-    assert manifest["term_stats_ranges"]
-    assert manifest["term_stats_rev_ranges"]
-    fwd = {f for f, _, _ in manifest["term_stats_ranges"]}
-    grm = {f for f, _, _ in manifest["term_grams_ranges"]}
-    assert not fwd & grm
+    assert len(manifest["term_stats_ranges"]) >= 16
+    assert idx.term_stats_ranges is not None
+    assert "term_stats_rev_ranges" not in manifest
+    assert "term_grams_ranges" not in manifest
+    assert not os.path.exists(os.path.join(path, "term_stats_rev"))
+    assert not os.path.exists(os.path.join(path, "term_grams"))
 
 
 def test_footer_ranges_match_spark_scan(spark, saved):
@@ -92,57 +86,39 @@ def test_footer_ranges_match_spark_scan(spark, saved):
     from pyspark.sql import functions as F
 
     _, idx, path = saved
-    for sub, colname, ranges in (
-        ("term_stats", "term", idx.term_stats_ranges),
-        ("term_stats_rev", "rterm", idx.term_stats_rev_ranges),
-        ("term_grams", "gram", idx.term_grams_ranges),
-    ):
-        scanned = {
-            os.path.relpath(r["f"].removeprefix("file:"), path): (
-                r["mn"],
-                r["mx"],
-            )
-            for r in spark.read.parquet(os.path.join(path, sub))
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(F.min(colname).alias("mn"), F.max(colname).alias("mx"))
-            .collect()
-        }
-        from_manifest = {
-            os.path.relpath(f, path): (mn, mx) for f, mn, mx in ranges
-        }
-        assert from_manifest == scanned
-
-
-def test_gram_lookup_prunes_files(saved):
-    _, idx, _ = saved
-    sel, total = idx.gram_files_for(["for", "orm"])
-    assert total >= 16
-    assert 0 < len(sel) < total
+    scanned = {
+        os.path.relpath(r["f"].removeprefix("file:"), path): (r["mn"], r["mx"])
+        for r in spark.read.parquet(os.path.join(path, "term_stats"))
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(F.min("term").alias("mn"), F.max("term").alias("mx"))
+        .collect()
+    }
+    from_manifest = {
+        os.path.relpath(f, path): (mn, mx) for f, mn, mx in idx.term_stats_ranges
+    }
+    assert from_manifest == scanned
 
 
 def test_gram_candidates_cover_exact_matches(saved):
+    """An infix wildcard's expansion on the saved index is exactly the
+    dictionary terms its LIKE pattern matches, with their dfs."""
     _, idx, _ = saved
-    grams = wildcard_required_grams("%form%")
-    assert "for" in grams and "orm" in grams
-    cand = {
-        r["term"]
-        for r in idx.gram_candidate_terms(grams, len(grams)).collect()
-    }
+    got = set(SearchEngine(idx)._leaf_expansion(Wildcard("%form%"))[0])
     exact = {
-        r["term"]
+        (r["term"], r["df"])
         for r in idx.term_stats.filter("term like '%form%'").collect()
     }
     assert exact  # corpus really exercises the infix
-    assert exact <= cand
+    assert got == exact
 
 
 @pytest.mark.parametrize(
     "pattern",
     [
-        "%form%",          # pure infix -> gram path
+        "%form%",          # pure infix
         "%form%ng%",       # two infix runs
-        "ab%ng",           # short anchored runs -> \x02ab + ng\x03 grams
-        "%pp%",            # runs too short for grams -> full-scan fallback
+        "ab%ng",           # short anchored runs
+        "%pp%",            # short infix run
         "%a_p%e%",         # _ breaks runs
         "%orm\\%%",        # escaped % is a literal
     ],
@@ -150,14 +126,6 @@ def test_gram_candidates_cover_exact_matches(saved):
 def test_infix_wildcard_identical_to_full_scan(saved, pattern):
     mem, idx, _ = saved
     assert _hits(idx, Wildcard(pattern)) == _hits(mem, Wildcard(pattern))
-
-
-def test_infix_wildcard_uses_gram_source(saved):
-    _, idx, _ = saved
-    eng = SearchEngine(idx)
-    src, kw = eng._wildcard_expand_plan("%form%")
-    assert src is not None and not kw  # gram-candidate DataFrame
-    assert set(src.columns) == {"term", "df"}
 
 
 @pytest.mark.parametrize("transpositions", [False, True])
@@ -170,40 +138,26 @@ def test_unprefixed_fuzzy_identical(saved, transpositions):
 
 
 def test_fuzzy_short_term_falls_back(saved):
-    # |G(s)| - d*q <= 0 -> gram bound vacuous -> full scan, still exact
+    # a short term at a wide distance matches much of the dictionary
     mem, idx, _ = saved
     node = Fuzzy("ap", distance=2)
     assert _hits(idx, node) == _hits(mem, node)
 
 
 def test_fuzzy_gram_bound_never_drops_neighbors(saved):
-    """Every term within the distance band must survive the gram
-    threshold — differential over the whole vocabulary at d=1."""
+    """Every term within the distance must be expanded — differential
+    over the whole vocabulary at d=1, saved index vs in-memory."""
     mem, idx, _ = saved
     for q in ("formula", "styx", "applyng"):
         node = Fuzzy(q, distance=1, max_terms=10_000)
         eng_mem, eng_ix = SearchEngine(mem), SearchEngine(idx)
-        assert sorted(eng_mem._fuzzy_candidates(node)) == sorted(
-            eng_ix._fuzzy_candidates(node)
-        )
-
-
-def test_wildcard_required_grams_shapes():
-    g = wildcard_required_grams
-    assert g("%form%") == sorted({"for", "orm"})
-    assert g("ab%ng") == sorted({"\x02ab", "ng\x03"})
-    assert g("%pp%") == []
-    assert g("%a_b%") == []
-    # escaped wildcard chars are literal run members
-    assert "or%" in g("%or\\%x%")
-    # fully literal pattern: both anchors
-    assert "\x02ab" in g("ab") and "ab\x03" in g("ab")
+        assert eng_mem._leaf_expansion(node) == eng_ix._leaf_expansion(node)
 
 
 def test_multisegment_gram_path_exact(spark, tmp_path):
-    """Merged multi-segment view: per-segment gram rows reconstitute
-    the global df (sum per (gram, term)) and infix/fuzzy expansion
-    matches a monolithic index built over the union."""
+    """Merged multi-segment view: per-segment dictionary rows
+    reconstitute the global df (sum per term) and infix/fuzzy
+    expansion matches a monolithic index built over the union."""
     d1 = spark.createDataFrame(
         [(f"a{i:03d}", f"information uniform doc{i % 3}") for i in range(40)],
         "url string, text string",
@@ -216,7 +170,7 @@ def test_multisegment_gram_path_exact(spark, tmp_path):
     ix.process_batch(d1, epoch_id=0)
     ix.process_batch(d2, epoch_id=1)
     merged = ix.read(spark)
-    assert merged.term_grams_ranges  # concatenated across segments
+    assert merged.term_stats_ranges  # concatenated across segments
     mono = build_index(
         d1.unionByName(d2),
         analyzer=merged.analyzer_name,
@@ -225,21 +179,9 @@ def test_multisegment_gram_path_exact(spark, tmp_path):
         sort_key="url",  # same doc-id assignment as the indexer
     )
     for node in (Wildcard("%form%"), Fuzzy("informaton", distance=1)):
-        got = {
-            (r["term"], r["df"])
-            for r in SearchEngine(merged)
-            ._wildcard_expand_plan("%form%")[0]
-            .collect()
-        } if isinstance(node, Wildcard) else None
-        # expansion-level df parity for the wildcard
-        if got is not None:
-            want = {
-                (r["term"], r["df"])
-                for r in mono.term_stats.filter(
-                    "term like '%form%'"
-                ).select("term", "df").collect()
-            }
-            assert want <= got
+        # expansion-level df parity
+        got = SearchEngine(merged)._leaf_expansion(node)
+        assert got == SearchEngine(mono)._leaf_expansion(node) and got[0]
         # end-to-end score parity as a multiset: doc-id ASSIGNMENT
         # differs between the incremental indexer (per-epoch id bases)
         # and a monolithic build, but every doc's score depends only
@@ -251,8 +193,8 @@ def test_multisegment_gram_path_exact(spark, tmp_path):
 
 
 def test_multisegment_dictionary_seeks_aggregate_stats(spark, tmp_path):
-    """Merged views carry ALL three dictionary layouts' concatenated
-    ranges; the pruned accessors re-aggregate per-segment rows, so
+    """Merged views carry the dictionary's concatenated per-segment
+    file ranges; the pruned accessors re-aggregate per-segment rows, so
     exact-term lookups, Prefix/Range expansion and scoring all see
     GLOBAL stats (previously every lookup re-shuffled the full
     vocabulary)."""
@@ -272,7 +214,7 @@ def test_multisegment_dictionary_seeks_aggregate_stats(spark, tmp_path):
     ix.process_batch(d1, epoch_id=0)
     ix.process_batch(d2, epoch_id=1)
     merged = ix.read(spark)
-    assert merged.term_stats_ranges and merged.term_stats_rev_ranges
+    assert merged.term_stats_ranges
     # exact-term seek returns ONE aggregated row with the global df
     rows = (
         merged.term_stats_for_terms(["information"])

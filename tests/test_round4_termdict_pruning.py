@@ -106,6 +106,7 @@ def test_pruned_results_identical(saved):
         Prefix("bterm"),
         Range(min_term="m", max_term="p"),
         Wildcard("cterm1%"),
+        Wildcard("%erm1"),  # leading: reads the whole dictionary
         Fuzzy("1", distance=1, prefix="aterm"),
         Term("common"),
     ]
@@ -119,45 +120,6 @@ def test_pruned_results_identical(saved):
             for r in e_disk.matches(node).collect()
         )
         assert a == b and a, node
-
-
-def test_reversed_dict_prunes_leading_wildcard(saved):
-    """A leading-wildcard pattern with a literal suffix seeks the
-    REVERSED dictionary: '%m1' reversed is the prefix '1m' of
-    reverse(term) — only intersecting files are read; results match the
-    in-memory (full-scan) engine."""
-    mem, idx, path = saved
-    with open(os.path.join(path, "manifest.json")) as f:
-        manifest = json.load(f)
-    assert len(manifest["term_stats_rev_ranges"]) >= 16
-    df, n_sel, n_total = idx.pruned_rev_term_stats("1m", "1n")
-    assert n_total >= 16 and 0 < n_sel < n_total
-    full = {
-        r["term"]
-        for r in idx.term_stats.filter("term like '%m1'").collect()
-    }
-    pruned = {r["term"] for r in df.filter("term like '%m1'").collect()}
-    assert pruned == full and full
-    # end-to-end: same scores as the in-memory engine
-    a = sorted(
-        (r["doc_id"], round(r["score"], 9))
-        for r in SearchEngine(mem).matches(Wildcard("%erm1")).collect()
-    )
-    b = sorted(
-        (r["doc_id"], round(r["score"], 9))
-        for r in SearchEngine(idx).matches(Wildcard("%erm1")).collect()
-    )
-    assert a == b and a
-
-
-def test_wildcard_literal_suffix():
-    f = _sem.wildcard_literal_suffix
-    assert f("%tion") == "tion"
-    assert f("s%k") == "k"
-    assert f("pre%") == ""
-    assert f(r"%ta\%il") == "ta%il"
-    assert f("plain") == "plain"
-    assert f("%a_b") == "b"
 
 
 def test_wildcard_literal_prefix():

@@ -69,8 +69,8 @@ def test_encrypted_save_seals_files(spark, tmp_path):
     # manifest: no plaintext vocabulary ranges, names-only key record
     man = json.load(open(os.path.join(path, "manifest.json")))
     assert man["term_stats_ranges"] is None
-    assert man["term_stats_rev_ranges"] is None
-    assert man["term_grams_ranges"] is None
+    assert "term_stats_rev_ranges" not in man
+    assert "term_grams_ranges" not in man
     assert man["encryption"]["footer_key"] == "k0"
     raw_man = open(os.path.join(path, "manifest.json"), "rb").read()
     assert b"secretword" not in raw_man
@@ -246,7 +246,7 @@ def test_key_rotation_without_data_rewrite(spark, tmp_path):
         {"k0": {1: key_v1, 2: key_v2}}, external_key_material=True
     )
     n = enc_rot.rotate_master_keys(spark, path)
-    assert n >= 4  # at least postings/docs/term_stats(+rev/grams)
+    assert n >= 4  # at least postings/docs/term_stats
     # data files untouched — rotation rewrote only the sidecars
     assert {f: os.path.getmtime(f) for f in _all_parquet(path)} == data_mtimes
 

@@ -80,9 +80,10 @@ def test_hot_expansion_leaf_parity(engines, q):
 
 
 def test_hot_expansion_list_identical(spark, engines):
-    """The hot vocabulary expansion must equal the cluster's Spark-side
-    expansion term-for-term (same order, same dfs) — it seeds the
-    engine's expansion cache, so divergence would poison WAND bounds."""
+    """The hot vocabulary expansion must equal the cluster's
+    dictionary-scan expansion term-for-term (same order, same dfs) —
+    it seeds the engine's expansion cache, so divergence would poison
+    WAND bounds."""
     eng, hot = engines
     # fresh engine over the same index: empty expansion cache, so
     # _leaf_expansion genuinely runs the cluster expansion job
@@ -160,8 +161,8 @@ def test_hot_expansion_wand_rank_identical(engines):
 
 def test_hot_expansion_launches_no_cluster_expansion(engines, monkeypatch):
     """Expansion leaves must be answered without the cluster expansion
-    job: poison the engine's Spark-side expansion entry points and
-    query through a fresh HotEngine."""
+    job: poison the engine's expansion entry point and query through a
+    fresh HotEngine."""
     eng, _ = engines
     fresh_eng = SearchEngine(eng.index)
     hot = HotEngine(fresh_eng)
@@ -169,8 +170,7 @@ def test_hot_expansion_launches_no_cluster_expansion(engines, monkeypatch):
     def boom(*a, **kw):  # pragma: no cover
         raise AssertionError("cluster expansion job launched")
 
-    monkeypatch.setattr(SearchEngine, "_expand", boom)
-    monkeypatch.setattr(SearchEngine, "_fuzzy_candidates", boom)
+    monkeypatch.setattr(SearchEngine, "_leaf_expansion", boom)
     for q in (
         Prefix("app"),
         Wildcard("%tle"),

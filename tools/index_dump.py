@@ -8,7 +8,7 @@ Usage:
         [--cores 8]
 
 Prints the manifest summary (doc/term counts, posting features,
-analyzer, dictionary layouts), the segment list for an incremental
+analyzer, term dictionary files), the segment list for an incremental
 directory, the top-N terms by df, and a postings sample per requested
 term. Read-only.
 """
@@ -82,14 +82,8 @@ def main() -> None:
         )
     )
     print(
-        "dictionary layouts: forward=%s reversed=%s k-gram=%s"
-        " term_buckets=%s"
-        % (
-            len(idx.term_stats_ranges or []) or "-",
-            len(idx.term_stats_rev_ranges or []) or "-",
-            len(idx.term_grams_ranges or []) or "-",
-            idx.term_buckets,
-        )
+        "term dictionary files with pruned term ranges=%s term_buckets=%s"
+        % (len(idx.term_stats_ranges or []) or "-", idx.term_buckets)
     )
     if idx.sort_field is not None:
         print(
