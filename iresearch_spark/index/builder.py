@@ -38,8 +38,9 @@ RangePartitioner.
 
 The build counts what save() and the commit path need in one summary
 pass over the cached blocks (posting blocks, BM25's N, total term
-freq, max dl, doc-id span, and the dictionary sample save() cuts its
-files from), so no later step re-counts or samples a table.
+freq, max dl, doc-id span, the dictionary sample save() cuts its files
+from, and the commit's per-partition metrics rows), so no later step
+re-counts, samples or shuffles a table for them.
 """
 
 from __future__ import annotations
@@ -58,6 +59,7 @@ from iresearch_spark.index.model import (
     POSTINGS_SCHEMA,
     FieldStats,
     InvertedIndex,
+    block_dictionary,
 )
 
 BLOCK_SIZE = 128  # posting block granularity (formats_10.cpp:88-129)
@@ -937,10 +939,7 @@ def build_index(
     docs = norm_blocks.mapInArrow(
         _make_block_decoder(False), DECODED_SCHEMA
     ).select("doc_id", F.col("dl").cast("int").alias("dl"))
-    # save() samples 64 terms per dictionary file, at most 4 files per
-    # blocks partition (no more than the build's shuffle has)
-    k = 64 * max(16, 4 * int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
-    summary = block_summary(blocks, k)
+    summary = block_summary(blocks, bucket_bits)
     if norm == "legacy":
         # the reference's NormWriter value (norm.cpp:36-41): float32 of
         # sqrt(dl) computed in double, inverted in float32 — written as
@@ -977,9 +976,7 @@ def build_index(
         # save() materializes it sorted by (field, shift, prefix)
         num_terms = build_num_terms(docs, numeric_meta, precision_step)
 
-    term_stats = postings.groupBy("term").agg(
-        F.sum("n_docs").alias("df"), F.sum("block_cf").alias("cf")
-    )
+    term_stats, term_rows = block_dictionary(postings)
 
     field_stats = FieldStats(
         n_docs=summary["n"],
@@ -1005,88 +1002,148 @@ def build_index(
         sort_ascending=sort_ascending,
         n_blocks=summary["blocks"],
         doc_span=summary["span"],
-        term_sample=(k, summary["terms"]),
+        term_sample=summary["sample"],
+        term_rows=term_rows,
+        metrics=summary["metrics"],
     )
 
 
-_SUMMARY_FIELDS = ("blocks", "n", "ttf", "max_dl", "min_doc", "max_doc")
+# a commit's per-partition lineage rows (metrics/): the posting blocks
+# one task of the counting pass held in one doc bucket
+# (first_doc >> bucket_bits); n_terms counts that task's distinct terms
+# there, so n_blocks and n_postings add up across a bucket's rows
+METRICS_FIELDS = ("bucket", "part", "n_blocks", "n_postings", "n_terms", "min_doc", "max_doc")
+METRICS_ARROW = pa.schema([(f, pa.int64()) for f in METRICS_FIELDS])
 _SUMMARY_ARROW = pa.schema(
-    [(f, pa.int64()) for f in _SUMMARY_FIELDS] + [("h", pa.int64()), ("term", pa.string())]
+    list(METRICS_ARROW)
+    + [(f, pa.int64()) for f in ("n", "ttf", "max_dl", "h")]
+    + [("term", pa.string())]
 )
 
 
-def _summarizer(k: int):
-    """block_summary's mapInArrow body: one row of partial counts per
-    batch of block rows (only norm blocks' dl streams are decoded),
-    then the task's k least distinct (crc32(term), term) rows. Arrow
-    sorts strings by UTF-8 bytes, which is Python's code-point order."""
+def _summary_rows(n_rows: int, **cols) -> list[pa.RecordBatch]:
+    """n_rows rows of block_summary's output: the given columns, nulls
+    in the others."""
+    return pa.Table.from_pydict(
+        {f.name: cols.get(f.name, pa.nulls(n_rows, f.type)) for f in _SUMMARY_ARROW},
+        schema=_SUMMARY_ARROW,
+    ).to_batches()
+
+
+def _summarizer(k: int, bucket_bits: int):
+    """block_summary's mapInArrow body. A task returns one row of its
+    norm blocks' counts (bucket and term null; only their dl streams
+    are decoded), one metrics row per doc bucket of its posting blocks,
+    and its k least distinct (crc32(term), term) rows. Arrow sorts
+    strings by UTF-8 bytes, which is Python's code-point order."""
 
     def summarize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+
         least = _SUMMARY_ARROW.empty_table().select(["h", "term"])
+        runs = []
+        n = ttf = max_dl = 0
+        lo = hi = None
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            is_norm = batch.column(0)
+            is_norm = batch.column("is_norm")
             nb = batch.filter(is_norm)
-            dls = np.zeros(0, dtype=np.int64)
             if nb.num_rows:
-                data, off = codec._binary_slab(nb.column(3))
+                data, off = codec._binary_slab(nb.column("dls"))
                 dls = codec.varint_decode(data[off[0]:off[-1]]).astype(np.int64)
-            yield pa.RecordBatch.from_pylist(
-                [{
-                    "blocks": batch.num_rows - nb.num_rows,
-                    "n": int((dls > 0).sum()),
-                    "ttf": int(dls.sum()),
-                    "max_dl": int(dls.max()) if dls.size else 0,
-                    "min_doc": pc.min(nb.column(1)).as_py(),
-                    "max_doc": pc.max(nb.column(2)).as_py(),
-                }],
-                schema=_SUMMARY_ARROW,
+                n += int((dls > 0).sum())
+                ttf += int(dls.sum())
+                max_dl = max(max_dl, int(dls.max(initial=0)))
+                b_lo = pc.min(nb.column("first_doc")).as_py()
+                b_hi = pc.max(nb.column("last_doc")).as_py()
+                lo = b_lo if lo is None else min(lo, b_lo)
+                hi = b_hi if hi is None else max(hi, b_hi)
+            blocks = pa.Table.from_batches([batch.filter(pc.invert(is_norm))])
+            if blocks.num_rows == 0:
+                continue
+            bucket = pc.shift_right(blocks.column("first_doc"), bucket_bits)
+            runs.append(
+                blocks.append_column("bucket", bucket)
+                .group_by(["bucket", "term"])
+                .aggregate([
+                    ("n_docs", "count"), ("n_docs", "sum"),
+                    ("first_doc", "min"), ("last_doc", "max"),
+                ])
             )
-            terms = pa.Table.from_batches([batch.filter(pc.invert(is_norm))])
             least = (
-                pa.concat_tables([least, terms.select(["h", "term"]).cast(least.schema)])
+                pa.concat_tables([least, blocks.select(["h", "term"]).cast(least.schema)])
                 .group_by(["h", "term"]).aggregate([])
                 .sort_by([("h", "ascending"), ("term", "ascending")])
                 .slice(0, k)
             )
-        yield pa.RecordBatch.from_pylist(least.to_pylist(), schema=_SUMMARY_ARROW)
+        yield from _summary_rows(
+            1, n=[n], ttf=[ttf], max_dl=[max_dl], min_doc=[lo], max_doc=[hi]
+        )
+        if runs:
+            m = pa.concat_tables(runs).group_by("bucket").aggregate([
+                ("n_docs_count", "sum"), ("n_docs_sum", "sum"),
+                ("term", "count_distinct"),
+                ("first_doc_min", "min"), ("last_doc_max", "max"),
+            ])
+            yield from _summary_rows(
+                m.num_rows,
+                bucket=m.column("bucket"),
+                part=[TaskContext.get().partitionId()] * m.num_rows,
+                n_blocks=m.column("n_docs_count_sum"),
+                n_postings=m.column("n_docs_sum_sum"),
+                n_terms=m.column("term_count_distinct"),
+                min_doc=m.column("first_doc_min_min"),
+                max_doc=m.column("last_doc_max_max"),
+            )
+        yield from _summary_rows(
+            least.num_rows, h=least.column("h"), term=least.column("term")
+        )
 
     return summarize
 
 
-def block_summary(blocks: DataFrame, k: int) -> dict:
-    """What save() and the commit path need, from ONE pass over a
-    build's block rows (norm blocks under NORM_TERM included):
-    posting blocks, BM25's N = docs with dl > 0 (docs_with_field,
-    bm25.cpp:48-54), total term freq, max dl and the [min, max] doc id
-    of the docs table, which covers every doc, dl=0 included, so that
-    AllDocs matches the reference's all() (None when empty); and the
-    dictionary's k least distinct (crc32(term), term) pairs, ascending
-    (fewer than k: every term), from which save() cuts the dictionary
-    files without sampling the term table. Each task reports its
-    partials, the driver merges them."""
+def block_summary(blocks: DataFrame, bucket_bits: int) -> dict:
+    """What save() and the commit path need, from ONE pass over block
+    rows: a build's (norm blocks under NORM_TERM included) or a
+    consolidation's merged postings. Posting blocks; BM25's N = docs
+    with dl > 0 (docs_with_field, bm25.cpp:48-54), total term freq, max
+    dl and the [min, max] doc id of the docs table, which covers every
+    doc, dl=0 included, so that AllDocs matches the reference's all()
+    (None when empty) — all from the norm blocks; the dictionary sample
+    save() cuts its files from, (k, the k least distinct (crc32(term),
+    term) pairs, ascending; fewer than k: every term), with 64 terms
+    per file and at most 4 files per blocks partition (no more than a
+    build's shuffle has); and the commit's metrics rows
+    (METRICS_FIELDS), sorted. Each task reports its partials, the
+    driver merges them."""
+    k = 64 * max(16, 4 * int(blocks.sparkSession.conf.get("spark.sql.shuffle.partitions")))
     is_norm = F.col("term") == NORM_TERM
     rows = (
         blocks.select(
-            is_norm.alias("is_norm"), "first_doc", "last_doc",
+            is_norm.alias("is_norm"), "first_doc", "last_doc", "n_docs",
             F.when(is_norm, F.col("dls")).alias("dls"),
             F.crc32(F.col("term").cast("binary")).alias("h"), "term",
         )
         .mapInArrow(
-            _summarizer(k),
-            ", ".join(f"{f} long" for f in _SUMMARY_FIELDS) + ", h long, term string",
+            _summarizer(k, bucket_bits),
+            ", ".join(f"{f.name} {'string' if f.name == 'term' else 'long'}"
+                      for f in _SUMMARY_ARROW),
         )
         .collect()
     )
-    parts = [r for r in rows if r["term"] is None]
-    lo = [r["min_doc"] for r in parts if r["min_doc"] is not None]
-    hi = [r["max_doc"] for r in parts if r["max_doc"] is not None]
+    metrics = sorted(
+        tuple(r[f] for f in METRICS_FIELDS) for r in rows if r["bucket"] is not None
+    )
+    norms = [r for r in rows if r["bucket"] is None and r["term"] is None]
+    lo = [r["min_doc"] for r in norms if r["min_doc"] is not None]
+    hi = [r["max_doc"] for r in norms if r["max_doc"] is not None]
     return {
-        "blocks": sum(r["blocks"] for r in parts),
-        "n": sum(r["n"] for r in parts),
-        "ttf": sum(r["ttf"] for r in parts),
-        "max_dl": max((r["max_dl"] for r in parts), default=0),
+        "blocks": sum(m[2] for m in metrics),
+        "n": sum(r["n"] for r in norms),
+        "ttf": sum(r["ttf"] for r in norms),
+        "max_dl": max((r["max_dl"] for r in norms), default=0),
         "span": (min(lo), max(hi)) if lo else None,
-        "terms": sorted({(r["h"], r["term"]) for r in rows if r["term"] is not None})[:k],
+        "sample": (k, sorted({(r["h"], r["term"]) for r in rows if r["term"] is not None})[:k]),
+        "metrics": metrics,
     }

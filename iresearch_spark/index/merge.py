@@ -25,7 +25,12 @@ from pyspark.sql import DataFrame, functions as F
 
 from iresearch_spark.index import codec
 from iresearch_spark.index.builder import encode_postings
-from iresearch_spark.index.model import POSTINGS_SCHEMA, FieldStats, InvertedIndex
+from iresearch_spark.index.model import (
+    POSTINGS_SCHEMA,
+    FieldStats,
+    InvertedIndex,
+    block_dictionary,
+)
 
 
 def merge_indexes(a: InvertedIndex, b: InvertedIndex) -> InvertedIndex:
@@ -280,9 +285,7 @@ def purge_deleted(index: InvertedIndex, bucket_bits: int = 16) -> InvertedIndex:
     mask = index.deleted.select("doc_id")
     postings = _reblock(index, bucket_bits, mask)
     docs = index.docs.join(mask, "doc_id", "left_anti")
-    term_stats = postings.groupBy("term").agg(
-        F.sum("n_docs").alias("df"), F.sum("block_cf").alias("cf")
-    )
+    term_stats, term_rows = block_dictionary(postings)
     # BM25's N = docs_with_field (dl>0), matching build_index — the
     # docs table itself keeps dl=0 rows for AllDocs coverage
     stats_row = docs.agg(
@@ -294,6 +297,7 @@ def purge_deleted(index: InvertedIndex, bucket_bits: int = 16) -> InvertedIndex:
         postings=postings,
         docs=docs,
         term_stats=term_stats,
+        term_rows=term_rows,
         field_stats=FieldStats(
             n_docs=int(stats_row["n"] or 0),
             total_term_freq=int(stats_row["ttf"] or 0),
@@ -315,28 +319,4 @@ def purge_deleted(index: InvertedIndex, bucket_bits: int = 16) -> InvertedIndex:
         # purge keeps surviving ids (and hence their relative order)
         sort_field=index.sort_field,
         sort_ascending=index.sort_ascending,
-    )
-
-
-def build_metrics(index: InvertedIndex, bucket_bits: int = 16) -> "DataFrame":
-    """Per-bucket lineage/metrics rows (the north rule's per-partition
-    lineage + build-metrics table): doc-bucket -> blocks, postings,
-    distinct terms, doc-id range. Deterministic (bucket = doc-id range),
-    independent of physical partitioning. One shuffle: rows hash-
-    partitioned by bucket satisfy both of countDistinct's aggregation
-    steps, which then run without a second exchange."""
-    return (
-        index.postings.select(
-            F.shiftright(F.col("first_doc"), bucket_bits).alias("bucket"),
-            "term", "n_docs", "first_doc", "last_doc",
-        )
-        .repartition("bucket")
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_blocks"),
-            F.sum("n_docs").alias("n_postings"),
-            F.countDistinct("term").alias("n_terms"),
-            F.min("first_doc").alias("min_doc"),
-            F.max("last_doc").alias("max_doc"),
-        )
     )

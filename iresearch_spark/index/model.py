@@ -240,23 +240,26 @@ class InvertedIndex:
     n_blocks: int | None = None
     doc_span: tuple[int, int] | None = None
     # (k, the dictionary's k least distinct (crc32(term), term) pairs,
-    # ascending; fewer than k: every term), as the build's summary
-    # pass found them: save() cuts the dictionary files from them
+    # ascending; fewer than k: every term), as a build's or a
+    # consolidation's summary pass found them: save() cuts the
+    # dictionary files from them
     term_sample: tuple[int, list[tuple[int, str]]] | None = None
-    # a merged view's dictionary rows before the per-term sum, and how
-    # often a term can repeat in them (once per segment): save() draws
-    # its sample from them without the sum's shuffle
-    term_rows: tuple[DataFrame, int] | None = None
+    # the dictionary's (term, df, cf) rows before the per-term sum, and
+    # how often a term can repeat in them: a merged view's per-segment
+    # rows (once per segment) or a build's posting-block rows (None: once
+    # per block). save() sums them inside its one range exchange; a
+    # merged view draws its sample from them without the sum's shuffle
+    term_rows: tuple[DataFrame, int | None] | None = None
+    # the commit's per-partition lineage rows (builder.METRICS_FIELDS),
+    # as a build's or a consolidation's summary pass found them
+    metrics: list[tuple] | None = None
 
     def _agg_stats(self, df: DataFrame) -> DataFrame:
         """Collapse per-segment dictionary rows to global stats (sum
         df/cf per term) on merged views; identity on a single index."""
         if not self.per_segment_dictionary:
             return df
-        aggs = [F.sum("df").alias("df")]
-        if "cf" in df.columns:
-            aggs.append(F.sum("cf").alias("cf"))
-        return df.groupBy("term").agg(*aggs)
+        return _sum_stats(df, "term")
 
     def pruned_term_stats(
         self,
@@ -457,11 +460,15 @@ class InvertedIndex:
         (`formats_burst_trie.cpp:953-966`).
 
         The term dictionary is one table, as in the reference: the
-        term-sorted `term_stats/`, written straight from its lazy
-        aggregation. Its file boundaries come from the dictionary's
-        least (crc32(term), term) pairs (`dictionary_sample`): a fresh
-        build's summary pass already holds them, a loaded or merged
-        index draws them in one job.
+        term-sorted `term_stats/`, written in one pass as the
+        reference's flush writes each segment's dictionary. Its rows
+        are summed per term from `term_rows` (a build's posting-block
+        rows, a merged view's per-segment rows) inside the one exchange
+        that cuts its files. The file boundaries come from the
+        dictionary's least (crc32(term), term) pairs
+        (`dictionary_sample`): a fresh build's or a consolidation's
+        summary pass already holds them, another loaded or merged index
+        draws them in one job.
 
         With `encryption=` (an index.encryption.IndexEncryption) every
         table is written with Parquet Modular Encryption — pages AND
@@ -577,12 +584,9 @@ class InvertedIndex:
                     )
 
             def _w_fwd():
-                (
-                    _by_range(self.term_stats, "term", fwd_bounds, ts_files)
-                    .sortWithinPartitions("term")
-                    .write.options(**wopts).mode(mode)
-                    .parquet(ts_path)
-                )
+                self._dictionary_by_range(fwd_bounds, ts_files).write.options(
+                    **wopts
+                ).mode(mode).parquet(ts_path)
 
             writers = [_w_fwd, _w_postings, _w_docs]
             if self.num_terms is not None:
@@ -689,15 +693,35 @@ class InvertedIndex:
             json.dump(manifest, f)
         os.replace(tmp, os.path.join(path, "manifest.json"))  # atomic commit
 
+    def _dictionary_by_range(self, bounds: list[str], n: int) -> DataFrame:
+        """The term dictionary as save() writes it: n term-sorted
+        partitions split at `bounds`. The per-term sum of `term_rows`
+        groups on the range id as well, so it runs over the range
+        exchange's partitioning: one shuffle (grouping on the term
+        alone would add a hash exchange)."""
+        rows = (self.term_rows or (self.term_stats, 1))[0]
+        rid = _range_id([F.col("term")], [(b,) for b in bounds])
+        return (
+            _sum_stats(
+                rows.withColumn("_rid", rid).repartitionById(n, F.col("_rid")),
+                "_rid", "term",
+            )
+            .drop("_rid")
+            .sortWithinPartitions("term")
+        )
+
     def dictionary_sample(self, k: int) -> tuple[int, list[tuple[int, str]]]:
         """(k', the dictionary's k' least distinct (crc32(term), term)
         pairs, ascending; fewer than k' pairs: every term), k' >= k.
-        A fresh build answers from its summary pass; a loaded or merged
-        index draws the pairs in one TakeOrdered job over its
-        unaggregated dictionary rows."""
+        A fresh build or a consolidation answers from its summary pass
+        (builder.block_summary); a loaded or merged index draws the
+        pairs in one TakeOrdered job over its unaggregated dictionary
+        rows (the summed table when a term repeats once per block)."""
         if self.term_sample is not None and self.term_sample[0] >= k:
             return self.term_sample
         rows, dup = self.term_rows or (self.term_stats, 1)
+        if dup is None:
+            rows, dup = self.term_stats, 1
         # a term repeats at most dup times: k * dup rows hold k terms
         least = _least_hashed(
             rows, F.crc32(F.col("term").cast("binary")), ("term",), k * dup
@@ -897,6 +921,24 @@ class InvertedIndex:
 
 
 # ---- save(): driver-chosen file boundaries, read schemas --------------
+
+
+def block_dictionary(postings: DataFrame):
+    """(term_stats, term_rows) of posting-block rows: the per-term sum
+    of df = n_docs and cf = block_cf, and the unsummed rows it is taken
+    over, which save() sums inside its range exchange instead."""
+    rows = postings.select(
+        "term", F.col("n_docs").alias("df"), F.col("block_cf").alias("cf")
+    )
+    return _sum_stats(rows, "term"), (rows, None)
+
+
+def _sum_stats(df: DataFrame, *keys: str) -> DataFrame:
+    """Dictionary rows summed per `keys`: df, and cf where present."""
+    aggs = [F.sum("df").alias("df")]
+    if "cf" in df.columns:
+        aggs.append(F.sum("cf").alias("cf"))
+    return df.groupBy(*keys).agg(*aggs)
 
 
 def _as_read(dt: T.DataType) -> T.DataType:

@@ -27,11 +27,16 @@ import os
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from iresearch_spark.analysis.analyzers import Analyzer, get_analyzer
-from iresearch_spark.index.builder import build_index
-from iresearch_spark.index.merge import build_metrics
+from iresearch_spark.index.builder import (
+    METRICS_ARROW,
+    METRICS_FIELDS,
+    block_summary,
+    build_index,
+)
 from iresearch_spark.index.model import (
     FieldStats,
     InvertedIndex,
@@ -114,6 +119,19 @@ class IncrementalIndexer:
             else {}
         )
 
+    def _write_metrics(self, idx: InvertedIndex, seg_path: str) -> None:
+        """The segment's metrics/ table: the summary pass's
+        per-partition lineage rows, one file from a one-task job (so an
+        encrypted segment seals it like every other table). The rows
+        reach the JVM as Arrow: a list of rows would cost a Python
+        worker pass, 4x the CPU of this write."""
+        rows = pa.Table.from_pylist(
+            [dict(zip(METRICS_FIELDS, r)) for r in idx.metrics], schema=METRICS_ARROW
+        )
+        idx.postings.sparkSession.createDataFrame(rows).coalesce(1).write.options(
+            **self._wopts()
+        ).mode("overwrite").parquet(os.path.join(seg_path, "metrics"))
+
     # ---------------- manifest ----------------
 
     def _manifest_path(self) -> str:
@@ -167,11 +185,7 @@ class IncrementalIndexer:
         n_rows = idx.doc_span[1] + 1 - base
         seg_path = os.path.join(self.index_dir, "segments", seg_id)
         idx.save(seg_path, encryption=self.encryption)
-        build_metrics(idx, self.bucket_bits).write.options(
-            **self._wopts()
-        ).mode("overwrite").parquet(
-            os.path.join(seg_path, "metrics")
-        )
+        self._write_metrics(idx, seg_path)
         idx.unpersist()
         manifest["segments"].append(
             {
@@ -300,14 +314,22 @@ class IncrementalIndexer:
             idx = purge_deleted(idx, bits)
         elif reblock:
             idx = _reblock(idx, bits)
+        # one counting pass over the merged postings, as a build runs
+        # over its blocks: the block count, the dictionary sample save()
+        # cuts its files from, and the segment's metrics rows. One task
+        # per core: a Python task per scan split costs more than its
+        # counting
+        summary = block_summary(
+            idx.postings.coalesce(spark.sparkContext.defaultParallelism), bits
+        )
+        idx = dataclasses.replace(
+            idx, n_blocks=summary["blocks"], term_sample=summary["sample"],
+            metrics=summary["metrics"],
+        )
         new_id = f"seg_cons_{manifest['version'] + 1}"
         new_path = os.path.join(self.index_dir, "segments", new_id)
         idx.save(new_path, encryption=self.encryption)
-        build_metrics(idx, bits).write.options(**self._wopts()).mode(
-            "overwrite"
-        ).parquet(
-            os.path.join(new_path, "metrics")
-        )
+        self._write_metrics(idx, new_path)
         entry = {
             "id": new_id,
             "n_docs": idx.field_stats.n_docs,

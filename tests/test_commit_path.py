@@ -11,8 +11,11 @@ writes the same files for the same input.
 - the dictionary files are cut from the k least (crc32(term), term)
   pairs: a fresh build's summary pass returns them, a merged view
   draws them in one job;
-- an append and a consolidation stay within a pinned job budget, and a
-  failed budget lists the jobs per SQL execution;
+- save() writes the dictionary through one exchange: the per-term sum
+  runs over the range exchange that cuts its files;
+- an append, a consolidation and a consolidation that purges deletes
+  stay within a pinned job budget, and a failed budget lists the jobs
+  per SQL execution;
 - an empty micro-batch commits nothing.
 """
 
@@ -29,7 +32,7 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from iresearch_spark.index.builder import build_index
-from iresearch_spark.index.model import InvertedIndex, check_segments_agree
+from iresearch_spark.index.model import InvertedIndex, _split_keys, check_segments_agree
 from iresearch_spark.search import Fuzzy, Or, Prefix, SearchEngine, Term, Wildcard
 from iresearch_spark.search.hot import HotEngine
 from iresearch_spark.streaming.incremental import IncrementalIndexer
@@ -37,9 +40,11 @@ from iresearch_spark.streaming.incremental import IncrementalIndexer
 TABLES = ("postings", "docs", "term_stats")
 
 # Spark jobs of one append and of one consolidation of the small input
-# below, after a warm-up commit (local[4], 8 shuffle partitions)
-APPEND_JOBS = 13
-CONSOLIDATE_JOBS = 9
+# below, after a warm-up commit (local[4], 8 shuffle partitions), and of
+# a 3-segment consolidation that purges a segment's deletes
+APPEND_JOBS = 11
+CONSOLIDATE_JOBS = 7
+PURGE_CONSOLIDATE_JOBS = 21
 
 
 def _rows(n, seed, prefix="u"):
@@ -229,6 +234,59 @@ def test_commit_job_budget(spark, tmp_path, spark_jobs):
         1 for _, text in _rows(150, 0) + _rows(150, 1) if text
     )
     assert SearchEngine(idx).matches(Prefix("a")).count() > 0
+
+
+def _delete(spark, seg, doc_ids):
+    """Give a committed segment a deleted/ tombstone for doc_ids."""
+    tmp = seg + "_tmp"
+    InvertedIndex.load(spark, seg).delete_docs(
+        spark.createDataFrame([(d,) for d in doc_ids], "doc_id long")
+    ).save(tmp)
+    shutil.rmtree(seg)
+    os.rename(tmp, seg)
+
+
+def test_purge_consolidation_job_budget(spark, tmp_path, spark_jobs):
+    """A consolidation whose segments carry deletes purges them within
+    its job budget (30 jobs before the dictionary and metrics lost
+    their extra shuffles)."""
+    inc = _commit_batches(spark, tmp_path, "d")
+    _delete(spark, os.path.join(inc.index_dir, "segments", "seg_1"), [160, 170, 200])
+    segs = [s["id"] for s in inc._read_manifest()["segments"]]
+    purge = spark_jobs(lambda: inc.consolidate_segments(spark, segs))
+    assert purge <= PURGE_CONSOLIDATE_JOBS, purge
+    idx = inc.read(spark)
+    assert idx.deleted is None
+    assert idx.docs.filter(F.col("doc_id").isin(160, 170, 200)).count() == 0
+
+
+def _shuffles(plan) -> int:
+    """Shuffle exchanges in a physical plan (an adaptive plan's current
+    plan, the one its requirements are ensured in). A cached relation is
+    a leaf: the shuffles of the build it caches do not count."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    kids = plan.children()
+    return int(plan.nodeName() == "Exchange") + sum(
+        _shuffles(kids.apply(i)) for i in range(kids.size())
+    )
+
+
+def test_dictionary_write_has_one_exchange(spark, pages, tmp_path):
+    """The dictionary save() writes, of a fresh build (summed from its
+    cached posting blocks) and of a merged view (from the segments'
+    rows), plans one exchange, and holds the summed term_stats rows."""
+    ix = build_index(pages, id_col=None, sort_key="url", analyzer="simple",
+                     seg_bits=6)
+    view = _commit_batches(spark, tmp_path, "x").read(spark)
+    for index in (ix, view):
+        _, pairs = index.dictionary_sample(1024)
+        table = index._dictionary_by_range(_split_keys([t for _, t in pairs], 16), 16)
+        assert _shuffles(table._jdf.queryExecution().executedPlan()) == 1
+        assert sorted(map(tuple, table.collect())) == sorted(
+            map(tuple, index.term_stats.select("term", "df", "cf").collect())
+        )
+    ix.unpersist()
 
 
 def test_empty_micro_batch_commits_nothing(spark, tmp_path):

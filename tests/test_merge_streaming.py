@@ -1,16 +1,19 @@
 """Segment merge + incremental indexing tests (reference
 merge_writer_tests.cpp / index_writer two-phase-commit semantics)."""
 
+import collections
 import dataclasses
+import json
 import math
+import os
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from iresearch_spark.index.builder import build_index
+from iresearch_spark.index.model import InvertedIndex
 from iresearch_spark.index.merge import (
-    build_metrics,
     consolidate,
     merge_indexes,
     purge_deleted,
@@ -87,16 +90,74 @@ def test_merged_index_searches_identically(spark):
     assert a == b
 
 
-def test_build_metrics(spark):
-    df_all = spark.createDataFrame(ROWS_A + ROWS_B, "doc_id long, text string")
-    idx = build_index(df_all, analyzer="simple", bucket_bits=7)
-    m = {r["bucket"]: r for r in build_metrics(idx, bucket_bits=7).collect()}
-    assert sum(r["n_postings"] for r in m.values()) == sum(
-        1 for _ in idx.decoded_postings().collect()
+def test_build_metrics(spark, tmp_path):
+    """The metrics/ table an append and a consolidation commit: one
+    file per segment of per-partition lineage rows, each counting the
+    posting blocks one task held in one doc bucket (first_doc >> bits).
+    Per bucket the rows add up to the segment's postings, over all
+    buckets to the manifest's n_blocks; a row's n_terms counts its own
+    distinct terms; a row's docs start in its bucket, and end there too
+    once a reblocking consolidation put every block on the bucket
+    grid."""
+    bits = 7
+    ix = IncrementalIndexer(index_dir=str(tmp_path / "ix"), bucket_bits=bits)
+    for e, rows in enumerate((ROWS_A, ROWS_B)):
+        ix.process_batch(
+            spark.createDataFrame(
+                [(f"u{i:04d}", t) for i, t in rows], "url string, text string"
+            ),
+            e,
+        )
+
+    def check(seg_id, aligned):
+        seg = os.path.join(ix.index_dir, "segments", seg_id)
+        files = os.listdir(os.path.join(seg, "metrics"))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, files
+        rows = spark.read.parquet(os.path.join(seg, "metrics")).collect()
+        with open(os.path.join(seg, "manifest.json")) as f:
+            assert sum(r["n_blocks"] for r in rows) == json.load(f)["n_blocks"]
+        idx = InvertedIndex.load(spark, seg)
+        blocks = collections.defaultdict(list)
+        for b in idx.postings.select("term", "n_docs", "first_doc").collect():
+            blocks[b["first_doc"] >> bits].append(b)
+        got = collections.Counter()
+        for r in rows:
+            got[r["bucket"]] += r["n_postings"]
+        assert got == {k: sum(b["n_docs"] for b in v) for k, v in blocks.items()}
+        assert sum(got.values()) == idx.decoded_postings().count()
+        if aligned:
+            assert got == collections.Counter(
+                r["doc_id"] >> bits
+                for r in idx.decoded_postings().select("doc_id").collect()
+            )
+        for k, v in blocks.items():
+            mine = [r["n_terms"] for r in rows if r["bucket"] == k]
+            assert max(mine) <= len({b["term"] for b in v}) <= sum(mine)
+        for r in rows:
+            assert r["min_doc"] >> bits == r["bucket"] and r["min_doc"] <= r["max_doc"]
+            if aligned:
+                assert r["max_doc"] >> bits == r["bucket"]
+        return rows
+
+    for s in ix._read_manifest()["segments"]:
+        check(s["id"], aligned=False)
+    new_id = ix.consolidate_segments(spark, ["seg_0", "seg_1"], reblock=True)
+    rows = check(new_id, aligned=True)
+    assert {r["bucket"] for r in rows} == {d >> bits for d in range(300)}
+
+
+def test_metrics_of_a_batch_without_terms(spark, tmp_path):
+    """A micro-batch whose texts hold no term commits its docs and a
+    metrics/ table of one file with no rows."""
+    ix = IncrementalIndexer(index_dir=str(tmp_path / "ix"), bucket_bits=7)
+    ix.process_batch(
+        spark.createDataFrame([(f"u{i}", "") for i in range(5)], "url string, text string"), 0
     )
-    for b, r in m.items():
-        assert r["min_doc"] >= b * 128
-        assert r["max_doc"] < (b + 1) * 128
+    (seg,) = ix._read_manifest()["segments"]
+    metrics = os.path.join(ix.index_dir, "segments", seg["id"], "metrics")
+    assert len([f for f in os.listdir(metrics) if f.endswith(".parquet")]) == 1
+    assert spark.read.parquet(metrics).count() == 0
+    assert seg["doc_id_end"] == 5
 
 
 def test_incremental_indexer_batches_and_idempotency(spark, tmp_path):
